@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -38,48 +36,17 @@ object Bench {
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let CACHED plans participate in AQE partition coalescing
-      // (default false pins a cached plan's map-side partitioning):
-      // graft operators persist narrow delta-sized intermediates —
-      // shingle sets, band rows, fixpoint labels — that dozens of
-      // downstream jobs rescan, and with the default every such job
-      // pays one task per ambient shuffle partition even when the
-      // cached delta is KB-sized. Size-based coalescing is the
-      // scale-correct rule at any tier (guide §2.2/§2.4); measured
-      // −40% total task count on q_stream_cc, −34% q_incremental_cc.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // prefer shuffled-hash join when the planner's size conditions
-      // allow (guide §3.1) — measured r19 full-catalog A/B on one host:
-      // 196.9s with vs 216.9s without (3-pass-min totals; join-heavy
-      // movers q_fuzzy_lookup 3.05→3.86, q_knn_ann 1.09→1.47,
-      // q_dedup_clusters 4.24→4.91 without it). Build sides stay
-      // bounded at scale: the flag only ENABLES the planner's
-      // canBuildLocalHashMap choice (per-partition plan size under
-      // autoBroadcastJoinThreshold × shuffle.partitions), it never
-      // forces a hash build. Mirrored in Verify and every tool/test
-      // session so the oracle validates the same plans the bench times.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+
+    val names = SparkEntry.queries.keys.toSeq
+      .filter(n => subset.forall(_(n)))
 
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries
-      .filter { case (n, _) => subset.forall(_(n)) }
-      .foreach { case (_, fn) =>
-        try graft.tools.Exec.materialize(fn(spark, warmDir))
-        catch { case _: Throwable => () }
-        CacheScope.release()
-        spark.catalog.clearCache()
-      }
+    names.foreach { name => CacheScope.scoped(spark) {
+      try graft.tools.Exec.materialize(SparkEntry.queries(name)(spark, warmDir))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm pass $name failed: $e") }
+    }}
 
     // A query that throws records the sentinel -1 (not a plausible
     // wall-clock) for that pass; failed passes are excluded from MIN
@@ -90,8 +57,6 @@ object Bench {
     // total); `flaky` = failed in some pass but succeeded in another
     // (its MIN is a real wall-clock from the passing run).
     val failCounts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => subset.forall(_(n)))
     // diagnostic extras harvested per (query, pass): banding-join
     // candidate counts (RunMetrics.observedCount in the operators) and
     // per-micro-batch streaming fold timings — merged across passes by
@@ -103,8 +68,11 @@ object Bench {
     graft.tools.RunMetrics.install(spark)
     val extras = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.Map[String, Double]]
+    // operators persist() blocking intermediates; the scope releases
+    // them after the clock stops, so a pass doesn't accumulate cached
+    // blocks across queries
     def onePass(): Map[String, Double] =
-      names.map { name =>
+      names.map { name => CacheScope.scoped(spark) {
         val fn = SparkEntry.queries(name)
         // flush-then-reset: a failed prior query skipped its harvest;
         // its in-flight observations must land (and be discarded)
@@ -129,12 +97,8 @@ object Bench {
               m(k) = m.get(k).fold(v)(math.min(_, v)) }
           }
         }
-        // operators persist() blocking intermediates; release them so a
-        // 65-query pass doesn't accumulate cached blocks across queries
-        CacheScope.release()
-        spark.catalog.clearCache()
         name -> dt
-      }.toMap
+      }}.toMap
     val passes = (1 to Passes).map(_ => onePass())
     def agg(f: Seq[Double] => Double): Seq[(String, Double)] =
       names.map { n =>
@@ -210,7 +174,8 @@ object Bench {
       s""""baseline_missing":$missJson,"extras":$extrasJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench.json"), full + "\n")
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] target/bench.json not written: $e") }
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$Passes,"n":${best.size},"errors":$errJson,"flaky":$flakyJson,"regressions":$regrJson,"sf":"$sfDir"}""")
     spark.stop()

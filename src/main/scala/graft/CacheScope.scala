@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for the narrow intermediates graft operators `persist()`
   * while building a result (shingle sets, signature tables, gram and
@@ -11,12 +12,13 @@ import org.apache.spark.sql.DataFrame
   * The library contract: after materializing an operator's result
   * (count/collect/write), call [[CacheScope.release]] — or
   * `spark.catalog.clearCache()` — to drop every graft-internal cached
-  * block. `Verify` and `Bench` do this between queries; a long-lived
-  * session that skips it degrades to LRU eviction, never to wrong
-  * results. (The one deliberate exception: `CsvIngest`/`XmlIngest`
-  * cache their RETURNED staging frame — Spark requires
-  * corrupt-record-only projections to be cached, and releasing a
-  * frame the caller still holds would break that contract.)
+  * block. Every main runs each query inside [[CacheScope.scoped]],
+  * which does both; a long-lived session that skips it degrades to
+  * LRU eviction, never to wrong results. (The one deliberate
+  * exception: `CsvIngest`/`XmlIngest` cache their RETURNED staging
+  * frame — Spark requires corrupt-record-only projections to be
+  * cached, and releasing a frame the caller still holds would break
+  * that contract.)
   */
 object CacheScope {
   private val tracked = scala.collection.mutable.Buffer.empty[DataFrame]
@@ -36,9 +38,29 @@ object CacheScope {
   def release(blocking: Boolean = false): Unit = synchronized {
     tracked.foreach(df =>
       try df.unpersist(blocking)
-      catch { case _: Throwable => () })
+      catch { case e: Throwable =>
+        System.err.println(s"[CacheScope] unpersist of $df failed: $e") })
     tracked.clear()
   }
+
+  /** Run `body` (one query: build + materialize), then drop every
+    * graft-internal cached block and the session's cache, also when
+    * `body` throws.
+    */
+  def scoped[T](spark: SparkSession)(body: => T): T =
+    try body
+    finally { release(); spark.catalog.clearCache() }
+
+  /** Free the blocks of a frame returned by
+    * [[localCheckpointTruncated]]. `Dataset.unpersist` is a no-op
+    * there: the blocks belong to the RDD inside the frame's
+    * `LogicalRDD`, which the session's cache manager never saw.
+    */
+  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Eager `localCheckpoint(true)` that does NOT carry the source
     * plan's inferred constraint set into the checkpointed LogicalRDD.

@@ -162,7 +162,8 @@ object Dedup {
     // and the join build disappears): collect each surviving gram's
     // sorted doc ids (≤ maxDf, partial-aggregated map-side), explode
     // the C(k,2) ordered pairs — the identical fan-out the join
-    // produced — and count per pair. d1 < d2 falls out of the sort.
+    // produced — and count per pair. The sort gives d1 ≤ d2; the
+    // filter drops the d1 = d2 pairs a duplicated id would emit.
     val inter = pruned.groupBy(col("g"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .filter(size(col("ids")) >= 2)
@@ -171,6 +172,7 @@ object Dedup {
           "transform(slice(ids, i + 2, size(ids) - i - 1), " +
           "y -> struct(x AS d1, y AS d2))))")).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
+      .filter(col("d1") < col("d2"))
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("inter"))
     inter

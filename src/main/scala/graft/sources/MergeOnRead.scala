@@ -466,7 +466,7 @@ object MergeOnRead {
             attempt += 1
             if (attempt > maxRetries) throw e
         }
-      } finally matched.unpersist() // frees the checkpointed blocks
+      } finally graft.CacheScope.unpersistCheckpoint(matched)
     }
     throw new IllegalStateException("unreachable")
   }
@@ -678,7 +678,7 @@ object MergeOnRead {
             attempt += 1
             if (attempt > maxRetries) throw e
         }
-      } finally joinedCp.unpersist() // frees the checkpointed blocks
+      } finally graft.CacheScope.unpersistCheckpoint(joinedCp)
     }
     throw new IllegalStateException("unreachable")
   }

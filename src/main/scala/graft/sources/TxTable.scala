@@ -611,8 +611,14 @@ object TxTable {
     val entries = out.toSeq
     if (entries.isEmpty) entries
     else {
+      // daemon threads + shutdownNow: a read hung past the bound
+      // below must not keep the JVM alive
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, entries.size))
+        math.min(16, entries.size), { (r: Runnable) =>
+          val t = new Thread(r, "graft-footer-stats")
+          t.setDaemon(true)
+          t
+        })
       try {
         import scala.concurrent.{Await, ExecutionContext, Future}
         implicit val ec: ExecutionContext =
@@ -637,7 +643,7 @@ object TxTable {
               s"files under $root did not complete within 10 minutes — " +
               "filesystem metadata reads are hung; failing the commit")
         }
-      } finally pool.shutdown()
+      } finally pool.shutdownNow()
     }
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-wide count-plan vs full-plan sweep (VERDICT r15 item 1's
   * "done" evidence): for every catalog query, optimize BOTH the
   * query's own plan and the plan `df.count()` would run (an
@@ -22,21 +20,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CountPlanSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // mirror Bench: the timed harness prefers shuffled-hash joins
-      // (guide §3.1, r19 A/B in Bench.scala) — every session must plan
-      // the same way so correctness runs validate the timed plans
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val dir = "/root/testdata/sf0.01"
 
     def classCounts(
@@ -46,29 +30,26 @@ object CountPlanSweep {
         .groupBy(identity).map { case (k, v) => k -> v.size }
 
     val results = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val r =
-          try {
-            val df = fn(spark, dir)
-            val full = classCounts(df.queryExecution.optimizedPlan)
-            // the plan count() runs: groupBy().count() over the same
-            // logical child, optimized — Catalyst prunes/eliminates
-            // against the count aggregate exactly as the old action did
-            val cnt = classCounts(
-              df.groupBy().count().queryExecution.optimizedPlan)
-            val lost = full.toSeq.sortBy(_._1).flatMap { case (cls, n) =>
-              val kept = cnt.getOrElse(cls, 0)
-              if (kept < n) Some(s""""$cls":${n - kept}""") else None
-            }
-            if (lost.isEmpty) None
-            else Some(s""""$name":{${lost.mkString(",")}}""")
-          } catch {
-            case e: Throwable =>
-              Some(s""""$name":{"error":"${e.getClass.getSimpleName}"}""")
+      case (name, fn) => graft.CacheScope.scoped(spark) {
+        try {
+          val df = fn(spark, dir)
+          val full = classCounts(df.queryExecution.optimizedPlan)
+          // the plan count() runs: groupBy().count() over the same
+          // logical child, optimized — Catalyst prunes/eliminates
+          // against the count aggregate exactly as the old action did
+          val cnt = classCounts(
+            df.groupBy().count().queryExecution.optimizedPlan)
+          val lost = full.toSeq.sortBy(_._1).flatMap { case (cls, n) =>
+            val kept = cnt.getOrElse(cls, 0)
+            if (kept < n) Some(s""""$cls":${n - kept}""") else None
           }
-        graft.CacheScope.release()
-        spark.catalog.clearCache()
-        r
+          if (lost.isEmpty) None
+          else Some(s""""$name":{${lost.mkString(",")}}""")
+        } catch {
+          case e: Throwable =>
+            Some(s""""$name":{"error":"${e.getClass.getSimpleName}"}""")
+        }
+      }
     }
     val json =
       s"""{"metric":"count_plan_sweep","n":${graft.SparkEntry.queries.size},""" +

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: per-JOB wall-clock breakdown of a catalog query.
   *
@@ -20,23 +19,8 @@ import org.apache.spark.sql.SparkSession
 object JobProf {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProf <query names…>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // mirror Bench: the timed harness prefers shuffled-hash joins
-      // (guide §3.1, r19 A/B in Bench.scala) — every session must plan
-      // the same way so correctness runs validate the timed plans
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     // A/B harness: GRAFT_EXTRA_CONF="k=v;k=v" applies session confs
     // before any query runs, so a candidate conf can be profiled
     // without touching the contract mains
@@ -46,9 +30,8 @@ object JobProf {
     })
     for (name <- args) {
       // warm pass: JIT + codegen cache + fixture memos
-      Exec.materialize(graft.SparkEntry.queries(name)(spark, dir))
-      graft.CacheScope.release()
-      spark.catalog.clearCache()
+      graft.CacheScope.scoped(spark)(
+        Exec.materialize(graft.SparkEntry.queries(name)(spark, dir)))
       val jobs = new java.util.concurrent.ConcurrentHashMap[
         Int, (Long, String, Int)]()
       val done = new java.util.concurrent.ConcurrentLinkedQueue[
@@ -69,11 +52,11 @@ object JobProf {
         }
       }
       spark.sparkContext.addSparkListener(l)
-      val t0 = System.nanoTime()
-      Exec.materialize(graft.SparkEntry.queries(name)(spark, dir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      graft.CacheScope.release()
-      spark.catalog.clearCache()
+      val wall = graft.CacheScope.scoped(spark) {
+        val t0 = System.nanoTime()
+        Exec.materialize(graft.SparkEntry.queries(name)(spark, dir))
+        (System.nanoTime() - t0) / 1e9
+      }
       // listener bus is async; give it a beat to drain
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(l)
@@ -81,17 +64,30 @@ object JobProf {
       val rows = done.asScala.toSeq.sortBy(_._2)
       println(f"\n===== $name wall=$wall%.2f s, ${rows.size} jobs =====")
       var prevEnd = 0L
-      var jobSum = 0L
-      var gapSum = 0L
       for ((id, s, e, site, nt) <- rows) {
         val gap = if (prevEnd == 0) 0L else math.max(0, s - prevEnd)
-        gapSum += gap
-        jobSum += e - s
         println(f"job $id%4d ${(e - s) / 1e3}%7.3f s  gap=${gap / 1e3}%6.3f s  tasks=$nt%4d  $site")
         prevEnd = math.max(prevEnd, e)
       }
-      println(f"job time total=${jobSum / 1e3}%.2f s, inter-job driver gaps=${gapSum / 1e3}%.2f s")
+      val (jobMs, gapMs) =
+        jobTimeAndGaps((wall * 1e3).toLong, rows.map(r => (r._2, r._3)))
+      println(f"job time (union)=${jobMs / 1e3}%.2f s, driver gaps=${gapMs / 1e3}%.2f s")
     }
     spark.stop()
+  }
+
+  /** (job ms, driver-gap ms) of a query's `wallMs`, from its jobs'
+    * (start, end) intervals. Job time is the UNION of the intervals —
+    * AQE stages and broadcasts run overlapping jobs, so summing
+    * per-job walls counts their overlap twice — and the gaps are the
+    * rest of the wall.
+    */
+  private[graft] def jobTimeAndGaps(
+      wallMs: Long, jobs: Seq[(Long, Long)]): (Long, Long) = {
+    val (busy, _) = jobs.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((sum, end), (s, e)) =>
+        if (e <= end) (sum, end) else (sum + e - math.max(s, end), e)
+    }
+    (busy, math.max(0L, wallMs - busy))
   }
 }

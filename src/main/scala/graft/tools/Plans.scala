@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-wide plan dump + self-check — the `EXPLAIN PIPELINE`
   * discipline of the reference's datamart guidance (…/Datamarts/
   * Правильное построение витрины с множественными агрегациями.md:141)
@@ -93,19 +91,7 @@ object Plans {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // mirror Bench's planner confs so the dumps show the plans the
-      // bench times (guide §3.1, r19 A/B in Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val dir = "/root/testdata/sf0.01"
     val outIdx = args.indexOf("--out")
     if (outIdx >= 0 && outIdx + 1 >= args.length) {

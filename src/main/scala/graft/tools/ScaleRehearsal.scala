@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.{CacheScope, SparkEntry}
 
 /** sf1 scale rehearsal of the superlinear-risk query family (VERDICT
@@ -1147,22 +1148,7 @@ object ScaleRehearsal {
     }
     def picked(family: Seq[String]): Seq[String] =
       family.filter(n => subset.forall(_(n)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // mirror Bench: the timed harness prefers shuffled-hash joins
-      // (guide §3.1, r19 A/B in Bench.scala) — every session must plan
-      // the same way so correctness runs validate the timed plans
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = "target/sf1"
@@ -1172,10 +1158,12 @@ object ScaleRehearsal {
 
     // JVM/codegen warm-up on the small dir, like Bench
     (picked(Family) ++ picked(Family100)).distinct.foreach { name =>
-      try graft.tools.Exec.materialize(
-        queryOf(name)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
-      CacheScope.release(); spark.catalog.clearCache()
+      CacheScope.scoped(spark) {
+        try graft.tools.Exec.materialize(
+          queryOf(name)(spark, "/root/testdata/sf0.001"))
+        catch { case e: Throwable =>
+          System.err.println(s"[rehearsal] warm pass $name failed: $e") }
+      }
     }
     // trigger the prep-bearing entries' one-time builds (stored
     // labeling + delta edges, DV-heavy tables, trickle DML histories)
@@ -1193,9 +1181,11 @@ object ScaleRehearsal {
       prepBearing.filter(picked(Family100).contains).flatMap(n =>
         Seq((n, sf01), (n, sf10)))
     prepRuns.distinct.foreach { case (name, dir) =>
-      try graft.tools.Exec.materialize(queryOf(name)(spark, dir))
-      catch { case _: Throwable => () }
-      CacheScope.release(); spark.catalog.clearCache()
+      CacheScope.scoped(spark) {
+        try graft.tools.Exec.materialize(queryOf(name)(spark, dir))
+        catch { case e: Throwable =>
+          System.err.println(s"[rehearsal] prep $name at $dir failed: $e") }
+      }
     }
 
     // pass-interleaved so a steal burst can't poison all passes of
@@ -1215,11 +1205,12 @@ object ScaleRehearsal {
     val cellRowKeys = Map("x_doremi_wide" -> "doremi_model_rows")
     def run(pass: Int, tag: String, dir: String, name: String): Unit = {
       cellRowKeys.get(name).foreach(k => graft.tools.RunMetrics.put(k, 0.0))
-      val t0 = System.nanoTime()
-      // full-materialization action (VERDICT r15 item 1; see Exec)
-      val n = graft.tools.Exec.materialize(queryOf(name)(spark, dir))
-      val dt = (System.nanoTime() - t0) / 1e9
-      CacheScope.release(); spark.catalog.clearCache()
+      val (n, dt) = CacheScope.scoped(spark) {
+        val t0 = System.nanoTime()
+        // full-materialization action (VERDICT r15 item 1; see Exec)
+        val n = graft.tools.Exec.materialize(queryOf(name)(spark, dir))
+        (n, (System.nanoTime() - t0) / 1e9)
+      }
       val k = (name, tag)
       times(k) = dt :: times.getOrElse(k, Nil)
       cellRowKeys.get(name).foreach { key =>
@@ -1227,6 +1218,21 @@ object ScaleRehearsal {
           .getOrElse(key, 0.0).round }
       println(f"pass $pass $tag $name%-20s ${dt}%8.2fs rows=$n")
     }
+    // one streaming drain of `srcDir`, one file per micro-batch:
+    // `query` builds the stream from the source and a per-run tag for
+    // its state dirs; the clock covers the drain only
+    def timedDrain(srcDir: String, schema: StructType)(
+        query: (DataFrame, Long) => DataFrame): (Long, Double) =
+      CacheScope.scoped(spark) {
+        RunMetrics.flushAndReset(spark)
+        val run = System.nanoTime()
+        val src = spark.readStream.schema(schema)
+          .option("recursiveFileLookup", "true")
+          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        val t0 = System.nanoTime()
+        val n = Exec.materialize(query(src, run))
+        (n, (System.nanoTime() - t0) / 1e9)
+      }
     val dirs = Seq("sf0.1" -> sf01, "sf1" -> sf1)
     for (pass <- 1 to Passes; (tag, dir) <- dirs; name <- picked(Family))
       run(pass, tag, dir, name)
@@ -1335,20 +1341,14 @@ object ScaleRehearsal {
           spark.conf.set("spark.graft.stream.priceLabelsRead",
             asTable.toString)
           for (pass <- 1 to 2) {
-            graft.tools.RunMetrics.flushAndReset(spark)
-            val run = System.nanoTime()
-            val src = spark.readStream.schema(schema)
-              .option("recursiveFileLookup", "true")
-              .option("maxFilesPerTrigger", "1").parquet(srcDir)
-            val t0 = System.nanoTime()
-            val n = graft.tools.Exec.materialize(
+            val (n, dt) = timedDrain(srcDir, schema) { (src, run) =>
               graft.streaming.Streams.clusterStream(
                 src, "doc_id", "text",
                 s"target/tmp/x_drain40_state_$run",
                 s"target/tmp/x_drain40_ckpt_$run",
                 n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
-                compactEvery = 5, labelsAsTable = asTable))
-            val dt = (System.nanoTime() - t0) / 1e9
+                compactEvery = 5, labelsAsTable = asTable)
+            }
             val got = graft.tools.RunMetrics.snapshot
             // ADVICE r16: the conf-gated labels-read pricing runs in
             // table mode only, so the raw wall would include ~40
@@ -1372,7 +1372,6 @@ object ScaleRehearsal {
                 dirsMax = math.max(dirsMax, v)
               case _ => ()
             }
-            CacheScope.release(); spark.catalog.clearCache()
             println(
               f"pass $pass sf0.1 x_stream_cc_drain40[$mode]  ${dt}%8.2fs rows=$n")
           }
@@ -1469,20 +1468,14 @@ object ScaleRehearsal {
           spark.conf.set("spark.graft.stream.priceLabelsRead",
             asTable.toString)
           for (pass <- 1 to 2) {
-            graft.tools.RunMetrics.flushAndReset(spark)
-            val run = System.nanoTime()
-            val src = spark.readStream.schema(schema)
-              .option("recursiveFileLookup", "true")
-              .option("maxFilesPerTrigger", "1").parquet(srcDir)
-            val t0 = System.nanoTime()
-            val n = graft.tools.Exec.materialize(
+            val (n, dt) = timedDrain(srcDir, schema) { (src, run) =>
               graft.streaming.Streams.clusterStream(
                 src, "doc_id", "text",
                 s"target/tmp/x_cross_state_$run",
                 s"target/tmp/x_cross_ckpt_$run",
                 n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
-                compactEvery = 5, labelsAsTable = asTable))
-            val dt = (System.nanoTime() - t0) / 1e9
+                compactEvery = 5, labelsAsTable = asTable)
+            }
             graft.tools.RunMetrics.snapshot.foreach {
               case (k, v) if k.startsWith("stream_cc_fold_") =>
                 folds(k) = folds.get(k).fold(v)(math.min(_, v))
@@ -1492,7 +1485,6 @@ object ScaleRehearsal {
                 reads(k) = reads.get(k).fold(v)(math.min(_, v))
               case _ => ()
             }
-            CacheScope.release(); spark.catalog.clearCache()
             println(f"pass $pass 10xcorpus x_stream_cc_crossover[$mode] " +
               f"${dt}%8.2fs rows=$n")
           }
@@ -1569,19 +1561,13 @@ object ScaleRehearsal {
         val files = scala.collection.mutable.Map.empty[String, Double]
         var lastState = ""
         for (pass <- 1 to 2) {
-          graft.tools.RunMetrics.flushAndReset(spark)
-          val run = System.nanoTime()
-          lastState = s"target/tmp/x_dsir40_state_$run"
-          val src = spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          val t0 = System.nanoTime()
-          val n = graft.tools.Exec.materialize(
+          val (n, dt) = timedDrain(srcDir, schema) { (src, run) =>
+            lastState = s"target/tmp/x_dsir40_state_$run"
             graft.streaming.Streams.dsirStream(
               src, "doc_id", "text", "tgt",
               lastState, s"target/tmp/x_dsir40_ckpt_$run",
-              refreshEvery = 5))
-          val dt = (System.nanoTime() - t0) / 1e9
+              refreshEvery = 5)
+          }
           graft.tools.RunMetrics.snapshot.foreach {
             case (k, v) if k.startsWith("stream_dsir_fold_") =>
               folds(k) = folds.get(k).fold(v)(math.min(_, v))
@@ -1593,7 +1579,6 @@ object ScaleRehearsal {
               files(k) = v
             case _ => ()
           }
-          CacheScope.release(); spark.catalog.clearCache()
           println(
             f"pass $pass sf0.1 x_stream_dsir_drain40  ${dt}%8.2fs rows=$n")
         }
@@ -1657,11 +1642,12 @@ object ScaleRehearsal {
         val mBytes = h.getAs[Long]("manifest_bytes")
         // a trickle read against the wide manifest: planning must hold
         // while the manifest is 10× today's
-        val t0 = System.nanoTime()
-        spark.read.format("graft").load(root)
-          .filter(col("o_orderkey") === 1L).count()
-        val readMs = (System.nanoTime() - t0) / 1e6
-        CacheScope.release(); spark.catalog.clearCache()
+        val readMs = CacheScope.scoped(spark) {
+          val t0 = System.nanoTime()
+          spark.read.format("graft").load(root)
+            .filter(col("o_orderkey") === 1L).count()
+          (System.nanoTime() - t0) / 1e6
+        }
         s""","manifest_wide":{"files":$files,"manifest_bytes":$mBytes,""" +
           f""""resolve_ms":$resolveMs%.1f,"point_read_ms":$readMs%.1f}"""
       }
@@ -1696,7 +1682,7 @@ object ScaleRehearsal {
       def ivfDistOccRatio: Double =
         ivfDist.maxOccupancy.toDouble / (nVec.toDouble / nlist)
     }
-    def censusOf(tag: String, dir: String): TierCensus = {
+    def censusOf(tag: String, dir: String): TierCensus = CacheScope.scoped(spark) {
       import graft.operators.{Dedup, Ivf, Knn}
       val docs = graft.Tables.documents(spark, dir)
       val emb = graft.Tables.embeddings(spark, dir)
@@ -1740,7 +1726,6 @@ object ScaleRehearsal {
       val ivfDist = Census.of(
         emb.select(Ivf.bucketId(col("embedding"), distCents).as("bucket")),
         Seq("bucket"))
-      CacheScope.release(); spark.catalog.clearCache()
       TierCensus(tag, mh.rows / 8, nVec, bits, nlist, mh, sim, srp, ivf,
         ivfDist, simVerifySec)
     }

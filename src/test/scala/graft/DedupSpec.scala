@@ -408,6 +408,20 @@ class DedupSpec extends SparkSpec {
     assert(shuffled.contains((1L, 3L)), "identical docs survive pruning")
   }
 
+  test("jaccardPairsPruned: a duplicated doc_id never pairs with itself") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "the quick brown fox jumps over the lazy dog tonight")
+    ).toDF("doc_id", "text")
+    // a self-pair would score 1/3 (each gram once in the intersection,
+    // twice in each "set"), so tau sits below that
+    val got = Dedup.jaccardPairsPruned(docs, "doc_id", "text", 3, 0.2, 20)
+      .select("d1", "d2").as[(Long, Long)].collect()
+    assert(got.nonEmpty, "the distinct ids still pair")
+    assert(got.forall { case (a, b) => a < b }, s"self-pair in ${got.toSeq}")
+  }
+
   private def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.setUseCache(false)

@@ -604,4 +604,19 @@ class MorSpec extends SparkSpec {
     assert(snap.dvs.map(_.rows).sum == 80L,
       s"40 deleted + 40 update-masked positions, got ${snap.dvs.map(_.rows).sum}")
   }
+
+  test("updateWhere and mergeInto free their checkpointed blocks") {
+    val root = freshRoot("cpfree")
+    TxTable.create(seed, root, Some("p"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    MergeOnRead.updateWhere(spark, root,
+      expr("k % 10 = 3"), Seq("v" -> expr("v + 1")))
+    assert(sc.getPersistentRDDs.size <= before,
+      s"updateWhere left ${sc.getPersistentRDDs.size - before} RDDs resident")
+    val src = Seq((3L, "odd", 0.0), (200L, "even", 1.0)).toDF("k", "p", "v")
+    MergeOnRead.mergeInto(spark, root, src, Seq("k"))
+    assert(sc.getPersistentRDDs.size <= before,
+      s"mergeInto left ${sc.getPersistentRDDs.size - before} RDDs resident")
+  }
 }
