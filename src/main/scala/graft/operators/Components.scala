@@ -89,6 +89,9 @@ object Components {
         .join(jumpMap, col("__lbl") === col("__jid"), "left")
         .select(col("__id"), col("__prev"),
           least(col("__lbl"), coalesce(col("__jlbl"), col("__lbl"))).as("__lbl")))
+      // the eager checkpoint truncated the lineage, so the previous
+      // round's blocks are unreachable: free them now, not at GC
+      graft.CacheScope.unpersistCheckpoint(labels)
       converged = jumped.filter(col("__lbl") < col("__prev")).isEmpty
       labels = jumped.select(col("__id"), col("__lbl"))
       it += 1

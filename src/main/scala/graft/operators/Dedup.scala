@@ -70,7 +70,12 @@ object Dedup {
     val sh = shingles(df, idCol, textCol, n).persistTracked()
     val ex = sh.select(col(idCol).as("id"), size(col("sh")).as("nsh"),
       explode(col("sh")).as("g"))
-    countVerifiedPairs(ex, tau)
+    gramJoinPairs(
+      ex.select(col("id").as("d1"), col("nsh").as("n1"), col("g"))
+        .hint("shuffle_hash"),
+      ex.select(col("id").as("d2"), col("nsh").as("n2"), col("g").as("g2"))
+        .hint("shuffle_hash"),
+      col("d1") < col("d2"), tau)
   }
 
   /** Corpus-scale DUPLICATE-CLUSTER assignment: connected components
@@ -156,14 +161,13 @@ object Dedup {
     val sizes = pruned.groupBy(col("id"))
       .agg(count(lit(1)).cast("int").as("nsh"))
     // per-gram doc lists are bounded at maxDf rows by the pruning
-    // itself — the invariant this operator exists to enforce — so ONE
-    // aggregation on the gram replaces the former two-sided self-join
-    // (guide §2.4: two Exchanges of the full (id, gram) table → one,
-    // and the join build disappears): collect each surviving gram's
-    // sorted doc ids (≤ maxDf, partial-aggregated map-side), explode
-    // the C(k,2) ordered pairs — the identical fan-out the join
-    // produced — and count per pair. The sort gives d1 ≤ d2; the
-    // filter drops the d1 = d2 pairs a duplicated id would emit.
+    // itself — the invariant this operator exists to enforce — so the
+    // pairs come from ONE aggregation on the gram, not a gram
+    // self-join (one Exchange of the (id, gram) table, no join build):
+    // collect each surviving gram's sorted doc ids (≤ maxDf,
+    // partial-aggregated map-side), explode the C(k,2) ordered pairs
+    // and count per pair. The sort gives d1 ≤ d2; the filter drops the
+    // d1 = d2 pairs a duplicated id would emit.
     val inter = pruned.groupBy(col("g"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .filter(size(col("ids")) >= 2)
@@ -175,14 +179,11 @@ object Dedup {
       .filter(col("d1") < col("d2"))
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("id").as("d1"), col("nsh").as("n1")), "d1")
-      .join(sizes.select(col("id").as("d2"), col("nsh").as("n2")), "d2")
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("d1"), col("d2"), col("jaccard"))
+    jaccardAtLeast(
+      inter
+        .join(sizes.select(col("id").as("d1"), col("nsh").as("n1")), "d1")
+        .join(sizes.select(col("id").as("d2"), col("nsh").as("n2")), "d2"),
+      tau)
   }
 
   /** Cross-corpus Jaccard — the DECONTAMINATION operator: flag
@@ -200,43 +201,43 @@ object Dedup {
       n: Int, tau: Double): DataFrame = {
     val shC = shingles(corpus, idCol, textCol, n).persistTracked()
     val shB = shingles(bench, idCol, textCol, n).persistTracked()
-    val a = shC.select(col(idCol).as("d1"), size(col("sh")).as("n1"),
-      explode(col("sh")).as("g"))
-    val b = shB.select(col(idCol).as("d2"), size(col("sh")).as("n2"),
-      explode(col("sh")).as("g2"))
-    a.join(b,
-        col("g") === col("g2") &&
-          col("n1") * lit(tau) <= col("n2") &&
-          col("n2") * lit(tau) <= col("n1"))
-      .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("d1"), col("d2"), col("jaccard"))
+    gramJoinPairs(
+      shC.select(col(idCol).as("d1"), size(col("sh")).as("n1"),
+        explode(col("sh")).as("g")),
+      shB.select(col(idCol).as("d2"), size(col("sh")).as("n2"),
+        explode(col("sh")).as("g2")),
+      lit(true), tau)
   }
 
-  /** Shared tail of the count-based Jaccard joins: self-join exploded
-    * (id, setSize, gram) rows on the gram with the PPJoin length
-    * filter, count matches per pair, keep J ≥ τ.
+  /** The count-based Jaccard kernel: equi-join exploded (`d1`, `n1`,
+    * `g`) rows with (`d2`, `n2`, `g2`) rows on the gram, keep the pairs
+    * `pairCond` admits that pass the PPJoin length filter, count
+    * matches per pair (= |A∩B|) and keep J ≥ τ. Join hints stay with
+    * the callers' sides.
     */
-  private def countVerifiedPairs(ex: DataFrame, tau: Double): DataFrame = {
-    val a = ex.select(col("id").as("d1"), col("nsh").as("n1"), col("g"))
-    val b = ex.select(col("id").as("d2"), col("nsh").as("n2"),
-      col("g").as("g2"))
-    a.hint("shuffle_hash").join(b.hint("shuffle_hash"),
-        col("g") === col("g2") && col("d1") < col("d2") &&
-          col("n1") * lit(tau) <= col("n2") &&
-          col("n2") * lit(tau) <= col("n1"))
-      .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
-      .agg(count(lit(1)).as("inter"))
+  private def gramJoinPairs(
+      a: DataFrame, b: DataFrame, pairCond: Column, tau: Double): DataFrame =
+    jaccardAtLeast(
+      a.join(b,
+          col("g") === col("g2") && pairCond &&
+            col("n1") * lit(tau) <= col("n2") &&
+            col("n2") * lit(tau) <= col("n1"))
+        .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
+        .agg(count(lit(1)).as("inter")),
+      tau)
+
+  /** (`d1`, `d2`, `jaccard`) for the rows of (`d1`, `d2`, `n1`, `n2`,
+    * `inter`) — set sizes and intersection size — whose Jaccard
+    * inter / (n1 + n2 − inter) reaches τ. Every pair kernel in this
+    * object ends here, so they all compute the same double.
+    */
+  private def jaccardAtLeast(pairs: DataFrame, tau: Double): DataFrame =
+    pairs
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("n1") + col("n2") - col("inter")).cast("double"))
       .filter(col("jaccard") >= tau)
       .select(col("d1"), col("d2"), col("jaccard"))
-  }
 
   /** MinHash signature. Each shingle is hashed ONCE (the portable
     * 31-bit [[graft.plans.PolyHash]]); the `numPerms` permutations are
@@ -315,30 +316,9 @@ object Dedup {
       n, bands, rowsPerBand)
 
   /** Within-relation LSH near-dup pairs from a precomputed side. */
-  def minhashLshPairs(side: LshSide, tau: Double): DataFrame = {
-    import side.{banded, idCol, sh}
-    val a = banded.select(col("id").as("d1"), col("band"), col("bandkey"))
-    val b = banded.select(col("id").as("d2"), col("band").as("band2"),
-      col("bandkey").as("bandkey2"))
-    // candidate count observed for the bench artifact (VERDICT r12
-    // item 5): the rows materialized by the banding join, the number
-    // the bucket census predicts
-    val cands = graft.tools.RunMetrics.observedCount("cand_minhash",
-        a.join(b,
-          col("band") === col("band2") && col("bandkey") === col("bandkey2") &&
-            col("d1") < col("d2"))
-        .select("d1", "d2"))
-      .dropDuplicates("d1", "d2")
-    cands
-      .join(sh.select(col(idCol).as("d1"), col("sh").as("sh1")), "d1")
-      .join(sh.select(col(idCol).as("d2"), col("sh").as("sh2")), "d2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("d1"), col("d2"), col("jaccard"))
-  }
+  def minhashLshPairs(side: LshSide, tau: Double): DataFrame =
+    verifyLsh(withinCands(side), side, shingleSets(side, "d2", "sh2"),
+      Seq("d2"), tau)
 
   /** (id, band, bandkey) LSH band rows over a shingle-set relation.
     * The signature is materialized (persisted) BEFORE banding: project
@@ -368,6 +348,69 @@ object Dedup {
       .withColumnRenamed("col", "bandkey")
   }
 
+  /** (`d1`, `d2`) pairs of a `left` and a `right` document that share
+    * a band bucket (band index and minima vector) and pass `pairCond`;
+    * one row per shared bucket, so a pair can repeat.
+    */
+  private def bucketPairs(
+      left: LshSide, right: LshSide, pairCond: Column): DataFrame =
+    left.banded.select(col("id").as("d1"), col("band"), col("bandkey"))
+      .join(right.banded.select(col("id").as("d2"), col("band").as("band2"),
+          col("bandkey").as("bandkey2")),
+        col("band") === col("band2") && col("bandkey") === col("bandkey2") &&
+          pairCond)
+      .select("d1", "d2")
+
+  /** The within-side candidate leg (`d1` < `d2`). Its row count is
+    * observed as `cand_minhash`: the rows the banding join
+    * materializes, the number the bucket census predicts.
+    */
+  private def withinCands(side: LshSide): DataFrame =
+    graft.tools.RunMetrics.observedCount("cand_minhash",
+      bucketPairs(side, side, col("d1") < col("d2")))
+
+  /** The incoming×base candidate leg (`d1` = incoming id, `d2` = base
+    * id), observed as `cand_minhash_cross`. `op` names the public
+    * operator in the parameter-mismatch error.
+    */
+  private def crossCands(
+      base: LshSide, incoming: LshSide, op: String): DataFrame = {
+    // sides built with different parameters would not FAIL — they
+    // would silently return empty or wrong pairs (mismatched
+    // rowsPerBand band keys never join; mismatched n changes shingles
+    // and hence every Jaccard) — so the mismatch is a loud error
+    require(
+      (base.n, base.bands, base.rowsPerBand) ==
+        (incoming.n, incoming.bands, incoming.rowsPerBand),
+      s"$op: parameter mismatch — base " +
+        s"(n=${base.n}, bands=${base.bands}, rows=${base.rowsPerBand}) " +
+        s"vs incoming (n=${incoming.n}, bands=${incoming.bands}, " +
+        s"rows=${incoming.rowsPerBand})")
+    graft.tools.RunMetrics.observedCount("cand_minhash_cross",
+      bucketPairs(incoming, base, lit(true)))
+  }
+
+  /** A side's shingle sets as (`id`, `sh`) under the given names. */
+  private def shingleSets(side: LshSide, id: String, sh: String): DataFrame =
+    side.sh.select(col(side.idCol).as(id), col("sh").as(sh))
+
+  /** Verify LSH candidates with TRUE Jaccard: dedup `cands` on `d1`
+    * plus `keys2`, attach `d1`'s shingle set from `side1` and the
+    * second set from `sh2` (columns `keys2` and `sh2`), keep J ≥ τ.
+    * Output: (`d1`, `d2`, `jaccard`).
+    */
+  private def verifyLsh(
+      cands: DataFrame, side1: LshSide, sh2: DataFrame,
+      keys2: Seq[String], tau: Double): DataFrame =
+    jaccardAtLeast(
+      cands.dropDuplicates("d1" +: keys2)
+        .join(shingleSets(side1, "d1", "sh1"), "d1")
+        .join(sh2, keys2)
+        .select(col("d1"), col("d2"),
+          size(col("sh1")).as("n1"), size(col("sh2")).as("n2"),
+          size(array_intersect(col("sh1"), col("sh2"))).as("inter")),
+      tau)
+
   /** Incremental ingest dedup — the CONTINUOUS-corpus path: classify
     * an incoming batch against an existing base corpus with
     * MinHash-LSH banding, returning one row per incoming document
@@ -395,8 +438,9 @@ object Dedup {
       base: DataFrame, incoming: DataFrame,
       idCol: String, textCol: String,
       n: Int, tau: Double, bands: Int, rowsPerBand: Int): DataFrame =
-    lshPairsAgainstBase(base, incoming, idCol, textCol,
-      n, tau, bands, rowsPerBand)
+    lshPairsAgainstBase(
+      lshSide(base, idCol, textCol, n, bands, rowsPerBand),
+      lshSide(incoming, idCol, textCol, n, bands, rowsPerBand), tau)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("d_new"))
           .orderBy(col("jaccard").desc, col("d_base"))))
@@ -404,133 +448,46 @@ object Dedup {
       .select(col("d_new").as(idCol), col("d_base").as("dup_of"),
         col("jaccard"))
 
-  /** ALL verified incoming×base near-dup pairs — the pair-set form of
-    * [[lshDedupAgainstBase]] (which keeps only each incoming doc's
-    * best match). This is the edge feed for INCREMENTAL cluster
-    * maintenance ([[Components.connectedIncremental]]): together with
-    * [[minhashLshPairs]] over the incoming batch alone, it supplies
-    * exactly the delta edges an append-only corpus adds per ingest
-    * cycle. Returns (`d_new`, `d_base`, `jaccard`).
+  /** ALL verified incoming×base near-dup pairs from precomputed sides
+    * — the pair-set form of [[lshDedupAgainstBase]] (which keeps only
+    * each incoming doc's best match); the base side is the
+    * reusable-across-cycles half. Together with [[minhashLshPairs]]
+    * over the incoming batch alone it supplies exactly the delta edges
+    * an append-only corpus adds per ingest cycle ([[lshDeltaPairs]]
+    * verifies both in one pass). Returns (`d_new`, `d_base`,
+    * `jaccard`).
     */
   def lshPairsAgainstBase(
-      base: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String,
-      n: Int, tau: Double, bands: Int, rowsPerBand: Int): DataFrame =
-    lshPairsAgainstBase(
-      lshSide(base, idCol, textCol, n, bands, rowsPerBand),
-      lshSide(incoming, idCol, textCol, n, bands, rowsPerBand), tau)
-
-  /** Incoming×base LSH near-dup pairs from precomputed sides (the
-    * base side is the reusable-across-cycles half).
-    */
-  def lshPairsAgainstBase(
-      base: LshSide, incoming: LshSide, tau: Double): DataFrame = {
-    // sides built with different parameters would not FAIL — they
-    // would silently return empty or wrong pairs (mismatched
-    // rowsPerBand band keys never join; mismatched n changes shingles
-    // and hence every Jaccard) — so the mismatch is a loud error
-    require(
-      (base.n, base.bands, base.rowsPerBand) ==
-        (incoming.n, incoming.bands, incoming.rowsPerBand),
-      s"lshPairsAgainstBase: parameter mismatch — base " +
-        s"(n=${base.n}, bands=${base.bands}, rows=${base.rowsPerBand}) " +
-        s"vs incoming (n=${incoming.n}, bands=${incoming.bands}, " +
-        s"rows=${incoming.rowsPerBand})")
-    val idCol = base.idCol
-    val bb = base.banded
-      .select(col("id").as("d_base"), col("band").as("band2"),
-        col("bandkey").as("bandkey2"))
-    val bi = incoming.banded
-      .select(col("id").as("d_new"), col("band"), col("bandkey"))
-    val cands = graft.tools.RunMetrics.observedCount("cand_minhash_cross",
-        bi.join(bb,
-          col("band") === col("band2") && col("bandkey") === col("bandkey2"))
-        .select("d_new", "d_base"))
-      .dropDuplicates("d_new", "d_base")
-    cands
-      .join(incoming.sh.select(col(idCol).as("d_new"), col("sh").as("sh1")),
-        "d_new")
-      .join(base.sh.select(col(idCol).as("d_base"), col("sh").as("sh2")),
-        "d_base")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("d_new"), col("d_base"), col("jaccard"))
-  }
+      base: LshSide, incoming: LshSide, tau: Double): DataFrame =
+    verifyLsh(crossCands(base, incoming, "lshPairsAgainstBase"), incoming,
+        shingleSets(base, "d2", "sh2"), Seq("d2"), tau)
+      .select(col("d1").as("d_new"), col("d2").as("d_base"), col("jaccard"))
 
   /** The full DELTA edge set of one ingest cycle — incoming×base
     * cross pairs PLUS within-incoming pairs — verified in ONE pass
     * (guide §2.4: remove shuffles outright). Semantically identical to
     * `lshPairsAgainstBase(base, incoming, tau).select(d_new as d1,
     * d_base as d2, jaccard) unionByName minhashLshPairs(incoming,
-    * tau)`, which is how every incremental-CC caller composed it — but
-    * that form runs TWO verification pipelines (two candidate dedups,
-    * four shingle-attach joins, two Jaccard filters) over candidate
-    * sets that are both delta-sized. Here the two candidate legs are
-    * tagged and unioned BEFORE verification, so the whole delta pays
-    * one dedup and one pair of shingle joins. The `__w` leg tag rides
-    * into the dedup keys and the d2 shingle attach (within pairs
-    * resolve d2 from the incoming side, cross pairs from the base
-    * side), so the output is bit-identical to the two-pipeline form
-    * even if an id appears on both sides. Candidate observations
-    * (`cand_minhash`, `cand_minhash_cross`) are unchanged — they wrap
-    * the same per-leg candidate frames.
+    * tau)`, but the two candidate legs are tagged and unioned BEFORE
+    * verification, so the whole delta pays one dedup and one pair of
+    * shingle joins. The `__w` leg tag rides into the dedup keys and
+    * the d2 shingle attach (within pairs resolve d2 from the incoming
+    * side, cross pairs from the base side), so the output is
+    * bit-identical to the two-pipeline form even if an id appears on
+    * both sides. Candidate observations (`cand_minhash`,
+    * `cand_minhash_cross`) wrap the same per-leg candidate frames.
     *
     * Output: (`d1`, `d2`, `jaccard`) — within pairs ordered d1 < d2,
     * cross pairs d1 = incoming id, d2 = base id.
     */
   def lshDeltaPairs(
       base: LshSide, incoming: LshSide, tau: Double): DataFrame = {
-    require(
-      (base.n, base.bands, base.rowsPerBand) ==
-        (incoming.n, incoming.bands, incoming.rowsPerBand),
-      s"lshDeltaPairs: parameter mismatch — base " +
-        s"(n=${base.n}, bands=${base.bands}, rows=${base.rowsPerBand}) " +
-        s"vs incoming (n=${incoming.n}, bands=${incoming.bands}, " +
-        s"rows=${incoming.rowsPerBand})")
-    val idCol = base.idCol
-    val bb = base.banded
-      .select(col("id").as("d_base"), col("band").as("band2"),
-        col("bandkey").as("bandkey2"))
-    val bi = incoming.banded
-      .select(col("id").as("d_new"), col("band"), col("bandkey"))
-    val cross = graft.tools.RunMetrics.observedCount("cand_minhash_cross",
-        bi.join(bb,
-          col("band") === col("band2") && col("bandkey") === col("bandkey2"))
-        .select("d_new", "d_base"))
-      .select(col("d_new").as("d1"), col("d_base").as("d2"),
-        lit(false).as("__w"))
-    val a = incoming.banded
-      .select(col("id").as("d1"), col("band"), col("bandkey"))
-    val b = incoming.banded
-      .select(col("id").as("d2"), col("band").as("band2"),
-        col("bandkey").as("bandkey2"))
-    val within = graft.tools.RunMetrics.observedCount("cand_minhash",
-        a.join(b,
-          col("band") === col("band2") && col("bandkey") === col("bandkey2") &&
-            col("d1") < col("d2"))
-        .select("d1", "d2"))
-      .withColumn("__w", lit(true))
-    // per-leg dedup via the tag in the keys (the two-pipeline form
-    // deduped each leg separately), then one verification for both
-    val cands = within.unionByName(cross).dropDuplicates("d1", "d2", "__w")
-    val sh2 = incoming.sh
-      .select(col(idCol).as("__id2"), col("sh").as("sh2"), lit(true).as("__w2"))
-      .unionByName(base.sh
-        .select(col(idCol).as("__id2"), col("sh").as("sh2"),
-          lit(false).as("__w2")))
-    cands
-      .join(incoming.sh.select(col(idCol).as("d1"), col("sh").as("sh1")),
-        "d1")
-      .join(sh2, col("d2") === col("__id2") && col("__w") === col("__w2"))
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("d1"), col("d2"), col("jaccard"))
+    val cands = withinCands(incoming).withColumn("__w", lit(true))
+      .unionByName(crossCands(base, incoming, "lshDeltaPairs")
+        .withColumn("__w", lit(false)))
+    val sh2 = shingleSets(incoming, "d2", "sh2").withColumn("__w", lit(true))
+      .unionByName(shingleSets(base, "d2", "sh2").withColumn("__w", lit(false)))
+    verifyLsh(cands, incoming, sh2, Seq("d2", "__w"), tau)
   }
 
   /** 62-bit SimHash over whitespace tokens. Two portable 31-bit

@@ -340,8 +340,11 @@ object Streams {
           // eager localCheckpoint: materializes AND truncates lineage
           // (constraint-truncated — see localCheckpointTruncated: the
           // captured constraint set would otherwise DOUBLE per fold)
-          dim = graft.CacheScope.localCheckpointTruncated(
+          val next = graft.CacheScope.localCheckpointTruncated(
             Scd.scd2(dim, snap, bk, attrs, d).coalesce(par))
+          // the previous fold is unreachable now; free its blocks
+          graft.CacheScope.unpersistCheckpoint(dim)
+          dim = next
           lastApplied = d
         }
         ()

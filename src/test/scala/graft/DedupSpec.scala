@@ -8,6 +8,9 @@ class DedupSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf)
 
+  private def jaccardSet(df: org.apache.spark.sql.DataFrame) =
+    df.select("d1", "d2", "jaccard").as[(Long, Long, Double)].collect().toSet
+
   test("exact dedup: identical normalized texts cluster, others don't") {
     val df = Seq(
       (1L, "Hello,  World!"),
@@ -34,9 +37,18 @@ class DedupSpec extends SparkSpec {
     val nodes = spark.range(0, 200).toDF("id")
     val edges = spark.range(0, 199)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.size
+    val trackedBefore = graft.CacheScope.trackedCount
     val got = graft.operators.Components.connected(nodes, "id", edges, "src", "dst")
       .select("id", "component").as[(Long, Long)].collect()
     assert(got.length == 200 && got.forall(_._2 == 0L), "one chain, min id 0")
+    // each round frees the previous round's checkpoint: only the
+    // tracked edge cache and the returned labels' checkpoint remain
+    val resident = sc.getPersistentRDDs.size - rddsBefore
+    val allowed = graft.CacheScope.trackedCount - trackedBefore + 1
+    assert(resident <= allowed,
+      s"$resident RDDs resident after the fixpoint, at most $allowed allowed")
     // two isolated nodes + disjoint triangle keep separate labels
     val n2 = Seq(10L, 20L, 30L, 31L, 32L).toDF("id")
     val e2 = Seq((30L, 31L), (31L, 32L), (32L, 30L)).toDF("src", "dst")
@@ -97,6 +109,42 @@ class DedupSpec extends SparkSpec {
       val recall = lsh.size.toDouble / exact.size
       assert(recall >= 0.8, s"recall $recall too low (8 bands x 4 rows at tau=0.8)")
     }
+  }
+
+  test("count-based Jaccard kernels agree bit-exactly on the fixture") {
+    val self = jaccardSet(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8))
+    val cross = jaccardSet(
+      Dedup.jaccardAgainstPairs(docs, docs, "doc_id", "text", 3, 0.8)
+        .filter(col("d1") < col("d2")))
+    // no gram occurs in more documents than there are rows: nothing pruned
+    val pruned = jaccardSet(Dedup.jaccardPairsPruned(docs, "doc_id", "text", 3,
+      0.8, maxDf = docs.count().toInt))
+    assert(self.nonEmpty, "testdata plants near-dup documents")
+    assert(cross == self, s"cross-join kernel: ${cross.diff(self)} / ${self.diff(cross)}")
+    assert(pruned == self, s"gram aggregation: ${pruned.diff(self)} / ${self.diff(pruned)}")
+    graft.CacheScope.release()
+  }
+
+  test("lshDeltaPairs ≡ cross pairs unioned with within-batch pairs") {
+    // doc 7 is on both sides with different texts, so the within pair
+    // (3,7) and the cross pair (3,7) have different Jaccards and must
+    // both survive the one fused dedup + verification
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val base = Seq((7L, text),
+        (1L, "completely unrelated text about spark shuffle partitions today"))
+      .toDF("doc_id", "text")
+    val inc = Seq((3L, text), (7L, text + " today")).toDF("doc_id", "text")
+    val baseSide = Dedup.lshSide(base, "doc_id", "text", 3, 8, 4)
+    val incSide = Dedup.lshSide(inc, "doc_id", "text", 3, 8, 4)
+    val fused = jaccardSet(Dedup.lshDeltaPairs(baseSide, incSide, 0.8))
+    val twoPipelines = jaccardSet(
+      Dedup.lshPairsAgainstBase(baseSide, incSide, 0.8)
+        .select(col("d_new").as("d1"), col("d_base").as("d2"), col("jaccard"))
+        .unionByName(Dedup.minhashLshPairs(incSide, 0.8)))
+    assert(fused == twoPipelines)
+    assert(fused == Set((3L, 7L, 1.0), (3L, 7L, 10.0 / 11), (7L, 7L, 10.0 / 11)),
+      s"within (3,7), cross (3,7) and cross (7,7) expected: $fused")
+    graft.CacheScope.release()
   }
 
   test("incremental LSH dedup: best-match subset of exact cross matches, recall") {
@@ -560,7 +608,8 @@ class DedupSpec extends SparkSpec {
       Dedup.minhashLshPairs(base, "doc_id", "text", 3, 0.8, 8, 4),
       "d1", "d2")
     val delta = Dedup.lshPairsAgainstBase(
-        base, incoming, "doc_id", "text", 3, 0.8, 8, 4)
+        Dedup.lshSide(base, "doc_id", "text", 3, 8, 4),
+        Dedup.lshSide(incoming, "doc_id", "text", 3, 8, 4), 0.8)
       .select(col("d_new").as("d1"), col("d_base").as("d2"))
       .unionByName(
         Dedup.minhashLshPairs(incoming, "doc_id", "text", 3, 0.8, 8, 4)
@@ -596,7 +645,8 @@ class DedupSpec extends SparkSpec {
         "d1", "d2")
       .persist()
     val delta = Dedup.lshPairsAgainstBase(
-        base, incoming, "doc_id", "text", 3, 0.8, 8, 4)
+        Dedup.lshSide(base, "doc_id", "text", 3, 8, 4),
+        Dedup.lshSide(incoming, "doc_id", "text", 3, 8, 4), 0.8)
       .select(col("d_new").as("d1"), col("d_base").as("d2"))
       .unionByName(
         Dedup.minhashLshPairs(incoming, "doc_id", "text", 3, 0.8, 8, 4)

@@ -1016,6 +1016,9 @@ class StreamSpec extends SparkSpec {
     staging.coalesce(1).write.parquet(root)
     val feed = spark.readStream.schema(staging.schema)
       .option("recursiveFileLookup", "true").parquet(root)
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.size
+    val trackedBefore = graft.CacheScope.trackedCount
     val out = graft.streaming.Streams
       .scd2Stream(spark, feed, dim, "bk", Seq("name", "segment"), "run_date")
     // per-fold localCheckpoint: the RETURNED dimension is a flat scan
@@ -1041,6 +1044,12 @@ class StreamSpec extends SparkSpec {
       .as[(String, Boolean)].collect()
     assert(rows.length == 25)
     assert(rows.count(_._2) == 1 && rows.find(_._2).get._1 == "s24")
+    // each fold frees the previous fold's checkpoint: only tracked
+    // caches and the returned dimension's checkpoint remain
+    val resident = sc.getPersistentRDDs.size - rddsBefore
+    val allowed = graft.CacheScope.trackedCount - trackedBefore + 1
+    assert(resident <= allowed,
+      s"$resident RDDs resident after 25 folds, at most $allowed allowed")
   }
 
   test("localCheckpointTruncated: overlapping calls restore the session flag") {
@@ -1192,7 +1201,8 @@ class StreamSpec extends SparkSpec {
     (1 until 3).foreach { r =>
       val baseDf = splits.take(r).reduce(_ unionByName _)
       val delta = Dedup.lshPairsAgainstBase(
-          baseDf, splits(r), "doc_id", "text", 3, 0.8, 8, 4)
+          Dedup.lshSide(baseDf, "doc_id", "text", 3, 8, 4),
+          Dedup.lshSide(splits(r), "doc_id", "text", 3, 8, 4), 0.8)
         .select(col("d_new").as("d1"), col("d_base").as("d2"))
         .unionByName(Dedup
           .minhashLshPairs(splits(r), "doc_id", "text", 3, 0.8, 8, 4)
@@ -1215,6 +1225,10 @@ class StreamSpec extends SparkSpec {
       Dedup.lshPairsAgainstBase(a, b, 0.8)
     }
     assert(e.getMessage.contains("parameter mismatch"))
+    val e2 = intercept[IllegalArgumentException] {
+      Dedup.lshDeltaPairs(a, b, 0.8)
+    }
+    assert(e2.getMessage.contains("lshDeltaPairs: parameter mismatch"))
     graft.CacheScope.release()
   }
 
