@@ -110,12 +110,7 @@ object QualityQueries {
       col("c_custkey").as("customer_bk"), col("c_name").as("name"),
       concat(col("c_mktsegment"), lit("_XY")).as("segment"),
       lit("2024-07-01").cast("date").as("run_date")), 1700000100000L)
-    val schema = s.read.parquet(s"$root/b=0").schema
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(root)
-    Streams.scd2Stream(s, feed, dim,
+    Streams.scd2Stream(s, Streams.fileFeed(s, root), dim,
         "customer_bk", Seq("name", "segment"), "run_date")
       .orderBy(col("customer_bk"), col("start_date"))
   }

@@ -248,15 +248,9 @@ object TextQueries {
         streamDsirSrcBuilt += dir
       }
     }
-    val schema = s.read.option("recursiveFileLookup", "true")
-      .parquet(srcDir).schema
     val run = System.nanoTime()
     graft.streaming.Streams.dsirStream(
-        s.readStream.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir),
-        "doc_id", "text", "tgt",
+        graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text", "tgt",
         s"target/tmp/stream_dsir_state_$run",
         s"target/tmp/stream_dsir_ckpt_$run",
         refreshEvery = 3)
@@ -1482,17 +1476,11 @@ object TextQueries {
         streamCcSrcBuilt += dir
       }
     }
-    // recursiveFileLookup disables partition inference, so the stream
-    // schema is the file schema (doc_id, text) without the split col
-    val schema = s.read.option("recursiveFileLookup", "true")
-      .parquet(srcDir).schema
+    // the feed's schema is the file schema (doc_id, text), without the
+    // split column (see Streams.fileFeed)
     val run = System.nanoTime()
-    val src = s.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
     graft.streaming.Streams.clusterStream(
-        src, "doc_id", "text",
+        graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text",
         s"target/tmp/stream_cc_state_$run",
         s"target/tmp/stream_cc_ckpt_$run",
         n = 3, tau = 0.8, bands = 8, rowsPerBand = 4)

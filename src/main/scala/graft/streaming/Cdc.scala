@@ -215,27 +215,28 @@ object Cdc {
     // be cut (localCheckpoint) or write tasks would re-open deleted
     // inputs. (A table format makes this swap transactional; this is
     // the plain-parquet equivalent, scoped to the changed partitions.)
-    val appliedP = applied.withColumn(partCol, partOf(applied))
-      .repartition(col(partCol))
-      .localCheckpoint(true)
-    val remaining = appliedP.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSet
-    appliedP
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(targetPath)
-    // remove partitions whose keys were all deleted (absent from the
-    // dynamic-overwrite output); directory names use the SAME
-    // Hive-escaping the writer used, so special characters in values
-    // still address the right directory
-    val fs = new HPath(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    parts.filterNot(remaining).foreach { p =>
-      val dirVal = org.apache.spark.sql.GraftColumnBridge
-        .escapePartitionValue(String.valueOf(p))
-      fs.delete(new HPath(s"$targetPath/$partCol=$dirVal"), true)
-    }
+    val appliedP = graft.CacheScope.localCheckpointTruncated(
+      applied.withColumn(partCol, partOf(applied)).repartition(col(partCol)))
+    try {
+      val remaining = appliedP.select(col(partCol)).distinct()
+        .collect().map(_.get(0)).toSet
+      appliedP
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol)
+        .parquet(targetPath)
+      // remove partitions whose keys were all deleted (absent from the
+      // dynamic-overwrite output); directory names use the SAME
+      // Hive-escaping the writer used, so special characters in values
+      // still address the right directory
+      val fs = new HPath(targetPath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      parts.filterNot(remaining).foreach { p =>
+        val dirVal = org.apache.spark.sql.GraftColumnBridge
+          .escapePartitionValue(String.valueOf(p))
+        fs.delete(new HPath(s"$targetPath/$partCol=$dirVal"), true)
+      }
+    } finally graft.CacheScope.unpersistCheckpoint(appliedP)
   }
 
   /** Partition METADATA collect — bounded by the batch's distinct

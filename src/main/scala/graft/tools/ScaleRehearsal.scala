@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.{CacheScope, SparkEntry}
 
 /** sf1 scale rehearsal of the superlinear-risk query family (VERDICT
@@ -489,14 +488,9 @@ object ScaleRehearsal {
         }
         fs.create(done, true).close()
       }
-      val schema = s.read.option("recursiveFileLookup", "true")
-        .parquet(srcDir).schema
       val run = System.nanoTime()
       graft.streaming.Streams.dsirStream(
-        s.readStream.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", "1").parquet(srcDir),
-        "doc_id", "text", "tgt",
+        graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text", "tgt",
         s"target/tmp/x_stream_dsir_state_$run",
         s"target/tmp/x_stream_dsir_ckpt_$run",
         refreshEvery = 5)
@@ -953,6 +947,16 @@ object ScaleRehearsal {
     Seq(1).toDF("ok")
   }
 
+  /** A per-batch metric map as a JSON object ordered by the id that
+    * ends each key (`…_b<id>`, `…_v<id>`), keys without `stripPrefix`.
+    */
+  private def mapJson(
+      m: scala.collection.Map[String, Double], stripPrefix: String,
+      fmt: Double => String): String =
+    m.toSeq.sortBy(_._1.dropWhile(!_.isDigit).toLong)
+      .map { case (k, v) => s""""${k.stripPrefix(stripPrefix)}":${fmt(v)}""" }
+      .mkString("{", ",", "}")
+
   private def queryOf(name: String): (SparkSession, String) => DataFrame =
     Extra.getOrElse(name, SparkEntry.queries(name))
 
@@ -1153,8 +1157,10 @@ object ScaleRehearsal {
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = "target/sf1"
     val sf10 = "target/sf10"
-    scaleUp(spark, sf01, sf1)
-    scaleUp100(spark, sf01, sf10)
+    // a subset run builds only the tiers its entries read
+    if (picked(Family).nonEmpty || subset.forall(_("x_stream_cc_crossover")))
+      scaleUp(spark, sf01, sf1)
+    if (picked(Family100).nonEmpty) scaleUp100(spark, sf01, sf10)
 
     // JVM/codegen warm-up on the small dir, like Bench
     (picked(Family) ++ picked(Family100)).distinct.foreach { name =>
@@ -1221,18 +1227,30 @@ object ScaleRehearsal {
     // one streaming drain of `srcDir`, one file per micro-batch:
     // `query` builds the stream from the source and a per-run tag for
     // its state dirs; the clock covers the drain only
-    def timedDrain(srcDir: String, schema: StructType)(
+    def timedDrain(srcDir: String)(
         query: (DataFrame, Long) => DataFrame): (Long, Double) =
       CacheScope.scoped(spark) {
         RunMetrics.flushAndReset(spark)
         val run = System.nanoTime()
-        val src = spark.readStream.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        val src = graft.streaming.Streams.fileFeed(spark, srcDir)
         val t0 = System.nanoTime()
         val n = Exec.materialize(query(src, run))
         (n, (System.nanoTime() - t0) / 1e9)
       }
+    // serving-path read pricing (VERDICT r15 item 7): between
+    // compactions every consumer of a table-mode labeling pays the
+    // sidecar overlay (window + anti-join + union against the table) —
+    // time a full read of the labeling after each fold, so the
+    // compactEvery knob has a measured READ-side term next to the
+    // write-side fold cost. Run from clusterStream's afterBatch, i.e.
+    // outside the fold timings, so it never pollutes the flatness
+    // evidence.
+    def timeLabelsRead(stateDir: String, batchId: Long): Unit = {
+      val t0 = System.nanoTime()
+      Exec.materialize(graft.streaming.Streams.clusterLabels(
+        spark, stateDir, "doc_id", labelsAsTable = true))
+      RunMetrics.put(s"stream_cc_read_b$batchId", (System.nanoTime() - t0) / 1e9)
+    }
     val dirs = Seq("sf0.1" -> sf01, "sf1" -> sf1)
     for (pass <- 1 to Passes; (tag, dir) <- dirs; name <- picked(Family))
       run(pass, tag, dir, name)
@@ -1317,8 +1335,6 @@ object ScaleRehearsal {
           }
           fs.create(done, true).close()
         }
-        val schema = spark.read.option("recursiveFileLookup", "true")
-          .parquet(srcDir).schema
         // per-slice row counts of the feed (one cheap pass): corpus
         // rows at compaction point v<b> = rows of batches 0..b — the
         // denominator of the compaction slope gate (VERDICT r16
@@ -1336,21 +1352,18 @@ object ScaleRehearsal {
           val reads = scala.collection.mutable.Map.empty[String, Double]
           var dirsMax = 0.0
           var totalMin = Double.MaxValue
-          // serving-path read pricing (VERDICT r15 item 7) — measured
-          // outside the fold timings, see Streams.clusterFold
-          spark.conf.set("spark.graft.stream.priceLabelsRead",
-            asTable.toString)
           for (pass <- 1 to 2) {
-            val (n, dt) = timedDrain(srcDir, schema) { (src, run) =>
+            val (n, dt) = timedDrain(srcDir) { (src, run) =>
+              val state = s"target/tmp/x_drain40_state_$run"
               graft.streaming.Streams.clusterStream(
-                src, "doc_id", "text",
-                s"target/tmp/x_drain40_state_$run",
+                src, "doc_id", "text", state,
                 s"target/tmp/x_drain40_ckpt_$run",
                 n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
-                compactEvery = 5, labelsAsTable = asTable)
+                compactEvery = 5, labelsAsTable = asTable,
+                afterBatch = b => if (asTable) timeLabelsRead(state, b))
             }
             val got = graft.tools.RunMetrics.snapshot
-            // ADVICE r16: the conf-gated labels-read pricing runs in
+            // ADVICE r16: the labels-read pricing runs in
             // table mode only, so the raw wall would include ~40
             // diagnostic logicalLabels reads the rewrite-mode wall
             // does not — subtract this pass's read seconds so the
@@ -1375,17 +1388,9 @@ object ScaleRehearsal {
             println(
               f"pass $pass sf0.1 x_stream_cc_drain40[$mode]  ${dt}%8.2fs rows=$n")
           }
-          def mapJson(
-              m: scala.collection.Map[String, Double], prefix: String,
-              fmt: Double => String): String =
-            m.toSeq.sortBy(_._1.stripPrefix(prefix).dropWhile(!_.isDigit).toLong)
-              .map { case (k, v) =>
-                s""""${k.stripPrefix("stream_cc_")}":${fmt(v)}""" }
-              .mkString("{", ",", "}")
-          spark.conf.unset("spark.graft.stream.priceLabelsRead")
           val readsJson =
             if (reads.isEmpty) ""
-            else s""","reads":${mapJson(reads, "stream_cc_read_b", v => f"$v%.3f")}"""
+            else s""","reads":${mapJson(reads, "stream_cc_", v => f"$v%.3f")}"""
           // per-compaction-event census: seconds vs corpus rows at the
           // point, normalized cost gated flat after the artifact is
           // written (VERDICT r16 item 4)
@@ -1405,9 +1410,9 @@ object ScaleRehearsal {
             }.mkString(",") + "}"
           f""""$mode":{"sf0.1_sec":$totalMin%.3f,""" +
             f""""dirs_opened_max":${dirsMax.round},""" +
-            s""""folds":${mapJson(folds, "stream_cc_fold_b", v => f"$v%.3f")},""" +
-            s""""bytes":${mapJson(bytes, "stream_cc_bytes_b", v => s"${v.round}")},""" +
-            s""""compactions":${mapJson(compacts, "stream_cc_compact_v", v => f"$v%.3f")}""" +
+            s""""folds":${mapJson(folds, "stream_cc_", v => f"$v%.3f")},""" +
+            s""""bytes":${mapJson(bytes, "stream_cc_", v => s"${v.round}")},""" +
+            s""""compactions":${mapJson(compacts, "stream_cc_", v => f"$v%.3f")}""" +
             s"""$compCensusJson$readsJson}"""
         }
         // both labels persistences over the same 40-batch feed: the
@@ -1459,22 +1464,19 @@ object ScaleRehearsal {
           }
           fs.create(done, true).close()
         }
-        val schema = spark.read.option("recursiveFileLookup", "true")
-          .parquet(srcDir).schema
         def drain(mode: String, asTable: Boolean): String = {
           val folds = scala.collection.mutable.Map.empty[String, Double]
           val bytes = scala.collection.mutable.Map.empty[String, Double]
           val reads = scala.collection.mutable.Map.empty[String, Double]
-          spark.conf.set("spark.graft.stream.priceLabelsRead",
-            asTable.toString)
           for (pass <- 1 to 2) {
-            val (n, dt) = timedDrain(srcDir, schema) { (src, run) =>
+            val (n, dt) = timedDrain(srcDir) { (src, run) =>
+              val state = s"target/tmp/x_cross_state_$run"
               graft.streaming.Streams.clusterStream(
-                src, "doc_id", "text",
-                s"target/tmp/x_cross_state_$run",
+                src, "doc_id", "text", state,
                 s"target/tmp/x_cross_ckpt_$run",
                 n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
-                compactEvery = 5, labelsAsTable = asTable)
+                compactEvery = 5, labelsAsTable = asTable,
+                afterBatch = b => if (asTable) timeLabelsRead(state, b))
             }
             graft.tools.RunMetrics.snapshot.foreach {
               case (k, v) if k.startsWith("stream_cc_fold_") =>
@@ -1488,19 +1490,11 @@ object ScaleRehearsal {
             println(f"pass $pass 10xcorpus x_stream_cc_crossover[$mode] " +
               f"${dt}%8.2fs rows=$n")
           }
-          def mapJson(
-              m: scala.collection.Map[String, Double],
-              fmt: Double => String): String =
-            m.toSeq.sortBy(_._1.dropWhile(!_.isDigit).toLong)
-              .map { case (k, v) =>
-                s""""${k.stripPrefix("stream_cc_")}":${fmt(v)}""" }
-              .mkString("{", ",", "}")
-          spark.conf.unset("spark.graft.stream.priceLabelsRead")
           val readsJson =
             if (reads.isEmpty) ""
-            else s""","reads":${mapJson(reads, v => f"$v%.3f")}"""
-          s""""$mode":{"folds":${mapJson(folds, v => f"$v%.3f")},""" +
-            s""""bytes":${mapJson(bytes, v => s"${v.round}")}$readsJson}"""
+            else s""","reads":${mapJson(reads, "stream_cc_", v => f"$v%.3f")}"""
+          s""""$mode":{"folds":${mapJson(folds, "stream_cc_", v => f"$v%.3f")},""" +
+            s""""bytes":${mapJson(bytes, "stream_cc_", v => s"${v.round}")}$readsJson}"""
         }
         s""","stream_cc_crossover":{${drain("labels_table", asTable = true)},""" +
           s"""${drain("rewrite", asTable = false)}}"""
@@ -1547,8 +1541,6 @@ object ScaleRehearsal {
           }
           fs.create(done, true).close()
         }
-        val schema = spark.read.option("recursiveFileLookup", "true")
-          .parquet(srcDir).schema
         val sliceRows = spark.read.option("recursiveFileLookup", "true")
           .parquet(srcDir)
           .groupBy(pmod(col("doc_id"), lit(40L)).as("r")).count()
@@ -1561,7 +1553,7 @@ object ScaleRehearsal {
         val files = scala.collection.mutable.Map.empty[String, Double]
         var lastState = ""
         for (pass <- 1 to 2) {
-          val (n, dt) = timedDrain(srcDir, schema) { (src, run) =>
+          val (n, dt) = timedDrain(srcDir) { (src, run) =>
             lastState = s"target/tmp/x_dsir40_state_$run"
             graft.streaming.Streams.dsirStream(
               src, "doc_id", "text", "tgt",
@@ -1595,23 +1587,16 @@ object ScaleRehearsal {
           dsirFoldMins(k.stripPrefix("stream_dsir_fold_b").toLong) = sec }
         bytes.foreach { case (k, v) =>
           dsirBytes(k.stripPrefix("stream_dsir_refresh_bytes_v").toLong) = v }
-        def mapJson(
-            m: scala.collection.Map[String, Double], prefix: String,
-            fmt: Double => String): String =
-          m.toSeq.sortBy(_._1.stripPrefix(prefix).dropWhile(!_.isDigit).toLong)
-            .map { case (k, v) =>
-              s""""${k.stripPrefix("stream_dsir_")}":${fmt(v)}""" }
-            .mkString("{", ",", "}")
         val refreshCensusJson = dsirRefreshCensus.sortBy(_._1).map {
           case (v, sec, rows) =>
             f""""v$v":{"sec":$sec%.3f,"rows":$rows,""" +
               f""""sec_per_mrow":${sec / rows * 1e6}%.2f}"""
         }.mkString(",")
         s""","stream_dsir_drain40":{""" +
-          s""""folds":${mapJson(folds, "stream_dsir_fold_b", v => f"$v%.3f")},""" +
-          s""""refreshes":${mapJson(refreshes, "stream_dsir_refresh_v", v => f"$v%.3f")},""" +
-          s""""refresh_bytes":${mapJson(bytes, "stream_dsir_refresh_bytes_v", v => s"${v.round}")},""" +
-          s""""table_files":${mapJson(files, "stream_dsir_files_v", v => s"${v.round}")},""" +
+          s""""folds":${mapJson(folds, "stream_dsir_", v => f"$v%.3f")},""" +
+          s""""refreshes":${mapJson(refreshes, "stream_dsir_", v => f"$v%.3f")},""" +
+          s""""refresh_bytes":${mapJson(bytes, "stream_dsir_", v => s"${v.round}")},""" +
+          s""""table_files":${mapJson(files, "stream_dsir_", v => s"${v.round}")},""" +
           s""""refresh_census":{$refreshCensusJson},""" +
           s""""corpus_bytes":$dsirCorpusBytes}"""
       }

@@ -392,4 +392,22 @@ class CdcSpec extends SparkSpec {
       .select("user_id").as[Long].collect().toSet
     assert(got == Set(2L, 3L, 4L, 6L, 7L, 8L))
   }
+
+  test("applyPartitioned frees its checkpointed blocks") {
+    val dir = s"target/tmp/cdc_part_cpfree_${System.nanoTime()}"
+    (0L until 100L).map(k => (k, k * 1.0, 1L))
+      .toDF("user_id", "amount", "last_lsn")
+      .withColumn("bucket", pmod(col("user_id"), lit(4L)))
+      .write.partitionBy("bucket").parquet(dir)
+    val changes = Seq(
+      (8L, 88.0, 10L, Cdc.Op.Update),
+      (13L, 0.0, 12L, Cdc.Op.Delete)
+    ).toDF("user_id", "amount", "lsn", "op")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Cdc.applyPartitioned(spark, dir, changes, keys, data,
+      "bucket", d => pmod(col("user_id"), lit(4L)))
+    assert(sc.getPersistentRDDs.size <= before,
+      s"applyPartitioned left ${sc.getPersistentRDDs.size - before} RDDs resident")
+  }
 }

@@ -1401,6 +1401,40 @@ class StreamSpec extends SparkSpec {
     graft.CacheScope.release()
   }
 
+  test("clusterStream: an empty micro-batch burns no marker and no state") {
+    import graft.operators.{Components, Dedup}
+    val base = s"target/tmp/ccstream_empty_${System.nanoTime()}"
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).filter(col("doc_id") < 150)
+    // batch 1 is a zero-row file between two real slices; explicit
+    // mod-times pin the file -> batch order
+    Seq(pmod(col("doc_id"), lit(2L)) === 0, lit(false),
+        pmod(col("doc_id"), lit(2L)) === 1).zipWithIndex.foreach {
+      case (keep, r) =>
+        docs.filter(keep).coalesce(1).write.parquet(s"$base/feed/f=$r")
+        new java.io.File(s"$base/feed/f=$r").listFiles()
+          .foreach(_.setLastModified(1600000000000L + r * 60000L))
+    }
+    val streamed = Streams.clusterStream(
+        Streams.fileFeed(spark, s"$base/feed"), "doc_id", "text",
+        s"$base/state", s"$base/ckpt", 3, 0.8, 8, 4)
+      .as[(Long, Long)].collect().toSet
+    def exists(p: String) = new java.io.File(s"$base/state/$p").exists()
+    assert(!exists("commits/1") && !exists("sh/b1") &&
+      !exists("labels_delta/b1"),
+      "the empty batch must write neither a commit marker nor state")
+    assert(Seq("commits/0", "commits/2", "sh/b2", "labels_delta/b2")
+      .forall(exists), "the batches after the empty one must still fold")
+    val scratch = Components.connected(
+        docs.select(col("doc_id")), "doc_id",
+        Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 0.8, 8, 4),
+        "d1", "d2")
+      .as[(Long, Long)].collect().toSet
+    assert(streamed == scratch,
+      "a drain with an empty batch must equal from-scratch clustering")
+    graft.CacheScope.release()
+  }
+
   test("streaming DSIR: an empty micro-batch commits AND refreshes on cadence") {
     val base = s"target/tmp/dsirstream_empty_${System.nanoTime()}"
     val docs = Tables.documents(spark, sf).select(
