@@ -14,7 +14,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `spark.catalog.clearCache()` — to drop every graft-internal cached
   * block. Every main runs each query inside [[CacheScope.scoped]],
   * which does both; a long-lived session that skips it degrades to
-  * LRU eviction, never to wrong results. (The one deliberate
+  * LRU eviction, never to wrong results. Checkpoints taken through
+  * [[localCheckpointTruncated]] are owned the same way: [[release]]
+  * frees every one not already freed by its operator
+  * ([[unpersistCheckpoint]]) — a frame built on one must be
+  * materialized before the release. (The one deliberate
   * exception: `CsvIngest`/`XmlIngest` cache their RETURNED staging
   * frame — Spark requires corrupt-record-only projections to be
   * cached, and releasing a frame the caller still holds would break
@@ -22,6 +26,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object CacheScope {
   private val tracked = scala.collection.mutable.Buffer.empty[DataFrame]
+  private val checkpoints = scala.collection.mutable.Buffer.empty[DataFrame]
 
   /** `df.persistTracked()` — persist and register for [[release]]. */
   implicit final class TrackedDataFrame(private val df: DataFrame)
@@ -34,13 +39,18 @@ object CacheScope {
     df.persist()
   }
 
-  /** Unpersist every operator-internal cached block. */
+  /** Unpersist every operator-internal cached block, then free every
+    * registered checkpoint.
+    */
   def release(blocking: Boolean = false): Unit = synchronized {
-    tracked.foreach(df =>
-      try df.unpersist(blocking)
+    def loudly(df: DataFrame)(free: => Unit): Unit =
+      try free
       catch { case e: Throwable =>
-        System.err.println(s"[CacheScope] unpersist of $df failed: $e") })
+        System.err.println(s"[CacheScope] unpersist of $df failed: $e") }
+    tracked.foreach(df => loudly(df)(df.unpersist(blocking)))
     tracked.clear()
+    checkpoints.foreach(df => loudly(df)(freeCheckpoint(df)))
+    checkpoints.clear()
   }
 
   /** Run `body` (one query: build + materialize), then drop every
@@ -52,11 +62,17 @@ object CacheScope {
     finally { release(); spark.catalog.clearCache() }
 
   /** Free the blocks of a frame returned by
-    * [[localCheckpointTruncated]]. `Dataset.unpersist` is a no-op
-    * there: the blocks belong to the RDD inside the frame's
-    * `LogicalRDD`, which the session's cache manager never saw.
+    * [[localCheckpointTruncated]] now, before [[release]] would.
+    * `Dataset.unpersist` is a no-op there: the blocks belong to the
+    * RDD inside the frame's `LogicalRDD`, which the session's cache
+    * manager never saw.
     */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
+  private[graft] def unpersistCheckpoint(df: DataFrame): Unit = {
+    synchronized(checkpoints -= df)
+    freeCheckpoint(df)
+  }
+
+  private def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ => ()
@@ -82,6 +98,8 @@ object CacheScope {
     * clean slate, which is exactly what checkpointing promises. The
     * flag only gates constraint INFERENCE (an optimization), never
     * results.
+    *
+    * The returned frame is registered for [[release]].
     */
   private[graft] def localCheckpointTruncated(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
@@ -110,8 +128,11 @@ object CacheScope {
           cpState(sess) = (1, ambient)
       }
     }
-    try df.localCheckpoint(true)
-    finally cpLock.synchronized {
+    try {
+      val cp = df.localCheckpoint(true)
+      synchronized(checkpoints += cp)
+      cp
+    } finally cpLock.synchronized {
       val (d, saved) = cpState(sess)
       if (d == 1) { conf.set(key, saved); cpState.remove(sess) }
       else cpState(sess) = (d - 1, saved)

@@ -80,7 +80,7 @@ object DeltaDml {
 
   /** Max distinct file keys a DV writer records on its manifest entry
     * — past it the statement touched "many" files and the entry
-    * records no key list (unknown → every partition probes it). 64
+    * records a [[DvBloom]] over the keys instead of the list. 64
     * covers the trickle-DML case the scoping exists for, while keeping
     * manifest lines bounded.
     */
@@ -88,11 +88,6 @@ object DeltaDml {
 
   val FileCol = "_file"
   val PosCol = "_pos"
-
-  /** Schema of a position-delete parquet file (MergeOnRead's). */
-  private[sources] val DvSchema = StructType(Seq(
-    StructField("file_key", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false)))
 
   /** The table property holding a PER-TABLE default mode (`ALTER
     * TABLE … SET TBLPROPERTIES('write.dml.mode'='mor')`); an
@@ -590,7 +585,7 @@ private[sources] final class GraftDeltaRowWriter(
   private def writeDvRow(id: InternalRow): Unit = {
     if (dvWriter == null) {
       val c = new Configuration(conf)
-      ParquetWriteSupport.setSchema(DeltaDml.DvSchema, c)
+      ParquetWriteSupport.setSchema(MergeOnRead.DvSchema, c)
       dvPath = new Path(s"$root/$dvRel/part-$uid.parquet")
       dvWriter = TaskParquet.open(dvPath, c, codecName)
     }

@@ -286,19 +286,16 @@ object MergeOnRead {
     val rel = s"deletes/${java.util.UUID.randomUUID()}"
     val dir = s"$root/$rel"
     positions.write.parquet(dir)
-    // per-file covered-key lists for the manifest (DvEntry.keys): one
-    // distinct pass over the just-written deletes, collect bounded at
-    // DvKeyCap+1 per file — past the cap the entry records "unknown"
-    // and readers fall back to footer pruning. Cost ∝ this statement's
-    // deletes, paid once at write so every future scan plans scoped.
+    // per-file covered keys for the manifest (DvEntry.keys/bloom): one
+    // distinct pass over the just-written deletes — the exact key list
+    // up to DvKeyCap, a DvBloom over the keys past it (readers then
+    // scope false-positive-only). Cost ∝ this statement's deletes,
+    // paid once at write so every future scan plans scoped. The
+    // collect is bounded either way: distinct keys per DV file cannot
+    // exceed this statement's touched files, and the bloom is built
+    // driver-side from the exact set.
     import org.apache.spark.sql.functions.{col, collect_set, input_file_name}
     val cap = DeltaDml.DvKeyCap
-    // (exact keys, bloom) per file: key lists up to the cap, a DvBloom
-    // past it (VERDICT r12 item 3 — a wide DML used to record
-    // "unknown" and ship its DV to every partition). The collect is
-    // bounded either way: distinct keys per DV file cannot exceed this
-    // statement's touched files, and the bloom is built driver-side
-    // from the exact set.
     val keysByFile: Map[String, (Seq[String], Option[String])] = spark.read
       .schema(DvSchema).parquet(dir)
       .select(input_file_name().as("__f"), col("file_key"))
@@ -345,10 +342,9 @@ object MergeOnRead {
     }.toSeq: _*)
 
   /** Discard an UNCOMMITTED (delete-file dir, fresh data entries)
-    * pair after a lost optimistic race — positions are only valid
-    * against the snapshot they were computed from, so both legs are
-    * dropped and the caller rescans. Shared by [[updateWhere]] and
-    * [[mergeInto]].
+    * pair — a statement that matched nothing, or a lost optimistic
+    * race: positions are only valid against the snapshot they were
+    * computed from, so both legs are dropped and the caller rescans.
     */
   private def discardLegs(
       spark: SparkSession, root: String, dvDir: String,
@@ -360,6 +356,19 @@ object MergeOnRead {
       .foreach(rel => f.delete(new Path(s"$root/$rel"), true))
   }
 
+  /** Run a pinned DV commit of this attempt's legs; on a lost race
+    * discard them and rethrow, so [[TxTable.retrying]] rescans.
+    */
+  private def commitOrDiscard(
+      spark: SparkSession, root: String, dvDir: String,
+      fresh: Seq[TxTable.Entry])(commit: => Long): Long =
+    try commit
+    catch {
+      case e: TxTable.ConcurrentCommitException =>
+        discardLegs(spark, root, dvDir, fresh)
+        throw e
+    }
+
   /** MERGE-ON-READ DELETE: commit a position-delete file for every
     * currently-visible row matching `cond` — data files untouched,
     * write bytes ∝ deleted rows. Returns (new version, rows deleted);
@@ -369,34 +378,23 @@ object MergeOnRead {
     */
   def deleteWhere(
       spark: SparkSession, root: String, cond: Column,
-      maxRetries: Int = 10): (Long, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    var attempt = 0
-    while (true) {
+      maxRetries: Int = 10): (Long, Long) =
+    TxTable.retrying(maxRetries) {
       val cur = TxTable.requireSnapshot(spark, root)
-      if (cur.entries.isEmpty) return (cur.version, 0L)
-      val visible = visibleWithPos(spark, root, cur, cur.entries)
-      val doomed = visible
-        .filter(cond)
-        .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
-      val f = new Path(root).getFileSystem(conf)
-      val (dir, newDvs) = writeDv(spark, root, doomed)
-      val total = newDvs.map(d => math.max(d.rows, 0L)).sum
-      if (newDvs.isEmpty || total == 0L) {
-        f.delete(new Path(dir), true)
-        return (cur.version, 0L)
-      }
-      try return (TxTable.commitDvAppend(spark, root, cur.version, newDvs),
-        total)
-      catch {
-        case e: TxTable.ConcurrentCommitException =>
-          f.delete(new Path(dir), true) // this attempt's positions are stale
-          attempt += 1
-          if (attempt > maxRetries) throw e
+      if (cur.entries.isEmpty) (cur.version, 0L)
+      else {
+        val doomed = visibleWithPos(spark, root, cur, cur.entries)
+          .filter(cond)
+          .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
+        val (dir, newDvs) = writeDv(spark, root, doomed)
+        val total = newDvs.map(d => math.max(d.rows, 0L)).sum
+        if (total == 0L) {
+          discardLegs(spark, root, dir, Nil)
+          (cur.version, 0L)
+        } else (commitOrDiscard(spark, root, dir, Nil)(
+          TxTable.commitDvAppend(spark, root, cur.version, newDvs)), total)
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** MERGE-ON-READ UPDATE: for every currently-visible row matching
     * `cond`, commit (a) a position-delete file masking its OLD image
@@ -423,52 +421,46 @@ object MergeOnRead {
       spark: SparkSession, root: String, cond: Column,
       sets: Seq[(String, Column)], maxRetries: Int = 10): (Long, Long) = {
     require(sets.nonEmpty, "updateWhere: no SET assignments")
-    var attempt = 0
-    while (true) {
+    TxTable.retrying(maxRetries) {
       val cur = TxTable.requireSnapshot(spark, root)
-      if (cur.entries.isEmpty) return (cur.version, 0L)
       val schema = cur.schema
-      sets.foreach { case (n, _) =>
-        require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
-          s"updateWhere: no such column $n (table has " +
-            s"${schema.fieldNames.mkString(", ")})")
+      if (cur.entries.isEmpty) (cur.version, 0L)
+      else {
+        sets.foreach { case (n, _) =>
+          require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
+            s"updateWhere: no such column $n (table has " +
+              s"${schema.fieldNames.mkString(", ")})")
+        }
+        // one scan feeds both legs (positions + post-images): the
+        // matched set is ∝ updated rows — exactly the write volume — so
+        // materializing it avoids a second full-table scan.
+        // localCheckpoint (not persist): the downstream actions (DV
+        // write, post-image write) then plan over a flat LogicalRDD
+        // instead of re-analyzing the whole merge-on-read tree per
+        // action — the statement's driver time was ~40% inter-job
+        // Catalyst gaps (guide §5; r19 JobProf). The checkpointed
+        // blocks are change-volume-sized and a lost executor fails the
+        // statement, which simply retries.
+        val matched = graft.CacheScope.localCheckpointTruncated(
+          visibleWithPos(spark, root, cur, cur.entries).filter(cond))
+        try {
+          val positions = matched
+            .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
+          val (dvDir, newDvs) = writeDv(spark, root, positions)
+          val total = newDvs.map(d => math.max(d.rows, 0L)).sum
+          if (total == 0L) {
+            discardLegs(spark, root, dvDir, Nil)
+            (cur.version, 0L)
+          } else {
+            val fresh = TxTable.writeData(postImage(matched, schema, sets),
+              root, GraftCatalog.layoutOf(spark, root, cur))
+            (commitOrDiscard(spark, root, dvDir, fresh)(
+              TxTable.commitDvUpdate(spark, root, cur.version, newDvs, fresh,
+                "updateWhere")), total)
+          }
+        } finally graft.CacheScope.unpersistCheckpoint(matched)
       }
-      // one scan feeds both legs (positions + post-images): the
-      // matched set is ∝ updated rows — exactly the write volume — so
-      // materializing it avoids a second full-table scan. localCheckpoint
-      // (not persist): the downstream actions (DV write, post-image
-      // write) then plan over a flat LogicalRDD instead of re-analyzing
-      // the whole merge-on-read tree per action — the statement's
-      // driver time was ~40% inter-job Catalyst gaps (guide §5; r19
-      // JobProf). The checkpointed blocks are change-volume-sized and
-      // a lost executor fails the statement, which simply retries.
-      val matched = graft.CacheScope.localCheckpointTruncated(
-        visibleWithPos(spark, root, cur, cur.entries).filter(cond))
-      try {
-        val positions = matched
-          .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
-        val updated = postImage(matched, schema, sets)
-        val f = new Path(root).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val (dvDir, newDvs) = writeDv(spark, root, positions)
-        val total = newDvs.map(d => math.max(d.rows, 0L)).sum
-        if (newDvs.isEmpty || total == 0L) {
-          f.delete(new Path(dvDir), true)
-          return (cur.version, 0L)
-        }
-        val layout = GraftCatalog.layoutOf(spark, root, cur)
-        val fresh = TxTable.writeData(updated, root, layout)
-        try return (TxTable.commitDvUpdate(spark, root, cur.version,
-          newDvs, fresh, "updateWhere"), total)
-        catch {
-          case e: TxTable.ConcurrentCommitException =>
-            discardLegs(spark, root, dvDir, fresh)
-            attempt += 1
-            if (attempt > maxRetries) throw e
-        }
-      } finally graft.CacheScope.unpersistCheckpoint(matched)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** What a [[mergeInto]] commit did: the committed version plus the
@@ -544,143 +536,129 @@ object MergeOnRead {
     keys.foreach(k => require(srcCols.exists(_.equalsIgnoreCase(k)),
       s"mergeInto: source has no key column $k (source columns: " +
         s"${srcCols.mkString(", ")})"))
-    var attempt = 0
-    while (true) {
-      var cur = TxTable.requireSnapshot(spark, root)
-      var schema = cur.schema
-      // exactly-once replay guard (the txnAppend watermark contract):
-      // a batch at or below the recorded watermark already applied in
-      // full — its commit and the watermark advanced atomically
-      txn.foreach { case (id, b) =>
-        if (cur.txns.get(id).exists(_ >= b))
-          return MergeResult(cur.version, 0L, 0L, 0L)
-      }
-      if (evolveSchema) {
-        // recompute-and-retry until the source carries nothing new:
-        // a lost race re-reads the fresh schema (a concurrent writer
-        // may have added some of the columns itself)
-        var pending = true
-        while (pending) {
-          cur = TxTable.requireSnapshot(spark, root)
-          schema = cur.schema
-          val extra = source.schema.fields.filterNot(f =>
-            schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-          if (extra.isEmpty) pending = false
-          else try TxTable.addColumns(spark, root, extra.toSeq)
-          catch {
-            case e: TxTable.ConcurrentCommitException =>
-              attempt += 1
-              if (attempt > maxRetries) throw e
-          }
-        }
-      }
-      keys.foreach(k => require(schema.fieldNames.exists(_.equalsIgnoreCase(k)),
-        s"mergeInto: no such key column $k (table has " +
-          s"${schema.fieldNames.mkString(", ")})"))
-      matchedSets.toSeq.flatten.foreach { case (n, _) =>
-        require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
-          s"mergeInto: no such column $n (table has " +
-            s"${schema.fieldNames.mkString(", ")})")
-      }
-      require(!schema.fieldNames.exists(_.equalsIgnoreCase("src")),
-        "mergeInto: the table has a column named `src`, which is " +
-          "reserved for the source-row struct in clause expressions — " +
-          "RENAME COLUMN it first")
-      val layout = GraftCatalog.layoutOf(spark, root, cur)
-      // when the bucket layout hashes a subset of the ON keys, only
-      // the buckets the source's keys hash into can hold a match —
-      // the position scan prunes to them at the manifest
-      val tgt = visibleWithPos(spark, root, cur,
-        candidateEntries(source, keys, layout, cur.entries))
-      val src = source.select(struct(srcCols.map(col): _*).as("src"))
-      val joined = tgt.join(src,
-        keys.map(k => col(k) === col(s"src.$k")).reduce(_ && _),
-        "right_outer")
-      // the joined frame is ∝ source rows + matched targets — the
-      // change volume — so materializing it feeds the cardinality
-      // check, counts, positions and post-images from one scan.
-      // localCheckpoint (not persist): the FOUR downstream actions then
-      // plan over a flat LogicalRDD instead of re-analyzing the whole
-      // merge-on-read join tree per action — the statement's driver
-      // time was 41% inter-job Catalyst gaps (guide §5; r19 JobProf).
-      // Blocks are change-volume-sized; a lost executor fails the
-      // statement, which simply retries from a fresh snapshot.
-      val joinedCp = graft.CacheScope.localCheckpointTruncated(joined)
-      try {
-        val isMatched = col("__g_key").isNotNull
-        val delCond = coalesce(matchedDelete.getOrElse(lit(false)), lit(false))
-        val updCond = isMatched && !delCond && lit(matchedSets.isDefined) &&
-          coalesce(matchedCond.getOrElse(lit(true)), lit(false))
-        val insCond = !isMatched && lit(insertUnmatched) &&
-          coalesce(insertCond.getOrElse(lit(true)), lit(false))
-        // clause counts AND the cardinality probe in ONE pass. The
-        // probe counts only rows an update/delete clause ACTS on: a
-        // position acted on twice repeats in the acting set, so
-        // acting > distinct acting positions ⟺ the same target row
-        // would be updated/deleted more than once (nondeterministic);
-        // duplicate matches no clause touches are harmless, so an
-        // insert-only merge never spuriously aborts.
-        val actCond = isMatched && (delCond || updCond)
-        val cnt = joinedCp.agg(
-          coalesce(sum(when(isMatched && delCond, 1L)), lit(0L)).as("d"),
-          coalesce(sum(when(updCond, 1L)), lit(0L)).as("u"),
-          coalesce(sum(when(insCond, 1L)), lit(0L)).as("i"),
-          coalesce(sum(when(actCond, 1L)), lit(0L)).as("m"),
-          countDistinct(
-            when(actCond, struct(col("__g_key"), col("__g_pos"))))
-            .as("md")).head()
-        if (cnt.getLong(3) > cnt.getLong(4)) throw new IllegalStateException(
-          "mergeInto: an update/delete clause acts on the same target " +
-            s"row through more than one source row (ON " +
-            s"${keys.mkString(", ")} is not unique in the source) — " +
-            "the SQL MERGE cardinality violation")
-        val (nDel, nUpd, nIns) =
-          (cnt.getLong(0), cnt.getLong(1), cnt.getLong(2))
-        // a no-op batch with a txn still falls through: both legs stay
-        // empty, so the commit below is the metadata-only watermark
-        // bump a restarted stream needs to stop replaying it
-        if (nDel + nUpd + nIns == 0L && txn.isEmpty)
-          return MergeResult(cur.version, 0L, 0L, 0L)
-        val positions = joinedCp.filter(actCond)
-          .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
-        val sets: Seq[(String, Column)] = matchedSets match {
-          case Some(Nil) => schema.fieldNames.toSeq
-            .filter(n => srcCols.exists(_.equalsIgnoreCase(n)))
-            .map(n => n -> col(s"src.$n"))
-          case Some(s) => s
-          case None => Nil
-        }
-        // post-images: updates keep SQL UPDATE semantics (via
-        // postImage); inserts bind source columns by name,
-        // null-filling the rest
-        val updated = postImage(joinedCp.filter(updCond), schema, sets)
-        val inserted = joinedCp.filter(insCond).select(schema.fields.map { fld =>
-          if (srcCols.exists(_.equalsIgnoreCase(fld.name)))
-            col(s"src.${fld.name}").cast(fld.dataType).as(fld.name)
-          else lit(null).cast(fld.dataType).as(fld.name)
-        }.toSeq: _*)
-        val (dvDir, newDvs) =
-          if (nDel + nUpd == 0L) ("", Seq.empty[TxTable.DvEntry])
-          else writeDv(spark, root, positions)
-        val fresh =
-          if (nUpd + nIns == 0L) Seq.empty[TxTable.Entry]
-          else TxTable.writeData(updated.unionByName(inserted), root, layout)
-        try {
-          val v =
-            if (fresh.isEmpty)
-              TxTable.commitDvAppend(spark, root, cur.version, newDvs, txn)
-            else TxTable.commitDvUpdate(spark, root, cur.version, newDvs,
-              fresh, "mergeInto", txn)
-          return MergeResult(v, nUpd, nDel, nIns)
-        } catch {
-          case e: TxTable.ConcurrentCommitException =>
-            discardLegs(spark, root, dvDir, fresh)
-            attempt += 1
-            if (attempt > maxRetries) throw e
-        }
-      } finally graft.CacheScope.unpersistCheckpoint(joinedCp)
+    // exactly-once replay guard (the txnAppend watermark contract): a
+    // batch at or below the recorded watermark already applied in full
+    // — its commit and the watermark advanced atomically
+    def applied(cur: TxTable.Snapshot): Boolean =
+      txn.exists { case (id, b) => cur.txns.get(id).exists(_ >= b) }
+    // schema evolution first, as its own optimistic loop: a lost race
+    // re-reads the fresh schema (a concurrent writer may have added
+    // some of the columns itself)
+    if (evolveSchema) TxTable.retrying(maxRetries) {
+      val cur = TxTable.requireSnapshot(spark, root)
+      val extra = if (applied(cur)) Nil else source.schema.fields.toSeq
+        .filterNot(f => cur.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+      if (extra.nonEmpty) TxTable.addColumns(spark, root, extra)
     }
-    throw new IllegalStateException("unreachable")
+    TxTable.retrying(maxRetries) {
+      val cur = TxTable.requireSnapshot(spark, root)
+      val schema = cur.schema
+      if (applied(cur)) MergeResult(cur.version, 0L, 0L, 0L)
+      else {
+        keys.foreach(k => require(schema.fieldNames.exists(_.equalsIgnoreCase(k)),
+          s"mergeInto: no such key column $k (table has " +
+            s"${schema.fieldNames.mkString(", ")})"))
+        matchedSets.toSeq.flatten.foreach { case (n, _) =>
+          require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
+            s"mergeInto: no such column $n (table has " +
+              s"${schema.fieldNames.mkString(", ")})")
+        }
+        require(!schema.fieldNames.exists(_.equalsIgnoreCase("src")),
+          "mergeInto: the table has a column named `src`, which is " +
+            "reserved for the source-row struct in clause expressions — " +
+            "RENAME COLUMN it first")
+        val layout = GraftCatalog.layoutOf(spark, root, cur)
+        // when the bucket layout hashes a subset of the ON keys, only
+        // the buckets the source's keys hash into can hold a match —
+        // the position scan prunes to them at the manifest
+        val tgt = visibleWithPos(spark, root, cur,
+          candidateEntries(source, keys, layout, cur.entries))
+        val src = source.select(struct(srcCols.map(col): _*).as("src"))
+        val joined = tgt.join(src,
+          keys.map(k => col(k) === col(s"src.$k")).reduce(_ && _),
+          "right_outer")
+        // the joined frame is ∝ source rows + matched targets — the
+        // change volume — so materializing it feeds the cardinality
+        // check, counts, positions and post-images from one scan.
+        // localCheckpoint (not persist): the FOUR downstream actions
+        // then plan over a flat LogicalRDD instead of re-analyzing the
+        // whole merge-on-read join tree per action — the statement's
+        // driver time was 41% inter-job Catalyst gaps (guide §5; r19
+        // JobProf). Blocks are change-volume-sized; a lost executor
+        // fails the statement, which simply retries from a fresh
+        // snapshot.
+        val joinedCp = graft.CacheScope.localCheckpointTruncated(joined)
+        try {
+          val isMatched = col("__g_key").isNotNull
+          val delCond = coalesce(matchedDelete.getOrElse(lit(false)), lit(false))
+          val updCond = isMatched && !delCond && lit(matchedSets.isDefined) &&
+            coalesce(matchedCond.getOrElse(lit(true)), lit(false))
+          val insCond = !isMatched && lit(insertUnmatched) &&
+            coalesce(insertCond.getOrElse(lit(true)), lit(false))
+          // clause counts AND the cardinality probe in ONE pass. The
+          // probe counts only rows an update/delete clause ACTS on: a
+          // position acted on twice repeats in the acting set, so
+          // acting > distinct acting positions ⟺ the same target row
+          // would be updated/deleted more than once (nondeterministic);
+          // duplicate matches no clause touches are harmless, so an
+          // insert-only merge never spuriously aborts.
+          val actCond = isMatched && (delCond || updCond)
+          val cnt = joinedCp.agg(
+            coalesce(sum(when(isMatched && delCond, 1L)), lit(0L)).as("d"),
+            coalesce(sum(when(updCond, 1L)), lit(0L)).as("u"),
+            coalesce(sum(when(insCond, 1L)), lit(0L)).as("i"),
+            coalesce(sum(when(actCond, 1L)), lit(0L)).as("m"),
+            countDistinct(
+              when(actCond, struct(col("__g_key"), col("__g_pos"))))
+              .as("md")).head()
+          if (cnt.getLong(3) > cnt.getLong(4)) throw new IllegalStateException(
+            "mergeInto: an update/delete clause acts on the same target " +
+              s"row through more than one source row (ON " +
+              s"${keys.mkString(", ")} is not unique in the source) — " +
+              "the SQL MERGE cardinality violation")
+          val (nDel, nUpd, nIns) =
+            (cnt.getLong(0), cnt.getLong(1), cnt.getLong(2))
+          // a no-op batch with a txn still commits: both legs stay
+          // empty, so the commit is the metadata-only watermark bump a
+          // restarted stream needs to stop replaying it
+          if (nDel + nUpd + nIns == 0L && txn.isEmpty)
+            MergeResult(cur.version, 0L, 0L, 0L)
+          else {
+            val positions = joinedCp.filter(actCond)
+              .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
+            val sets: Seq[(String, Column)] = matchedSets match {
+              case Some(Nil) => schema.fieldNames.toSeq
+                .filter(n => srcCols.exists(_.equalsIgnoreCase(n)))
+                .map(n => n -> col(s"src.$n"))
+              case Some(s) => s
+              case None => Nil
+            }
+            // post-images: updates keep SQL UPDATE semantics (via
+            // postImage); inserts bind source columns by name,
+            // null-filling the rest
+            val updated = postImage(joinedCp.filter(updCond), schema, sets)
+            val inserted = joinedCp.filter(insCond).select(schema.fields.map { fld =>
+              if (srcCols.exists(_.equalsIgnoreCase(fld.name)))
+                col(s"src.${fld.name}").cast(fld.dataType).as(fld.name)
+              else lit(null).cast(fld.dataType).as(fld.name)
+            }.toSeq: _*)
+            val (dvDir, newDvs) =
+              if (nDel + nUpd == 0L) ("", Seq.empty[TxTable.DvEntry])
+              else writeDv(spark, root, positions)
+            val fresh =
+              if (nUpd + nIns == 0L) Seq.empty[TxTable.Entry]
+              else TxTable.writeData(updated.unionByName(inserted), root, layout)
+            val v = commitOrDiscard(spark, root, dvDir, fresh) {
+              if (fresh.isEmpty)
+                TxTable.commitDvAppend(spark, root, cur.version, newDvs, txn)
+              else TxTable.commitDvUpdate(spark, root, cur.version, newDvs,
+                fresh, "mergeInto", txn)
+            }
+            MergeResult(v, nUpd, nDel, nIns)
+          }
+        } finally graft.CacheScope.unpersistCheckpoint(joinedCp)
+      }
+    }
   }
 
   /** MATERIALIZE the delete set: rewrite exactly the DV-affected data
@@ -693,21 +671,18 @@ object MergeOnRead {
     */
   def materialize(
       spark: SparkSession, root: String,
-      targetFileBytes: Long = 128L << 20, maxRetries: Int = 3): Long = {
-    var attempt = 0
-    while (true) {
+      targetFileBytes: Long = 128L << 20, maxRetries: Int = 3): Long =
+    TxTable.retrying(maxRetries) {
       val cur = TxTable.requireSnapshot(spark, root)
-      if (cur.dvs.isEmpty) return cur.version
-      val schema = cur.schema
-      // distinct file keys in the delete set — bounded by live file
-      // count (manifest scale), not by deleted rows
-      val keys = dvFrame(spark, root, cur.dvs)
-        .select("file_key").distinct().collect().map(_.getString(0)).toSet
-      val affected = cur.entries.filter(e =>
-        keys.contains(fileKey(TxTable.entryPath(root, e.relPath))))
-      val fresh =
-        if (affected.isEmpty) Seq.empty[TxTable.Entry]
-        else affected.groupBy(_.partition).toSeq.flatMap { case (part, es) =>
+      if (cur.dvs.isEmpty) cur.version
+      else {
+        // distinct file keys in the delete set — bounded by live file
+        // count (manifest scale), not by deleted rows
+        val keys = dvFrame(spark, root, cur.dvs)
+          .select("file_key").distinct().collect().map(_.getString(0)).toSet
+        val affected = cur.entries.filter(e =>
+          keys.contains(fileKey(TxTable.entryPath(root, e.relPath))))
+        val fresh = affected.groupBy(_.partition).toSeq.flatMap { case (part, es) =>
           val merged = mergedRead(spark, root, cur, es)
           val bytes = es.map(e => math.max(e.size, 0L)).sum
           val nOut = math.max(1L,
@@ -717,16 +692,10 @@ object MergeOnRead {
             // a fully-deleted group leaves an empty shard — drop it
             .filterNot(e => FileStats.decode(e.stats).rows == 0L)
         }
-      try return TxTable.commitDvMaterialize(spark, root, cur.version,
-        affected.map(_.relPath).toSet, fresh)
-      catch {
-        case e: TxTable.ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+        TxTable.commitDvMaterialize(spark, root, cur.version,
+          affected.map(_.relPath).toSet, fresh)
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 }
 
 /** Injected resolution rule (`spark.sql.extensions =
@@ -738,9 +707,13 @@ object MergeOnRead {
   *
   * Write/DML positions are left untouched: INSERT targets keep their
   * relation shape for write resolution, and row-level command targets
-  * (DELETE/UPDATE/MERGE) keep theirs for Spark's rewrites — those go
-  * through [[GraftRowLevelOperation]], which materializes the delete
-  * set first, so their raw scans are exact by construction.
+  * (DELETE/UPDATE/MERGE) keep theirs for Spark's rewrites. Under the
+  * default `cow` mode those go through [[GraftRowLevelOperation]],
+  * which materializes the delete set first, so their raw scans are
+  * exact by construction; under `mor` ([[DeltaDml.ModeKey]] or the
+  * `write.dml.mode` table property) they go through [[DeltaDml]]'s
+  * delta scan, which merges the existing DVs inside the scan (a
+  * per-file position skip).
   */
 final class ApplyDeletionVectors(spark: SparkSession)
   extends Rule[LogicalPlan] {

@@ -15,12 +15,13 @@ import scala.util.Try
   *     _manifest/v<N>.manifest   ← the ONLY commit point
   *     data/<uuid>/...parquet    ← immutable, write-once data files
   *
-  * A manifest is a text file: line 1 `#schema=<DDL>`, then one
-  * `relativePath<TAB>partitionValue` entry per live data file, then a
-  * final `#eof` sentinel. A commit writes its data files first
-  * (invisible — no manifest references them), then EXCLUSIVE-creates
-  * `v<N+1>.manifest` (create with overwrite=false — the
-  * mutual-exclusion point) and streams its content; the manifest only
+  * A manifest is a text file ([[render]] writes it, [[parseManifest]]
+  * reads it): line 1 `#schema=<DDL>`, `#`-prefixed metadata lines,
+  * one `relativePath<TAB>partitionValue<TAB>stats<TAB>size` entry per
+  * live data file, then a final `#eof` sentinel. A commit writes its
+  * data files first (invisible — no manifest references them), then
+  * EXCLUSIVE-creates `v<N+1>.manifest` (create with overwrite=false —
+  * the mutual-exclusion point) and streams its content; the manifest only
   * counts as committed once `#eof` is on disk. Readers resolve the
   * highest COMPLETE manifest once and read exactly its file list, so
   * they see the previous snapshot or the new one — never a torn mix;
@@ -68,14 +69,12 @@ object TxTable {
     * whose keys scatter across all buckets writes bytes ∝ DELETED
     * rows, not table size — the copy-on-write complement.
     * `rows`/`size` are carried for accounting (-1 = unknown).
-    */
-  /** One position-delete parquet file of a snapshot. `keys` lists the
-    * data-file keys its rows cover when the writer could track them
-    * cheaply (bounded at [[DeltaDml.DvKeyCap]] — the trickle-DML case,
-    * where one statement touches few files); past the cap the writer
-    * records `bloom` instead (encoded [[DvBloom]] over the covered
-    * keys — VERDICT r12 item 3: a wide MERGE used to record "unknown"
-    * and ship its DV to every partition). Both empty = unknown, the
+    *
+    * `keys` lists the data-file keys the file's rows cover when the
+    * writer could track them cheaply (bounded at [[DeltaDml.DvKeyCap]]
+    * — the trickle-DML case, where one statement touches few files);
+    * past the cap the writer records `bloom` instead (encoded
+    * [[DvBloom]] over the covered keys). Both empty = unknown, the
     * conservative "may cover any file". The delta scan uses them to
     * scope each partition's executor-side DV load to the delete files
     * that can actually touch it — exact for key lists,
@@ -87,41 +86,46 @@ object TxTable {
       relPath: String, size: Long = -1L, rows: Long = -1L,
       keys: Seq[String] = Nil, bloom: Option[String] = None)
 
-  /** `txns` is the cumulative streaming-transaction watermark map
-    * (txnId → highest applied batchId), carried forward by every
-    * commit — the Delta `txn` action pattern that gives
-    * [[txnAppend]] (and through it `writeStream.format("graft")`)
-    * exactly-once semantics across crash-replay. `checks` is the
-    * CHECK-constraint map (name → boolean SQL expression), likewise
-    * carried forward and enforced by every data-writing commit
-    * ([[addCheck]]).
-    */
-  /** `aliases` maps a column's CURRENT name to the historical names
-    * data files may still carry ([[renameColumn]] is metadata-only, so
-    * files written before a rename keep the old physical column);
-    * reads coalesce across them. Cleared by any full rewrite.
-    */
-  /** `layout` is this VERSION's layout spec ([[Layout]] grammar —
-    * `col` or `bucket(N,cols…)`), carried in the manifest since
-    * [[rewriteAll]]'s re-layout support landed: a table's placement
-    * can change over its life (`CALL relayout`), and pruning/SPJ
-    * contracts must bind each version's entries to the spec THEY were
-    * written under — a time-travel read of a pre-relayout version
-    * with the current spec would mis-prune. `None` falls back to the
-    * catalog sidecar (pre-layout-tracking tables, never relayouted).
-    */
-  /** `props` are the user-facing TABLE PROPERTIES of this version
-    * (SQL `TBLPROPERTIES` / `ALTER TABLE SET TBLPROPERTIES`),
-    * carried forward by every commit and versioned like everything
-    * else — `write.dml.mode=mor` is the flagship use (per-table
-    * merge-on-read default for SQL DML).
-    */
-  /** `schemaJson` is the schema's FULL representation (Spark's
-    * StructType JSON — carries per-field METADATA the DDL string
-    * cannot: column DEFAULT expressions, comments), written alongside
-    * the DDL since round 8's fourth session. Readers prefer it;
-    * `schemaDdl` stays authoritative for pre-JSON manifests and
-    * remains the human-readable/equality form.
+  /** One committed version of a table: what a manifest records
+    * ([[render]] writes it, [[parseManifest]] reads it back).
+    *
+    *   - `txns` is the cumulative streaming-transaction watermark map
+    *     (txnId → highest applied batchId), carried forward by every
+    *     commit — the Delta `txn` action pattern that gives
+    *     [[txnAppend]] (and through it `writeStream.format("graft")`)
+    *     exactly-once semantics across crash-replay.
+    *   - `checks` is the CHECK-constraint map (name → boolean SQL
+    *     expression), likewise carried forward and enforced by every
+    *     data-writing commit ([[addCheck]]).
+    *   - `ts` is the commit wall-clock in millis, stamped by
+    *     [[commit]] (-1 on pre-timestamp manifests).
+    *   - `dvs` are the position-delete files ([[DvEntry]]).
+    *   - `aliases` maps a column's CURRENT name to the historical names
+    *     data files may still carry ([[renameColumn]] is
+    *     metadata-only, so files written before a rename keep the old
+    *     physical column); reads coalesce across them. Cleared by any
+    *     full rewrite.
+    *   - `layout` is this VERSION's layout spec ([[Layout]] grammar —
+    *     `col` or `bucket(N,cols…)`): a table's placement can change
+    *     over its life (`CALL relayout`), and pruning/SPJ contracts
+    *     must bind each version's entries to the spec THEY were
+    *     written under — a time-travel read of a pre-relayout version
+    *     with the current spec would mis-prune. `None` falls back to
+    *     the catalog sidecar (pre-layout-tracking tables, never
+    *     relayouted).
+    *   - `props` are the user-facing TABLE PROPERTIES of this version
+    *     (SQL `TBLPROPERTIES` / `ALTER TABLE SET TBLPROPERTIES`),
+    *     carried forward by every commit and versioned like everything
+    *     else — `write.dml.mode=mor` is the flagship use (per-table
+    *     merge-on-read default for SQL DML).
+    *   - `schemaJson` is the schema's FULL representation (Spark's
+    *     StructType JSON — carries per-field METADATA the DDL string
+    *     cannot: column DEFAULT expressions, comments). Readers prefer
+    *     it; `schemaDdl` stays authoritative for pre-JSON manifests
+    *     and remains the human-readable/equality form.
+    *
+    * A commit states only what it changes: `cur.copy(version =
+    * cur.version + 1, …)` carries every other field forward.
     */
   final case class Snapshot(
       version: Long, schemaDdl: String, entries: Seq[Entry],
@@ -141,6 +145,14 @@ object TxTable {
       .getOrElse(StructType.fromDDL(schemaDdl))
 
     def schemaRep: SchemaRep = SchemaRep(schemaDdl, schemaJson)
+
+    /** This snapshot declaring `s` (both persisted forms, via
+      * [[SchemaRep.of]]).
+      */
+    def withSchema(s: StructType): Snapshot = {
+      val rep = SchemaRep.of(s)
+      copy(schemaDdl = rep.ddl, schemaJson = rep.json)
+    }
   }
 
   /** A schema in both persisted forms — what every commit writes.
@@ -354,28 +366,32 @@ object TxTable {
       "txns", "checks", "ts_millis", "layout", "props", "manifest_bytes")
   }
 
-  private def parseManifest(version: Long, text: String, root: String): Snapshot = {
+  private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
+  private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
+
+  /** Parse one manifest's text — [[render]]'s inverse. Line 1 is
+    * `#schema=<DDL>`; the other `#`-prefixed lines are metadata, in
+    * any order (UNKNOWN `#` lines are skipped, so future metadata
+    * never breaks an old reader); every other line is one live data
+    * file; `#eof` ends a COMPLETE manifest.
+    */
+  private[graft] def parseManifest(version: Long, text: String, root: String): Snapshot = {
     if (!text.endsWith("#eof\n"))
       throw new IllegalStateException(
         s"manifest v$version under $root is incomplete (no #eof) — " +
           "in-flight or crashed commit, not a committed snapshot")
     val lines = text.split("\n").toSeq.filter(_.nonEmpty).filterNot(_ == "#eof")
     val ddl = lines.head.stripPrefix("#schema=")
-    // `#`-prefixed metadata lines after the schema: `#txn=id:batchId`
-    // carries the streaming watermark map; UNKNOWN `#` lines are
-    // skipped, so future metadata never breaks an old reader
     val (meta, entryLines) = lines.tail.partition(_.startsWith("#"))
-    val txns = meta.collect {
-      case l if l.startsWith("#txn=") =>
-        val Array(id, bid) = l.stripPrefix("#txn=").split(":", 2)
-        java.net.URLDecoder.decode(id, "UTF-8") -> bid.toLong
+    def field(tag: String): Seq[String] =
+      meta.filter(_.startsWith(tag)).map(_.stripPrefix(tag))
+    // `key:value` pairs, both halves url-encoded
+    def pairs(tag: String): Map[String, String] = field(tag).map { l =>
+      val Array(k, v) = l.split(":", 2)
+      dec(k) -> dec(v)
     }.toMap
-    val checks = meta.collect {
-      case l if l.startsWith("#check=") =>
-        val Array(n, sql) = l.stripPrefix("#check=").split(":", 2)
-        java.net.URLDecoder.decode(n, "UTF-8") ->
-          java.net.URLDecoder.decode(sql, "UTF-8")
-    }.toMap
+    // `#txn=<urlenc id>:<batchId>` — the streaming watermark map
+    val txns = pairs("#txn=").map { case (id, b) => id -> b.toLong }
     val entries = entryLines.map { l =>
       // trailing fields (stats, size) are optional: manifests written
       // before data skipping carry 2 fields, pre-size manifests carry
@@ -387,9 +403,6 @@ object TxTable {
         case Array(rel, part) => Entry(rel, part)
       }
     }
-    val ts = meta.collectFirst {
-      case l if l.startsWith("#ts=") => l.stripPrefix("#ts=").toLong
-    }.getOrElse(-1L)
     // `#dv=<urlenc relPath>:<size>:<rows>[:<urlenc key1,urlenc key2…>]`
     // — the merge-on-read position-delete files of this snapshot
     // (absent pre-DV: empty; the optional 4th field is the covered
@@ -397,51 +410,58 @@ object TxTable {
     // field starting with `~` is instead a base64 [[DvBloom]] over the
     // covered keys (wide DMLs past DvKeyCap — base64 never starts
     // with `~`, and url-encoded keys never contain it).
-    val dvs = meta.collect {
-      case l if l.startsWith("#dv=") =>
-        l.stripPrefix("#dv=").split(":", 4) match {
-          case Array(rel, size, rows, keys) if keys.startsWith("~") =>
-            DvEntry(java.net.URLDecoder.decode(rel, "UTF-8"),
-              Try(size.toLong).getOrElse(-1L), Try(rows.toLong).getOrElse(-1L),
-              Nil, Some(keys.drop(1)))
-          case Array(rel, size, rows, keys) =>
-            DvEntry(java.net.URLDecoder.decode(rel, "UTF-8"),
-              Try(size.toLong).getOrElse(-1L), Try(rows.toLong).getOrElse(-1L),
-              keys.split(",").toSeq.filter(_.nonEmpty)
-                .map(java.net.URLDecoder.decode(_, "UTF-8")))
-          case Array(rel, size, rows) =>
-            DvEntry(java.net.URLDecoder.decode(rel, "UTF-8"),
-              Try(size.toLong).getOrElse(-1L), Try(rows.toLong).getOrElse(-1L))
-        }
+    val dvs = field("#dv=").map { l =>
+      val Array(rel, size, rows, rest @ _*) = l.split(":", 4)
+      val d = DvEntry(dec(rel),
+        Try(size.toLong).getOrElse(-1L), Try(rows.toLong).getOrElse(-1L))
+      rest.headOption match {
+        case Some(b) if b.startsWith("~") => d.copy(bloom = Some(b.drop(1)))
+        case Some(ks) => d.copy(keys = ks.split(",").toSeq.filter(_.nonEmpty).map(dec))
+        case None => d
+      }
     }
     // `#alias=<urlenc current>:<urlenc old1,old2>` — rename history
-    val aliases = meta.collect {
-      case l if l.startsWith("#alias=") =>
-        val Array(cur, olds) = l.stripPrefix("#alias=").split(":", 2)
-        java.net.URLDecoder.decode(cur, "UTF-8") ->
-          olds.split(",").toSeq.filter(_.nonEmpty)
-            .map(java.net.URLDecoder.decode(_, "UTF-8"))
+    val aliases = field("#alias=").map { l =>
+      val Array(cur, olds) = l.split(":", 2)
+      dec(cur) -> olds.split(",").toSeq.filter(_.nonEmpty).map(dec)
     }.toMap
-    // `#layout=<urlenc spec>` — THIS version's layout spec (absent on
-    // pre-layout-tracking manifests: sidecar fallback)
-    val layout = meta.collectFirst {
-      case l if l.startsWith("#layout=") =>
-        java.net.URLDecoder.decode(l.stripPrefix("#layout="), "UTF-8")
-    }
-    // `#prop=<urlenc key>:<urlenc value>` — table properties
-    val props = meta.collect {
-      case l if l.startsWith("#prop=") =>
-        val Array(k, v) = l.stripPrefix("#prop=").split(":", 2)
-        java.net.URLDecoder.decode(k, "UTF-8") ->
-          java.net.URLDecoder.decode(v, "UTF-8")
-    }.toMap
-    // `#schemaJson=<urlenc json>` — metadata-capable schema form
-    val schemaJson = meta.collectFirst {
-      case l if l.startsWith("#schemaJson=") =>
-        java.net.URLDecoder.decode(l.stripPrefix("#schemaJson="), "UTF-8")
-    }
-    Snapshot(version, ddl, entries, txns, checks, ts, dvs, aliases, layout,
-      props, schemaJson)
+    Snapshot(version, ddl, entries, txns, pairs("#check="),
+      field("#ts=").headOption.map(_.toLong).getOrElse(-1L), dvs, aliases,
+      // `#layout=` is absent on pre-layout-tracking manifests (sidecar
+      // fallback), `#schemaJson=` on pre-JSON ones
+      field("#layout=").headOption.map(dec), pairs("#prop="),
+      field("#schemaJson=").headOption.map(dec))
+  }
+
+  /** The manifest text of `s` — [[parseManifest]]'s inverse, the one
+    * place the format is written: `#schema`, `#schemaJson`, `#ts`,
+    * `#txn`, `#check`, `#dv`, `#alias`, `#layout`, `#prop` (maps in
+    * key order), then one `relPath<TAB>partition<TAB>stats<TAB>size` line per
+    * entry and the `#eof` sentinel.
+    */
+  private[graft] def render(s: Snapshot): String = {
+    def pairs(tag: String, m: Map[String, String]): Seq[String] =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s"$tag${enc(k)}:${enc(v)}" }
+    val lines =
+      Seq(s"#schema=${s.schemaDdl}") ++
+        s.schemaJson.map(j => s"#schemaJson=${enc(j)}") ++
+        Seq(s"#ts=${s.ts}") ++
+        s.txns.toSeq.sortBy(_._1).map { case (id, b) => s"#txn=${enc(id)}:$b" } ++
+        pairs("#check=", s.checks) ++
+        s.dvs.map { d =>
+          val keys =
+            if (d.keys.nonEmpty) d.keys.map(enc).mkString(":", ",", "")
+            else d.bloom.map(b => s":~$b").getOrElse("")
+          s"#dv=${enc(d.relPath)}:${d.size}:${d.rows}$keys"
+        } ++
+        s.aliases.toSeq.sortBy(_._1).map { case (cur, olds) =>
+          s"#alias=${enc(cur)}:${olds.map(enc).mkString(",")}"
+        } ++
+        s.layout.map(l => s"#layout=${enc(l)}") ++
+        pairs("#prop=", s.props) ++
+        s.entries.map(e => s"${e.relPath}\t${e.partition}\t${e.stats}\t${e.size}") :+
+        "#eof"
+    lines.mkString("", "\n", "\n")
   }
 
   /** Parse one committed manifest. Refuses a manifest without its
@@ -647,16 +667,17 @@ object TxTable {
     }
   }
 
-  /** The single commit point: EXCLUSIVE-create `v<next>.manifest` and
-    * write its content directly. `FileSystem.create(path,
-    * overwrite=false)` is the mutual-exclusion primitive: exactly one
-    * of two writers racing to the same version number gets the create;
-    * the loser sees FileAlreadyExistsException and aborts (its data
-    * files stay orphaned and vacuumable, the table is untouched).
-    * Rename was deliberately NOT used here: Hadoop's
-    * RawLocalFileSystem delegates to POSIX rename(2), which silently
-    * REPLACES an existing destination — two racing writers would both
-    * "succeed" and one commit would be lost.
+  /** The single commit point: stamp `next.ts`, [[render]] it, and
+    * EXCLUSIVE-create `v<next.version>.manifest` with that text —
+    * [[parseManifest]] reads back exactly the snapshot written.
+    * `FileSystem.create(path, overwrite=false)` is the
+    * mutual-exclusion primitive: exactly one of two writers racing to
+    * the same version number gets the create; the loser sees
+    * [[ConcurrentCommitException]] (its data files stay orphaned and
+    * vacuumable, the table is untouched). Rename was deliberately NOT
+    * used here: Hadoop's RawLocalFileSystem delegates to POSIX
+    * rename(2), which silently REPLACES an existing destination — two
+    * racing writers would both "succeed" and one commit would be lost.
     *
     * A reader can observe the manifest file mid-write (create is
     * exclusive, not atomic-content). [[snapshot]] guards this: a
@@ -672,19 +693,10 @@ object TxTable {
     * as the mutual-exclusion table). The file layout stays identical;
     * only this one primitive is storage-specific.
     */
-  private def commit(
-      spark: SparkSession, root: String, next: Long,
-      schema: SchemaRep, entries: Seq[Entry],
-      txns: Map[String, Long] = Map.empty,
-      checks: Map[String, String] = Map.empty,
-      dvs: Seq[DvEntry] = Nil,
-      aliases: Map[String, Seq[String]] = Map.empty,
-      layout: Option[String] = None,
-      props: Map[String, String] = Map.empty): Long = {
-    val schemaDdl = schema.ddl
+  private def commit(spark: SparkSession, root: String, next: Snapshot): Long = {
     val f = fs(spark, root)
     f.mkdirs(manifestDir(root))
-    val finalP = new Path(manifestDir(root), s"v$next.manifest")
+    val finalP = new Path(manifestDir(root), s"v${next.version}.manifest")
     // The exclusive commit point. On HDFS, create(overwrite=false) is
     // an ATOMIC server-side O_EXCL and the catch below is the whole
     // story. Hadoop's LOCAL filesystem, however, implements it as
@@ -708,57 +720,20 @@ object TxTable {
         }
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
-          throw new ConcurrentCommitException(next)
+          throw new ConcurrentCommitException(next.version)
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new ConcurrentCommitException(next)
+          throw new ConcurrentCommitException(next.version)
         case e: java.io.IOException if e.getMessage != null &&
             e.getMessage.contains("already exists") =>
-          throw new ConcurrentCommitException(next)
+          throw new ConcurrentCommitException(next.version)
       }
-    try os.write(
-      (s"#schema=$schemaDdl\n" +
-        schema.json.map(j =>
-          s"#schemaJson=${java.net.URLEncoder.encode(j, "UTF-8")}\n")
-          .getOrElse("") +
-        // commit wall-clock (millis) — read-side TIMESTAMP AS OF
-        // resolution makes these monotone (see versionAt), so writer
-        // clock skew degrades to version granularity, never to a
-        // wrong-order answer
-        s"#ts=${System.currentTimeMillis()}\n" +
-        txns.toSeq.sortBy(_._1).map { case (id, bid) =>
-          s"#txn=${java.net.URLEncoder.encode(id, "UTF-8")}:$bid\n"
-        }.mkString +
-        checks.toSeq.sortBy(_._1).map { case (n, sql) =>
-          s"#check=${java.net.URLEncoder.encode(n, "UTF-8")}:" +
-            s"${java.net.URLEncoder.encode(sql, "UTF-8")}\n"
-        }.mkString +
-        dvs.map { d =>
-          val keys =
-            if (d.keys.nonEmpty)
-              ":" + d.keys
-                .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
-            else d.bloom.map(b => s":~$b").getOrElse("")
-          s"#dv=${java.net.URLEncoder.encode(d.relPath, "UTF-8")}:" +
-            s"${d.size}:${d.rows}$keys\n"
-        }.mkString +
-        aliases.toSeq.sortBy(_._1).map { case (cur, olds) =>
-          s"#alias=${java.net.URLEncoder.encode(cur, "UTF-8")}:" +
-            olds.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",") +
-            "\n"
-        }.mkString +
-        layout.map(l =>
-          s"#layout=${java.net.URLEncoder.encode(l, "UTF-8")}\n")
-          .getOrElse("") +
-        props.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"#prop=${java.net.URLEncoder.encode(k, "UTF-8")}:" +
-            s"${java.net.URLEncoder.encode(v, "UTF-8")}\n"
-        }.mkString +
-        entries.map(e =>
-          s"${e.relPath}\t${e.partition}\t${e.stats}\t${e.size}\n").mkString +
-        "#eof\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // commit wall-clock (millis) — read-side TIMESTAMP AS OF
+    // resolution makes these monotone (see versionAt), so writer clock
+    // skew degrades to version granularity, never to a wrong-order answer
+    try os.write(render(next.copy(ts = System.currentTimeMillis()))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
-    next
+    next.version
   }
 
   /** Initialize a table root with a SCHEMA and no data files — the
@@ -776,8 +751,8 @@ object TxTable {
       props: Map[String, String] = Map.empty): Long = {
     requireSettable(props.keys, "createEmpty")
     requireAbsentOrEmpty(spark, root, "createEmpty")
-    commit(spark, root, 0L, SchemaRep.of(schema), Nil,
-      layout = layout, props = props)
+    commit(spark, root,
+      Snapshot(0L, "", Nil, layout = layout, props = props).withSchema(schema))
   }
 
   /** Property keys the engine computes itself — never user-settable
@@ -824,9 +799,7 @@ object TxTable {
         f.copy(metadata = b.build())
       }
     })
-    commit(spark, root, cur.version + 1, SchemaRep.of(evolved),
-      cur.entries, cur.txns, cur.checks, cur.dvs, cur.aliases, cur.layout,
-      cur.props)
+    commit(spark, root, cur.copy(version = cur.version + 1).withSchema(evolved))
   }
 
   /** `ALTER TABLE … SET/UNSET TBLPROPERTIES`: one metadata-only
@@ -838,9 +811,8 @@ object TxTable {
       set: Map[String, String], unset: Seq[String] = Nil): Long = {
     requireSettable(set.keys ++ unset, "setProperties")
     val cur = requireSnapshot(spark, root)
-    commit(spark, root, cur.version + 1, cur.schemaRep, cur.entries,
-      cur.txns, cur.checks, cur.dvs, cur.aliases, cur.layout,
-      cur.props -- unset ++ set)
+    commit(spark, root,
+      cur.copy(version = cur.version + 1, props = cur.props -- unset ++ set))
   }
 
   /** Refuse to initialize `root` when the path already exists with any
@@ -873,8 +845,8 @@ object TxTable {
     // later row-level appends (updateWhere/mergeInto post-images)
     // keep this table's placement without the caller re-stating it
     partitionCol.foreach(GraftCatalog.writePartitionCol(spark, root, _))
-    commit(spark, root, 0L, SchemaRep.of(df.schema), entries,
-      layout = partitionCol)
+    commit(spark, root,
+      Snapshot(0L, "", entries, layout = partitionCol).withSchema(df.schema))
   }
 
   /** Append-only commit: new files become visible atomically alongside
@@ -892,27 +864,17 @@ object TxTable {
       df: DataFrame, root: String,
       partitionCol: Option[String] = None, maxRetries: Int = 10): Long = {
     val spark = df.sparkSession
-    var attempt = 0
     var entries: Seq[Entry] = null       // write data files AT MOST once
     var checkedFor: Map[String, String] = null
-    while (true) {
+    retrying(maxRetries) {
       val cur = requireSnapshot(spark, root)
       requireSchema(df, cur, "append")
-      if (checkedFor == null || checkedFor != cur.checks)
-        requireChecks(df, cur, "append")
+      if (checkedFor != cur.checks) requireChecks(df, cur, "append")
       checkedFor = cur.checks
       if (entries == null) entries = writeData(df, root, partitionCol)
-      try {
-        return commit(spark, root, cur.version + 1, cur.schemaRep,
-          cur.entries ++ entries, cur.txns, cur.checks, cur.dvs, cur.aliases,
-          cur.layout, cur.props)
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      commit(spark, root,
+        cur.copy(version = cur.version + 1, entries = cur.entries ++ entries))
     }
-    -1L // unreachable
   }
 
   /** IDEMPOTENT append for streaming writers: apply `df` as `txnId`'s
@@ -935,27 +897,36 @@ object TxTable {
       txnId: String, batchId: Long, maxRetries: Int = 10): Boolean = {
     require(txnId.nonEmpty, "txnAppend: empty txnId")
     val spark = df.sparkSession
-    var attempt = 0
     var entries: Seq[Entry] = null // write data files AT MOST once
-    while (true) {
+    retrying(maxRetries) {
       val cur = requireSnapshot(spark, root)
-      if (cur.txns.get(txnId).exists(_ >= batchId)) return false
-      requireSchema(df, cur, "txnAppend")
-      if (entries == null) requireChecks(df, cur, "txnAppend")
-      if (entries == null) entries = writeData(df, root, partitionCol)
-      try {
-        commit(spark, root, cur.version + 1, cur.schemaRep,
-          cur.entries ++ entries, cur.txns + (txnId -> batchId),
-          cur.checks, cur.dvs, cur.aliases, cur.layout, cur.props)
-        return true
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+      val applied = cur.txns.get(txnId).exists(_ >= batchId)
+      if (!applied) {
+        requireSchema(df, cur, "txnAppend")
+        if (entries == null) {
+          requireChecks(df, cur, "txnAppend")
+          entries = writeData(df, root, partitionCol)
+        }
+        commit(spark, root, cur.copy(version = cur.version + 1,
+          entries = cur.entries ++ entries, txns = cur.txns + (txnId -> batchId)))
       }
+      !applied
     }
-    false // unreachable
   }
+
+  /** Run `attempt` until it commits: each [[ConcurrentCommitException]]
+    * (a lost optimistic race) re-runs it on a fresh read, up to
+    * `maxRetries` retries after the first try; the last loss
+    * propagates, and so does every other failure. Cleanup of a lost
+    * attempt is the attempt's own: catch, clean, rethrow.
+    */
+  @scala.annotation.tailrec
+  private[sources] def retrying[T](maxRetries: Int)(attempt: => T): T =
+    (try Some(attempt)
+     catch { case _: ConcurrentCommitException if maxRetries > 0 => None }) match {
+      case Some(v) => v
+      case None => retrying(maxRetries - 1)(attempt)
+    }
 
   /** ADDITIVE schema evolution, metadata-only: commit a new version
     * whose schema is the current one plus `newCols` (appended), over
@@ -997,9 +968,7 @@ object TxTable {
       s"addColumns: duplicate new column name(s): ${dup.mkString(", ")}")
     val evolved = StructType(
       schema.fields ++ newCols.map(_.copy(nullable = true)))
-    commit(spark, root, cur.version + 1, SchemaRep.of(evolved),
-      cur.entries, cur.txns, cur.checks, cur.dvs, cur.aliases, cur.layout,
-      cur.props)
+    commit(spark, root, cur.copy(version = cur.version + 1).withSchema(evolved))
   }
 
   /** ADDITIVE evolution's inverse: drop columns, metadata-only. The
@@ -1028,21 +997,11 @@ object TxTable {
     require(kept.nonEmpty, "dropColumns: cannot drop every column")
     // a CHECK referencing a dropped column would poison every later
     // write — refuse the drop while the constraint stands
-    cur.checks.foreach { case (n, sql) =>
-      val probe = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(kept))
-      val ok = Try {
-        probe.filter(org.apache.spark.sql.functions.expr(sql))
-          .queryExecution.analyzed
-      }.isSuccess
-      require(ok,
-        s"dropColumns: CHECK constraint $n [$sql] references a dropped " +
-          "column — dropCheck it first")
-    }
-    commit(spark, root, cur.version + 1, SchemaRep.of(StructType(kept)),
-      cur.entries, cur.txns, cur.checks, cur.dvs, cur.aliases -- names,
-      cur.layout, cur.props)
+    requireChecksAnalyze(spark, StructType(kept), cur.checks, Some((n, sql) =>
+      s"dropColumns: CHECK constraint $n [$sql] references a dropped " +
+        "column — dropCheck it first"))
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      aliases = cur.aliases -- names).withSchema(StructType(kept)))
   }
 
   /** RENAME COLUMN, metadata-only: commit a new version whose schema
@@ -1083,26 +1042,15 @@ object TxTable {
       s"renameColumn: $from is the table's layout column — partition " +
         "strings and bucket placement key on it; rewrite the table " +
         "under a new layout instead")
-    cur.checks.foreach { case (n, sql) =>
-      val renamed = StructType(schema.fields.map(f =>
-        if (f.name == from) f.copy(name = to) else f))
-      val probe = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-      val ok = Try {
-        probe.filter(org.apache.spark.sql.functions.expr(sql))
-          .queryExecution.analyzed
-      }.isSuccess
-      require(ok,
-        s"renameColumn: CHECK constraint $n [$sql] references $from — " +
-          "dropCheck and re-add it under the new name first")
-    }
     val renamed = StructType(schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
+    requireChecksAnalyze(spark, renamed, cur.checks, Some((n, sql) =>
+      s"renameColumn: CHECK constraint $n [$sql] references $from — " +
+        "dropCheck and re-add it under the new name first"))
     // the new name inherits the old name's full alias chain
     val chain = cur.aliases.getOrElse(from, Nil) :+ from
-    commit(spark, root, cur.version + 1, SchemaRep.of(renamed),
-      cur.entries, cur.txns, cur.checks, cur.dvs,
-      (cur.aliases - from) + (to -> chain), cur.layout, cur.props)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      aliases = (cur.aliases - from) + (to -> chain)).withSchema(renamed))
   }
 
   /** TYPE WIDENING, metadata-only: change a column to a WIDER type
@@ -1156,32 +1104,34 @@ object TxTable {
     }
     val widened = StructType(schema.fields.map(f =>
       if (f.name == name) f.copy(dataType = newType) else f))
-    // CHECKs must still analyze against the widened schema
-    cur.checks.foreach { case (n, sql) =>
-      val probe = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], widened)
-      val ok = Try {
-        probe.filter(org.apache.spark.sql.functions.expr(sql))
-          .queryExecution.analyzed
-      }.isSuccess
-      require(ok,
-        s"widenColumn: CHECK constraint $n [$sql] does not analyze " +
-          "against the widened schema — dropCheck it first")
-    }
-    commit(spark, root, cur.version + 1, SchemaRep.of(widened),
-      cur.entries, cur.txns, cur.checks, cur.dvs, cur.aliases, cur.layout,
-      cur.props)
+    requireChecksAnalyze(spark, widened, cur.checks, Some((n, sql) =>
+      s"widenColumn: CHECK constraint $n [$sql] does not analyze " +
+        "against the widened schema — dropCheck it first"))
+    commit(spark, root, cur.copy(version = cur.version + 1).withSchema(widened))
   }
 
-  /** A commit must match the table's declared schema: divergent
-    * parquet files would read back under the manifest schema with
-    * silently-nulled or dropped columns. Compared NULLABILITY-
-    * normalized ([[declaredDdl]]): name/type divergence is the failure
-    * this guards, while nullability flags are advisory over parquet
-    * and flip freely through expressions (a coalesce over a NOT NULL
-    * column reads back nullable) — requiring them to match would
-    * refuse every reconcile-shaped commit.
+  /** Analyze each of `checks` over an empty frame of the candidate
+    * `schema` — the probe every CHECK-touching DDL runs before it
+    * commits, so an unresolvable or non-boolean constraint refuses at
+    * DDL time instead of poisoning every later write. A failing CHECK
+    * is refused with `refusal(name, sql)`, or with Spark's own
+    * analysis error when no refusal text is given.
     */
+  private def requireChecksAnalyze(
+      spark: SparkSession, schema: StructType, checks: Map[String, String],
+      refusal: Option[(String, String) => String]): Unit = {
+    val probe = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    checks.foreach { case (n, sql) =>
+      val analyzed = Try(
+        probe.filter(org.apache.spark.sql.functions.expr(sql)).queryExecution.analyzed)
+      refusal match {
+        case Some(text) => require(analyzed.isSuccess, text(n, sql))
+        case None => analyzed.get
+      }
+    }
+  }
+
   /** Enforce every CHECK constraint on the rows a commit is about to
     * make visible, in ONE pass over the NEW data only (`take(1)` on
     * the violation filter early-exits at the first bad row). ANSI
@@ -1225,15 +1175,10 @@ object TxTable {
     // resolve the expression against the schema NOW — an unresolvable
     // or non-boolean expression must fail at ADD time, not at the
     // next append
-    val schema = cur.schema
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val resolved = probe.filter(org.apache.spark.sql.functions.expr(sql))
-    resolved.queryExecution.analyzed // force analysis
+    requireChecksAnalyze(spark, cur.schema, Map(name -> sql), None)
     val widened = cur.copy(checks = cur.checks + (name -> sql))
     requireChecks(readEntries(spark, root, cur, identity), widened, "addCheck")
-    commit(spark, root, cur.version + 1, cur.schemaRep, cur.entries,
-      cur.txns, widened.checks, cur.dvs, cur.aliases, cur.layout, cur.props)
+    commit(spark, root, widened.copy(version = cur.version + 1))
   }
 
   /** Remove a CHECK constraint (metadata-only commit). */
@@ -1242,11 +1187,19 @@ object TxTable {
     require(cur.checks.contains(name),
       s"dropCheck: no constraint named $name " +
         s"(have: ${cur.checks.keys.toSeq.sorted.mkString(", ")})")
-    commit(spark, root, cur.version + 1, cur.schemaRep, cur.entries,
-      cur.txns, cur.checks - name, cur.dvs, cur.aliases, cur.layout,
-      cur.props)
+    commit(spark, root,
+      cur.copy(version = cur.version + 1, checks = cur.checks - name))
   }
 
+  /** A commit must match the table's declared schema: divergent
+    * parquet files would read back under the manifest schema with
+    * silently-nulled or dropped columns. Compared NULLABILITY-
+    * normalized ([[declaredDdl]]): name/type divergence is the failure
+    * this guards, while nullability flags are advisory over parquet
+    * and flip freely through expressions (a coalesce over a NOT NULL
+    * column reads back nullable) — requiring them to match would
+    * refuse every reconcile-shaped commit.
+    */
   private def requireSchema(df: DataFrame, cur: Snapshot, op: String): Unit = {
     // normalize BOTH sides: a manifest written before nullability
     // normalization stores NOT NULL markers in its schemaDdl, and
@@ -1303,10 +1256,8 @@ object TxTable {
       alsoDropValues: Seq[String] = Nil,
       expectedVersion: Option[Long] = None): Long = {
     val spark = df.sparkSession
-    val cur = requireSnapshot(spark, root)
-    expectedVersion.filter(_ != cur.version).foreach { _ =>
-      throw new ConcurrentCommitException(cur.version)
-    }
+    val cur = expectedVersion.fold(requireSnapshot(spark, root))(
+      requirePinned(spark, root, _))
     requireSchema(df, cur, "overwritePartitions")
     requireChecks(df, cur, "overwritePartitions")
     val fresh = writeData(df, root, Some(partitionCol))
@@ -1319,8 +1270,7 @@ object TxTable {
     // position deletes carry forward: rows for replaced files become
     // inert (their file keys no longer match any live entry), rows
     // for untouched partitions' files keep applying
-    commit(spark, root, cur.version + 1, cur.schemaRep, kept ++ fresh,
-      cur.txns, cur.checks, cur.dvs, cur.aliases, cur.layout, cur.props)
+    commit(spark, root, cur.copy(version = cur.version + 1, entries = kept ++ fresh))
   }
 
   /** The commit half of a partition-granularity copy-on-write (SQL
@@ -1328,33 +1278,34 @@ object TxTable {
     * the metadata-only DELETE fast path): atomically replace
     * `dropPartitions`' file sets with `fresh` in ONE manifest commit,
     * pinned to `expectedVersion` — the caller scanned exactly that
-    * snapshot's files, so a table that moved past it means the rewrite
-    * read stale rows and must fail loudly (ConcurrentCommitException,
-    * nothing visible), never half-apply. `fresh` entries may land in
-    * partitions OUTSIDE `dropPartitions` (a MERGE insert, an UPDATE
-    * that moves a row across partitions) — those add alongside the
-    * kept files. CHECK constraints run over the fresh rows only
-    * (untouched rows already passed at their own commit). A no-op
-    * (nothing dropped, nothing added) commits nothing.
-    */
-  /** Commit a group replacement pinned to `expectedVersion`. When the
-    * table moved past the pin, the commit REBASES instead of failing
-    * iff the moves are provably disjoint: the replaced groups' entry
-    * sets are byte-identical between the pinned and current snapshots
-    * (nobody touched what this commit read), and schema and CHECK
-    * constraints are unchanged (the rewrite was planned and validated
-    * against them). At 100 TB this is the difference between N
-    * independent per-partition maintenance jobs running concurrently
-    * and them serializing through spurious whole-statement retries —
-    * the same disjoint-commit rule Delta's conflict detection applies.
-    * A true conflict (same group touched, or concurrent schema/check
-    * change) still fails loudly with [[ConcurrentCommitException]].
+    * snapshot's files. `fresh` entries may land in partitions OUTSIDE
+    * `dropPartitions` (a MERGE insert, an UPDATE that moves a row
+    * across partitions) — those add alongside the kept files. CHECK
+    * constraints run over the fresh rows only (untouched rows already
+    * passed at their own commit). A no-op (nothing dropped, nothing
+    * added) commits nothing.
+    *
+    * When the table moved past the pin, the commit REBASES instead of
+    * failing iff the moves are provably disjoint: the replaced groups'
+    * entry sets are byte-identical between the pinned and current
+    * snapshots (nobody touched what this commit read), and schema and
+    * CHECK constraints are unchanged (the rewrite was planned and
+    * validated against them). At 100 TB this is the difference
+    * between N independent per-partition maintenance jobs running
+    * concurrently and them serializing through spurious
+    * whole-statement retries — the same disjoint-commit rule Delta's
+    * conflict detection applies. A true conflict (same group touched,
+    * or concurrent schema/check change) fails loudly with
+    * [[ConcurrentCommitException]], never retried here — hence this
+    * loop's own bound instead of [[retrying]].
     */
   private[sources] def commitReplace(
       spark: SparkSession, root: String, expectedVersion: Long,
       dropPartitions: Set[String], fresh: Seq[Entry], op: String): Long = {
-    var attempt = 0
-    while (true) {
+    def replacedOf(s: Snapshot): Set[Entry] =
+      s.entries.filter(e => dropPartitions.contains(e.partition)).toSet
+    @scala.annotation.tailrec
+    def rebase(attempt: Int): Long = {
       val cur = requireSnapshot(spark, root)
       if (cur.version != expectedVersion) {
         // the pinned manifest may have been vacuumed concurrently —
@@ -1368,8 +1319,6 @@ object TxTable {
               c.addSuppressed(e)
               throw c
           }
-        def replacedOf(s: Snapshot): Set[Entry] =
-          s.entries.filter(e => dropPartitions.contains(e.partition)).toSet
         // schemas compare nullability-normalized (the documented
         // equality form) — a raw string compare would spuriously
         // refuse a disjoint rebase across cosmetic DDL differences
@@ -1389,22 +1338,23 @@ object TxTable {
         if (!disjoint || attempt >= 3)
           throw new ConcurrentCommitException(cur.version)
       }
-      if (dropPartitions.isEmpty && fresh.isEmpty) return cur.version
-      if (cur.checks.nonEmpty && fresh.nonEmpty)
-        requireChecks(readEntries(spark, root, cur.copy(entries = fresh),
-          identity), cur, op)
-      val kept = cur.entries.filterNot(e => dropPartitions.contains(e.partition))
-      try {
-        return commit(spark, root, cur.version + 1, cur.schemaRep,
-          kept ++ fresh, cur.txns, cur.checks, cur.dvs, cur.aliases,
-          cur.layout, cur.props)
-      } catch {
-        // lost the version race itself — loop; the disjointness check
-        // re-runs against the new current snapshot
-        case _: ConcurrentCommitException => attempt += 1
+      if (dropPartitions.isEmpty && fresh.isEmpty) cur.version
+      else {
+        requireFreshChecks(spark, root, cur, fresh, op)
+        val kept = cur.entries.filterNot(e => dropPartitions.contains(e.partition))
+        // lost the version race itself — go round; the disjointness
+        // check re-runs against the new current snapshot
+        val won =
+          try Some(commit(spark, root,
+            cur.copy(version = cur.version + 1, entries = kept ++ fresh)))
+          catch { case _: ConcurrentCommitException => None }
+        won match {
+          case Some(v) => v
+          case None => rebase(attempt + 1)
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
+    rebase(0)
   }
 
   /** Nullability-normalized DDL — the schema-equality form every
@@ -1413,22 +1363,46 @@ object TxTable {
   private[sources] def normalizedDdl(schema: StructType): String =
     stripMetadata(nullableType(schema)).asInstanceOf[StructType].toDDL
 
+  /** The current snapshot, refused with [[ConcurrentCommitException]]
+    * unless it is still `expectedVersion` — the pin of every commit
+    * whose content was computed against one exact snapshot (row
+    * positions, a reconciled partition set). The re-read is the pin:
+    * the exclusive create of `v<pin+1>` alone would not be, because
+    * [[pruneHistory]] can delete that manifest after newer versions
+    * land, and the create would then succeed on a moved table.
+    */
+  private def requirePinned(
+      spark: SparkSession, root: String, expectedVersion: Long): Snapshot = {
+    val cur = requireSnapshot(spark, root)
+    if (cur.version != expectedVersion)
+      throw new ConcurrentCommitException(cur.version)
+    cur
+  }
+
+  /** Enforce `cur`'s CHECK constraints on the rows of `fresh` data
+    * files only — the rows the commit adds; everything else already
+    * passed at its own commit.
+    */
+  private def requireFreshChecks(
+      spark: SparkSession, root: String, cur: Snapshot, fresh: Seq[Entry],
+      op: String): Unit =
+    if (cur.checks.nonEmpty && fresh.nonEmpty)
+      requireChecks(readEntries(spark, root, cur.copy(entries = fresh),
+        identity), cur, op)
+
   /** Commit a merge-on-read DELETE: data entries unchanged, `addDvs`
     * position-delete files appended — metadata plus bytes ∝ deleted
     * rows, pinned to `expectedVersion` (the delete positions were
     * computed against exactly that snapshot's visible rows; a moved
     * table means recompute, same contract as every pinned commit).
     */
-  private[sources] def commitDvAppend(
+  private[graft] def commitDvAppend(
       spark: SparkSession, root: String, expectedVersion: Long,
       addDvs: Seq[DvEntry],
       txn: Option[(String, Long)] = None): Long = {
-    val cur = requireSnapshot(spark, root)
-    if (cur.version != expectedVersion)
-      throw new ConcurrentCommitException(cur.version)
-    commit(spark, root, cur.version + 1, cur.schemaRep, cur.entries,
-      cur.txns ++ txn, cur.checks, cur.dvs ++ addDvs, cur.aliases,
-      cur.layout, cur.props)
+    val cur = requirePinned(spark, root, expectedVersion)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      txns = cur.txns ++ txn, dvs = cur.dvs ++ addDvs))
   }
 
   /** Commit a merge-on-read UPDATE: `addDvs` position-deletes mask the
@@ -1439,20 +1413,16 @@ object TxTable {
     * complement of [[commitDvAppend]]'s DELETE). Pinned to
     * `expectedVersion` like every position-based commit.
     */
-  private[sources] def commitDvUpdate(
+  private[graft] def commitDvUpdate(
       spark: SparkSession, root: String, expectedVersion: Long,
       addDvs: Seq[DvEntry], fresh: Seq[Entry],
       op: String = "updateWhere",
       txn: Option[(String, Long)] = None): Long = {
-    val cur = requireSnapshot(spark, root)
-    if (cur.version != expectedVersion)
-      throw new ConcurrentCommitException(cur.version)
-    if (cur.checks.nonEmpty && fresh.nonEmpty)
-      requireChecks(readEntries(spark, root, cur.copy(entries = fresh),
-        identity), cur, op)
-    commit(spark, root, cur.version + 1, cur.schemaRep,
-      cur.entries ++ fresh, cur.txns ++ txn, cur.checks,
-      cur.dvs ++ addDvs, cur.aliases, cur.layout, cur.props)
+    val cur = requirePinned(spark, root, expectedVersion)
+    requireFreshChecks(spark, root, cur, fresh, op)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      entries = cur.entries ++ fresh, txns = cur.txns ++ txn,
+      dvs = cur.dvs ++ addDvs))
   }
 
   /** Commit a DV materialization: swap the DV-affected data files for
@@ -1460,15 +1430,13 @@ object TxTable {
     * rewrite applied them; rows for untouched files cannot exist once
     * `dropRelPaths` covers all affected files). Pinned like above.
     */
-  private[sources] def commitDvMaterialize(
+  private[graft] def commitDvMaterialize(
       spark: SparkSession, root: String, expectedVersion: Long,
       dropRelPaths: Set[String], fresh: Seq[Entry]): Long = {
-    val cur = requireSnapshot(spark, root)
-    if (cur.version != expectedVersion)
-      throw new ConcurrentCommitException(cur.version)
-    commit(spark, root, cur.version + 1, cur.schemaRep,
-      cur.entries.filterNot(e => dropRelPaths.contains(e.relPath)) ++ fresh,
-      cur.txns, cur.checks, Nil, cur.aliases, cur.layout, cur.props)
+    val cur = requirePinned(spark, root, expectedVersion)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      entries = cur.entries.filterNot(e => dropRelPaths.contains(e.relPath)) ++ fresh,
+      dvs = Nil))
   }
 
   /** Bin-pack compaction — the housekeeping op every manifest table
@@ -1538,8 +1506,7 @@ object TxTable {
     // rewritten (compacted) files had their position deletes APPLIED
     // by the merged read above; their old DV rows go inert with the
     // replaced files, rows for kept files keep applying
-    commit(spark, root, cur.version + 1, cur.schemaRep, keep ++ fresh,
-      cur.txns, cur.checks, cur.dvs, cur.aliases, cur.layout, cur.props)
+    commit(spark, root, cur.copy(version = cur.version + 1, entries = keep ++ fresh))
   }
 
   /** Whole-table rewrite under the same optimistic-concurrency
@@ -1573,8 +1540,12 @@ object TxTable {
         case Layout.Bucket(n, cs) => Layout.bucketSpec(n, cs)
       }
     }
-    var attempt = 0
-    while (true) {
+    // A rewrite's output may depend on the content it replaced, so a
+    // lost race re-runs the WHOLE transform on the fresh snapshot
+    // (unlike append, whose rows commute and are written once).
+    // Bounded low: each retry re-writes data; the lost attempt's files
+    // orphan until vacuum.
+    retrying(maxRetries) {
       val cur = requireSnapshot(spark, root)
       // layout resolution, most-authoritative first: an explicit
       // re-layout (`newLayout` — CALL relayout), this version's
@@ -1596,25 +1567,15 @@ object TxTable {
       requireSchema(out, cur, "rewriteAll")
       requireChecks(out, cur, "rewriteAll")
       val entries = writeData(out, root, partitionCol)
-      try {
-        // the manifest records the DECLARED spec only (never the
-        // heuristic entry-string recovery): a full rewrite places
-        // every row under it, so this version's entries and spec are
-        // consistent by construction — the re-layout commit point
-        return commit(spark, root, cur.version + 1, cur.schemaRep, entries,
-          cur.txns, cur.checks, layout = declared, props = cur.props)
-      } catch {
-        // A rewrite's output may depend on the content it replaced, so
-        // a lost race re-runs the WHOLE transform on the fresh snapshot
-        // (unlike append, whose rows commute and are written once).
-        // Bounded low: each retry re-writes data; the lost attempt's
-        // files orphan until vacuum.
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      // the manifest records the DECLARED spec only (never the
+      // heuristic entry-string recovery): a full rewrite places every
+      // row under it, so this version's entries and spec are
+      // consistent by construction — the re-layout commit point. The
+      // rewrite applied every delete and localized every renamed
+      // column, so neither DVs nor aliases carry forward.
+      commit(spark, root, cur.copy(version = cur.version + 1,
+        entries = entries, dvs = Nil, aliases = Map.empty, layout = declared))
     }
-    -1L // unreachable
   }
 
   /** RESTORE TABLE … VERSION AS OF: make `toVersion`'s state the
@@ -1670,9 +1631,7 @@ object TxTable {
     // the target's delete set is restored WITH its file set — a
     // restore across a merge-on-read delete resurrects exactly the
     // rows that version could see
-    commit(spark, root, cur.version + 1, target.schemaRep, target.entries,
-      cur.txns, target.checks, target.dvs, target.aliases, target.layout,
-      target.props)
+    commit(spark, root, target.copy(version = cur.version + 1, txns = cur.txns))
   }
 
   /** Crash recovery: delete incomplete (`#eof`-less) manifests so
@@ -1734,8 +1693,7 @@ object TxTable {
     // clone's absolute entry paths preserve — MergeOnRead.fileKey)
     val dvs = src.dvs.map(d =>
       d.copy(relPath = entryPath(qualifiedSrc, d.relPath)))
-    val v = commit(spark, dstRoot, 0L, src.schemaRep, entries, src.txns,
-      src.checks, dvs, src.aliases, src.layout, src.props)
+    val v = commit(spark, dstRoot, src.copy(version = 0L, entries = entries, dvs = dvs))
     registerClone(spark, srcRoot, dstRoot)
     v
   }
@@ -1772,18 +1730,6 @@ object TxTable {
     }
   }
 
-  /** Drop data files referenced by NO manifest ≥ `keepFromVersion`
-    * (crash orphans and compacted-away history). Never touches files
-    * the retained snapshots can still read. Returns the number of
-    * files deleted.
-    *
-    * Clone safety: when shallow clones of this table are LIVE (the
-    * [[liveClones]] registry), vacuum refuses — a clone's v0 pins
-    * source files that this table's retained history may no longer
-    * reference, and deleting them breaks the clone silently. Pass
-    * `force = true` to override after dropping (or localizing) the
-    * clones; dropped clones never block (stale markers self-prune).
-    */
   /** Time-based retention vacuum — the "retain N hours of history"
     * operational shape, expressed over graft's version-granularity
     * reclaim: every version committed inside the retention window
@@ -1804,6 +1750,18 @@ object TxTable {
     vacuum(spark, root, keepFrom, force)
   }
 
+  /** Drop data files referenced by NO manifest ≥ `keepFromVersion`
+    * (crash orphans and compacted-away history). Never touches files
+    * the retained snapshots can still read. Returns the number of
+    * files deleted.
+    *
+    * Clone safety: when shallow clones of this table are LIVE (the
+    * [[liveClones]] registry), vacuum refuses — a clone's v0 pins
+    * source files that this table's retained history may no longer
+    * reference, and deleting them breaks the clone silently. Pass
+    * `force = true` to override after dropping (or localizing) the
+    * clones; dropped clones never block (stale markers self-prune).
+    */
   def vacuum(
       spark: SparkSession, root: String, keepFromVersion: Long,
       force: Boolean = false): Int = {
@@ -1854,7 +1812,7 @@ object TxTable {
 
   /** Drop committed MANIFESTS below `keepFromVersion` (the current
     * version always survives: `keepFrom` is clamped to it). [[vacuum]]
-    * reclaims unreachable DATA files but leaves every manifest behind,
+    * reclaims unreferenced DATA files but leaves every manifest behind,
     * and both [[currentSnapshot]]'s directory listing and the
     * manifest-file count are O(versions) — a one-minute streaming
     * MERGE cadence is ~half a million manifests a year, which turns

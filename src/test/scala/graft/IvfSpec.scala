@@ -177,4 +177,19 @@ class IvfSpec extends SparkSpec {
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.2, s"distributed-trained IVF recall $recall")
   }
+
+  test("annTopK's checkpoints are freed by CacheScope.release") {
+    emb.count()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val ann = Ivf.annTopK(emb, emb.filter(col("vec_id") < 20),
+      "vec_id", "embedding", 5, 16, nprobe = 4)
+    assert(ann.count() > 0L)
+    CacheScope.release()
+    // `ann` stays reachable, so an unregistered checkpoint would stay
+    // resident here even though getPersistentRDDs holds RDDs weakly
+    val after = sc.getPersistentRDDs.size
+    assert(after <= before,
+      s"${after - before} RDDs resident after release (frame: ${ann.columns.mkString(",")})")
+  }
 }

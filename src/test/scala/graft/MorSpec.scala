@@ -619,4 +619,23 @@ class MorSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.size <= before,
       s"mergeInto left ${sc.getPersistentRDDs.size - before} RDDs resident")
   }
+
+  test("pinned DV commits refuse a superseded snapshot") {
+    val root = freshRoot("pin")
+    TxTable.create(seed, root, Some("p"))
+    val pinned = TxTable.currentVersion(spark, root).get
+    TxTable.append(Seq((101L, "odd", 0.0)).toDF("k", "p", "v"), root, Some("p"))
+    val moved = TxTable.currentVersion(spark, root).get
+    val dv = Seq(TxTable.DvEntry("deletes/none/part-0.parquet", 1L, 1L))
+    val attempts: Seq[(String, () => Long)] = Seq(
+      "commitDvAppend" -> (() => TxTable.commitDvAppend(spark, root, pinned, dv)),
+      "commitDvUpdate" -> (() => TxTable.commitDvUpdate(spark, root, pinned, dv, Nil)),
+      "commitDvMaterialize" -> (() =>
+        TxTable.commitDvMaterialize(spark, root, pinned, Set.empty, Nil)))
+    attempts.foreach { case (name, commit) =>
+      intercept[TxTable.ConcurrentCommitException](commit())
+      assert(TxTable.currentVersion(spark, root).get == moved,
+        s"$name committed against superseded v$pinned")
+    }
+  }
 }

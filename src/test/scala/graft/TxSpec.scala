@@ -605,14 +605,69 @@ class TxSpec extends SparkSpec {
       val m = classOf[TxTable.type].getDeclaredMethods
         .find(_.getName == "commit").get
       m.setAccessible(true)
-      try m.invoke(TxTable, spark, root,
-        java.lang.Long.valueOf(stale.version + 1), stale.schemaRep,
-        stale.entries, stale.txns, stale.checks, Nil, Map.empty, None,
-        Map.empty)
+      try m.invoke(TxTable, spark, root, stale.copy(version = stale.version + 1))
       catch {
         case e: java.lang.reflect.InvocationTargetException => throw e.getCause
       }
     }
     assert(TxTable.read(spark, root).count() == 6, "winner's commit intact")
+  }
+
+  test("every manifest re-renders byte-identically") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
+    import graft.sources.MergeOnRead
+    val root = freshRoot("render")
+    def snap = TxTable.currentSnapshot(spark, root).get
+    def row(k: Long, p: String) = Seq((k, p, k * 10.0)).toDF("k", "p", "v")
+    TxTable.create(seed, root, Some("p"))
+    TxTable.append(row(6L, "A"), root, Some("p"))
+    TxTable.txnAppend(row(7L, "B"), root, Some("p"), "q", 0L)
+    TxTable.setProperties(spark, root, Map("write.dml.mode" -> "mor"))
+    TxTable.addColumns(spark, root,
+      Seq(StructField("w", IntegerType), StructField("z", StringType)))
+    TxTable.setColumnDefault(spark, root, "w", Some("0"))
+    TxTable.widenColumn(spark, root, "w", LongType)
+    TxTable.renameColumn(spark, root, "w", "w2")
+    TxTable.renameColumn(spark, root, "z", "z2")
+    TxTable.addCheck(spark, root, "k_pos", "k > 0")
+    MergeOnRead.deleteWhere(spark, root, expr("k = 1"))
+    MergeOnRead.updateWhere(spark, root, expr("k = 2"), Seq("v" -> expr("v + 1")))
+    val restorable = snap.version
+    MergeOnRead.mergeInto(spark, root,
+      Seq((3L, "B", 0.5), (9L, "C", 9.5)).toDF("k", "p", "v"), Seq("k"))
+    MergeOnRead.materialize(spark, root)
+    assert(snap.dvs.isEmpty && snap.aliases.nonEmpty, "materialize drops DVs only")
+    MergeOnRead.deleteWhere(spark, root, expr("k = 4"))
+    TxTable.overwritePartitions(
+      Seq((8L, "C", 80.0, Option(1L), Option("c"))).toDF("k", "p", "v", "w2", "z2"),
+      root, "p", expectedVersion = Some(snap.version))
+    TxTable.compact(spark, root)
+    TxTable.dropCheck(spark, root, "k_pos")
+    TxTable.dropColumns(spark, root, Seq("w2"))
+    assert(snap.aliases == Map("z2" -> Seq("z")), "dropColumns drops its aliases")
+    assert(snap.dvs.nonEmpty)
+    TxTable.rewriteAll(spark, root, identity)
+    assert(snap.dvs.isEmpty && snap.aliases.isEmpty && snap.layout == Some("p"),
+      "rewriteAll clears DVs and aliases and records the declared layout")
+    TxTable.txnAppend(row(10L, "A").withColumn("z2", lit("x")), root, Some("p"), "q", 1L)
+    val target = TxTable.snapshot(spark, root, restorable)
+    TxTable.restore(spark, root, restorable)
+    assert(snap.entries == target.entries && snap.dvs == target.dvs &&
+      snap.txns == Map("q" -> 1L), "restore keeps the current txns")
+    val empty = freshRoot("render_empty")
+    TxTable.createEmpty(spark, empty, seed.schema, Some("p"), Map("a" -> "b"))
+    val clone = freshRoot("render_clone")
+    TxTable.cloneTable(spark, root, clone)
+    val roots = Seq(root, empty, clone)
+    assert(roots.tail.forall(r => TxTable.versions(spark, r) == Seq(0L)),
+      "createEmpty and cloneTable write version 0")
+    assert(TxTable.versions(spark, root) == (0L to 21L),
+      "every step above commits exactly one version")
+    for (r <- roots; v <- TxTable.versions(spark, r)) {
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(r, "_manifest", s"v$v.manifest")), "UTF-8")
+      assert(TxTable.render(TxTable.parseManifest(v, text, r)) == text,
+        s"$r v$v does not re-render byte-identically")
+    }
   }
 }
