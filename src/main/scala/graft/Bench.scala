@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.{Exec, RunMetrics}
+
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -42,11 +44,7 @@ object Bench {
       .filter(n => subset.forall(_(n)))
 
     val warmDir = "/root/testdata/sf0.001"
-    names.foreach { name => CacheScope.scoped(spark) {
-      try graft.tools.Exec.materialize(SparkEntry.queries(name)(spark, warmDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm pass $name failed: $e") }
-    }}
+    names.foreach(name => Exec.warm(spark, name, warmDir)(SparkEntry.queries(name)))
 
     // A query that throws records the sentinel -1 (not a plausible
     // wall-clock) for that pass; failed passes are excluded from MIN
@@ -65,55 +63,37 @@ object Bench {
     // change that inflates candidates now shows in every round's bench
     // artifact, and q_stream_cc's per-cycle fold cost is separated
     // from the 3-batch drain constant.
-    graft.tools.RunMetrics.install(spark)
+    RunMetrics.install(spark)
     val extras = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.Map[String, Double]]
-    // operators persist() blocking intermediates; the scope releases
-    // them after the clock stops, so a pass doesn't accumulate cached
-    // blocks across queries
     def onePass(): Map[String, Double] =
-      names.map { name => CacheScope.scoped(spark) {
-        val fn = SparkEntry.queries(name)
+      names.map { name =>
         // flush-then-reset: a failed prior query skipped its harvest;
         // its in-flight observations must land (and be discarded)
         // before this query's window opens (ADVICE r13)
-        graft.tools.RunMetrics.flushAndReset(spark)
-        val t0 = System.nanoTime()
-        // full-materialization action (VERDICT r15 item 1): the
-        // query's OWN executed plan, never a count-re-planned one —
-        // see graft.tools.Exec
-        val ok = try { graft.tools.Exec.materialize(fn(spark, sfDir)); true }
-                 catch { case _: Throwable =>
-                   failCounts(name) = failCounts.getOrElse(name, 0) + 1; false }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        if (ok) {
+        RunMetrics.flushAndReset(spark)
+        val dt =
+          try Exec.timed(spark)(SparkEntry.queries(name)(spark, sfDir))._2
+          catch { case _: Throwable =>
+            failCounts(name) = failCounts.getOrElse(name, 0) + 1; -1.0 }
+        if (dt >= 0) {
           // observation families deduped by full name: internal driver
           // actions re-fire the same CollectMetrics instance (ADVICE r13)
-          val got = graft.tools.RunMetrics.harvestedDeduped(spark)
-          if (got.nonEmpty) {
-            val m = extras.getOrElseUpdate(name,
-              scala.collection.mutable.Map.empty[String, Double])
-            got.foreach { case (k, v) =>
-              m(k) = m.get(k).fold(v)(math.min(_, v)) }
-          }
+          val got = RunMetrics.harvestedDeduped(spark)
+          if (got.nonEmpty) Exec.minMerge(extras.getOrElseUpdate(name,
+            scala.collection.mutable.Map.empty[String, Double]), got)
         }
         name -> dt
-      }}.toMap
+      }.toMap
     val passes = (1 to Passes).map(_ => onePass())
-    def agg(f: Seq[Double] => Double): Seq[(String, Double)] =
-      names.map { n =>
-        val ts = passes.map(_(n)).filter(_ >= 0)
-        n -> (if (ts.isEmpty) -1.0 else f(ts))
-      }
-    val best = agg(_.min)
-    // true median: average the two middle values for even counts (a
-    // failed pass leaves 2 valid timings — the lower-middle element
-    // would equal the min and understate the spread)
-    val med = agg { ts =>
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    val spreads = names.map { n =>
+      val ts = passes.map(_(n)).filter(_ >= 0)
+      n -> (if (ts.isEmpty) None else Some(Exec.Spread.of(ts)))
     }
+    def agg(f: Exec.Spread => Double): Seq[(String, Double)] =
+      spreads.map { case (n, s) => n -> s.fold(-1.0)(f) }
+    val best = agg(_.min)
+    val med = agg(_.med)
     val worst = agg(_.max)
     def qjson(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")

@@ -43,4 +43,18 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with `confs` set on the session, then put each key back
+    * as it was — its prior value, or unset when it had none — also
+    * when `body` throws.
+    */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Session, Tables}
 import graft.functions.ExactAgg
 import graft.sources.{CsvIngest, FixedWidth, Jdbc, JsonIngest, TypeMatrix}
 
@@ -545,8 +545,7 @@ object SourceQueries {
       base.filter(col("o_custkey") % 7 === 5).count(),
       base.filter(col("o_custkey") % 7 === 4).count())
     val cols = base.columns
-    s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-    try {
+    Session.withConf(s, graft.sources.DeltaDml.ModeKey -> "mor") {
       s.sql(
         s"""MERGE INTO gq.mart.orders t USING graft_sqlmor_changes s
            |ON t.o_orderkey = s.o_orderkey
@@ -556,7 +555,7 @@ object SourceQueries {
            |  VALUES (${cols.map(c => s"s.$c").mkString(", ")})"""
           .stripMargin)
       s.sql("DELETE FROM gq.mart.orders WHERE o_custkey % 7 = 4")
-    } finally s.conf.unset(graft.sources.DeltaDml.ModeKey)
+    }
     val after = TxTable.currentSnapshot(s, root).get
     // the point of the query: scattered SQL DML, write ∝ changed rows
     require(before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
@@ -752,15 +751,10 @@ object SourceQueries {
     Tables.orders(s, dir).createOrReplaceTempView("graft_ord_src")
     // INT64-micros timestamps: INT96 (the legacy default) has no
     // footer bounds, and this engine's layout wants stats everywhere
-    val prev = s.conf.getOption("spark.sql.parquet.outputTimestampType")
-    s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try s.sql(
+    Session.withConf(s,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(s.sql(
       """CREATE TABLE ga.mart.orders PARTITIONED BY (o_orderpriority)
-        |AS SELECT * FROM graft_ord_src""".stripMargin)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.parquet.outputTimestampType", v)
-      case None => s.conf.unset("spark.sql.parquet.outputTimestampType")
-    }
+        |AS SELECT * FROM graft_ord_src""".stripMargin))
     val out = s.sql(
       """SELECT o_orderpriority, COUNT(*) AS n_rows, COUNT(o_custkey) AS n_cust,
         |  MIN(o_orderkey) AS mn_key, MAX(o_orderkey) AS mx_key,
@@ -819,16 +813,13 @@ object SourceQueries {
     s.sql(
       """CREATE TABLE gs.mart.odd PARTITIONED BY (o_orderpriority)
         |AS SELECT * FROM graft_spj_src WHERE o_orderkey % 2 = 1""".stripMargin)
-    val keys = Seq(
+    Session.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val out = s.sql(
         """SELECT a.o_orderpriority, COUNT(*) AS n_pairs,
           |  CAST(SUM(CAST(round((a.o_totalprice + b.o_totalprice) * 100)
@@ -848,9 +839,6 @@ object SourceQueries {
         s"q_spj_join expected a storage-partitioned join, got:\n" +
           out.queryExecution.executedPlan)
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -888,15 +876,12 @@ object SourceQueries {
     s.sql(
       """CREATE TABLE gb.mart.orders PARTITIONED BY (bucket(8, o_custkey))
         |AS SELECT * FROM graft_bk_ord""".stripMargin)
-    val keys = Seq(
+    Session.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val out = s.sql(
         """SELECT c_mktsegment, COUNT(*) AS n_orders,
           |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -917,9 +902,6 @@ object SourceQueries {
         s"q_bucket_join expected a shuffle-free co-bucketed join:\n" +
           out.queryExecution.executedPlan)
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -969,16 +951,13 @@ object SourceQueries {
     s.sql(
       """CREATE TABLE gp.mart.dim PARTITIONED BY (bucket(8, c_custkey))
         |AS SELECT c_custkey, c_mktsegment FROM graft_pc_cust""".stripMargin)
-    val keys = Seq(
+    Session.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val out = s.sql(
         """SELECT d.c_mktsegment, COUNT(*) AS n_orders,
           |  CAST(SUM(CAST(round(f.v * 100) AS BIGINT)) AS BIGINT)
@@ -1006,9 +985,6 @@ object SourceQueries {
       // session confs at execution time
       val rows = out.collect().toSeq
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1062,7 +1038,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    val out = s"/root/repo/target/tmp/xlsxrt_${new java.io.File(dir).getName}"
+    val out = s"target/tmp/xlsxrt_${new java.io.File(dir).getName}"
     val target = StructType(Seq(
       StructField("c_custkey", LongType),
       StructField("c_mktsegment", StringType),
@@ -1112,7 +1088,7 @@ object SourceQueries {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_discount"),
         col("l_extendedprice"), col("l_returnflag"))
-    val root = s"/root/repo/target/tmp/fmtq_${new java.io.File(dir).getName}"
+    val root = s"target/tmp/fmtq_${new java.io.File(dir).getName}"
     li.repartitionByRange(8, col("l_orderkey"))
       .write.format("graft").mode("overwrite").save(root)
     s.sql(s"CREATE OR REPLACE TEMPORARY VIEW fmt_lineitem USING graft " +
@@ -1161,7 +1137,7 @@ object SourceQueries {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    val root = s"/root/repo/target/tmp/skipq_${new java.io.File(dir).getName}"
+    val root = s"target/tmp/skipq_${new java.io.File(dir).getName}"
     TxTable.create(li.repartitionByRange(8, col("l_orderkey")), root)
     val cond = col("l_orderkey").between(1000L, 3000L) && col("l_quantity") > 25.0
     val snap = TxTable.currentSnapshot(s, root).get
@@ -1199,7 +1175,7 @@ object SourceQueries {
     import graft.sources.{TxTable, ZOrder}
     val o = Tables.orders(s, dir)
       .select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
-    val root = s"/root/repo/target/tmp/zorderq_${new java.io.File(dir).getName}"
+    val root = s"target/tmp/zorderq_${new java.io.File(dir).getName}"
     ZOrder.write(o, root, Seq(col("o_custkey"), col("o_orderdate")),
       numFiles = 16, bits = 6)
     val snap = TxTable.currentSnapshot(s, root).get
@@ -1236,7 +1212,7 @@ object SourceQueries {
       |ORDER BY lang""".stripMargin) { (s, dir) =>
     val docs = Tables.documents(s, dir)
     // absolute path: the driver may invoke Verify from any CWD
-    val out = s"/root/repo/target/tmp/jsonl_${new java.io.File(dir).getName}"
+    val out = s"target/tmp/jsonl_${new java.io.File(dir).getName}"
     JsonIngest.writeInterchange(docs, out)
     val (good, bad) = CsvIngest.splitCorrupt(
       JsonIngest.readStaging(s, out, docs.schema), runId = "jsonl_roundtrip")
@@ -1261,7 +1237,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    val out = s"/root/repo/target/tmp/xmlrt_${new java.io.File(dir).getName}"
+    val out = s"target/tmp/xmlrt_${new java.io.File(dir).getName}"
     Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       // 1-row-group parquet scans as ONE partition; spread so the
@@ -1298,7 +1274,7 @@ object SourceQueries {
     val widths = Seq(
       "c_custkey" -> 12, "c_name" -> 26, "c_acctbal" -> 14,
       "c_mktsegment" -> 12)
-    val out = s"/root/repo/target/tmp/fixedwidth_${new java.io.File(dir).getName}"
+    val out = s"target/tmp/fixedwidth_${new java.io.File(dir).getName}"
     FixedWidth.writeFixed(
       Tables.customer(s, dir)
         .select(widths.map { case (n, _) => col(n) }: _*),
@@ -1355,7 +1331,7 @@ object SourceQueries {
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
     val cust = Tables.customer(s, dir)
     // absolute path: the driver may invoke Verify from any CWD
-    val out = s"/root/repo/target/tmp/interchange_${new java.io.File(dir).getName}"
+    val out = s"target/tmp/interchange_${new java.io.File(dir).getName}"
     CsvIngest.writeInterchange(cust, out)
     val meta = TypeMatrix.introspect(cust.schema)
     val target = TypeMatrix.structType(meta)

@@ -459,7 +459,7 @@ object TextQueries {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, dir) =>
     import graft.operators.Shard
-    val root = s"/root/repo/target/tmp/shardq_${new java.io.File(dir).getName}"
+    val root = s"target/tmp/shardq_${new java.io.File(dir).getName}"
     Shard.export(Tables.documents(s, dir), root, col("doc_id"), 8)
     s.read.parquet(root)
       .groupBy(col("__shard").cast("long").as("shard"))

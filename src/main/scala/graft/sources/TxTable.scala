@@ -144,31 +144,17 @@ object TxTable {
         .asInstanceOf[StructType])
       .getOrElse(StructType.fromDDL(schemaDdl))
 
-    def schemaRep: SchemaRep = SchemaRep(schemaDdl, schemaJson)
-
-    /** This snapshot declaring `s` (both persisted forms, via
-      * [[SchemaRep.of]]).
+    /** This snapshot declaring `s` in both persisted forms:
+      * nullability-normalized, metadata kept in the JSON only.
       */
     def withSchema(s: StructType): Snapshot = {
-      val rep = SchemaRep.of(s)
-      copy(schemaDdl = rep.ddl, schemaJson = rep.json)
-    }
-  }
-
-  /** A schema in both persisted forms — what every commit writes.
-    * Build via [[SchemaRep.of]] so the two stay consistent
-    * (nullability-normalized, metadata preserved in the JSON).
-    */
-  final case class SchemaRep(ddl: String, json: Option[String])
-
-  object SchemaRep {
-    def of(schema: StructType): SchemaRep = {
-      val n = nullableType(schema).asInstanceOf[StructType]
+      val n = nullableType(s).asInstanceOf[StructType]
       // the DDL form is METADATA-FREE: Spark 4 renders DEFAULT
       // clauses into toDDL but fromDDL cannot parse them back, so a
       // metadata-bearing DDL would poison every parse/equality site —
       // defaults and comments live ONLY in the JSON form
-      SchemaRep(stripMetadata(n).asInstanceOf[StructType].toDDL, Some(n.json))
+      copy(schemaDdl = stripMetadata(n).asInstanceOf[StructType].toDDL,
+        schemaJson = Some(n.json))
     }
   }
 

@@ -1,9 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.CacheScope
 
-/** The "run it" action for timing/warm-up code (Bench, the scale
-  * rehearsal): fully materializes a DataFrame's OWN executed plan.
+/** The one timing protocol of the mains (Bench, the scale rehearsal,
+  * JobProf): the "run it" action, the warm pass, the timed cell and
+  * the pass spread.
+  *
+  * [[materialize]] fully materializes a DataFrame's OWN executed plan.
   *
   * `df.count()` is NOT that action (VERDICT r15 item 1): the count
   * re-plans the query with an `Aggregate(count(1))` on top, column
@@ -39,4 +43,53 @@ object Exec {
     RunMetrics.harvestQe(qe)
     n
   }
+
+  /** One untimed run of `query` on `dir` in a release scope — the warm
+    * pass (JIT, codegen cache, fixture memos) and the one-time preps.
+    * A failure is printed with the query and dir, never thrown.
+    */
+  def warm(spark: SparkSession, name: String, dir: String)(
+      query: (SparkSession, String) => DataFrame): Unit =
+    CacheScope.scoped(spark) {
+      try materialize(query(spark, dir))
+      catch { case e: Throwable =>
+        System.err.println(s"[warm] $name at $dir failed: $e") }
+    }
+
+  /** One timed cell: builds and materializes `df` in a release scope,
+    * the clock stopped inside the scope, before the release. Returns
+    * (rows, seconds); a failure throws.
+    */
+  def timed(spark: SparkSession)(df: => DataFrame): (Long, Double) =
+    CacheScope.scoped(spark) {
+      val t0 = System.nanoTime()
+      val n = materialize(df)
+      (n, (System.nanoTime() - t0) / 1e9)
+    }
+
+  /** Min, true median and max of a cell's pass timings. The min is the
+    * steal-resistant headline; the spread tells a host window (wide)
+    * from a real regression (tight at a higher level).
+    */
+  final case class Spread(min: Double, med: Double, max: Double)
+
+  object Spread {
+    def of(xs: Seq[Double]): Spread = {
+      val s = xs.sorted
+      // an even count averages the two middle values: with one failed
+      // pass of three, the lower middle would equal the min
+      val med =
+        if (s.size % 2 == 1) s(s.size / 2)
+        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+      Spread(s.head, med, s.last)
+    }
+  }
+
+  /** Merge one pass's RunMetrics cells into `into` by per-key MIN
+    * (counts are pass-invariant; timings take the steal-resistant min).
+    */
+  def minMerge(
+      into: scala.collection.mutable.Map[String, Double],
+      got: Iterable[(String, Double)]): Unit =
+    got.foreach { case (k, v) => into(k) = into.get(k).fold(v)(math.min(_, v)) }
 }

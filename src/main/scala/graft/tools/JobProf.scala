@@ -21,17 +21,10 @@ object JobProf {
     require(args.nonEmpty, "usage: JobProf <query names…>")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.Session()
-    // A/B harness: GRAFT_EXTRA_CONF="k=v;k=v" applies session confs
-    // before any query runs, so a candidate conf can be profiled
-    // without touching the contract mains
-    sys.env.get("GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
     for (name <- args) {
+      val query = graft.SparkEntry.queries(name)
       // warm pass: JIT + codegen cache + fixture memos
-      graft.CacheScope.scoped(spark)(
-        Exec.materialize(graft.SparkEntry.queries(name)(spark, dir)))
+      Exec.warm(spark, name, dir)(query)
       val jobs = new java.util.concurrent.ConcurrentHashMap[
         Int, (Long, String, Int)]()
       val done = new java.util.concurrent.ConcurrentLinkedQueue[
@@ -52,11 +45,7 @@ object JobProf {
         }
       }
       spark.sparkContext.addSparkListener(l)
-      val wall = graft.CacheScope.scoped(spark) {
-        val t0 = System.nanoTime()
-        Exec.materialize(graft.SparkEntry.queries(name)(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
+      val (_, wall) = Exec.timed(spark)(query(spark, dir))
       // listener bus is async; give it a beat to drain
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(l)

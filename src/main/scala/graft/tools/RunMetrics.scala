@@ -60,9 +60,6 @@ object RunMetrics {
   /** Accumulate into a driver-side scalar. */
   def add(key: String, v: Double): Unit = merge(key, v, _ + _)
 
-  /** Keep the maximum seen (per-task recordings racing is fine). */
-  def maxOf(key: String, v: Double): Unit = merge(key, v, math.max)
-
   private def merge(key: String, v: Double, f: (Double, Double) => Double): Unit = {
     var done = false
     while (!done) {

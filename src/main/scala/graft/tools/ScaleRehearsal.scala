@@ -1,8 +1,11 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.{CacheScope, SparkEntry}
+import graft.Session.withConf
+import graft.sources.DeltaDml.ModeKey
 
 /** sf1 scale rehearsal of the superlinear-risk query family (VERDICT
   * r5 item 4): converts the "plan looks linear" story into a
@@ -47,9 +50,10 @@ import graft.{CacheScope, SparkEntry}
   *    and bucket function.
   *
   * Run: `sbt "runMain graft.tools.ScaleRehearsal"` — writes the
-  * target/sf1 parquet tables once (reused if present), times the family
-  * (2 passes each, per-query MIN, same steal-resistant protocol as
-  * Bench), and writes SCALE_r06.json.
+  * target/sf1 and target/sf10 parquet tables once (reused if present),
+  * times the families with Bench's protocol ([[Exec]]: warm pass, 3
+  * interleaved passes, per-cell min/median/max) and writes the JSON
+  * artifact named at the end of `main`.
   */
 object ScaleRehearsal {
 
@@ -306,9 +310,7 @@ object ScaleRehearsal {
     // proves correct, here cost-certified at 10× rows
     "x_sql_merge" -> { (s, dir) =>
       val wh = s"target/tmp/graft_wh_xmg_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      s.conf.set("spark.sql.catalog.xm", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.xm.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS xm.mart")
+      catalog(s, "xm", wh)
       s.sql("DROP TABLE IF EXISTS xm.mart.orders")
       graft.Tables.orders(s, dir).createOrReplaceTempView("x_ord_src")
       s.sql(
@@ -341,9 +343,7 @@ object ScaleRehearsal {
     // CoW-vs-MoR cost comparison at each tier
     "x_sql_mor" -> { (s, dir) =>
       val wh = s"target/tmp/graft_wh_xmor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      s.conf.set("spark.sql.catalog.ym", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.ym.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS ym.mart")
+      catalog(s, "ym", wh)
       s.sql("DROP TABLE IF EXISTS ym.mart.orders")
       graft.Tables.orders(s, dir).createOrReplaceTempView("y_ord_src")
       s.sql(
@@ -360,8 +360,7 @@ object ScaleRehearsal {
       val root = s"$wh/mart/orders"
       val before = graft.sources.TxTable.currentSnapshot(s, root).get
         .entries.map(e => (e.relPath, e.size)).toSet
-      s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-      try s.sql(
+      withConf(s, ModeKey -> "mor")(s.sql(
         """MERGE INTO ym.mart.orders t USING y_merge_src s
           |ON t.o_orderkey = s.k
           |WHEN MATCHED AND s.del THEN DELETE
@@ -370,8 +369,7 @@ object ScaleRehearsal {
           |  o_orderstatus, o_totalprice, o_orderdate, o_orderpriority)
           |  VALUES (s.k, 0, 'X', s.np, TIMESTAMP'2099-01-01 00:00:00',
           |    '9-NEW')"""
-          .stripMargin)
-      finally s.conf.unset(graft.sources.DeltaDml.ModeKey)
+          .stripMargin))
       val after = graft.sources.TxTable.currentSnapshot(s, root).get
       require(
         before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
@@ -382,7 +380,6 @@ object ScaleRehearsal {
     // literal-map dictGet probed by the scaling fact side: the J6
     // in-projection lookup must cost O(rows), broadcast-shipped once
     "x_dict_probe" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       val prio = graft.Tables.orders(s, dir)
         .select(col("o_orderpriority")).distinct()
         .withColumn("rank", substring(col("o_orderpriority"), 1, 1))
@@ -400,7 +397,6 @@ object ScaleRehearsal {
     // at tasks×maxB rows regardless of corpus size — the measured
     // ratio must track the linear scan, not the hot domain
     "x_token_budget_skew" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       import graft.functions.Text
       val docs = graft.Tables.documents(s, dir)
         .withColumn("n_tok", size(Text.tokens(col("text"))).cast("long"))
@@ -425,7 +421,6 @@ object ScaleRehearsal {
     // pays EVERY ingest: two narrow joins over the labeling plus a
     // fixpoint on the delta-sized reduced graph
     "x_incremental_cc_fold" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       import graft.queries.TextQueries
       // the one-time prep (base labeling + delta edge set) is ALSO
       // triggered from main's warm-up loop, so every TIMED pass of
@@ -446,7 +441,6 @@ object ScaleRehearsal {
     // shape, and DsirSpec pins the wide stats stay a LOCAL broadcast
     // relation with a BroadcastHashJoin scoring join
     "x_dsir_wide" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       graft.operators.Dsir.select(
         graft.Tables.documents(s, dir), "doc_id", "text",
         isTarget = col("lang") === "en", k = 200, buckets = 1 << 16)
@@ -465,29 +459,13 @@ object ScaleRehearsal {
     // (per-fold/refresh seconds land in RunMetrics:
     // stream_dsir_fold_b* / stream_dsir_refresh_v*)
     "x_stream_dsir" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val srcDir = s"target/tmp/x_stream_dsir_src_$tag"
-      val done = new org.apache.hadoop.fs.Path(s"$srcDir/_DONE")
-      val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(done)) {
-        val docs = graft.Tables.documents(s, dir).select(
-          col("doc_id"), col("text"), (col("lang") === "en").as("tgt"))
-        (0 until 10).foreach { r =>
-          docs.filter(pmod(col("doc_id"), lit(10L)) === r).coalesce(1)
-            .write.mode("overwrite").parquet(s"$srcDir/f=$r")
-          // explicit per-slice mod-times pin the file->batch order
-          // (ADVICE r17: slices written in quick succession can share
-          // an mtime tick, making the frozen-model composition across
-          // the timed passes nondeterministic — the q_stream_dsir
-          // fixture device)
-          fs.listStatus(new org.apache.hadoop.fs.Path(s"$srcDir/f=$r"))
-            .filter(_.isFile)
-            .foreach(f =>
-              fs.setTimes(f.getPath, 1600000000000L + r * 60000L, -1))
-        }
-        fs.create(done, true).close()
-      }
+      val srcDir =
+        s"target/tmp/x_stream_dsir_src_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      // pinned per-slice mod-times fix the file->batch order (ADVICE
+      // r17: slices written in quick succession can share an mtime
+      // tick, making the frozen-model composition across the timed
+      // passes nondeterministic — the q_stream_dsir fixture device)
+      feed(s, srcDir, 10, pinMtimes = true)(byDocMod(dsirDocs(s, dir), 10))
       val run = System.nanoTime()
       graft.streaming.Streams.dsirStream(
         graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text", "tgt",
@@ -508,7 +486,6 @@ object ScaleRehearsal {
     // cost shape, then reads the merged table back (the anti-join
     // read is part of the measured cost).
     "x_cdc_mor" -> { (s, dir) =>
-      import org.apache.spark.sql.functions._
       import graft.sources.TxTable
       import graft.streaming.Cdc
       val feed = graft.Tables.events(s, dir).select(
@@ -570,9 +547,8 @@ object ScaleRehearsal {
     // nothing, so passes are identical.
     "x_mor_dv_heavy_dml" -> { (s, dir) =>
       val tag = ensureDvHeavy(s, dir)
-      s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-      try s.sql(s"DELETE FROM zdv.mart.orders_$tag WHERE o_totalprice < 0")
-      finally s.conf.unset(graft.sources.DeltaDml.ModeKey)
+      withConf(s, ModeKey -> "mor")(
+        s.sql(s"DELETE FROM zdv.mart.orders_$tag WHERE o_totalprice < 0"))
       s.sql(
         s"""SELECT COUNT(*) AS n
            |FROM zdv.mart.orders_$tag WHERE o_orderkey % 97 = 0""".stripMargin)
@@ -598,21 +574,18 @@ object ScaleRehearsal {
       import graft.operators.Ivf
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val idxPath = s"target/tmp/ivf_idx_$tag"
-      ivfIdxBuilt.synchronized {
-        if (!ivfIdxBuilt.contains(dir)) {
-          val emb = graft.Tables.embeddings(s, dir)
-          val cents = Ivf.trainCentroids(
-            emb, "embedding", Ivf.adaptiveNlist(emb.count()))
-          ivfIdxCentroids(dir) = cents
-          Ivf.assignCorpus(emb, "vec_id", "embedding", cents)
-            .write.mode("overwrite").parquet(idxPath)
-          ivfIdxBuilt += dir
-        }
+      val cents = once(("x_ivf_query_only", dir)) {
+        val emb = graft.Tables.embeddings(s, dir)
+        val cents = Ivf.trainCentroids(
+          emb, "embedding", Ivf.adaptiveNlist(emb.count()))
+        Ivf.assignCorpus(emb, "vec_id", "embedding", cents)
+          .write.mode("overwrite").parquet(idxPath)
+        cents
       }
       Ivf.annTopKAssigned(
         s.read.parquet(idxPath),
         graft.Tables.embeddings(s, dir).filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 5, ivfIdxCentroids(dir), nprobe = 4)
+        "vec_id", "embedding", k = 5, cents, nprobe = 4)
     },
     // round-15 (VERDICT r14 item 4): IVF-PQ query-only cycles against
     // a STORED compressed index — prep trains centroids + codebooks on
@@ -624,19 +597,15 @@ object ScaleRehearsal {
       import graft.operators.{Ivf, Pq}
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val idxPath = s"target/tmp/pq_idx_$tag"
-      pqIdxBuilt.synchronized {
-        if (!pqIdxBuilt.contains(dir)) {
-          val emb = graft.Tables.embeddings(s, dir)
-          val cents = Ivf.trainCentroids(
-            emb, "embedding", Ivf.adaptiveNlist(emb.count()))
-          val cb = Pq.trainCodebooks(emb, "embedding", m = 8, ksub = 64)
-          pqIdxModels(dir) = (cents, cb)
-          Pq.assignCorpusPq(emb, "vec_id", "embedding", cents, cb)
-            .write.mode("overwrite").parquet(idxPath)
-          pqIdxBuilt += dir
-        }
+      val (cents, cb) = once(("x_pq_query_only", dir)) {
+        val emb = graft.Tables.embeddings(s, dir)
+        val cents = Ivf.trainCentroids(
+          emb, "embedding", Ivf.adaptiveNlist(emb.count()))
+        val cb = Pq.trainCodebooks(emb, "embedding", m = 8, ksub = 64)
+        Pq.assignCorpusPq(emb, "vec_id", "embedding", cents, cb)
+          .write.mode("overwrite").parquet(idxPath)
+        (cents, cb)
       }
-      val (cents, cb) = pqIdxModels(dir)
       Pq.annTopKPqAssigned(
         s.read.parquet(idxPath),
         graft.Tables.embeddings(s, dir).filter(col("vec_id") < 10),
@@ -667,35 +636,28 @@ object ScaleRehearsal {
     "x_mor_dv_wide" -> { (s, dir) =>
       import graft.sources.TxTable
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set("spark.sql.catalog.zdw", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.zdw.warehouse", "target/tmp/graft_wh_dvw")
-      s.sql("CREATE NAMESPACE IF NOT EXISTS zdw.mart")
-      if (!dvWideBuilt.contains(dir)) {
+      catalog(s, "zdw", "target/tmp/graft_wh_dvw")
+      once(("x_mor_dv_wide", dir)) {
         s.sql(s"DROP TABLE IF EXISTS zdw.mart.orders_$tag")
         graft.Tables.orders(s, dir).createOrReplaceTempView("zdw_src")
         s.sql(
           s"""CREATE TABLE zdw.mart.orders_$tag
              |PARTITIONED BY (bucket(256, o_orderkey))
              |AS SELECT * FROM zdw_src""".stripMargin)
-        s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-        val shuffleBefore = s.conf.get("spark.sql.shuffle.partitions")
-        val bcastBefore = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
         // ONE writer task per statement covering ~175 of 256 buckets
         // (orderkeys are ~25% dense, so 1200 candidates match ~300) —
         // far past DvKeyCap, forcing the bloom path
-        s.conf.set("spark.sql.shuffle.partitions", "1")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try (0 until 4).foreach { r =>
-          val keys = (0 until 1200).map(j => 1 + r * 131 + j * 499)
-          s.sql(
-            s"""MERGE INTO zdw.mart.orders_$tag t
-               |USING (SELECT explode(array(${keys.mkString(",")})) AS k) src
-               |ON t.o_orderkey = src.k
-               |WHEN MATCHED THEN DELETE""".stripMargin)
-        } finally {
-          s.conf.unset(graft.sources.DeltaDml.ModeKey)
-          s.conf.set("spark.sql.shuffle.partitions", shuffleBefore)
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastBefore)
+        withConf(s, ModeKey -> "mor",
+          "spark.sql.shuffle.partitions" -> "1",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          (0 until 4).foreach { r =>
+            val keys = (0 until 1200).map(j => 1 + r * 131 + j * 499)
+            s.sql(
+              s"""MERGE INTO zdw.mart.orders_$tag t
+                 |USING (SELECT explode(array(${keys.mkString(",")})) AS k) src
+                 |ON t.o_orderkey = src.k
+                 |WHEN MATCHED THEN DELETE""".stripMargin)
+          }
         }
         val snap = TxTable.currentSnapshot(
           s, s"target/tmp/graft_wh_dvw/mart/orders_$tag").get
@@ -703,17 +665,14 @@ object ScaleRehearsal {
             d.bloom.isDefined && d.keys.isEmpty),
           s"x_mor_dv_wide: expected bloom-scoped wide DV entries, got " +
             s"${snap.dvs.map(d => (d.keys.size, d.bloom.isDefined))}")
-        dvWideBuilt += dir
       }
       // timed: full delta scan through the wide DVs (no-match DELETE —
       // nothing commits, so passes are identical); the probe ratio is
       // measured as a DELTA so this entry never resets the registry
-      import graft.tools.RunMetrics
       def cell(k: String) = RunMetrics.snapshot.getOrElse(k, 0.0)
       val (p0, f0) = (cell("dv_files_probed"), cell("dv_scan_files"))
-      s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-      try s.sql(s"DELETE FROM zdw.mart.orders_$tag WHERE o_totalprice < 0")
-      finally s.conf.unset(graft.sources.DeltaDml.ModeKey)
+      withConf(s, ModeKey -> "mor")(
+        s.sql(s"DELETE FROM zdw.mart.orders_$tag WHERE o_totalprice < 0"))
       val (p1, f1) = (cell("dv_files_probed"), cell("dv_scan_files"))
       val snap = TxTable.currentSnapshot(
         s, s"target/tmp/graft_wh_dvw/mart/orders_$tag").get
@@ -729,35 +688,56 @@ object ScaleRehearsal {
     "x_mor_dv_trickle_read" -> { (s, dir) =>
       import graft.sources.TxTable
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set("spark.sql.catalog.zdt", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.zdt.warehouse", "target/tmp/graft_wh_dvt")
-      s.sql("CREATE NAMESPACE IF NOT EXISTS zdt.mart")
-      if (!dvTrickleBuilt.contains(dir)) {
+      catalog(s, "zdt", "target/tmp/graft_wh_dvt")
+      once(("x_mor_dv_trickle_read", dir)) {
         s.sql(s"DROP TABLE IF EXISTS zdt.mart.orders_$tag")
         graft.Tables.orders(s, dir).createOrReplaceTempView("zdt_src")
         s.sql(
           s"""CREATE TABLE zdt.mart.orders_$tag
              |PARTITIONED BY (bucket(64, o_orderkey))
              |AS SELECT * FROM zdt_src""".stripMargin)
-        s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-        try (0 until 32).foreach { i =>
-          val keys = (0 until 8).map(j => 1 + i * 977 + j * 31261)
-          s.sql(s"DELETE FROM zdt.mart.orders_$tag " +
-            s"WHERE o_orderkey IN (${keys.mkString(",")})")
-        } finally s.conf.unset(graft.sources.DeltaDml.ModeKey)
+        withConf(s, ModeKey -> "mor") {
+          (0 until 32).foreach { i =>
+            val keys = (0 until 8).map(j => 1 + i * 977 + j * 31261)
+            s.sql(s"DELETE FROM zdt.mart.orders_$tag " +
+              s"WHERE o_orderkey IN (${keys.mkString(",")})")
+          }
+        }
         val snap = TxTable.currentSnapshot(
           s, s"target/tmp/graft_wh_dvt/mart/orders_$tag").get
         require(snap.dvs.size >= 32,
           s"x_mor_dv_trickle_read: expected >=32 DV files, got ${snap.dvs.size}")
         require(snap.dvs.forall(_.keys.nonEmpty),
           "x_mor_dv_trickle_read: trickle DV entries must carry key lists")
-        dvTrickleBuilt += dir
       }
       s.sql(
         s"""SELECT COUNT(*) AS n,
            |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
            |FROM zdt.mart.orders_$tag""".stripMargin)
     })
+
+  // Build-once memos, one per (entry, dir) in this JVM. The catalog
+  // instance (and so its warehouse path) is CACHED by Spark's
+  // CatalogManager on first use — a dir-keyed WAREHOUSE conf would
+  // silently keep writing into the first warehouse — so dirs coexist
+  // as dir-SUFFIXED table names in the one cached warehouse, and the
+  // build marker is process memory. The first touch of a (pass, dir)
+  // cell pays the build (main's prep loop pays it untimed for the
+  // prep-bearing entries); later passes don't, so the min-over-passes
+  // numbers are build-free.
+  private val built = scala.collection.mutable.Map.empty[(String, String), Any]
+
+  private def once[T](key: (String, String))(build: => T): T =
+    built.synchronized(built.getOrElseUpdate(key, build).asInstanceOf[T])
+
+  /** Register GraftCatalog `name` over `warehouse`, with its `mart`
+    * namespace.
+    */
+  private def catalog(s: SparkSession, name: String, warehouse: String): Unit = {
+    s.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $name.mart")
+  }
 
   /** Build-once (per dir) skewed co-bucketed pair: fact = orders with
     * every even custkey collapsed onto key 7 (≈half the rows land in
@@ -767,23 +747,11 @@ object ScaleRehearsal {
     * modes — `partial` adds partiallyClusteredDistribution, the
     * straggler mitigation GraftKeyedScan's per-file splits enable.
     */
-  // built-once per (JVM, dir). NOTE the catalog instance (and so its
-  // warehouse path) is CACHED by Spark's CatalogManager on first use —
-  // a dir-keyed WAREHOUSE conf would silently keep writing into the
-  // first warehouse — so dirs coexist as dir-SUFFIXED table names in
-  // the one cached warehouse, and the build marker is process memory.
-  // First touch of a (pass, dir) cell pays the build; the second pass
-  // doesn't, so the min-over-passes numbers are build-free for BOTH
-  // the full and partial variants.
-  private val skewBuilt = scala.collection.mutable.Set.empty[String]
-
   private def skewSpj(partial: Boolean)(
       s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.xk", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.xk.warehouse", "target/tmp/graft_wh_skew")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS xk.mart")
+    catalog(s, "xk", "target/tmp/graft_wh_skew")
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    if (!skewBuilt.contains(dir)) {
+    once(("x_skew_spj", dir)) {
       s.sql(s"DROP TABLE IF EXISTS xk.mart.fact_$tag")
       s.sql(s"DROP TABLE IF EXISTS xk.mart.dim_$tag")
       graft.Tables.orders(s, dir).createOrReplaceTempView("x_skew_src")
@@ -800,19 +768,15 @@ object ScaleRehearsal {
       s.sql(
         s"""CREATE TABLE xk.mart.dim_$tag PARTITIONED BY (bucket(8, c_custkey))
            |AS SELECT c_custkey, c_mktsegment FROM x_skew_cust""".stripMargin)
-      skewBuilt += dir
     }
-    val keys = Seq(
+    withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled" ->
         partial.toString,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") {
       val out = s.sql(
         s"""SELECT d.c_mktsegment, COUNT(*) AS n,
            |  CAST(SUM(CAST(round(f.v * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -834,11 +798,38 @@ object ScaleRehearsal {
       val rows = out.collect().toSeq
       s.createDataFrame(
         s.sparkContext.parallelize(rows, 1), out.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
+
+  /** Build-once (per JVM, dir) DV-heavy table: bucket(8) orders with
+    * ~80% of rows position-deleted through the mor path. Shared by
+    * x_mor_dv_heavy (SELECT read-back — the anti-join path) and
+    * x_mor_dv_heavy_dml (delta-scan read-back — the PosBitmap path).
+    * Returns the dir tag.
+    */
+  private def ensureDvHeavy(s: SparkSession, dir: String): String = {
+    import graft.sources.TxTable
+    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    catalog(s, "zdv", "target/tmp/graft_wh_dvh")
+    once(("x_mor_dv_heavy", dir)) {
+      s.sql(s"DROP TABLE IF EXISTS zdv.mart.orders_$tag")
+      graft.Tables.orders(s, dir).createOrReplaceTempView("zdv_src")
+      s.sql(
+        s"""CREATE TABLE zdv.mart.orders_$tag
+           |PARTITIONED BY (bucket(8, o_orderkey))
+           |AS SELECT * FROM zdv_src""".stripMargin)
+      withConf(s, ModeKey -> "mor")(
+        s.sql(s"DELETE FROM zdv.mart.orders_$tag WHERE o_orderkey % 5 <> 0"))
+      val snap = TxTable.currentSnapshot(
+        s, s"target/tmp/graft_wh_dvh/mart/orders_$tag").get
+      require(snap.dvs.map(_.rows).sum * 5 >=
+        graft.Tables.orders(s, dir).count() * 4 - 5,
+        "x_mor_dv_heavy: expected ~80% of rows as position deletes")
+    }
+    tag
+  }
+
+  private var trickleRun = 0
 
   /** SQL merge-on-read trickle pair: a CONSTANT ~64-key CDC batch
     * merged (mode=mor) into a bucket(256, o_orderkey) orders table —
@@ -853,57 +844,11 @@ object ScaleRehearsal {
     * frame is a 1-row literal — the merge cost is the measurement,
     * not a table re-read.
     */
-  private val dvHeavyBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Build-once (per JVM, dir) DV-heavy table: bucket(8) orders with
-    * ~80% of rows position-deleted through the mor path. Shared by
-    * x_mor_dv_heavy (SELECT read-back — the anti-join path) and
-    * x_mor_dv_heavy_dml (delta-scan read-back — the PosBitmap path).
-    * Returns the dir tag.
-    */
-  private def ensureDvHeavy(s: SparkSession, dir: String): String = {
-    import graft.sources.TxTable
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set("spark.sql.catalog.zdv", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.zdv.warehouse", "target/tmp/graft_wh_dvh")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS zdv.mart")
-    if (!dvHeavyBuilt.contains(dir)) {
-      s.sql(s"DROP TABLE IF EXISTS zdv.mart.orders_$tag")
-      graft.Tables.orders(s, dir).createOrReplaceTempView("zdv_src")
-      s.sql(
-        s"""CREATE TABLE zdv.mart.orders_$tag
-           |PARTITIONED BY (bucket(8, o_orderkey))
-           |AS SELECT * FROM zdv_src""".stripMargin)
-      s.conf.set(graft.sources.DeltaDml.ModeKey, "mor")
-      try s.sql(s"DELETE FROM zdv.mart.orders_$tag WHERE o_orderkey % 5 <> 0")
-      finally s.conf.unset(graft.sources.DeltaDml.ModeKey)
-      val snap = TxTable.currentSnapshot(
-        s, s"target/tmp/graft_wh_dvh/mart/orders_$tag").get
-      require(snap.dvs.map(_.rows).sum * 5 >=
-        graft.Tables.orders(s, dir).count() * 4 - 5,
-        "x_mor_dv_heavy: expected ~80% of rows as position deletes")
-      dvHeavyBuilt += dir
-    }
-    tag
-  }
-  private val dvTrickleBuilt = scala.collection.mutable.Set.empty[String]
-  private val dvWideBuilt = scala.collection.mutable.Set.empty[String]
-  private val ivfIdxBuilt = scala.collection.mutable.Set.empty[String]
-  private val ivfIdxCentroids =
-    scala.collection.mutable.Map.empty[String, Array[Array[Double]]]
-  private val pqIdxBuilt = scala.collection.mutable.Set.empty[String]
-  private val pqIdxModels = scala.collection.mutable.Map
-    .empty[String, (Array[Array[Double]], Array[Array[Array[Double]]])]
-  private val trickleKeys = scala.collection.mutable.Map.empty[String, Seq[Long]]
-  private var trickleRun = 0
-
-  private[graft] def morTrickle(pruned: Boolean)(
+  private def morTrickle(pruned: Boolean)(
       s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.zt", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.zt.warehouse", "target/tmp/graft_wh_trk")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS zt.mart")
+    catalog(s, "zt", "target/tmp/graft_wh_trk")
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    if (!trickleKeys.contains(dir)) {
+    val keys = once(("x_mor_trickle", dir)) {
       s.sql(s"DROP TABLE IF EXISTS zt.mart.orders_$tag")
       graft.Tables.orders(s, dir).createOrReplaceTempView("zt_src")
       s.sql(
@@ -913,14 +858,14 @@ object ScaleRehearsal {
       // the batch keys, collected ONCE per dir — the per-run source
       // is a literal VALUES relation, so neither variant pays a
       // table-sized source scan that would mask the pruning gap
-      trickleKeys(dir) = s.sql(
+      s.sql(
         """SELECT o_orderkey FROM zt_src
           |WHERE o_orderkey BETWEEN 1 AND 600000
           |  AND o_orderkey % 9391 = 1""".stripMargin)
         .collect().map(_.getLong(0)).toSeq
     }
     import s.implicits._
-    trickleKeys(dir).map(k => (k, 99.0)).toDF("k", "np")
+    keys.map(k => (k, 99.0)).toDF("k", "np")
       .createOrReplaceTempView("zt_trickle")
     trickleRun += 1
     val target = s"orders_${tag}_run$trickleRun"
@@ -928,24 +873,85 @@ object ScaleRehearsal {
     // does not — a previous invocation's clone may sit at this name
     s.sql(s"DROP TABLE IF EXISTS zt.mart.$target")
     s.sql(s"CALL zt.system.clone('mart.orders_$tag', 'mart.$target')")
-    val confs = Seq(
-      "spark.graft.dml.mode" -> "mor",
-      "spark.graft.dml.morRuntimeFiltering" -> pruned.toString)
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      s.sql(
-        s"""MERGE INTO zt.mart.$target t USING zt_trickle src
-           |ON t.o_orderkey = src.k
-           |WHEN MATCHED THEN UPDATE SET o_totalprice = src.np"""
-          .stripMargin)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-    import s.implicits._
+    withConf(s, ModeKey -> "mor",
+        "spark.graft.dml.morRuntimeFiltering" -> pruned.toString)(s.sql(
+      s"""MERGE INTO zt.mart.$target t USING zt_trickle src
+         |ON t.o_orderkey = src.k
+         |WHEN MATCHED THEN UPDATE SET o_totalprice = src.np"""
+        .stripMargin))
     Seq(1).toDF("ok")
   }
+
+  /** The streaming-DSIR feed columns of `dir`'s documents. */
+  private def dsirDocs(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.documents(s, dir).select(
+      col("doc_id"), col("text"), (col("lang") === "en").as("tgt"))
+
+  /** Slice `r` of `n` by doc id: the rows with doc_id mod n = r. */
+  private def byDocMod(df: DataFrame, n: Int)(r: Int): DataFrame =
+    df.filter(pmod(col("doc_id"), lit(n.toLong)) === r)
+
+  /** A streaming file feed under `srcDir`: slice r of `slices` as ONE
+    * parquet file in `f=r`, written once — a `_DONE` marker makes later
+    * runs reuse it. `pinMtimes` sets slice r's mod-time to a fixed
+    * base + r minutes, so the file->batch order is deterministic.
+    */
+  private def feed(s: SparkSession, srcDir: String, slices: Int,
+      pinMtimes: Boolean)(slice: Int => DataFrame): Unit = {
+    val done = new Path(s"$srcDir/_DONE")
+    val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(done)) {
+      (0 until slices).foreach { r =>
+        slice(r).coalesce(1).write.mode("overwrite").parquet(s"$srcDir/f=$r")
+        if (pinMtimes)
+          fs.listStatus(new Path(s"$srcDir/f=$r")).filter(_.isFile)
+            .foreach(f => fs.setTimes(f.getPath, 1600000000000L + r * 60000L, -1))
+      }
+      fs.create(done, true).close()
+    }
+  }
+
+  /** Corpus rows through batch b of a mod-`n` doc feed (the rows of
+    * slices 0..b) — the denominator of the slope gates.
+    */
+  private def rowsThrough(s: SparkSession, srcDir: String, n: Int): Long => Long = {
+    val sliceRows = s.read.option("recursiveFileLookup", "true")
+      .parquet(srcDir)
+      .groupBy(pmod(col("doc_id"), lit(n.toLong)).as("r")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    b => (0L to b).map(r => sliceRows.getOrElse(r, 0L)).sum
+  }
+
+  /** The RunMetrics cells of `m` whose key starts with `prefix`. */
+  private def cells(m: Map[String, Double], prefix: String): Map[String, Double] =
+    m.filter(_._1.startsWith(prefix))
+
+  /** Per-event census JSON: `"v<point>":{sec, rows, sec_per_mrow}`. */
+  private def eventsJson(events: Seq[(Long, Double, Long)]): String =
+    events.map { case (v, sec, rows) =>
+      f""""v$v":{"sec":$sec%.3f,"rows":$rows,""" +
+        f""""sec_per_mrow":${sec / rows * 1e6}%.2f}"""
+    }.mkString(",")
+
+  /** Slope gate over (point, sec, corpus rows at the point) events: an
+    * O(corpus) step amortized by cadence must keep its NORMALIZED cost
+    * (sec per corpus row) flat-or-falling in drain position — its
+    * constant term amortizes into a growing denominator, so the FIRST
+    * event bounds the rest; growth past 1.5x of the first says the step
+    * turned superlinear in the corpus (the r14 debt-accretion class).
+    */
+  private def slopeGate(what: String, events: Seq[(Long, Double, Long)]): Unit = {
+    val norm = events.sortBy(_._1)
+      .map { case (v, sec, rows) => (v, sec / math.max(rows, 1L)) }
+    norm.drop(1).foreach { case (v, nv) =>
+      require(nv <= norm.head._2 * 1.5,
+        f"$what slope gate: v$v at ${nv * 1e6}%.2f s/Mrow " +
+          f"vs first event ${norm.head._2 * 1e6}%.2f s/Mrow (> 1.5x)")
+    }
+  }
+
+  private val sec3: Double => String = v => f"$v%.3f"
+  private val whole: Double => String = v => s"${v.round}"
 
   /** A per-batch metric map as a JSON object ordered by the id that
     * ends each key (`…_b<id>`, `…_v<id>`), keys without `stripPrefix`.
@@ -1139,9 +1145,10 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     // Optional args = rehearsal-entry subset: identical protocol over
     // just those entries, for targeted attribution runs (e.g. one
-    // 100×-tier query under two heap sizes). No args → full families,
-    // artifact written to SCALE_r11.json; subset runs print the JSON
-    // but do NOT overwrite the round artifact.
+    // 100×-tier query under two heap sizes). No args → full families
+    // and the artifact file; subset runs print the JSON but never
+    // overwrite the artifact, and skip the manifest_wide and census
+    // sections.
     val subset: Option[Set[String]] =
       if (args.isEmpty) None else Some(args.toSet)
     subset.foreach { s =>
@@ -1162,15 +1169,11 @@ object ScaleRehearsal {
       scaleUp(spark, sf01, sf1)
     if (picked(Family100).nonEmpty) scaleUp100(spark, sf01, sf10)
 
-    // JVM/codegen warm-up on the small dir, like Bench
+    // JVM/codegen warm-up on the small sf0.001 dir beside sf0.1, like
+    // Bench
+    val warmDir = s"${new java.io.File(sf01).getParent}/sf0.001"
     (picked(Family) ++ picked(Family100)).distinct.foreach { name =>
-      CacheScope.scoped(spark) {
-        try graft.tools.Exec.materialize(
-          queryOf(name)(spark, "/root/testdata/sf0.001"))
-        catch { case e: Throwable =>
-          System.err.println(s"[rehearsal] warm pass $name failed: $e") }
-      }
-    }
+      Exec.warm(spark, name, warmDir)(queryOf(name)) }
     // trigger the prep-bearing entries' one-time builds (stored
     // labeling + delta edges, DV-heavy tables, trickle DML histories)
     // UNTIMED for every dir they will be timed at, so all timed
@@ -1187,12 +1190,7 @@ object ScaleRehearsal {
       prepBearing.filter(picked(Family100).contains).flatMap(n =>
         Seq((n, sf01), (n, sf10)))
     prepRuns.distinct.foreach { case (name, dir) =>
-      CacheScope.scoped(spark) {
-        try graft.tools.Exec.materialize(queryOf(name)(spark, dir))
-        catch { case e: Throwable =>
-          System.err.println(s"[rehearsal] prep $name at $dir failed: $e") }
-      }
-    }
+      Exec.warm(spark, name, dir)(queryOf(name)) }
 
     // pass-interleaved so a steal burst can't poison all passes of
     // the same (query, dir) cell. Every pass's time is KEPT: the
@@ -1209,34 +1207,27 @@ object ScaleRehearsal {
     // artifact row, not a comment
     val cellRows = scala.collection.mutable.Map.empty[(String, String), Long]
     val cellRowKeys = Map("x_doremi_wide" -> "doremi_model_rows")
+    // the Family cells never reset the registry: the dv_bitmap section
+    // and x_mor_dv_wide's probe delta read what earlier cells recorded
     def run(pass: Int, tag: String, dir: String, name: String): Unit = {
-      cellRowKeys.get(name).foreach(k => graft.tools.RunMetrics.put(k, 0.0))
-      val (n, dt) = CacheScope.scoped(spark) {
-        val t0 = System.nanoTime()
-        // full-materialization action (VERDICT r15 item 1; see Exec)
-        val n = graft.tools.Exec.materialize(queryOf(name)(spark, dir))
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
+      cellRowKeys.get(name).foreach(k => RunMetrics.put(k, 0.0))
+      val (n, dt) = Exec.timed(spark)(queryOf(name)(spark, dir))
       val k = (name, tag)
       times(k) = dt :: times.getOrElse(k, Nil)
       cellRowKeys.get(name).foreach { key =>
-        cellRows(k) = graft.tools.RunMetrics.snapshot
-          .getOrElse(key, 0.0).round }
+        cellRows(k) = RunMetrics.snapshot.getOrElse(key, 0.0).round }
       println(f"pass $pass $tag $name%-20s ${dt}%8.2fs rows=$n")
     }
     // one streaming drain of `srcDir`, one file per micro-batch:
     // `query` builds the stream from the source and a per-run tag for
     // its state dirs; the clock covers the drain only
     def timedDrain(srcDir: String)(
-        query: (DataFrame, Long) => DataFrame): (Long, Double) =
-      CacheScope.scoped(spark) {
-        RunMetrics.flushAndReset(spark)
-        val run = System.nanoTime()
-        val src = graft.streaming.Streams.fileFeed(spark, srcDir)
-        val t0 = System.nanoTime()
-        val n = Exec.materialize(query(src, run))
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
+        query: (DataFrame, Long) => DataFrame): (Long, Double) = {
+      RunMetrics.flushAndReset(spark)
+      val run = System.nanoTime()
+      val src = graft.streaming.Streams.fileFeed(spark, srcDir)
+      Exec.timed(spark)(query(src, run))
+    }
     // serving-path read pricing (VERDICT r15 item 7): between
     // compactions every consumer of a table-mode labeling pays the
     // sidecar overlay (window + anti-join + union against the table) —
@@ -1264,34 +1255,27 @@ object ScaleRehearsal {
 
     // min (steal-resistant headline, same protocol as Bench) plus
     // median/max so the recorded ratio carries its own error bars
-    def stats(name: String, tag: String): (Double, Double, Double) = {
-      val s = times((name, tag)).sorted
-      (s.head, s(s.size / 2), s.last)
+    def entry(name: String, hi: String, rowTags: String*): String = {
+      def cellJson(tag: String): String = {
+        val s = Exec.Spread.of(times((name, tag)))
+        f""""${tag}_sec":${s.min}%.3f,"${tag}_med":${s.med}%.3f,"${tag}_max":${s.max}%.3f"""
+      }
+      val a = Exec.Spread.of(times((name, "sf0.1")))
+      val b = Exec.Spread.of(times((name, hi)))
+      s""""$name":{${cellJson("sf0.1")},${cellJson(hi)},""" +
+        f""""ratio":${b.min / a.min}%.2f,"ratio_med":${b.med / a.med}%.2f""" +
+        rowTags.flatMap(t => cellRows.get((name, t))
+          .map(r => s""","${t}_model_rows":$r""")).mkString + "}"
     }
-    def cellJson(tag: String, s: (Double, Double, Double)): String =
-      f""""${tag}_sec":${s._1}%.3f,"${tag}_med":${s._2}%.3f,"${tag}_max":${s._3}%.3f"""
-    def rowsJson(name: String, tags: String*): String =
-      tags.flatMap(t => cellRows.get((name, t))
-        .map(r => s""","${t}_model_rows":$r""")).mkString
-    val entries = picked(Family).map { name =>
-      val a = stats(name, "sf0.1"); val b = stats(name, "sf1")
-      s""""$name":{${cellJson("sf0.1", a)},${cellJson("sf1", b)},""" +
-        f""""ratio":${b._1 / a._1}%.2f,"ratio_med":${b._2 / a._2}%.2f""" +
-        s"""${rowsJson(name, "sf0.1", "sf1")}}"""
-    }
-    val entries100 = picked(Family100).map { name =>
-      val a = stats(name, "sf0.1"); val b = stats(name, "sf10")
-      s""""$name":{${cellJson("sf0.1", a)},${cellJson("sf10", b)},""" +
-        f""""ratio":${b._1 / a._1}%.2f,"ratio_med":${b._2 / a._2}%.2f""" +
-        s"""${rowsJson(name, "sf10")}}"""
-    }
+    val entries = picked(Family).map(entry(_, "sf1", "sf0.1", "sf1"))
+    val entries100 = picked(Family100).map(entry(_, "sf10", "sf10"))
     // per-file DV memory evidence (VERDICT r12 item 2): the delta
     // reader records, for the heaviest file it decoded, the position
     // count and the PosBitmap's retained bytes — x_mor_dv_heavy's ~80%
     // delete at the sf1 tier is exactly the shape that cost 8 B per
     // position as a raw Array[Long]. Snapshot BEFORE the drain section
     // resets the registry.
-    val dvStats = graft.tools.RunMetrics.snapshot
+    val dvStats = RunMetrics.snapshot
       .filter(_._1.startsWith("dv_file_"))
     val dvSection =
       if (dvStats.isEmpty) ""
@@ -1301,6 +1285,61 @@ object ScaleRehearsal {
         s""","dv_bitmap":{"file_positions_max":$pos,""" +
           s""""file_bitmap_bytes_max":$bytes,"raw_longs_bytes":${pos * 8}}"""
       }
+
+    // one clusterStream drain of `srcDir` per pass, 2 passes: per-batch
+    // fold/compaction/read seconds merge by MIN, write bytes are
+    // pass-invariant (same data, same delta), and `sec` is the min
+    // drain wall without the diagnostic label reads
+    final case class CcDrain(
+        sec: Double, dirsMax: Double,
+        folds: scala.collection.Map[String, Double],
+        compacts: scala.collection.Map[String, Double],
+        bytes: scala.collection.Map[String, Double],
+        reads: scala.collection.Map[String, Double]) {
+      def readsJson: String =
+        if (reads.isEmpty) ""
+        else s""","reads":${mapJson(reads, "stream_cc_", sec3)}"""
+    }
+    def ccDrain(srcDir: String, label: String, stateTag: String,
+        mode: String, asTable: Boolean): CcDrain = {
+      val folds = scala.collection.mutable.Map.empty[String, Double]
+      val compacts = scala.collection.mutable.Map.empty[String, Double]
+      val bytes = scala.collection.mutable.Map.empty[String, Double]
+      val reads = scala.collection.mutable.Map.empty[String, Double]
+      var dirsMax = 0.0
+      var secMin = Double.MaxValue
+      for (pass <- 1 to 2) {
+        val (n, dt) = timedDrain(srcDir) { (src, run) =>
+          val state = s"target/tmp/x_${stateTag}_state_$run"
+          graft.streaming.Streams.clusterStream(
+            src, "doc_id", "text", state,
+            s"target/tmp/x_${stateTag}_ckpt_$run",
+            n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
+            compactEvery = 5, labelsAsTable = asTable,
+            afterBatch = b => if (asTable) timeLabelsRead(state, b))
+        }
+        val got = RunMetrics.snapshot
+        val passReads = cells(got, "stream_cc_read_")
+        // ADVICE r16: the labels-read pricing runs in table mode only,
+        // so the raw wall would include ~40 diagnostic logicalLabels
+        // reads the rewrite-mode wall does not — subtract this pass's
+        // read seconds so the headline compares the same work across
+        // modes (the reads themselves stay recorded per batch)
+        secMin = math.min(secMin, dt - passReads.values.sum)
+        Exec.minMerge(folds, cells(got, "stream_cc_fold_"))
+        Exec.minMerge(compacts, cells(got, "stream_cc_compact_"))
+        Exec.minMerge(reads, passReads)
+        bytes ++= cells(got, "stream_cc_bytes_")
+        dirsMax = cells(got, "stream_cc_dirs_").values.foldLeft(dirsMax)(math.max)
+        println(f"pass $pass $label[$mode] ${dt}%8.2fs rows=$n")
+      }
+      CcDrain(secMin, dirsMax, folds, compacts, bytes, reads)
+    }
+
+    // (gate name, (point, sec, corpus rows at the point) events) per
+    // O(corpus) drain step, slope-gated after the artifact is written
+    val slopeCensus =
+      scala.collection.mutable.ArrayBuffer.empty[(String, Seq[(Long, Double, Long)])]
 
     // 40-batch streaming-cluster drain (VERDICT r12 item 1; extended
     // to 40 batches and per-fold WRITE BYTES by VERDICT r13 item 2):
@@ -1315,105 +1354,32 @@ object ScaleRehearsal {
     // reason to exist. One tier (sf0.1): the cross-TIER ratio is
     // q_stream_cc's claim; this entry's axis is drain length.
     // 2 passes, min per fold.
-    // (mode, compaction point, sec, corpus rows at the point) per
-    // compaction event — gated after the artifact is written
-    // (VERDICT r16 item 4)
-    val compactCensus =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double, Long)]
     val drainSection =
       if (!subset.forall(_("x_stream_cc_drain40"))) ""
       else {
         val srcDir = "target/tmp/x_stream_cc_drain40_src"
-        val done = new org.apache.hadoop.fs.Path(s"$srcDir/_DONE")
-        val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(done)) {
-          val docs = graft.Tables.documents(spark, sf01)
-            .select(col("doc_id"), col("text"))
-          (0 until 40).foreach { r =>
-            docs.filter(pmod(col("doc_id"), lit(40L)) === r).coalesce(1)
-              .write.mode("overwrite").parquet(s"$srcDir/f=$r")
-          }
-          fs.create(done, true).close()
-        }
-        // per-slice row counts of the feed (one cheap pass): corpus
-        // rows at compaction point v<b> = rows of batches 0..b — the
-        // denominator of the compaction slope gate (VERDICT r16
-        // item 4)
-        val sliceRows = spark.read.option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .groupBy(pmod(col("doc_id"), lit(40L)).as("r")).count()
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        def rowsAt(b: Long): Long =
-          (0L to b).map(r => sliceRows.getOrElse(r, 0L)).sum
+        feed(spark, srcDir, 40, pinMtimes = false)(byDocMod(
+          graft.Tables.documents(spark, sf01).select(col("doc_id"), col("text")), 40))
+        val rowsAt = rowsThrough(spark, srcDir, 40)
         def drain(mode: String, asTable: Boolean): String = {
-          val folds = scala.collection.mutable.Map.empty[String, Double]
-          val compacts = scala.collection.mutable.Map.empty[String, Double]
-          val bytes = scala.collection.mutable.Map.empty[String, Double]
-          val reads = scala.collection.mutable.Map.empty[String, Double]
-          var dirsMax = 0.0
-          var totalMin = Double.MaxValue
-          for (pass <- 1 to 2) {
-            val (n, dt) = timedDrain(srcDir) { (src, run) =>
-              val state = s"target/tmp/x_drain40_state_$run"
-              graft.streaming.Streams.clusterStream(
-                src, "doc_id", "text", state,
-                s"target/tmp/x_drain40_ckpt_$run",
-                n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
-                compactEvery = 5, labelsAsTable = asTable,
-                afterBatch = b => if (asTable) timeLabelsRead(state, b))
-            }
-            val got = graft.tools.RunMetrics.snapshot
-            // ADVICE r16: the labels-read pricing runs in
-            // table mode only, so the raw wall would include ~40
-            // diagnostic logicalLabels reads the rewrite-mode wall
-            // does not — subtract this pass's read seconds so the
-            // headline sf0.1_sec compares the same work across modes
-            // (the reads themselves stay recorded per batch below)
-            val passReads = got.collect {
-              case (k, v) if k.startsWith("stream_cc_read_") => v }.sum
-            totalMin = math.min(totalMin, dt - passReads)
-            got.foreach {
-              case (k, v) if k.startsWith("stream_cc_fold_") =>
-                folds(k) = folds.get(k).fold(v)(math.min(_, v))
-              case (k, v) if k.startsWith("stream_cc_compact_") =>
-                compacts(k) = compacts.get(k).fold(v)(math.min(_, v))
-              case (k, v) if k.startsWith("stream_cc_bytes_") =>
-                bytes(k) = v // pass-invariant (same data, same delta)
-              case (k, v) if k.startsWith("stream_cc_read_") =>
-                reads(k) = reads.get(k).fold(v)(math.min(_, v))
-              case (k, v) if k.startsWith("stream_cc_dirs_") =>
-                dirsMax = math.max(dirsMax, v)
-              case _ => ()
-            }
-            println(
-              f"pass $pass sf0.1 x_stream_cc_drain40[$mode]  ${dt}%8.2fs rows=$n")
-          }
-          val readsJson =
-            if (reads.isEmpty) ""
-            else s""","reads":${mapJson(reads, "stream_cc_", v => f"$v%.3f")}"""
+          val d = ccDrain(srcDir, "sf0.1 x_stream_cc_drain40", "drain40", mode, asTable)
           // per-compaction-event census: seconds vs corpus rows at the
           // point, normalized cost gated flat after the artifact is
           // written (VERDICT r16 item 4)
-          val events = compacts.toSeq
-            .map { case (k, sec) =>
-              val v = k.stripPrefix("stream_cc_compact_v").toLong
-              (v, sec, rowsAt(v)) }
-            .sortBy(_._1)
-          events.foreach { case (v, sec, rows) =>
-            compactCensus += ((mode, v, sec, rows)) }
+          val events = d.compacts.toSeq.map { case (k, sec) =>
+            val v = k.stripPrefix("stream_cc_compact_v").toLong
+            (v, sec, rowsAt(v))
+          }.sortBy(_._1)
+          slopeCensus += ((s"compaction[$mode]", events))
           val compCensusJson =
             if (events.isEmpty) ""
-            else s""","compaction_census":{""" + events.map {
-              case (v, sec, rows) =>
-                f""""v$v":{"sec":$sec%.3f,"rows":$rows,""" +
-                  f""""sec_per_mrow":${sec / rows * 1e6}%.2f}"""
-            }.mkString(",") + "}"
-          f""""$mode":{"sf0.1_sec":$totalMin%.3f,""" +
-            f""""dirs_opened_max":${dirsMax.round},""" +
-            s""""folds":${mapJson(folds, "stream_cc_", v => f"$v%.3f")},""" +
-            s""""bytes":${mapJson(bytes, "stream_cc_", v => s"${v.round}")},""" +
-            s""""compactions":${mapJson(compacts, "stream_cc_", v => f"$v%.3f")}""" +
-            s"""$compCensusJson$readsJson}"""
+            else s""","compaction_census":{${eventsJson(events)}}"""
+          f""""$mode":{"sf0.1_sec":${d.sec}%.3f,""" +
+            f""""dirs_opened_max":${d.dirsMax.round},""" +
+            s""""folds":${mapJson(d.folds, "stream_cc_", sec3)},""" +
+            s""""bytes":${mapJson(d.bytes, "stream_cc_", whole)},""" +
+            s""""compactions":${mapJson(d.compacts, "stream_cc_", sec3)}""" +
+            s"""$compCensusJson${d.readsJson}}"""
         }
         // both labels persistences over the same 40-batch feed: the
         // default delta-MERGE table mode and the whole-labeling
@@ -1442,59 +1408,24 @@ object ScaleRehearsal {
       if (!subset.forall(_("x_stream_cc_crossover"))) ""
       else {
         val srcDir = "target/tmp/x_stream_cc_cross24_src"
-        val done = new org.apache.hadoop.fs.Path(s"$srcDir/_DONE")
-        val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(done)) {
-          // ONE file: maxFilesPerTrigger=1 must deliver the whole 10×
-          // corpus as batch 0 (the fold repartitions internally, so a
-          // single-row-group scan costs nothing downstream)
-          graft.Tables.documents(spark, sf1)
-            .select(col("doc_id"), col("text")).coalesce(1)
-            .write.mode("overwrite").parquet(s"$srcDir/f=0")
-          // trickles: sf0.1 slices with ids displaced past every sf1 id
-          // (the feed contract: ids unique across batches); text reuses
-          // the corpus' distribution so trickle folds do real cluster
-          // work
-          val trickle = graft.Tables.documents(spark, sf01)
-            .select((col("doc_id") + lit(100000000L)).as("doc_id"),
-              col("text"))
-          (1 to 24).foreach { r =>
-            trickle.filter(pmod(col("doc_id"), lit(25L)) === r).coalesce(1)
-              .write.mode("overwrite").parquet(s"$srcDir/f=$r")
-          }
-          fs.create(done, true).close()
+        // trickles: sf0.1 slices with ids displaced past every sf1 id
+        // (the feed contract: ids unique across batches); text reuses
+        // the corpus' distribution so trickle folds do real cluster
+        // work
+        lazy val trickle = graft.Tables.documents(spark, sf01)
+          .select((col("doc_id") + lit(100000000L)).as("doc_id"), col("text"))
+        // slice 0 is ONE file: maxFilesPerTrigger=1 must deliver the
+        // whole 10× corpus as batch 0 (the fold repartitions
+        // internally, so a single-row-group scan costs nothing
+        // downstream)
+        feed(spark, srcDir, 25, pinMtimes = false) { r =>
+          if (r == 0) graft.Tables.documents(spark, sf1).select(col("doc_id"), col("text"))
+          else byDocMod(trickle, 25)(r)
         }
         def drain(mode: String, asTable: Boolean): String = {
-          val folds = scala.collection.mutable.Map.empty[String, Double]
-          val bytes = scala.collection.mutable.Map.empty[String, Double]
-          val reads = scala.collection.mutable.Map.empty[String, Double]
-          for (pass <- 1 to 2) {
-            val (n, dt) = timedDrain(srcDir) { (src, run) =>
-              val state = s"target/tmp/x_cross_state_$run"
-              graft.streaming.Streams.clusterStream(
-                src, "doc_id", "text", state,
-                s"target/tmp/x_cross_ckpt_$run",
-                n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
-                compactEvery = 5, labelsAsTable = asTable,
-                afterBatch = b => if (asTable) timeLabelsRead(state, b))
-            }
-            graft.tools.RunMetrics.snapshot.foreach {
-              case (k, v) if k.startsWith("stream_cc_fold_") =>
-                folds(k) = folds.get(k).fold(v)(math.min(_, v))
-              case (k, v) if k.startsWith("stream_cc_bytes_") =>
-                bytes(k) = v
-              case (k, v) if k.startsWith("stream_cc_read_") =>
-                reads(k) = reads.get(k).fold(v)(math.min(_, v))
-              case _ => ()
-            }
-            println(f"pass $pass 10xcorpus x_stream_cc_crossover[$mode] " +
-              f"${dt}%8.2fs rows=$n")
-          }
-          val readsJson =
-            if (reads.isEmpty) ""
-            else s""","reads":${mapJson(reads, "stream_cc_", v => f"$v%.3f")}"""
-          s""""$mode":{"folds":${mapJson(folds, "stream_cc_", v => f"$v%.3f")},""" +
-            s""""bytes":${mapJson(bytes, "stream_cc_", v => s"${v.round}")}$readsJson}"""
+          val d = ccDrain(srcDir, "10xcorpus x_stream_cc_crossover", "cross", mode, asTable)
+          s""""$mode":{"folds":${mapJson(d.folds, "stream_cc_", sec3)},""" +
+            s""""bytes":${mapJson(d.bytes, "stream_cc_", whole)}${d.readsJson}}"""
         }
         s""","stream_cc_crossover":{${drain("labels_table", asTable = true)},""" +
           s"""${drain("rewrite", asTable = false)}}"""
@@ -1507,16 +1438,15 @@ object ScaleRehearsal {
     // is measured, not extrapolated. Gated after the artifact is
     // written: (a) non-refresh fold seconds flat in batch index
     // (scoring is O(batch) against a frozen broadcast-size model);
-    // (b) refresh sec per corpus row at the point flat-or-falling
-    // (the refresh READS O(corpus) — amortized by cadence — and its
-    // constant term amortizes into the growing denominator, the
-    // compaction_census argument); (c) refresh WRITE bytes ~
-    // model+manifest-sized, strictly sublinear vs the corpus at the
-    // point (VERDICT r17 item 1's done criterion: consolidation is by
-    // manifest reference, so nothing ever rewrites corpus bytes).
-    // 2 passes, min per fold; bytes/files are pass-invariant.
-    val dsirRefreshCensus =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
+    // (b) refresh sec per corpus row flat-or-falling (the refresh
+    // READS O(corpus) — amortized by cadence — and its constant term
+    // amortizes into the growing denominator, the compaction_census
+    // argument); (c) refresh WRITE bytes ~ model+manifest-sized,
+    // strictly sublinear vs the corpus at the point (VERDICT r17 item
+    // 1's done criterion: consolidation is by manifest reference, so
+    // nothing ever rewrites corpus bytes). 2 passes, min per fold;
+    // bytes/files are pass-invariant.
+    var dsirRefreshCensus = Seq.empty[(Long, Double, Long)]
     val dsirFoldMins = scala.collection.mutable.Map.empty[Long, Double]
     val dsirBytes = scala.collection.mutable.Map.empty[Long, Double]
     var dsirCorpusBytes = 0L
@@ -1524,29 +1454,10 @@ object ScaleRehearsal {
       if (!subset.forall(_("x_stream_dsir_drain40"))) ""
       else {
         val srcDir = "target/tmp/x_stream_dsir_drain40_src"
-        val done = new org.apache.hadoop.fs.Path(s"$srcDir/_DONE")
-        val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(done)) {
-          val docs = graft.Tables.documents(spark, sf01).select(
-            col("doc_id"), col("text"), (col("lang") === "en").as("tgt"))
-          (0 until 40).foreach { r =>
-            docs.filter(pmod(col("doc_id"), lit(40L)) === r).coalesce(1)
-              .write.mode("overwrite").parquet(s"$srcDir/f=$r")
-            // mod-time pinning: deterministic file->batch order (the
-            // frozen-model composition depends on it — ADVICE r17)
-            fs.listStatus(new org.apache.hadoop.fs.Path(s"$srcDir/f=$r"))
-              .filter(_.isFile)
-              .foreach(f =>
-                fs.setTimes(f.getPath, 1600000000000L + r * 60000L, -1))
-          }
-          fs.create(done, true).close()
-        }
-        val sliceRows = spark.read.option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .groupBy(pmod(col("doc_id"), lit(40L)).as("r")).count()
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        def rowsAt(b: Long): Long =
-          (0L to b).map(r => sliceRows.getOrElse(r, 0L)).sum
+        // mod-time pinning: deterministic file->batch order (the
+        // frozen-model composition depends on it — ADVICE r17)
+        feed(spark, srcDir, 40, pinMtimes = true)(byDocMod(dsirDocs(spark, sf01), 40))
+        val rowsAt = rowsThrough(spark, srcDir, 40)
         val folds = scala.collection.mutable.Map.empty[String, Double]
         val refreshes = scala.collection.mutable.Map.empty[String, Double]
         val bytes = scala.collection.mutable.Map.empty[String, Double]
@@ -1560,17 +1471,14 @@ object ScaleRehearsal {
               lastState, s"target/tmp/x_dsir40_ckpt_$run",
               refreshEvery = 5)
           }
-          graft.tools.RunMetrics.snapshot.foreach {
-            case (k, v) if k.startsWith("stream_dsir_fold_") =>
-              folds(k) = folds.get(k).fold(v)(math.min(_, v))
-            case (k, v) if k.startsWith("stream_dsir_refresh_bytes_") =>
-              bytes(k) = v // pass-invariant (same data, same manifest)
-            case (k, v) if k.startsWith("stream_dsir_refresh_") =>
-              refreshes(k) = refreshes.get(k).fold(v)(math.min(_, v))
-            case (k, v) if k.startsWith("stream_dsir_files_") =>
-              files(k) = v
-            case _ => ()
-          }
+          val got = RunMetrics.snapshot
+          Exec.minMerge(folds, cells(got, "stream_dsir_fold_"))
+          // refresh bytes are pass-invariant (same data, same manifest)
+          val (refreshBytes, refreshSecs) = cells(got, "stream_dsir_refresh_")
+            .partition(_._1.startsWith("stream_dsir_refresh_bytes_"))
+          bytes ++= refreshBytes
+          Exec.minMerge(refreshes, refreshSecs)
+          files ++= cells(got, "stream_dsir_files_")
           println(
             f"pass $pass sf0.1 x_stream_dsir_drain40  ${dt}%8.2fs rows=$n")
         }
@@ -1579,25 +1487,21 @@ object ScaleRehearsal {
         dsirCorpusBytes = graft.sources.TxTable
           .currentSnapshot(spark, s"$lastState/corpus_tbl").get
           .entries.map(_.size).sum
-        refreshes.foreach { case (k, sec) =>
+        dsirRefreshCensus = refreshes.toSeq.map { case (k, sec) =>
           val v = k.stripPrefix("stream_dsir_refresh_v").toLong
-          dsirRefreshCensus += ((v, sec, rowsAt(v)))
-        }
+          (v, sec, rowsAt(v))
+        }.sortBy(_._1)
+        slopeCensus += (("stream_dsir refresh", dsirRefreshCensus))
         folds.foreach { case (k, sec) =>
           dsirFoldMins(k.stripPrefix("stream_dsir_fold_b").toLong) = sec }
         bytes.foreach { case (k, v) =>
           dsirBytes(k.stripPrefix("stream_dsir_refresh_bytes_v").toLong) = v }
-        val refreshCensusJson = dsirRefreshCensus.sortBy(_._1).map {
-          case (v, sec, rows) =>
-            f""""v$v":{"sec":$sec%.3f,"rows":$rows,""" +
-              f""""sec_per_mrow":${sec / rows * 1e6}%.2f}"""
-        }.mkString(",")
         s""","stream_dsir_drain40":{""" +
-          s""""folds":${mapJson(folds, "stream_dsir_", v => f"$v%.3f")},""" +
-          s""""refreshes":${mapJson(refreshes, "stream_dsir_", v => f"$v%.3f")},""" +
-          s""""refresh_bytes":${mapJson(bytes, "stream_dsir_", v => s"${v.round}")},""" +
-          s""""table_files":${mapJson(files, "stream_dsir_", v => s"${v.round}")},""" +
-          s""""refresh_census":{$refreshCensusJson},""" +
+          s""""folds":${mapJson(folds, "stream_dsir_", sec3)},""" +
+          s""""refreshes":${mapJson(refreshes, "stream_dsir_", sec3)},""" +
+          s""""refresh_bytes":${mapJson(bytes, "stream_dsir_", whole)},""" +
+          s""""table_files":${mapJson(files, "stream_dsir_", whole)},""" +
+          s""""refresh_census":{${eventsJson(dsirRefreshCensus)}},""" +
           s""""corpus_bytes":$dsirCorpusBytes}"""
       }
 
@@ -1765,26 +1669,12 @@ object ScaleRehearsal {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("SCALE_r18.json"), json + "\n")
     println(json)
-    // compaction slope gate (VERDICT r16 item 4): each compaction
-    // event's MERGE is O(corpus at the point) by design and amortized
-    // by cadence; its NORMALIZED cost (sec per corpus row at the
-    // compaction point) must be flat-or-falling in drain position —
-    // the constant term amortizes into a growing denominator, so the
-    // FIRST event bounds the rest; growth past 1.5x of the first says
-    // the event itself turned superlinear in the corpus (the r14
-    // debt-accretion class). Checked after the artifact is on disk so
-    // a failure is loud without losing the evidence.
-    compactCensus.groupBy(_._1).foreach { case (mode, evs) =>
-      val norm = evs.sortBy(_._2)
-        .map { case (_, v, sec, rows) => (v, sec / rows) }
-      norm.drop(1).foreach { case (v, nv) =>
-        require(nv <= norm.head._2 * 1.5,
-          f"compaction slope gate[$mode]: v$v at ${nv * 1e6}%.2f s/Mrow " +
-            f"vs first event ${norm.head._2 * 1e6}%.2f s/Mrow (> 1.5x)")
-      }
-    }
-    // streaming-DSIR drain gates (VERDICT r17 items 1+3), checked
-    // after the artifact is on disk like every slope gate here
+    // slope gates (VERDICT r16 item 4, r17 item 3): the compaction
+    // events of each stream_cc_drain40 mode and the stream_dsir_drain40
+    // model refreshes. Checked after the artifact is on disk, like
+    // every gate here, so a failure is loud without losing the evidence.
+    slopeCensus.foreach { case (what, events) => slopeGate(what, events) }
+    // streaming-DSIR drain gates (VERDICT r17 items 1+3)
     if (dsirRefreshCensus.nonEmpty) {
       // (a) non-refresh fold flatness: scoring is O(batch) against a
       // frozen model, so late folds must cost what early folds cost
@@ -1796,23 +1686,14 @@ object ScaleRehearsal {
           f"stream_dsir fold gate: max non-refresh fold ${score.last}%.3f s " +
             f"vs median $med%.3f s (> 4x) — scoring cost grew with the drain")
       }
-      // (b) refresh sec per corpus row flat-or-falling (the O(corpus)
-      // READ amortizes its constant into a growing denominator)
-      val norm = dsirRefreshCensus.sortBy(_._1)
-        .map { case (v, sec, rows) => (v, sec / math.max(rows, 1L)) }
-      norm.drop(1).foreach { case (v, nv) =>
-        require(nv <= norm.head._2 * 1.5,
-          f"stream_dsir refresh slope gate: v$v at ${nv * 1e6}%.2f s/Mrow " +
-            f"vs first event ${norm.head._2 * 1e6}%.2f s/Mrow (> 1.5x)")
-      }
       // (c) refresh WRITES are model+manifest-sized: byte growth must
       // be strictly sublinear vs corpus growth across the drain, and
       // the last refresh must write a sliver of the standing corpus —
       // the measured form of "consolidate the manifest, not the bytes"
       val bySeq = dsirBytes.toSeq.sortBy(_._1)
       val (v0, b0) = bySeq.head; val (vN, bN) = bySeq.last
-      val rowGrowth = dsirRefreshCensus.sortBy(_._1).last._3.toDouble /
-        math.max(dsirRefreshCensus.sortBy(_._1).head._3, 1L)
+      val rowGrowth = dsirRefreshCensus.last._3.toDouble /
+        math.max(dsirRefreshCensus.head._3, 1L)
       require(bN / b0 <= 0.25 * rowGrowth,
         f"stream_dsir refresh bytes gate: v$vN wrote ${bN.round} B vs " +
           f"v$v0 ${b0.round} B (${bN / b0}%.1fx) — not sublinear against " +

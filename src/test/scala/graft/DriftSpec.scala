@@ -98,7 +98,7 @@ class DriftSpec extends SparkSpec {
 
   test("betweenVersions reads drift straight out of table history") {
     import graft.sources.TxTable
-    val root = s"/root/repo/target/tmp/drift_tt_${System.nanoTime()}"
+    val root = s"target/tmp/drift_tt_${System.nanoTime()}"
     val v0 = spark.range(5000).select(
       (col("id") % 2).cast("string").as("k"),
       (col("id") % 100).cast("double").as("v"))

@@ -53,4 +53,28 @@ class ExecSpec extends SparkSpec {
     val df = Seq(1, 2, 3, 4).toDF("x").filter($"x" > 1)
     assert(Exec.materialize(df) == 3L)
   }
+
+  test("Spread: min, middle and max of an odd pass count") {
+    assert(Exec.Spread.of(Seq(3.0, 1.0, 2.5)) == Exec.Spread(1.0, 2.5, 3.0))
+  }
+
+  test("Spread: an even pass count averages the two middle values") {
+    assert(Exec.Spread.of(Seq(4.0, 1.0)) == Exec.Spread(1.0, 2.5, 4.0))
+  }
+
+  test("minMerge keeps the per-key minimum and adds new keys") {
+    val into = scala.collection.mutable.Map("a" -> 2.0, "b" -> 1.0)
+    Exec.minMerge(into, Map("a" -> 1.5, "b" -> 3.0, "c" -> 7.0))
+    assert(into == scala.collection.mutable.Map(
+      "a" -> 1.5, "b" -> 1.0, "c" -> 7.0))
+  }
+
+  test("timed returns the rows and rethrows a failing body") {
+    import spark.implicits._
+    val (n, sec) = Exec.timed(spark)(Seq(1, 2, 3).toDF("x"))
+    assert(n == 3L && sec >= 0.0)
+    intercept[IllegalStateException] {
+      Exec.timed(spark)(throw new IllegalStateException("boom"))
+    }
+  }
 }

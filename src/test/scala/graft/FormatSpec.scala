@@ -13,7 +13,7 @@ class FormatSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(tag: String) =
-    s"/root/repo/target/tmp/fmt_${tag}_${System.nanoTime()}"
+    s"target/tmp/fmt_${tag}_${System.nanoTime()}"
 
   /** 80 rows in 8 range-disjoint files: partition i of
     * `spark.range(0, 80, 1, 8)` holds exactly k ∈ [10i, 10i+10), so

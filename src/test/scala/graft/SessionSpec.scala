@@ -27,4 +27,20 @@ class SessionSpec extends SparkSpec {
     assert(!CacheScope.trackedSnapshot.exists(_ eq df))
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
+
+  test("withConf restores a preset value and unsets an unset key on throw") {
+    val (preset, unset) = ("spark.graft.test.preset", "spark.graft.test.unset")
+    spark.conf.set(preset, "before")
+    try {
+      intercept[IllegalStateException] {
+        Session.withConf(spark, preset -> "inside", unset -> "inside") {
+          assert(spark.conf.get(preset) == "inside")
+          assert(spark.conf.get(unset) == "inside")
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(spark.conf.get(preset) == "before")
+      assert(spark.conf.getOption(unset).isEmpty)
+    } finally spark.conf.unset(preset)
+  }
 }

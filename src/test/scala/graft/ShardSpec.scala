@@ -10,7 +10,7 @@ class ShardSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(tag: String) =
-    s"/root/repo/target/tmp/shard_${tag}_${System.nanoTime()}"
+    s"target/tmp/shard_${tag}_${System.nanoTime()}"
 
   test("assignment is deterministic and layout-independent") {
     val base = spark.range(10000).select(col("id"))

@@ -10,7 +10,7 @@ class TxSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(tag: String) =
-    s"/root/repo/target/tmp/tx_${tag}_${System.nanoTime()}"
+    s"target/tmp/tx_${tag}_${System.nanoTime()}"
 
   private def seed = Seq(
     (1L, "A", 10.0), (2L, "A", 20.0), (3L, "B", 30.0),
@@ -433,7 +433,7 @@ class TxSpec extends SparkSpec {
     // root, not by substring-searching "data/" — a root like
     // .../data/mytable made the old code misalign every path and
     // delete the entire live table
-    val root = s"/root/repo/target/tmp/data/tx_vacregr_${System.nanoTime()}"
+    val root = s"target/tmp/data/tx_vacregr_${System.nanoTime()}"
     TxTable.create(seed, root, Some("p"))
     TxTable.append(Seq((6L, "C", 60.0)).toDF("k", "p", "v"), root, Some("p"))
     TxTable.vacuum(spark, root, keepFromVersion = 0L)

@@ -11,7 +11,7 @@ class ZorderSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(tag: String) =
-    s"/root/repo/target/tmp/zorder_${tag}_${System.nanoTime()}"
+    s"target/tmp/zorder_${tag}_${System.nanoTime()}"
 
   /** 4,096 rows over two independent uniform dims — the worst case
     * for single-key clustering (sorting on x leaves y uniform in
