@@ -9,12 +9,14 @@ oracle_sql.json in DuckDB (views over the same testdata parquet), sorts
 columns by name and rows by all columns, and compares values exactly.
 """
 import json, math, sys
+from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 import pyarrow.dataset as ds
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+OUT = sys.argv[2] if len(sys.argv) > 2 else str(
+    Path(__file__).resolve().parents[1] / "target/verify_out")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 con = duckdb.connect()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Session, Tables}
 import graft.functions.ExactAgg
-import graft.sources.{CsvIngest, FixedWidth, Jdbc, JsonIngest, TypeMatrix}
+import graft.sources.{CsvIngest, FixedWidth, GraftCatalog, Jdbc, JsonIngest, TypeMatrix}
 
 /** Source/sink surface exercised end-to-end (SURVEY §2.1): the
   * migration pipeline's interchange round-trip — export to the
@@ -46,9 +46,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_mc_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gk", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gk.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gk.mart")
+    GraftCatalog.register(s, "gk", wh)
     s.sql("DROP TABLE IF EXISTS gk.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_mc_src")
     s.sql(
@@ -103,9 +101,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_mor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gv", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gv.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gv.mart")
+    GraftCatalog.register(s, "gv", wh)
     s.sql("DROP TABLE IF EXISTS gv.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_mor_src")
     s.sql(
@@ -154,9 +150,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_moru_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gu", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gu.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gu.mart")
+    GraftCatalog.register(s, "gu", wh)
     s.sql("DROP TABLE IF EXISTS gu.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_moru_src")
     s.sql(
@@ -221,9 +215,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_morm_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gm", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gm.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gm.mart")
+    GraftCatalog.register(s, "gm", wh)
     s.sql("DROP TABLE IF EXISTS gm.mart.orders")
     val base = Tables.orders(s, dir)
     base.createOrReplaceTempView("graft_morm_src")
@@ -366,9 +358,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_rel_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gr", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gr.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gr.mart")
+    GraftCatalog.register(s, "gr", wh)
     s.sql("DROP TABLE IF EXISTS gr.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_rel_src")
     s.sql(
@@ -437,9 +427,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_def_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gd2", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gd2.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gd2.mart")
+    GraftCatalog.register(s, "gd2", wh)
     s.sql("DROP TABLE IF EXISTS gd2.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_def_src")
     s.sql(
@@ -515,9 +503,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_sqlmor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gq", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gq.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gq.mart")
+    GraftCatalog.register(s, "gq", wh)
     s.sql("DROP TABLE IF EXISTS gq.mart.orders")
     val base = Tables.orders(s, dir)
     base.createOrReplaceTempView("graft_sqlmor_src")
@@ -600,9 +586,7 @@ object SourceQueries {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_rl_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gr", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gr.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gr.mart")
+    GraftCatalog.register(s, "gr", wh)
     s.sql("DROP TABLE IF EXISTS gr.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_ord_src")
     s.sql(
@@ -646,9 +630,7 @@ object SourceQueries {
       |  FROM nation WHERE n_nationkey < 5
       |) ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_mg_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gm", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gm.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gm.mart")
+    GraftCatalog.register(s, "gm", wh)
     s.sql("DROP TABLE IF EXISTS gm.mart.nation")
     Tables.nation(s, dir).createOrReplaceTempView("graft_nat_src")
     s.sql(
@@ -699,9 +681,7 @@ object SourceQueries {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_bd_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gb", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gb.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gb.mart")
+    GraftCatalog.register(s, "gb", wh)
     s.sql("DROP TABLE IF EXISTS gb.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_bord_src")
     s.sql(
@@ -744,9 +724,7 @@ object SourceQueries {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_sa_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.ga", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.ga.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS ga.mart")
+    GraftCatalog.register(s, "ga", wh)
     s.sql("DROP TABLE IF EXISTS ga.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_ord_src")
     // INT64-micros timestamps: INT96 (the legacy default) has no
@@ -801,9 +779,7 @@ object SourceQueries {
       |GROUP BY a.o_orderpriority
       |ORDER BY a.o_orderpriority""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_sj_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gs", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gs.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gs.mart")
+    GraftCatalog.register(s, "gs", wh)
     s.sql("DROP TABLE IF EXISTS gs.mart.even")
     s.sql("DROP TABLE IF EXISTS gs.mart.odd")
     Tables.orders(s, dir).createOrReplaceTempView("graft_spj_src")
@@ -863,9 +839,7 @@ object SourceQueries {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_bk_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gb", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gb.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gb.mart")
+    GraftCatalog.register(s, "gb", wh)
     s.sql("DROP TABLE IF EXISTS gb.mart.customer")
     s.sql("DROP TABLE IF EXISTS gb.mart.orders")
     Tables.customer(s, dir).createOrReplaceTempView("graft_bk_cust")
@@ -932,9 +906,7 @@ object SourceQueries {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_pc_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gp", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gp.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gp.mart")
+    GraftCatalog.register(s, "gp", wh)
     s.sql("DROP TABLE IF EXISTS gp.mart.fact")
     s.sql("DROP TABLE IF EXISTS gp.mart.dim")
     Tables.orders(s, dir).createOrReplaceTempView("graft_pc_ord")
@@ -1006,9 +978,7 @@ object SourceQueries {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
     val wh = s"target/tmp/graft_wh_q_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    s.conf.set("spark.sql.catalog.gq", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.gq.warehouse", wh)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS gq.mart")
+    GraftCatalog.register(s, "gq", wh)
     s.sql("DROP TABLE IF EXISTS gq.mart.lineitem")
     Tables.lineitem(s, dir).createOrReplaceTempView("graft_li_src")
     s.sql("CREATE TABLE gq.mart.lineitem AS SELECT * FROM graft_li_src")

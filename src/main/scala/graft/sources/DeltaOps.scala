@@ -34,7 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * commits position-delete files masking old images plus fresh data
   * files carrying new images — write bytes ∝ CHANGED rows, data files
   * byte-identical, in ONE atomic commit
-  * ([[TxTable.commitDvUpdate]]). This is the scattered-key DML shape
+  * ([[TxTable.commitDvUpdate]]). The delete files come from
+  * [[DvWriter]], the one delete-file writer the programmatic
+  * [[MergeOnRead]] DML shares, so both paths record identical
+  * manifest entries. This is the scattered-key DML shape
   * at 100 TB: a DELETE touching 0.1% of rows across every bucket
   * writes 0.1% of the table, where copy-on-write would rewrite all
   * touched groups (reference: the CDC practice's trickle-apply shape,
@@ -468,9 +471,10 @@ private[sources] final class GraftDeltaReaderFactory(
 
 /** Write half: a delta batch write whose tasks route per-row
   * operations to two legs — position deletes (one DV parquet per task
-  * that saw a delete/update) and post-image/insert data files (the
-  * shared layout-placing [[GraftCowDataWriter]]) — committed together
-  * via [[TxTable.commitDvUpdate]].
+  * that saw a delete/update, written by [[DvWriter]]) and
+  * post-image/insert data files (the shared layout-placing
+  * [[GraftCowDataWriter]]) — committed together via
+  * [[TxTable.commitDvUpdate]].
   */
 private[sources] final class GraftDeltaWrite(
     spark: SparkSession, root: String, snap: TxTable.Snapshot,
@@ -484,7 +488,7 @@ private[sources] final class GraftDeltaWrite(
 }
 
 private[sources] final case class GraftDeltaCommitMessage(
-    data: Seq[GraftCowFile], dv: Option[TxTable.DvEntry])
+    data: Seq[TxTable.Entry], dv: Option[TxTable.DvEntry])
   extends WriterCommitMessage
 
 private[sources] final class GraftDeltaBatchWrite(
@@ -506,35 +510,18 @@ private[sources] final class GraftDeltaBatchWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: GraftDeltaCommitMessage => m }
-    val files = msgs.flatMap(_.data).toSeq
     val dvs = msgs.flatMap(_.dv).toSeq
-    if (files.isEmpty && dvs.isEmpty) return // no-match DML: no commit
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fresh = files.map { f =>
-      val stats = scala.util.Try(FileStats.encode(
-        FileStats.forFile(conf, new Path(s"$root/${f.relPath}"))))
-        .getOrElse("")
-      TxTable.Entry(f.relPath, f.partition, stats, f.size)
-    }
-    try TxTable.commitDvUpdate(spark, root, snap.version, dvs, fresh,
-      s"SQL $cmd (mor)")
-    catch {
-      case e: TxTable.ConcurrentCommitException =>
-        // delete positions are only valid against the snapshot the
-        // scan read — discard both legs; the statement must re-run
-        cleanup()
-        throw e
-    }
+    val fresh = TxTable.withFooterStats(spark, root, msgs.flatMap(_.data).toSeq)
+    if (fresh.isEmpty && dvs.isEmpty) return // no-match DML: no commit
+    // a lost race fails the statement: its positions are pinned to
+    // the scanned snapshot
+    MergeOnRead.commitOrDiscard(spark, root, dvs, fresh)(
+      TxTable.commitDvUpdate(spark, root, snap.version, dvs, fresh,
+        s"SQL $cmd (mor)"))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = cleanup()
-
-  private def cleanup(): Unit = {
-    val f = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    scala.util.Try(f.delete(new Path(s"$root/$relDir"), true))
-    scala.util.Try(f.delete(new Path(s"$root/$dvRel"), true))
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    MergeOnRead.discardDirs(spark, root, Seq(relDir, dvRel))
 }
 
 private[sources] final class GraftDeltaWriterFactory(
@@ -550,14 +537,89 @@ private[sources] final class GraftDeltaWriterFactory(
       s"$partitionId-$taskId", timeZoneId)
 }
 
+/** THE delete-file writer (executor-side): streams one task's
+  * `(file_key, pos)` rows into ONE position-delete parquet,
+  * `<dvRel>/part-<uid>.parquet` in [[MergeOnRead.DvSchema]], opened
+  * on the first row — write-through, no buffering, so a full-table
+  * delete stays O(1) memory per task — and returns its manifest
+  * entry. Every merge-on-read DML path writes its delete files here:
+  * the SQL delta writer ([[GraftDeltaRowWriter]]) and the programmatic
+  * [[MergeOnRead.deleteWhere]]/[[MergeOnRead.updateWhere]]/
+  * [[MergeOnRead.mergeInto]] (through `MergeOnRead.writeDv`). `uid`
+  * carries partitionId-taskId: retries write fresh names, losers are
+  * never referenced and vacuum reclaims them.
+  */
+private[sources] final class DvWriter(
+    conf: Configuration, root: String, dvRel: String, codecName: String,
+    uid: String) {
+
+  private var writer: ParquetWriter[InternalRow] = _
+  private var path: Path = _
+  private var rows = 0L
+  // distinct file keys this task's deletes touch, tracked up to
+  // DvKeyCap+1 — O(cap) memory, preserving the writer's O(1)-per-row
+  // contract. PAST the cap the manifest records a DvBloom instead of
+  // "unknown" (VERDICT r12 item 3): the bloom is O(16 KiB) insert-only
+  // state, so wide DMLs keep false-positive-only scoping at any width.
+  private val keys = mutable.HashSet.empty[String]
+  private val bloom = DvBloom.create()
+  private var lastKey: UTF8String = _
+  private val row = new GenericInternalRow(2)
+
+  /** Record one deleted row: `key` is the data file's
+    * [[MergeOnRead.fileKey]], `pos` the row's position in it.
+    */
+  def write(key: UTF8String, pos: Long): Unit = {
+    if (writer == null) {
+      val c = new Configuration(conf)
+      ParquetWriteSupport.setSchema(MergeOnRead.DvSchema, c)
+      path = new Path(s"$root/$dvRel/part-$uid.parquet")
+      writer = TaskParquet.open(path, c, codecName)
+    }
+    // key tracking once per RUN of same-file rows (delete rows arrive
+    // grouped by file, so runs are long); set/bloom adds are
+    // idempotent, interleaved files only cost extra adds
+    if (lastKey == null || !lastKey.equals(key)) {
+      lastKey = key.copy()
+      val ks = lastKey.toString
+      if (keys.size <= DeltaDml.DvKeyCap) keys += ks
+      DvBloom.add(bloom, ks)
+    }
+    // ParquetWriteSupport serializes immediately, so the reused row
+    // (and a reused input key) need no copy
+    row.update(0, key)
+    row.setLong(1, pos)
+    writer.write(row)
+    rows += 1
+  }
+
+  /** Close the file and return its manifest entry — the sorted key
+    * list up to [[DeltaDml.DvKeyCap]], a [[DvBloom]] past it — or None
+    * when no row was written (no file exists then).
+    */
+  def commit(): Option[TxTable.DvEntry] =
+    if (writer == null) None
+    else {
+      writer.close()
+      val wide = keys.size > DeltaDml.DvKeyCap
+      Some(TxTable.DvEntry(s"$dvRel/${path.getName}",
+        path.getFileSystem(conf).getFileStatus(path).getLen, rows,
+        keys = if (wide) Nil else keys.toSeq.sorted,
+        bloom = if (wide) Some(DvBloom.encode(bloom)) else None))
+    }
+
+  def abort(): Unit =
+    if (writer != null) {
+      scala.util.Try(writer.close())
+      scala.util.Try(path.getFileSystem(conf).delete(path, false))
+    }
+}
+
 /** Executor-side delta writer. Data rows (inserts + update
   * post-images) go through the shared [[GraftCowDataWriter]] —
   * layout placement identical to every other write path, so
   * SPJ/pruning contracts hold on the appended files. Delete row ids
-  * stream straight into ONE open DV parquet (write-through, no
-  * buffering — a full-table mor DELETE stays O(1) memory per task).
-  * File names carry partitionId+taskId: retries write fresh names,
-  * losers are never referenced and vacuum reclaims them.
+  * go to the one delete-file writer, [[DvWriter]].
   */
 private[sources] final class GraftDeltaRowWriter(
     conf: Configuration, root: String, relDir: String, dvRel: String,
@@ -567,53 +629,16 @@ private[sources] final class GraftDeltaRowWriter(
 
   private val inner = new GraftCowDataWriter(conf, root, relDir, schema,
     partitionCol, codecName, uid, timeZoneId)
-
-  private var dvWriter: ParquetWriter[InternalRow] = _
-  private var dvPath: Path = _
-  private var dvRows = 0L
-  // distinct file keys this task's deletes touch, tracked up to
-  // DvKeyCap+1 — O(cap) memory, preserving the writer's O(1)-per-row
-  // contract. PAST the cap the manifest records a DvBloom instead of
-  // "unknown" (VERDICT r12 item 3): the bloom is O(16 KiB) insert-only
-  // state, so wide DMLs keep false-positive-only scoping at any width.
-  private val dvKeys = scala.collection.mutable.LinkedHashSet.empty[String]
-  private val dvBloom = DvBloom.create()
-  private var lastKey: UTF8String = _
-  private val dvRow = new GenericInternalRow(2)
+  private val dv = new DvWriter(conf, root, dvRel, codecName, uid)
   private var done = false
 
-  private def writeDvRow(id: InternalRow): Unit = {
-    if (dvWriter == null) {
-      val c = new Configuration(conf)
-      ParquetWriteSupport.setSchema(MergeOnRead.DvSchema, c)
-      dvPath = new Path(s"$root/$dvRel/part-$uid.parquet")
-      dvWriter = TaskParquet.open(dvPath, c, codecName)
-    }
-    // key tracking once per RUN of same-file rows (rowId order is
-    // (_file, _pos), so runs are long); set/bloom adds are idempotent,
-    // interleaved files only cost extra adds, never wrong tracking
-    val k = id.getUTF8String(0)
-    if (lastKey == null || !lastKey.equals(k)) {
-      lastKey = k.copy()
-      val ks = lastKey.toString
-      if (dvKeys.size <= DeltaDml.DvKeyCap) dvKeys += ks
-      DvBloom.add(dvBloom, ks)
-    }
-    // rowId order is the operation's rowId(): (_file, _pos); the
-    // projecting row is reused — ParquetWriteSupport serializes
-    // immediately, so no copy is needed
-    dvRow.update(0, id.getUTF8String(0))
-    dvRow.setLong(1, id.getLong(1))
-    dvWriter.write(dvRow)
-    dvRows += 1
-  }
-
+  // the row id is the operation's rowId(): (_file, _pos)
   override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    writeDvRow(id)
+    dv.write(id.getUTF8String(0), id.getLong(1))
 
   override def update(
       metadata: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    writeDvRow(id)
+    dv.write(id.getUTF8String(0), id.getLong(1))
     inner.write(row)
   }
 
@@ -622,27 +647,13 @@ private[sources] final class GraftDeltaRowWriter(
   override def commit(): WriterCommitMessage = {
     done = true
     val dataMsg = inner.commit().asInstanceOf[GraftCowCommitMessage]
-    val dv =
-      if (dvWriter == null) None
-      else {
-        dvWriter.close()
-        val f = dvPath.getFileSystem(conf)
-        val wide = dvKeys.size > DeltaDml.DvKeyCap
-        Some(TxTable.DvEntry(s"$dvRel/${dvPath.getName}",
-          f.getFileStatus(dvPath).getLen, dvRows,
-          keys = if (wide) Nil else dvKeys.toSeq,
-          bloom = if (wide) Some(DvBloom.encode(dvBloom)) else None))
-      }
-    GraftDeltaCommitMessage(dataMsg.files, dv)
+    GraftDeltaCommitMessage(dataMsg.files, dv.commit())
   }
 
   override def abort(): Unit = {
     done = true
     inner.abort()
-    if (dvWriter != null) {
-      scala.util.Try(dvWriter.close())
-      scala.util.Try(dvPath.getFileSystem(conf).delete(dvPath, false))
-    }
+    dv.abort()
   }
 
   override def close(): Unit =

@@ -969,6 +969,17 @@ private[sources] object GraftProcedures {
 }
 
 object GraftCatalog {
+
+  /** Register a GraftCatalog as session catalog `name` over
+    * `warehouse`, with its `mart` namespace.
+    */
+  private[graft] def register(
+      spark: SparkSession, name: String, warehouse: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $name.mart")
+  }
+
   /** The catalog's one piece of table metadata outside the manifest:
     * the layout partition column, persisted at CREATE so every later
     * INSERT partitions the same way. Plain-text single line —
@@ -1306,9 +1317,9 @@ private[graft] final class GraftPartitioningIndex(
   override def sizeInBytes: Long = delegate.sizeInBytes
 }
 
-/** `bucket(N, col)` as a DSv2 scalar function — byte-identical to the
-  * write path's [[Layout.dirColumn]]: Spark's Murmur3 (`functions
-  * .hash`, seed 42) pmod N. Registered through [[GraftCatalog]]'s
+/** `bucket(N, col)` as a DSv2 scalar function — the layout's bucket
+  * function ([[Layout.hashFold]] pmod N), byte-identical to the write
+  * path's [[Layout.dirColumn]]. Registered through [[GraftCatalog]]'s
   * FunctionCatalog so Spark's storage-partitioned-join planning can
   * bind the reported bucket transform; two scans bound to this
   * function (same `canonicalName`) compare as compatible
@@ -1317,7 +1328,6 @@ private[graft] final class GraftPartitioningIndex(
 private[sources] object GraftBucketFunction
   extends org.apache.spark.sql.connector.catalog.functions.UnboundFunction {
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
   import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction}
 
   override def name(): String = "bucket"
@@ -1336,19 +1346,9 @@ private[sources] object GraftBucketFunction
       override def name(): String = "bucket"
       override def canonicalName(): String = "graft.bucket"
       override def isResultNullable: Boolean = false
-      override def produceResult(input: InternalRow): Integer = {
-        val n = input.getInt(0)
-        // seed-chained Murmur3 fold over the columns, exactly the
-        // Murmur3Hash expression's multi-child evaluation (and so
-        // Layout.dirColumn's functions.hash(c1, c2, …))
-        var h = 42L
-        var i = 0
-        while (i < dts.length) {
-          h = Murmur3HashFunction.hash(input.get(i + 1, dts(i)), dts(i), h)
-          i += 1
-        }
-        ((h.toInt % n) + n) % n
-      }
+      override def produceResult(input: InternalRow): Integer =
+        Layout.bucketOf(
+          Layout.hashFold(dts)(i => input.get(i + 1, dts(i))), input.getInt(0))
     }
   }
 }

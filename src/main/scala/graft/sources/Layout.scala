@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.functions.{hash, lit, pmod}
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
@@ -77,11 +78,32 @@ private[graft] object Layout {
   def bucketSpec(n: Int, cols: Seq[String]): String =
     s"bucket($n,${cols.mkString(",")})"
 
-  /** The partition-directory value as a Column over `df` — the ONE
-    * write-side definition of the layout function.
+  /** The partition-directory value as a Column over `df` — the
+    * write-side definition of the layout function, and the Column form
+    * of [[hashFold]] pmod N.
     */
   def dirColumn(df: DataFrame, spec: String): Column = parse(spec) match {
     case Identity(c) => df(c)
     case Bucket(n, cs) => pmod(hash(cs.map(df(_)): _*), lit(n))
   }
+
+  /** The bucket function's hash over Catalyst values — Spark's Murmur3
+    * fold (`functions.hash`: seed 42, each column's hash seeding the
+    * next, a null keeping the running seed). `value(i)` is the i-th
+    * layout column's value, of type `dts(i)`. Every row- and
+    * value-level bucket evaluation (pruning, task-side placement, the
+    * catalog's `bucket` function) goes through here.
+    */
+  def hashFold(dts: Seq[DataType])(value: Int => Any): Int = {
+    var h = 42L
+    var i = 0
+    while (i < dts.length) {
+      h = Murmur3HashFunction.hash(value(i), dts(i), h)
+      i += 1
+    }
+    h.toInt
+  }
+
+  /** `pmod(h, n)`: the bucket id of hash `h` among `n` buckets. */
+  def bucketOf(h: Int, n: Int): Int = ((h % n) + n) % n
 }

@@ -275,55 +275,26 @@ object MergeOnRead {
     */
   private val MaxIdentityCandidates = 1000
 
-  /** Write `positions` (file_key, pos) as a new delete-file directory;
-    * returns the directory and its manifest entries (empty shards a
-    * partitioned write can emit are dropped).
+  /** Write `positions` (file_key, pos) as a new `deletes/<uuid>`
+    * directory and return its manifest entries: each task streams its
+    * rows through the one delete-file writer, [[DvWriter]] (one
+    * `part-<partition>-<task>.parquet` per task that saw a row), which
+    * counts the rows and records the covered file keys as it writes —
+    * nothing is read back.
     */
   private def writeDv(
       spark: SparkSession, root: String,
-      positions: DataFrame): (String, Seq[TxTable.DvEntry]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
+      positions: DataFrame): Seq[TxTable.DvEntry] = {
     val rel = s"deletes/${java.util.UUID.randomUUID()}"
-    val dir = s"$root/$rel"
-    positions.write.parquet(dir)
-    // per-file covered keys for the manifest (DvEntry.keys/bloom): one
-    // distinct pass over the just-written deletes — the exact key list
-    // up to DvKeyCap, a DvBloom over the keys past it (readers then
-    // scope false-positive-only). Cost ∝ this statement's deletes,
-    // paid once at write so every future scan plans scoped. The
-    // collect is bounded either way: distinct keys per DV file cannot
-    // exceed this statement's touched files, and the bloom is built
-    // driver-side from the exact set.
-    import org.apache.spark.sql.functions.{col, collect_set, input_file_name}
-    val cap = DeltaDml.DvKeyCap
-    val keysByFile: Map[String, (Seq[String], Option[String])] = spark.read
-      .schema(DvSchema).parquet(dir)
-      .select(input_file_name().as("__f"), col("file_key"))
-      .distinct()
-      .groupBy(col("__f"))
-      .agg(collect_set(col("file_key")).as("__ks"))
-      .collect()
-      .map { r =>
-        val name = r.getString(0).split("/").last
-        val ks = r.getSeq[String](1)
-        name -> (if (ks.size > cap) (Nil, Some(DvBloom.encode(DvBloom.ofKeys(ks))))
-                 else (ks.sorted, None))
-      }.toMap
-    val f = new Path(root).getFileSystem(conf)
-    val it = f.listFiles(new Path(dir), true)
-    val out = scala.collection.mutable.Buffer.empty[TxTable.DvEntry]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val rows = Try(
-          FileStats.forFile(conf, st.getPath).rows).getOrElse(-1L)
-        val (ks, bloom) =
-          keysByFile.getOrElse(st.getPath.getName, (Nil, None))
-        out += TxTable.DvEntry(s"$rel/${st.getPath.getName}",
-          st.getLen, rows, ks, bloom)
-      }
-    }
-    (dir, out.toSeq.filter(_.rows != 0L))
+    val (conf, codecName, _) = TaskParquet.prepare(spark, DvSchema)
+    positions.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val w = new DvWriter(conf.value, root, rel, codecName,
+        s"$pid-${org.apache.spark.TaskContext.get().taskAttemptId()}")
+      try {
+        rows.foreach(r => w.write(r.getUTF8String(0), r.getLong(1)))
+        w.commit().iterator
+      } catch { case e: Throwable => w.abort(); throw e }
+    }.collect().toSeq
   }
 
   /** SQL UPDATE post-image projection: every assignment's RHS
@@ -341,31 +312,31 @@ object MergeOnRead {
         .getOrElse(col(fld.name))
     }.toSeq: _*)
 
-  /** Discard an UNCOMMITTED (delete-file dir, fresh data entries)
-    * pair — a statement that matched nothing, or a lost optimistic
-    * race: positions are only valid against the snapshot they were
-    * computed from, so both legs are dropped and the caller rescans.
-    */
-  private def discardLegs(
-      spark: SparkSession, root: String, dvDir: String,
-      fresh: Seq[TxTable.Entry]): Unit = {
+  /** Delete root-relative directories of an uncommitted attempt. */
+  private[sources] def discardDirs(
+      spark: SparkSession, root: String, rels: Seq[String]): Unit = {
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    if (dvDir.nonEmpty) f.delete(new Path(dvDir), true)
-    fresh.map(_.relPath.split("/").take(2).mkString("/")).distinct
-      .foreach(rel => f.delete(new Path(s"$root/$rel"), true))
+    rels.foreach(rel => Try(f.delete(new Path(s"$root/$rel"), true)))
   }
 
-  /** Run a pinned DV commit of this attempt's legs; on a lost race
-    * discard them and rethrow, so [[TxTable.retrying]] rescans.
+  /** Run a pinned DV commit of one attempt's legs — its delete files
+    * `dvs` and fresh data files `fresh` — and on a lost race delete
+    * their `deletes/<uuid>` and `data/<uuid>` directories and rethrow:
+    * positions are only valid against the snapshot they were computed
+    * from, so the programmatic DML rescans ([[TxTable.retrying]]) and
+    * a SQL `mor` statement fails. Every merge-on-read DML path commits
+    * through here.
     */
-  private def commitOrDiscard(
-      spark: SparkSession, root: String, dvDir: String,
-      fresh: Seq[TxTable.Entry])(commit: => Long): Long =
+  private[sources] def commitOrDiscard[T](
+      spark: SparkSession, root: String, dvs: Seq[TxTable.DvEntry],
+      fresh: Seq[TxTable.Entry])(commit: => T): T =
     try commit
     catch {
       case e: TxTable.ConcurrentCommitException =>
-        discardLegs(spark, root, dvDir, fresh)
+        discardDirs(spark, root,
+          (dvs.map(_.relPath) ++ fresh.map(_.relPath))
+            .map(_.split("/").take(2).mkString("/")).distinct)
         throw e
     }
 
@@ -386,13 +357,11 @@ object MergeOnRead {
         val doomed = visibleWithPos(spark, root, cur, cur.entries)
           .filter(cond)
           .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
-        val (dir, newDvs) = writeDv(spark, root, doomed)
-        val total = newDvs.map(d => math.max(d.rows, 0L)).sum
-        if (total == 0L) {
-          discardLegs(spark, root, dir, Nil)
-          (cur.version, 0L)
-        } else (commitOrDiscard(spark, root, dir, Nil)(
-          TxTable.commitDvAppend(spark, root, cur.version, newDvs)), total)
+        val newDvs = writeDv(spark, root, doomed)
+        if (newDvs.isEmpty) (cur.version, 0L) // no match: nothing written
+        else (commitOrDiscard(spark, root, newDvs, Nil)(
+          TxTable.commitDvAppend(spark, root, cur.version, newDvs)),
+          newDvs.map(_.rows).sum)
       }
     }
 
@@ -446,17 +415,14 @@ object MergeOnRead {
         try {
           val positions = matched
             .select(col("__g_key").as("file_key"), col("__g_pos").as("pos"))
-          val (dvDir, newDvs) = writeDv(spark, root, positions)
-          val total = newDvs.map(d => math.max(d.rows, 0L)).sum
-          if (total == 0L) {
-            discardLegs(spark, root, dvDir, Nil)
-            (cur.version, 0L)
-          } else {
+          val newDvs = writeDv(spark, root, positions)
+          if (newDvs.isEmpty) (cur.version, 0L) // no match: nothing written
+          else {
             val fresh = TxTable.writeData(postImage(matched, schema, sets),
               root, GraftCatalog.layoutOf(spark, root, cur))
-            (commitOrDiscard(spark, root, dvDir, fresh)(
+            (commitOrDiscard(spark, root, newDvs, fresh)(
               TxTable.commitDvUpdate(spark, root, cur.version, newDvs, fresh,
-                "updateWhere")), total)
+                "updateWhere")), newDvs.map(_.rows).sum)
           }
         } finally graft.CacheScope.unpersistCheckpoint(matched)
       }
@@ -642,13 +608,13 @@ object MergeOnRead {
                 col(s"src.${fld.name}").cast(fld.dataType).as(fld.name)
               else lit(null).cast(fld.dataType).as(fld.name)
             }.toSeq: _*)
-            val (dvDir, newDvs) =
-              if (nDel + nUpd == 0L) ("", Seq.empty[TxTable.DvEntry])
+            val newDvs =
+              if (nDel + nUpd == 0L) Seq.empty[TxTable.DvEntry]
               else writeDv(spark, root, positions)
             val fresh =
               if (nUpd + nIns == 0L) Seq.empty[TxTable.Entry]
               else TxTable.writeData(updated.unionByName(inserted), root, layout)
-            val v = commitOrDiscard(spark, root, dvDir, fresh) {
+            val v = commitOrDiscard(spark, root, newDvs, fresh) {
               if (fresh.isEmpty)
                 TxTable.commitDvAppend(spark, root, cur.version, newDvs, txn)
               else TxTable.commitDvUpdate(spark, root, cur.version, newDvs,

@@ -12,7 +12,7 @@ import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow, Literal, Murmur3Hash}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortOrder, Expression => V2Expression, Literal => V2Literal}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
@@ -278,10 +278,9 @@ private[sources] object PartitionPredicates {
   }
 }
 
-/** Driver-side bucket-id evaluation for group pruning — the SAME
-  * Murmur3 expression (seed 42) and pmod the write path and
-  * `Layout.dirColumn` use, so pruning and placement can never
-  * disagree.
+/** Driver-side bucket-id evaluation for group pruning — the layout's
+  * own bucket function ([[Layout.hashFold]] pmod N, the one the write
+  * paths place by), so pruning and placement can never disagree.
   */
 private[graft] object BucketIds {
 
@@ -291,24 +290,20 @@ private[graft] object BucketIds {
     */
   val MaxCandidates = 4096
 
-  /** Bucket id of one EXTERNAL value tuple, one element per layout
-    * column IN SPEC ORDER (None = SQL NULL — hashes to the running
-    * seed, exactly as `functions.hash(null, …)` does). The Murmur3
-    * fold over multiple children is Spark's own: each column's hash
-    * seeds the next.
+  /** The bucket ids of the CROSS PRODUCT of per-column candidate
+    * Catalyst values (one candidate list per layout column, IN SPEC
+    * ORDER; a null value hashes to the running seed, exactly as
+    * `functions.hash(null, …)` does). None past [[MaxCandidates]]
+    * tuples: the caller keeps every bucket.
     */
-  def idOf(values: Seq[(Option[Any], DataType)], n: Int): Int = {
-    val lits = values.map { case (v, dt) =>
-      Literal(v.map(CatalystTypeConverters.createToCatalystConverter(dt))
-        .orNull, dt)
-    }
-    val h = new Murmur3Hash(lits).eval(null).asInstanceOf[Int]
-    ((h % n) + n) % n
-  }
-
-  /** Single-column convenience (the pre-composite call shape). */
-  def idOf(value: Option[Any], dt: DataType, n: Int): Int =
-    idOf(Seq((value, dt)), n)
+  def idsOf(perCol: Seq[Seq[(Any, DataType)]], n: Int): Option[Set[Int]] =
+    if (perCol.map(_.size.toLong).product > MaxCandidates) None
+    else Some(perCol
+      .foldLeft(Seq(Seq.empty[(Any, DataType)])) { (acc, vals) =>
+        acc.flatMap(pre => vals.map(pre :+ _))
+      }
+      .map(t => Layout.bucketOf(Layout.hashFold(t.map(_._2))(t.map(_._1)), n))
+      .toSet)
 
   /** The ordinary-read twin of `candidateValues`: bound the live
     * bucket-id set from the OPTIMIZER's pushed dataFilters (catalyst
@@ -330,7 +325,7 @@ private[graft] object BucketIds {
       cols: Seq[String], n: Int,
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
     : Option[Set[Int]] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, In, InSet, Murmur3HashFunction, Or}
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, In, InSet, Or}
     // candidate CATALYST values matching rows can take, per conjunct;
     // `= NULL` matches nothing (empty), `<=> NULL` matches null rows
     def cands(col: String)(e: Expression): Option[Seq[(Any, DataType)]] = {
@@ -371,17 +366,7 @@ private[graft] object BucketIds {
       if (bounds.isEmpty) return None // this column is unbounded
       bounds.reduce(_ intersect _).toSeq
     }
-    if (perCol.map(_.size.toLong).product > MaxCandidates) return None
-    // hash fold over the cross product, seed-chained like Murmur3Hash
-    def ids(prefix: Long, rest: Seq[Seq[(Any, DataType)]]): Seq[Long] =
-      rest match {
-        case Nil => Seq(prefix)
-        case head +: tail =>
-          head.flatMap { case (v, dt) =>
-            ids(Murmur3HashFunction.hash(v, dt, prefix), tail)
-          }
-      }
-    Some(ids(42L, perCol).map(h => ((h.toInt % n) + n) % n).toSet)
+    idsOf(perCol, n)
   }
 }
 
@@ -436,32 +421,26 @@ private[sources] object GroupPrune {
         // every layout column needs a candidate bound (per column:
         // intersection across the conjuncts that enumerate it); the
         // allowed ids are the hash of the bounded CROSS PRODUCT —
-        // over-approximate for correlated predicates, never under
-        val perCol: Option[Seq[(Seq[Option[Any]], DataType)]] = {
-          val all = cs.map { c =>
-            val dt = schema(c).dataType
-            val bounds = preds.toSeq.flatMap(p =>
-              PartitionPredicates.candidateValues(c, dt, p).map(_.toSet))
-            if (bounds.isEmpty) None
-            else Some((bounds.reduce(_ intersect _).toSeq, dt))
-          }
-          if (all.exists(_.isEmpty)) None else Some(all.map(_.get))
+        // over-approximate for correlated predicates, never under.
+        // Candidates are external values (None = SQL NULL), converted
+        // to the Catalyst values the bucket function hashes.
+        val perCol = cs.map { c =>
+          val dt = schema(c).dataType
+          val bounds = preds.toSeq.flatMap(p =>
+            PartitionPredicates.candidateValues(c, dt, p).map(_.toSet))
+          val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+          if (bounds.isEmpty) None
+          else Some(bounds.reduce(_ intersect _).toSeq
+            .map(v => (v.map(toCatalyst).orNull, dt)))
         }
-        perCol match {
-          case Some(sets)
-              if sets.map(_._1.size.toLong).product <=
-                BucketIds.MaxCandidates =>
-            val combos = sets.foldLeft(
-              Seq(Seq.empty[(Option[Any], DataType)])) {
-              case (acc, (vals, dt)) =>
-                acc.flatMap(pre => vals.map(v => pre :+ ((v, dt))))
-            }
-            val allowed = combos.map(t => BucketIds.idOf(t, n)).toSet
+        (if (perCol.exists(_.isEmpty)) None
+         else BucketIds.idsOf(perCol.flatten, n)) match {
+          case Some(allowed) =>
             es.filter(e => valueOf(e.partition) match {
               case i: Int => allowed.contains(i)
               case _ => true // unparseable id: keep (never wrong)
             })
-          case _ => es
+          case None => es
         }
       case _ => es
     }
@@ -583,14 +562,13 @@ private[sources] final class GraftCowScan(
       s"(${entries.size}/${snap.entries.size} files)"
 }
 
-/** One finished copy-on-write data file, relative to the table root —
-  * `partition` in the manifest's `col=<escaped>` form.
+/** A task's finished data files as stat-less manifest entries —
+  * relative to the table root, `partition` in the manifest's
+  * `col=<escaped>` form. The batch commit reads their footer stats
+  * ([[TxTable.withFooterStats]]).
   */
-private[sources] final case class GraftCowFile(
-    relPath: String, partition: String, size: Long)
-
 private[sources] final case class GraftCowCommitMessage(
-    files: Seq[GraftCowFile]) extends WriterCommitMessage
+    files: Seq[TxTable.Entry]) extends WriterCommitMessage
 
 /** Write half. Requests (non-strict) clustering on the partition
   * column so each partition's surviving rows land in few writer tasks
@@ -691,16 +669,9 @@ private[sources] final class GraftCowBatchWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
+    val fresh = TxTable.withFooterStats(spark, root, messages.collect {
       case m: GraftCowCommitMessage => m.files
-    }.flatten.toSeq
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fresh = files.map { f =>
-      val stats = Try(FileStats.encode(
-        FileStats.forFile(conf, new Path(s"$root/${f.relPath}"))))
-        .getOrElse("")
-      TxTable.Entry(f.relPath, f.partition, stats, f.size)
-    }
+    }.flatten.toSeq)
     // the groups the (runtime-filtered) scan read are the groups this
     // commit replaces; a write planned without a scan (cannot happen
     // through Spark's rewrites, but stay safe) replaces everything
@@ -710,12 +681,9 @@ private[sources] final class GraftCowBatchWrite(
       s"SQL $command")
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: GraftCowCommitMessage => m.files }.flatten
-      .foreach(file => Try(f.delete(new Path(s"$root/${file.relPath}"), false)))
-    Try(f.delete(new Path(s"$root/$relDir"), true))
-  }
+  // every task file lives under relDir
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    MergeOnRead.discardDirs(spark, root, Seq(relDir))
 }
 
 private[sources] final class GraftCowWriterFactory(
@@ -752,19 +720,15 @@ private[sources] final class GraftCowDataWriter(
     layout.collect { case Layout.Identity(c) => schema(c).dataType }
       .getOrElse(NullType)
 
-  // bucket layout: the SAME Murmur3(seed 42) ∘ pmod the append path's
-  // Layout.dirColumn evaluates, bound to the source column — placement
-  // by the rewrite and by ordinary INSERTs can never disagree
+  // bucket layout: the layout's own bucket function over the source
+  // columns — placement by the rewrite and by ordinary INSERTs can
+  // never disagree
   private val bucketOf: Option[InternalRow => Int] =
     layout.collect { case Layout.Bucket(n, cs) =>
-      val h = new Murmur3Hash(cs.map { c =>
-        val i = schema.fieldIndex(c)
-        BoundReference(i, schema(i).dataType, schema(i).nullable)
-      })
-      (row: InternalRow) => {
-        val v = h.eval(row).asInstanceOf[Int]
-        ((v % n) + n) % n
-      }
+      val idx = cs.map(schema.fieldIndex).toArray
+      val dts = idx.map(schema(_).dataType).toIndexedSeq
+      (row: InternalRow) =>
+        Layout.bucketOf(Layout.hashFold(dts)(i => row.get(idx(i), dts(i))), n)
     }
 
   // dir segment -> (path, writer, manifest partition string)
@@ -856,8 +820,8 @@ private[sources] final class GraftCowDataWriter(
     val files = writers.values.toSeq.map { case (p, w, man) =>
       w.close()
       val full = f.makeQualified(p).toUri.getPath
-      GraftCowFile(full.stripPrefix(rootPrefix), man,
-        f.getFileStatus(p).getLen)
+      TxTable.Entry(full.stripPrefix(rootPrefix), man,
+        size = f.getFileStatus(p).getLen)
     }
     writers.clear()
     GraftCowCommitMessage(files)

@@ -606,17 +606,24 @@ object TxTable {
         out += Entry(relPath, part, size = st.getLen)
       }
     }
-    // commit-time stats collection (footer-only reads, bounded by THIS
-    // commit's file count — see FileStats scaladoc for the 100 TB
-    // story). Footers are independent metadata reads: a serial loop
-    // pays file-open latency × file count on the driver (a bucket(16)
-    // commit = 16 round-trips), so read them through a small bounded
-    // pool — same work, wall-clock ∝ ceil(files / pool) instead of
-    // files.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val entries = out.toSeq
+    withFooterStats(spark, root, out.toSeq)
+  }
+
+  /** `entries` with their [[FileStats]] read from each file's parquet
+    * footer — the one commit-time stats step of every data-writing
+    * path ([[writeData]] and the SQL row-level writes). Footer-only
+    * reads, bounded by THIS commit's file count (see the FileStats
+    * scaladoc for the 100 TB story). Footers are independent metadata
+    * reads: a serial loop pays file-open latency × file count on the
+    * driver (a bucket(16) commit = 16 round-trips), so they go through
+    * a small bounded pool — same work, wall-clock ∝ ceil(files / pool)
+    * instead of files. An unreadable footer records no stats ("").
+    */
+  private[sources] def withFooterStats(
+      spark: SparkSession, root: String, entries: Seq[Entry]): Seq[Entry] =
     if (entries.isEmpty) entries
     else {
+      val conf = spark.sparkContext.hadoopConfiguration
       // daemon threads + shutdownNow: a read hung past the bound
       // below must not keep the JVM alive
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -651,7 +658,6 @@ object TxTable {
         }
       } finally pool.shutdownNow()
     }
-  }
 
   /** The single commit point: stamp `next.ts`, [[render]] it, and
     * EXCLUSIVE-create `v<next.version>.manifest` with that text —

@@ -620,6 +620,93 @@ class MorSpec extends SparkSpec {
       s"mergeInto left ${sc.getPersistentRDDs.size - before} RDDs resident")
   }
 
+  /** A GraftCatalog table `gmw.mart.<name>` of k = 1..2000 under
+    * bucket(128, k) — one data file per bucket — and its root.
+    */
+  private lazy val wideWh = s"target/tmp/mor_wide_${System.nanoTime()}"
+  private def mkWide(name: String): String = {
+    graft.sources.GraftCatalog.register(spark, "gmw", wideWh)
+    spark.sql(s"CREATE TABLE gmw.mart.$name (k BIGINT, v DOUBLE) " +
+      "PARTITIONED BY (bucket(128, k))")
+    (1 to 2000).map(k => (k.toLong, k * 1.5)).toDF("k", "v")
+      .writeTo(s"gmw.mart.$name").append()
+    s"$wideWh/mart/$name"
+  }
+
+  /** `deleteWhere` with every position in ONE writer task: all data
+    * files in one scan split, no shuffle fan-out.
+    */
+  private def deleteInOneTask(root: String, cond: String): (Long, Long) =
+    Session.withConf(spark,
+      "spark.sql.files.openCostInBytes" -> "0",
+      "spark.sql.files.minPartitionNum" -> "1",
+      "spark.sql.shuffle.partitions" -> "1")(
+      MergeOnRead.deleteWhere(spark, root, expr(cond)))
+
+  test("programmatic deleteWhere past DvKeyCap records a DvBloom and scopes the scan") {
+    val root = mkWide("dvwide")
+    val nFiles = dataPaths(root).size
+    assert(nFiles > 100, s"fixture needs ~128 data files, got $nFiles")
+    // k <= 150 hits ~90 of 128 buckets, all in one task: > DvKeyCap
+    val (_, n) = deleteInOneTask(root, "k <= 150")
+    assert(n == 150L)
+    val snap = TxTable.currentSnapshot(spark, root).get
+    assert(snap.dvs.nonEmpty &&
+      snap.dvs.forall(d => d.keys.isEmpty && d.bloom.isDefined),
+      s"expected bloom-only DV entries, got ${snap.dvs}")
+    assert(snap.dvs.map(_.rows).sum == 150L)
+    // scoping: a full-table delta scan (a no-match mor DELETE) hands
+    // each data file the DV file only where the bloom may cover it —
+    // the ~90 touched buckets plus a false-positive tail, not all 128
+    graft.tools.RunMetrics.reset()
+    Session.withConf(spark, "spark.graft.dml.mode" -> "mor")(
+      spark.sql("DELETE FROM gmw.mart.dvwide WHERE v < 0"))
+    val m = graft.tools.RunMetrics.snapshot
+    val probed = m.getOrElse("dv_files_probed", -1.0)
+    val files = m.getOrElse("dv_scan_files", -1.0)
+    assert(files >= nFiles - 1,
+      s"expected a full-table delta scan to plan, got $files files")
+    val ratio = probed / files
+    assert(ratio > 0.3 && ratio < 0.95,
+      s"bloom scoping must beat unknown coverage (ratio 1.0): " +
+        s"probed=$probed files=$files ratio=$ratio")
+    assert(spark.sql("SELECT count(*) FROM gmw.mart.dvwide").as[Long].head()
+      == 1850L)
+  }
+
+  test("programmatic deleteWhere under DvKeyCap records exact, sorted keys") {
+    val root = mkWide("dvnarrow")
+    val (_, n) = deleteInOneTask(root, "k <= 40")
+    assert(n == 40L)
+    val snap = TxTable.currentSnapshot(spark, root).get
+    assert(snap.dvs.nonEmpty && snap.dvs.forall(_.bloom.isEmpty),
+      s"expected exact-key DV entries, got ${snap.dvs}")
+    assert(snap.dvs.map(_.rows).sum == n)
+    snap.dvs.foreach { d =>
+      assert(d.keys.nonEmpty && d.keys == d.keys.sorted,
+        s"keys must be recorded sorted: ${d.keys}")
+      // exact: the file's own distinct file_key column, no more, no less
+      val written = spark.read.schema(MergeOnRead.DvSchema)
+        .parquet(TxTable.entryPath(root, d.relPath))
+      assert(d.keys == written.select("file_key").distinct()
+        .as[String].collect().sorted.toSeq)
+      assert(d.rows == written.count())
+    }
+    assert(TxTable.read(spark, root).filter(col("k") <= 40).count() == 0L)
+  }
+
+  test("q_mor_delete, q_mor_update and q_mor_merge leave no RDD resident") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Seq("q_mor_delete", "q_mor_update", "q_mor_merge").foreach { q =>
+      CacheScope.scoped(spark) {
+        assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+      }
+      assert(sc.getPersistentRDDs.size <= before,
+        s"$q left ${sc.getPersistentRDDs.size - before} RDDs resident")
+    }
+  }
+
   test("pinned DV commits refuse a superseded snapshot") {
     val root = freshRoot("pin")
     TxTable.create(seed, root, Some("p"))
