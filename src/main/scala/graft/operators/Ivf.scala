@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.CacheScope.TrackedDataFrame
 import graft.functions.Vec
 
 /** IVF-style ANN (inverted-file index over coarse centroids) — the
@@ -23,14 +21,6 @@ import graft.functions.Vec
   */
 object Ivf {
 
-  /** Deterministic Lloyd training on a sample. Sample selection,
-    * initialization, and iteration order are all seed-fixed, so the
-    * index is reproducible across runs/retries. The sample is taken in
-    * xxhash64(vector) order — a deterministic uniform draw across the
-    * WHOLE corpus; a bare `limit` would take the first partition's
-    * rows, which on a sorted/partitioned corpus biases every centroid
-    * to one region of the space.
-    */
   /** CORPUS-ADAPTIVE centroid count: nlist ≈ √n, floored at 16 and
     * capped (the r13 census proved the fixed k = 16 saturates exactly
     * like fixed SRP bits: by 20k vectors the probe join's candidate
@@ -46,8 +36,15 @@ object Ivf {
     math.max(16L, math.min(cap.toLong,
       math.ceil(math.sqrt(math.max(0L, n).toDouble)).toLong)).toInt
 
-  /** `iters`/`sampleSize` ≤ 0 = derive from k: sample 32 points per
-    * centroid (floor 2000) and 10 Lloyd rounds.
+  /** Deterministic Lloyd training on a sample. Sample selection,
+    * initialization, and iteration order are all seed-fixed, so the
+    * index is reproducible across runs/retries. The sample is taken in
+    * xxhash64(vector) order — a deterministic uniform draw across the
+    * WHOLE corpus; a bare `limit` would take the first partition's
+    * rows, which on a sorted/partitioned corpus biases every centroid
+    * to one region of the space. `iters`/`sampleSize` ≤ 0 = derive
+    * from k: sample 32 points per centroid (floor 2000) and 10 Lloyd
+    * rounds.
     *
     * r15 trainer (VERDICT r14 item 2 — the census measured 4.6×
     * max-occupancy skew over uniform at sf10 under the old
@@ -95,6 +92,25 @@ object Ivf {
     while (i < a.length) { val t = a(i) - b(i); d += t * t; i += 1 }
     d
   }
+
+  /** Nearest centroid of a sampled point `v` and its squared distance
+    * — first-min tie-break, the [[argmin]] device.
+    */
+  private def nearest(v: Array[Double], centroids: Array[Array[Double]]): (Int, Double) = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < centroids.length) {
+      val d = l2sqArr(v, centroids(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    (best, bestD)
+  }
+
+  /** The heaviest cluster (lowest index on ties): the donor of an
+    * empty centroid's repair.
+    */
+  private def heaviest(counts: Array[Long]): Int = counts.indexOf(counts.max)
 
   /** Deterministic k-means++ seeding (Arthur & Vassilvitskii, SODA
     * 2007): first center = first hash-ordered sample point; each next
@@ -152,13 +168,7 @@ object Ivf {
       var si = 0
       while (si < sample.length) {
         val v = sample(si)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          val d = l2sqArr(v, centroids(c))
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val (best, bestD) = nearest(v, centroids)
         counts(best) += 1
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
@@ -171,8 +181,7 @@ object Ivf {
       var c = 0
       while (c < k) {
         if (counts(c) == 0) {
-          var heavy = 0; var hc = 0
-          while (hc < k) { if (counts(hc) > counts(heavy)) heavy = hc; hc += 1 }
+          val heavy = heaviest(counts)
           if (counts(heavy) > 1 && farIdx(heavy) >= 0) {
             centroids(c) = sample(farIdx(heavy)).clone()
             // halve so a SECOND empty centroid repairs off the next
@@ -326,21 +335,14 @@ object Ivf {
     val dist = new Array[Double](seed.length)
     var i = 0
     while (i < seed.length) {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        val d = l2sqArr(seed(i), centroids(c))
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
+      val (best, bestD) = nearest(seed(i), centroids)
       assign(i) = best; dist(i) = bestD
       i += 1
     }
     var c = 0
     while (c < k) {
       if (counts(c) == 0) {
-        var heavy = 0; var hc = 0
-        while (hc < k) { if (counts(hc) > counts(heavy)) heavy = hc; hc += 1 }
+        val heavy = heaviest(counts)
         // farthest seed member of the heaviest cluster; if the seed
         // holds none (possible — the seed is bounded), the farthest
         // seed point overall still splits a genuinely hot region
@@ -387,11 +389,15 @@ object Ivf {
   private def distances(vec: Column, centroids: Array[Array[Double]]): Column =
     transform(centroidsLit(centroids), c => Vec.l2sq(vec, c))
 
-  /** Nearest-centroid bucket id (argmin over the distance array). */
-  def bucketId(vec: Column, centroids: Array[Array[Double]]): Column = {
-    val d = distances(vec, centroids)
+  /** 0-based index of the smallest element of a distance array,
+    * first-min tie-break — nearest-centroid assignment and PQ encoding.
+    */
+  private[operators] def argmin(d: Column): Column =
     array_position(d, array_min(d)).cast("int") - 1
-  }
+
+  /** Nearest-centroid bucket id (argmin over the distance array). */
+  def bucketId(vec: Column, centroids: Array[Array[Double]]): Column =
+    argmin(distances(vec, centroids))
 
   /** The `nprobe` nearest bucket ids for a query vector. */
   def probeBuckets(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {
@@ -434,8 +440,8 @@ object Ivf {
     // that can cross the join equality onto the query side as an
     // inferred filter over the (routinely shared) vector attribute —
     // an unbindable plan when corpus and queries slice the same cached
-    // table (the Pq.annTopKPq lesson; IvfSpec's cached-corpus recall
-    // test pins it here)
+    // table (IvfSpec's cached-corpus recall test pins it here;
+    // Pq.annTopKPq stores its compressed index the same way)
     annTopKAssigned(
       graft.CacheScope.localCheckpointTruncated(
         assignCorpus(corpus, idCol, vecCol, centroids)),
@@ -453,15 +459,12 @@ object Ivf {
     */
   def assignCorpus(
       corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus
-      .select(col(idCol), col(vecCol)).repartition(par, col(idCol)) // 1-row-group scans
+      centroids: Array[Array[Double]]): DataFrame =
+    Knn.spread(corpus, idCol, vecCol)
       .select(
         col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
         Vec.norm(col(vecCol)).as("nn"),
         bucketId(col(vecCol), centroids).as("bucket"))
-  }
 
   /** The query half: probe the `nprobe` nearest buckets of a
     * PRE-ASSIGNED corpus ([[assignCorpus]]'s output, freshly computed
@@ -471,38 +474,41 @@ object Ivf {
     */
   def annTopKAssigned(
       assigned: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, centroids: Array[Array[Double]], nprobe: Int): DataFrame = {
-    val c = assigned
-    // probe-bucket array is CHECKPOINTED (not just persisted) before
-    // the explode: beyond re-evaluation (project collapse — see
-    // Dedup.jaccardPairs), corpus and queries are routinely slices of
-    // the SAME (possibly cached) table, and the shared attribute ids
-    // let the corpus side's `bucket = argmin(...)` alias constraint
-    // cross the join onto the query side, which can leave an
-    // unbindable reference at execution (the Pq.annTopKPqAssigned
-    // lesson, measured here by IvfSpec's cached-corpus recall test).
-    // Severing lineage gives the query side fresh attributes; cost is
-    // bounded by the query set.
+      k: Int, centroids: Array[Array[Double]], nprobe: Int): DataFrame =
+    Knn.rankTopK(
+      probeJoin(assigned, queries, idCol, vecCol, centroids, nprobe, "cand_ivf",
+          col(vecCol).as("qvec"), Vec.norm(col(vecCol)).as("qn"))
+        .withColumn("cosine",
+          Vec.dot(col("qvec"), col("nvec")) / (col("qn") * col("nn"))),
+      k, "cosine", descending = true)
+
+  /** The probed bucket join of an assigned index (a `neighbor_id` and
+    * `bucket` column) and the queries: each query carries `payload`
+    * and meets every other row of its `nprobe` nearest buckets. The
+    * join's row count is observed as `metric` for the bench artifact.
+    *
+    * The query side is CHECKPOINTED (not just persisted) before the
+    * explode: beyond re-evaluation (project collapse — see
+    * Dedup.jaccardPairs), corpus and queries are routinely slices of
+    * the SAME (possibly cached) table, and the shared attribute ids
+    * let the corpus side's `bucket = argmin(...)` alias constraint
+    * cross the join onto the query side as an inferred filter over the
+    * shared vector attribute — unbindable at execution, or
+    * unresolvable where the payload has pruned that vector (Pq's
+    * LUT-only side). Severing lineage gives the query side fresh
+    * attributes; cost is bounded by the query set.
+    */
+  private[operators] def probeJoin(
+      assigned: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]], nprobe: Int, metric: String,
+      payload: Column*): DataFrame = {
     val qB = graft.CacheScope.localCheckpointTruncated(queries.select(
-      col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      Vec.norm(col(vecCol)).as("qn"),
-      probeBuckets(col(vecCol), centroids, nprobe).as("qbuckets")))
-    val q = qB.select(col("query_id"), col("qvec"), col("qn"),
-      explode(col("qbuckets")).as("qbucket"))
-    // candidate count observed for the bench artifact (VERDICT r12
-    // item 5): rows materialized by the probe-bucket join
-    val scored = graft.tools.RunMetrics.observedCount("cand_ivf",
-        c.join(q,
-          col("bucket") === col("qbucket") &&
-            col("query_id") =!= col("neighbor_id")))
-      .withColumn("cosine",
-        Vec.dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cosine"))
+      (col(idCol).as("query_id") +: payload :+
+        probeBuckets(col(vecCol), centroids, nprobe).as("qbuckets")): _*))
+    val q = qB.select((qB.columns.filterNot(_ == "qbuckets").map(col) :+
+      explode(col("qbuckets")).as("qbucket")).toIndexedSeq: _*)
+    graft.tools.RunMetrics.observedCount(metric,
+      assigned.join(q,
+        col("bucket") === col("qbucket") && col("query_id") =!= col("neighbor_id")))
   }
 }

@@ -34,17 +34,36 @@ object Knn {
       col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
       Vec.norm(col(vecCol)).as("nn"))
       .repartition(col(s"neighbor_id"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        Vec.dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
+    rankTopK(
+      c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .withColumn("cosine",
+          Vec.dot(col("qvec"), col("nvec")) / (col("qn") * col("nn"))),
+      k, "cosine", descending = true)
+  }
+
+  /** The per-query top-k ranker every kNN kernel ends in: rank each
+    * query's candidates by `score` (`descending` for a similarity,
+    * ascending for a distance), ties by neighbor id, keep rank ≤ k.
+    * Output: (query_id, rank: long, neighbor_id, `score`).
+    */
+  private[operators] def rankTopK(
+      scored: DataFrame, k: Int, score: String, descending: Boolean): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
+      .orderBy(if (descending) col(score).desc else col(score), col("neighbor_id"))
     scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cosine"))
+        col("neighbor_id"), col(score))
   }
+
+  /** The (`idCol`, `vecCol`) columns of `df` spread over
+    * `defaultParallelism` partitions by id: a single parquet row group
+    * would otherwise serialize every per-row vector kernel downstream.
+    */
+  private[operators] def spread(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol), col(vecCol))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(idCol))
 
   /** Target mean rows-per-bucket for the adaptive SRP geometry: small
     * enough that a bucket's within-bucket pair count (≈ occ²/2) stays
@@ -208,49 +227,23 @@ object Knn {
       probes: Int = 2): DataFrame = {
     val bits = resolveBits(bitsPerTable, corpus.count())
     val tables = portablePlanes(numTables, bits, dim)
-    val planes = planesLit(tables)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
     // dot ARRAYS persist before the explode: project collapse would
     // inline the hyperplane-dot expressions as the Generate child and
     // re-evaluate all numTables×bits dot products per output row
     // (see Dedup.jaccardPairs). The probe buckets then derive from the
     // CACHED dots, so base bucket + margin ranking share one
     // evaluation of every dot.
-    val qD = queries
-      .select(col(idCol), col(vecCol)).repartition(par, col(idCol))
-      .select(col(idCol).as("query_id"),
-        tableDots(col(vecCol), planes).as("dts")).persistTracked()
-    val q = qD.select(col("query_id"), posexplode(col("dts")))
-      .select(col("query_id"), col("pos").as("tbl"),
+    val qD = spread(queries, idCol, vecCol)
+      .select(col(idCol).as("id"),
+        tableDots(col(vecCol), planesLit(tables)).as("dts")).persistTracked()
+    val q = qD.select(col("id"), posexplode(col("dts")))
+      .select(col("id"), col("pos").as("tbl"),
         probeFromDots(col("col"), bits, probes).as("buckets"))
-      .select(col("query_id"), col("tbl"), explode(col("buckets")).as("bucket"))
-    val cB = corpus
-      .select(col(idCol), col(vecCol)).repartition(par, col(idCol)) // 1-row-group scans
-      .select(
-        col(idCol).as("neighbor_id"),
-        transform(tableDots(col(vecCol), planes),
-          dots => bucketFromDots(dots, bits)).as("bks")).persistTracked()
-    val c = cB.select(col("neighbor_id"), posexplode(col("bks")))
-      .withColumnsRenamed(Map("pos" -> "ctbl", "col" -> "cbucket"))
-    val cands = graft.tools.RunMetrics.observedCount("cand_ann_probe",
-        c.join(q,
-          col("tbl") === col("ctbl") && col("bucket") === col("cbucket") &&
-            col("query_id") =!= col("neighbor_id"))
-        .select("query_id", "neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val scored = cands
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec")),
-        "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec")),
-        "neighbor_id")
-      .withColumn("cosine", Vec.cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cosine"))
+      .select(col("id"), col("tbl"), explode(col("buckets")).as("bucket"))
+    val cands = bandJoin(srpBuckets(corpus, idCol, vecCol, tables, bits),
+      "neighbor_id", q, "query_id", (nb, qr) => qr =!= nb, "cand_ann_probe")
+    rankTopK(withCosine(cands, "query_id", queries, "neighbor_id", corpus,
+      idCol, vecCol), k, "cosine", descending = true)
   }
 
   /** SRP-bucketed near-dup pairs over the WHOLE corpus — the 100 TB
@@ -261,7 +254,10 @@ object Knn {
     * the dedup shuffle, and verify with exact cosine ≥ tau — zero
     * false positives, recall bounded by the (numTables, bitsPerTable)
     * LSH family exactly as in `annTopK`. `cosinePairs` below stays
-    * the exact oracle baseline at small scale.
+    * the exact oracle baseline at small scale. The within leg of
+    * [[srpBandVerify]]; its candidate count is observed as `cand_srp`
+    * (the rows the banding join materializes — the number the bucket
+    * census predicts, Σ C(n_b,2) over buckets).
     *
     * Planes are the PORTABLE ±1 family ([[portablePlanes]]): signs,
     * buckets, candidate pairs, and the cosine verify all replay
@@ -270,33 +266,9 @@ object Knn {
     */
   def cosinePairsBucketed(
       df: DataFrame, idCol: String, vecCol: String, tau: Double,
-      numTables: Int = 8, bitsPerTable: Int = AutoBits): DataFrame = {
-    val dimOpt = df.select(size(col(vecCol))).head(1).headOption.map(_.getInt(0))
-    if (dimOpt.isEmpty) // empty corpus: no pairs, not a crash
-      return df.select(col(idCol).as("d1"), col(idCol).as("d2"),
-        lit(0.0).as("cosine")).limit(0)
-    val bits = resolveBits(bitsPerTable, df.count())
-    val tables = portablePlanes(numTables, bits, dimOpt.get)
-    val e = srpBuckets(df, idCol, vecCol, tables, bits)
-    val a = e.select(col("id").as("d1"), col("tbl"), col("bucket"))
-    val b = e.select(col("id").as("d2"), col("tbl").as("tbl2"),
-      col("bucket").as("bucket2"))
-    // candidate count observed for the bench artifact (VERDICT r12
-    // item 5): the rows MATERIALIZED by the banding join — the number
-    // the bucket census predicts (Σ C(n_b,2) over buckets)
-    val cands = graft.tools.RunMetrics.observedCount("cand_srp",
-        a.join(b,
-          col("tbl") === col("tbl2") && col("bucket") === col("bucket2") &&
-            col("d1") < col("d2"))
-        .select("d1", "d2"))
-      .dropDuplicates("d1", "d2")
-    cands
-      .join(df.select(col(idCol).as("d1"), col(vecCol).as("v1")), "d1")
-      .join(df.select(col(idCol).as("d2"), col(vecCol).as("v2")), "d2")
-      .withColumn("cosine", Vec.cosine(col("v1"), col("v2")))
-      .filter(col("cosine") >= tau)
-      .select(col("d1"), col("d2"), col("cosine"))
-  }
+      numTables: Int = 8, bitsPerTable: Int = AutoBits): DataFrame =
+    srpBandVerify(df, df, within = true, idCol, vecCol, tau,
+      numTables, bitsPerTable, "d1", "d2", "cand_srp")
 
   /** (`id`, `tbl`, `bucket`) sign-bucket keys, one row per (row ×
     * table) — the shared SRP banding step. The pre-explode bucket
@@ -305,15 +277,71 @@ object Knn {
     */
   private[graft] def srpBuckets(
       df: DataFrame, idCol: String, vecCol: String,
-      tables: Seq[Seq[Seq[Double]]], bits: Int): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    df.select(col(idCol), col(vecCol)).repartition(par, col(idCol))
+      tables: Seq[Seq[Seq[Double]]], bits: Int): DataFrame =
+    spread(df, idCol, vecCol)
       .select(col(idCol).as("id"),
         transform(tableDots(col(vecCol), planesLit(tables)),
           dots => bucketFromDots(dots, bits)).as("bks"))
       .persistTracked() // bucket arrays materialize before the explode
       .select(col("id"), posexplode(col("bks")))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
+
+  /** (`l`, `r`) id pairs of a `left` and a `right` (`id`, `tbl`,
+    * `bucket`) key frame that share a table's bucket and whose ids
+    * pass `pairCond`; one row per shared bucket, so a pair can repeat.
+    * Its row count is observed as `metric`. The sides join under
+    * aliases, not renamed columns, so no renaming projection sits on
+    * either side of the join.
+    */
+  private def bandJoin(
+      left: DataFrame, l: String, right: DataFrame, r: String,
+      pairCond: (Column, Column) => Column, metric: String): DataFrame =
+    graft.tools.RunMetrics.observedCount(metric,
+      left.as("l").join(right.as("r"),
+          col("l.tbl") === col("r.tbl") && col("l.bucket") === col("r.bucket") &&
+            pairCond(col("l.id"), col("r.id")))
+        .select(col("l.id").as(l), col("r.id").as(r)))
+
+  /** Deduplicated (`l`, `r`) candidates with exact `cosine`: the
+    * vectors re-attach from `left` and `right` by two id-equi joins,
+    * only for the deduped candidates — at dim 768 a vector is ~3 KB,
+    * so carrying it ×numTables through the banding exchange would
+    * dominate the job.
+    */
+  private def withCosine(
+      cands: DataFrame, l: String, left: DataFrame, r: String,
+      right: DataFrame, idCol: String, vecCol: String): DataFrame =
+    cands.dropDuplicates(l, r)
+      .join(left.select(col(idCol).as(l), col(vecCol).as("v1")), l)
+      .join(right.select(col(idCol).as(r), col(vecCol).as("v2")), r)
+      .withColumn("cosine", Vec.cosine(col("v1"), col("v2")))
+
+  /** The shared SRP band-and-verify of [[cosinePairsBucketed]] (the
+    * within leg: `left` and `right` are one frame, banded once, pairs
+    * `l` < `r`) and [[srpPairsAgainstBase]] (the cross leg): band both
+    * sides with ONE portable plane family, bucket-join (`l`, `r`) id
+    * pairs, keep exact cosine ≥ tau. Bits derive from the STANDING
+    * corpus (`right`): an incoming batch is small by nature and must
+    * band with the base's geometry. An empty `left` gives no pairs,
+    * not a crash.
+    */
+  private def srpBandVerify(
+      left: DataFrame, right: DataFrame, within: Boolean,
+      idCol: String, vecCol: String, tau: Double, numTables: Int,
+      bitsPerTable: Int, l: String, r: String, metric: String): DataFrame = {
+    val dimOpt = left.select(size(col(vecCol))).head(1).headOption.map(_.getInt(0))
+    if (dimOpt.isEmpty)
+      return left.select(col(idCol).as(l), col(idCol).as(r),
+        lit(0.0).as("cosine")).limit(0)
+    val bits = resolveBits(bitsPerTable, right.count())
+    val tables = portablePlanes(numTables, bits, dimOpt.get)
+    val bl = srpBuckets(left, idCol, vecCol, tables, bits)
+    val br = if (within) bl else srpBuckets(right, idCol, vecCol, tables, bits)
+    val cands = bandJoin(bl, l, br, r,
+      if (within) _ < _ else (_, _) => lit(true), metric)
+    withCosine(cands, l, left, r, right, idCol, vecCol)
+      .filter(col("cosine") >= tau)
+      .select(col(l), col(r), col("cosine"))
   }
 
   /** INCREMENTAL embedding near-dup: all verified incoming×base pairs
@@ -326,7 +354,8 @@ object Knn {
     * with exact cosine. Together with [[cosinePairsBucketed]] over the
     * batch alone it supplies the delta edge set
     * [[Components.connectedIncremental]] folds into standing cluster
-    * assignments.
+    * assignments. The cross leg of [[srpBandVerify]], observed as
+    * `cand_srp_cross`.
     *
     * 100 TB shape: base-side sign buckets depend only on the base and
     * the fixed plane family, so a production deployment computes them
@@ -338,35 +367,9 @@ object Knn {
     */
   def srpPairsAgainstBase(
       base: DataFrame, incoming: DataFrame, idCol: String, vecCol: String,
-      tau: Double, numTables: Int = 8, bitsPerTable: Int = AutoBits): DataFrame = {
-    val dimOpt = incoming.select(size(col(vecCol)))
-      .head(1).headOption.map(_.getInt(0))
-    if (dimOpt.isEmpty) // empty batch: no pairs, not a crash
-      return incoming.select(col(idCol).as("d_new"), col(idCol).as("d_base"),
-        lit(0.0).as("cosine")).limit(0)
-    // bits derive from the STANDING corpus (the base side): the batch
-    // is small by nature and must band with the base's geometry
-    val bits = resolveBits(bitsPerTable, base.count())
-    val tables = portablePlanes(numTables, bits, dimOpt.get)
-    val bi = srpBuckets(incoming, idCol, vecCol, tables, bits)
-      .withColumnsRenamed(Map("id" -> "d_new"))
-    val bb = srpBuckets(base, idCol, vecCol, tables, bits)
-      .withColumnsRenamed(
-        Map("id" -> "d_base", "tbl" -> "tbl2", "bucket" -> "bucket2"))
-    val cands = graft.tools.RunMetrics.observedCount("cand_srp_cross",
-        bi.join(bb,
-          col("tbl") === col("tbl2") && col("bucket") === col("bucket2"))
-        .select("d_new", "d_base"))
-      .dropDuplicates("d_new", "d_base")
-    cands
-      .join(incoming.select(col(idCol).as("d_new"), col(vecCol).as("v1")),
-        "d_new")
-      .join(base.select(col(idCol).as("d_base"), col(vecCol).as("v2")),
-        "d_base")
-      .withColumn("cosine", Vec.cosine(col("v1"), col("v2")))
-      .filter(col("cosine") >= tau)
-      .select(col("d_new"), col("d_base"), col("cosine"))
-  }
+      tau: Double, numTables: Int = 8, bitsPerTable: Int = AutoBits): DataFrame =
+    srpBandVerify(incoming, base, within = false, idCol, vecCol, tau,
+      numTables, bitsPerTable, "d_new", "d_base", "cand_srp_cross")
 
   /** Cross-corpus embedding decontamination: flag corpus rows whose
     * cosine against ANY benchmark vector clears `tau` — the

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Vec
 
@@ -72,20 +71,6 @@ object Pq {
   private def subvec(vec: Column, j: Column, dsub: Int): Column =
     slice(vec, j * lit(dsub) + lit(1), lit(dsub))
 
-  /** PQ code array (`array<int>`, length m): per subspace, the argmin
-    * codeword with first-min tie-break — the [[Ivf.bucketId]] device
-    * per slice.
-    */
-  def encode(vec: Column, cb: Array[Array[Array[Double]]]): Column = {
-    val dsub = cb(0)(0).length
-    val cbl = codebooksLit(cb)
-    transform(sequence(lit(0), lit(cb.length - 1)), j => {
-      val d = transform(element_at(cbl, j + lit(1)),
-        c => Vec.l2sq(subvec(vec, j, dsub), c))
-      (array_position(d, array_min(d)) - lit(1)).cast("int")
-    })
-  }
-
   /** Per-query ADC lookup table `[m][ksub]`: squared L2 from each
     * query subvector to every codeword — built ONCE per query row
     * (m·ksub folds), after which each candidate costs m array lookups
@@ -98,6 +83,13 @@ object Pq {
       transform(element_at(cbl, j + lit(1)),
         c => Vec.l2sq(subvec(vec, j, dsub), c)))
   }
+
+  /** PQ code array (`array<int>`, length m): per subspace, the argmin
+    * codeword of the vector's own [[adcLut]] row, first-min tie-break
+    * — the [[Ivf.bucketId]] device per slice.
+    */
+  def encode(vec: Column, cb: Array[Array[Array[Double]]]): Column =
+    transform(adcLut(vec, cb), Ivf.argmin(_))
 
   /** ADC distance of one candidate: Σ_j lut[j][code_j], folded in
     * subspace order from an exact 0.0 seed — the oracle's
@@ -116,15 +108,12 @@ object Pq {
   def assignCorpusPq(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]],
-      cb: Array[Array[Array[Double]]]): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus
-      .select(col(idCol), col(vecCol)).repartition(par, col(idCol)) // 1-row-group scans
+      cb: Array[Array[Array[Double]]]): DataFrame =
+    Knn.spread(corpus, idCol, vecCol)
       .select(
         col(idCol).as("neighbor_id"),
         Ivf.bucketId(col(vecCol), centroids).as("bucket"),
         encode(col(vecCol), cb).as("code"))
-  }
 
   /** IVF-PQ ANN top-k: queries probe their `nprobe` nearest coarse
     * buckets of the COMPRESSED index and rank candidates by ADC
@@ -139,13 +128,8 @@ object Pq {
       k: Int, centroids: Array[Array[Double]],
       cb: Array[Array[Array[Double]]], nprobe: Int): DataFrame =
     // the compressed index is MATERIALIZED (constraint-truncated)
-    // before querying, exactly as the production split stores it: a
-    // lazy fused plan would carry `bucket <=> argmin(embedding)` as an
-    // alias constraint that crosses the join equality onto the query
-    // side as an inferred filter over the (routinely shared) vector
-    // attribute — which the LUT-only query side has pruned, an
-    // unresolvable plan. The index is ~m ints + a bucket per row, the
-    // smallest frame in the pipeline by construction.
+    // before querying, for the reason Ivf.annTopKWith gives; it is ~m
+    // ints + a bucket per row, the smallest frame in the pipeline
     annTopKPqAssigned(
       graft.CacheScope.localCheckpointTruncated(
         assignCorpusPq(corpus, idCol, vecCol, centroids, cb)),
@@ -170,14 +154,10 @@ object Pq {
       centroids, cb, nprobe).select(col("query_id"), col("neighbor_id"))
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val nv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2"), col("neighbor_id"))
-    short.join(qv, "query_id").join(nv, "neighbor_id")
-      .withColumn("l2", Vec.l2sq(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("l2"))
+    Knn.rankTopK(
+      short.join(qv, "query_id").join(nv, "neighbor_id")
+        .withColumn("l2", Vec.l2sq(col("qv"), col("nv"))),
+      k, "l2", descending = false)
   }
 
   /** [[annTopKPq]] from a PRECOMPUTED compressed index (the stored
@@ -186,36 +166,10 @@ object Pq {
   def annTopKPqAssigned(
       assigned: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, centroids: Array[Array[Double]],
-      cb: Array[Array[Array[Double]]], nprobe: Int): DataFrame = {
-    // probe buckets + LUT are CHECKPOINTED (not just persisted) before
-    // the explode: beyond the usual re-evaluation concern
-    // (Ivf.annTopKAssigned), corpus and queries are routinely slices
-    // of the SAME table, and the corpus projection's
-    // `bucket = argmin(...)` alias constraint then crosses the join
-    // equality onto the query side as an inferred filter over the
-    // SHARED vector attribute — which this side's LUT-only projection
-    // has pruned (unlike Ivf's, which still carries the raw vector),
-    // leaving an unresolvable predicate. Severing the lineage gives
-    // the query side fresh attributes no cross-side constraint can
-    // reference. Cost is bounded by the query set (one LUT row per
-    // query), never the corpus.
-    val qB = graft.CacheScope.localCheckpointTruncated(queries.select(
-      col(idCol).as("query_id"),
-      adcLut(col(vecCol), cb).as("lut"),
-      Ivf.probeBuckets(col(vecCol), centroids, nprobe).as("qbuckets")))
-    val q = qB.select(col("query_id"), col("lut"),
-      explode(col("qbuckets")).as("qbucket"))
-    val scored = graft.tools.RunMetrics.observedCount("cand_ivfpq",
-        assigned.join(q,
-          col("bucket") === col("qbucket") &&
-            col("query_id") =!= col("neighbor_id")))
-      .withColumn("adc", adc(col("lut"), col("code")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("adc"))
-  }
+      cb: Array[Array[Array[Double]]], nprobe: Int): DataFrame =
+    Knn.rankTopK(
+      Ivf.probeJoin(assigned, queries, idCol, vecCol, centroids, nprobe,
+          "cand_ivfpq", adcLut(col(vecCol), cb).as("lut"))
+        .withColumn("adc", adc(col("lut"), col("code"))),
+      k, "adc", descending = false)
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Knn
@@ -15,7 +16,7 @@ object VectorQueries {
     knnAnn, knnIvf, knnIvfPq, clusterSample, semDedup, hybridRrf,
     embedDecontaminate)
 
-  /** The trained IVF centroid fixture's location — ABSOLUTE so the
+  /** A trained-model fixture's location — ABSOLUTE so the
     * DuckDB oracle (whose working directory is the driver's, not
     * sbt's) reads the exact doubles the Spark query indexed with, and
     * keyed DETERMINISTICALLY by the dataset dir: the oracle thunk
@@ -24,11 +25,9 @@ object VectorQueries {
     * each read their own fixture — no last-run-wins slot to clobber
     * (ADVICE r13).
     */
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
-
-  private def ivfCentroidDir(tag: String): String =
-    new java.io.File(s"target/tmp/ivf_centroids_$tag").getAbsolutePath
+  private def fixtureDir(name: String, dir: String): String =
+    new java.io.File(s"target/tmp/${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
+      .getAbsolutePath
 
   /** SRP bits/table the queries RAN with, per dataset dir — recorded
     * at run time, read back by the oracle thunks for [[Q.renderDir]]
@@ -90,7 +89,7 @@ object VectorQueries {
       graft.operators.Pq.trainCodebooks(
         Tables.embeddings(s, dir), "embedding", m = 8, ksub = 64))
 
-  /** Run `write` once per (JVM, path), marking the path done only
+  /** Write `rows` once per (JVM, path), marking the path done only
     * AFTER the write succeeds (ADVICE r15: flag-before-write left a
     * failed write permanently skipped, so later invocations replayed
     * the oracle against a missing/stale fixture). Synchronized per
@@ -100,25 +99,57 @@ object VectorQueries {
     * makes a second caller wait for — not race past — the write,
     * while a failed write leaves the flag unset for retry).
     */
-  private def writeFixtureOnce(path: String)(write: => Unit): Unit =
+  private def writeFixtureOnce(path: String)(rows: => DataFrame): Unit =
     fixtureLocks.getOrElseUpdate(path, new Object).synchronized {
       if (!fixtureWritten.contains(path)) {
-        write
+        rows.coalesce(1).write.mode("overwrite").parquet(path)
         fixtureWritten.put(path, true)
       }
     }
 
-  /** Write the centroid fixture for one oracle once per (JVM, path). */
-  private def writeCentFixture(
-      s: org.apache.spark.sql.SparkSession, path: String,
-      cents: Array[Array[Double]]): Unit =
-    writeFixtureOnce(path) {
+  /** The dataset's trained centroids, written once per (JVM, dir) to
+    * the ONE centroid fixture (`ivf_centroids_<tag>`) that every
+    * centroid oracle reads through [[centroidCtes]].
+    */
+  private def centroidFixture(
+      s: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Double]] = {
+    val cents = trainedCentroids(s, dir)
+    writeFixtureOnce(fixtureDir("ivf_centroids", dir)) {
       import s.implicits._
-      cents.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toSeq) }
-        .toDF("cid", "c")
-        .coalesce(1).write.mode("overwrite").parquet(path)
+      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cid", "c")
     }
+    cents
+  }
+
+  /** The centroid-assignment replay as DuckDB CTEs over the centroid
+    * fixture: `cent` (the fixture), `dist` (sequential-fold squared L2
+    * per (row, centroid)), `cbucket` (each row's argmin centroid, in
+    * the column named `bucket`, first-min tie-break); `also` is spliced
+    * in after `cent`.
+    */
+  private def centroidCtes(bucket: String, also: String = ""): String =
+    s"""cent AS (
+       |  SELECT cid, c FROM read_parquet('${fixtureDir("ivf_centroids", Q.renderDir)}/*.parquet')
+       |)$also, dist AS (
+       |  SELECT e.vec_id AS id, ct.cid,
+       |    list_reduce(list_transform(range(1, len(e.embedding)+1),
+       |      i -> (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])
+       |         * (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])),
+       |      (x, y) -> x + y) AS d
+       |  FROM embeddings e CROSS JOIN cent ct
+       |), cbucket AS (
+       |  SELECT id, cid AS $bucket FROM dist
+       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) = 1
+       |)""".stripMargin
+
+  /** The nprobe = 4 probe buckets of the query rows (id < 10) in
+    * (distance, cid) order, over [[centroidCtes]]' `dist`.
+    */
+  private def qprobeCte: String =
+    """qprobe AS (
+      |  SELECT id, cid AS bucket FROM dist WHERE id < 10
+      |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) <= 4
+      |)""".stripMargin
 
   private def recordSrpBits(dir: String, n: Long): Int = {
     val bits = Knn.adaptiveBits(n)
@@ -141,28 +172,13 @@ object VectorQueries {
     */
   val knnIvf: Q = Q(
     "q_knn_ivf",
-    s"""WITH cent AS (
-       |  SELECT cid, c FROM read_parquet('${ivfCentroidDir(dirTag(Q.renderDir))}/*.parquet')
-       |), dist AS (
-       |  SELECT e.vec_id AS id, ct.cid,
-       |    list_reduce(list_transform(range(1, len(e.embedding)+1),
-       |      i -> (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])
-       |         * (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])),
-       |      (x, y) -> x + y) AS d
-       |  FROM embeddings e CROSS JOIN cent ct
-       |), cbucket AS (
-       |  SELECT id, cid AS bucket FROM dist
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) = 1
-       |), qprobe AS (
-       |  SELECT id, cid AS bucket FROM dist WHERE id < 10
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) <= 4
-       |), cand AS (
+    s"""WITH ${centroidCtes("bucket")}, $qprobeCte, cand AS (
        |  SELECT q.id AS query_id, c.id AS neighbor_id
        |  FROM qprobe q JOIN cbucket c ON q.bucket = c.bucket
        |    AND q.id <> c.id
        |), scored AS (
        |  SELECT cand.query_id, cand.neighbor_id,
-       |    ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} AS cosine
+       |    ${cosineSql("ea.embedding", "eb.embedding")} AS cosine
        |  FROM cand
        |  JOIN embeddings ea ON ea.vec_id = cand.query_id
        |  JOIN embeddings eb ON eb.vec_id = cand.neighbor_id
@@ -178,16 +194,12 @@ object VectorQueries {
     // r13 census measured; the oracle reads whatever centroid count
     // the fixture carries, so no SQL change rides along); trained and
     // fixture-written once per (JVM, dir) — ADVICE r14
-    val centroids = trainedCentroids(s, dir)
-    writeCentFixture(s, ivfCentroidDir(dirTag(dir)), centroids)
+    val centroids = centroidFixture(s, dir)
     Ivf.annTopKWith(
       emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
       k = 5, centroids, nprobe = 4)
       .orderBy(col("query_id"), col("rank"))
   }
-
-  private def clusterCentDir(tag: String): String =
-    new java.io.File(s"target/tmp/cluster_centroids_$tag").getAbsolutePath
 
   /** Semantic-diversity sampling: k-means cluster the embedding corpus
     * (the q_knn_ivf training device — deterministic Lloyd, adaptive
@@ -203,19 +215,7 @@ object VectorQueries {
     */
   val clusterSample: Q = Q(
     "q_cluster_sample",
-    s"""WITH cent AS (
-       |  SELECT cid, c FROM read_parquet('${clusterCentDir(dirTag(Q.renderDir))}/*.parquet')
-       |), dist AS (
-       |  SELECT e.vec_id AS id, ct.cid,
-       |    list_reduce(list_transform(range(1, len(e.embedding)+1),
-       |      i -> (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])
-       |         * (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])),
-       |      (x, y) -> x + y) AS d
-       |  FROM embeddings e CROSS JOIN cent ct
-       |), cbucket AS (
-       |  SELECT id, cid AS cluster FROM dist
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) = 1
-       |)
+    s"""WITH ${centroidCtes("cluster")}
        |SELECT cluster, n_cluster, vec_id FROM (
        |  SELECT cluster, id AS vec_id,
        |    CAST(COUNT(*) OVER (PARTITION BY cluster) AS BIGINT) AS n_cluster,
@@ -227,8 +227,7 @@ object VectorQueries {
     import graft.operators.Ivf
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, dir)
-    val centroids = trainedCentroids(s, dir)
-    writeCentFixture(s, clusterCentDir(dirTag(dir)), centroids)
+    val centroids = centroidFixture(s, dir)
     val assigned = emb.select(col("vec_id"),
       Ivf.bucketId(col("embedding"), centroids).as("cluster"))
     assigned
@@ -240,9 +239,6 @@ object VectorQueries {
       .select(col("cluster"), col("n_cluster"), col("vec_id"))
       .orderBy(col("cluster"), col("vec_id"))
   }
-
-  private def semDedupCentDir(tag: String): String =
-    new java.io.File(s"target/tmp/semdedup_centroids_$tag").getAbsolutePath
 
   /** SEMANTIC deduplication, SemDeDup-style (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic
@@ -263,19 +259,7 @@ object VectorQueries {
     */
   val semDedup: Q = Q(
     "q_semdedup",
-    s"""WITH cent AS (
-       |  SELECT cid, c FROM read_parquet('${semDedupCentDir(dirTag(Q.renderDir))}/*.parquet')
-       |), dist AS (
-       |  SELECT e.vec_id AS id, ct.cid,
-       |    list_reduce(list_transform(range(1, len(e.embedding)+1),
-       |      i -> (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])
-       |         * (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])),
-       |      (x, y) -> x + y) AS d
-       |  FROM embeddings e CROSS JOIN cent ct
-       |), cbucket AS (
-       |  SELECT id, cid AS cluster FROM dist
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) = 1
-       |), pairs AS (
+    s"""WITH ${centroidCtes("cluster")}, pairs AS (
        |  SELECT a.id AS a_id, b.id AS b_id
        |  FROM cbucket a JOIN cbucket b
        |    ON a.cluster = b.cluster AND a.id < b.id
@@ -284,7 +268,7 @@ object VectorQueries {
        |  FROM pairs p
        |  JOIN embeddings ea ON ea.vec_id = p.a_id
        |  JOIN embeddings eb ON eb.vec_id = p.b_id
-       |  WHERE ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} >= 0.4
+       |  WHERE ${cosineSql("ea.embedding", "eb.embedding")} >= 0.4
        |)
        |SELECT c.id AS vec_id, c.cluster, (d.b_id IS NULL) AS is_kept
        |FROM cbucket c LEFT JOIN dup d ON c.id = d.b_id
@@ -292,8 +276,7 @@ object VectorQueries {
     import graft.operators.Ivf
     import graft.functions.Vec
     val emb = Tables.embeddings(s, dir)
-    val centroids = trainedCentroids(s, dir)
-    writeCentFixture(s, semDedupCentDir(dirTag(dir)), centroids)
+    val centroids = centroidFixture(s, dir)
     // constraint-truncated like annTopKWith: the cluster = argmin
     // alias constraint must not cross the self-join
     val assigned = graft.CacheScope.localCheckpointTruncated(
@@ -316,11 +299,11 @@ object VectorQueries {
       .orderBy(col("vec_id"))
   }
 
-  private def pqCentDir(tag: String): String =
-    new java.io.File(s"target/tmp/pq_centroids_$tag").getAbsolutePath
-
-  private def pqCbDir(tag: String): String =
-    new java.io.File(s"target/tmp/pq_codebooks_$tag").getAbsolutePath
+  /** The PQ codebook fixture as the `cb` CTE. */
+  private def pqCodebookCte: String =
+    s""", cb AS (
+       |  SELECT sub, cid, c FROM read_parquet('${fixtureDir("pq_codebooks", Q.renderDir)}/*.parquet')
+       |)""".stripMargin
 
   /** IVF-PQ ANN top-5 with exact refinement ([[graft.operators.Pq]])
     * — the MEMORY side of the ANN scale path: the index stores m = 8
@@ -339,24 +322,7 @@ object VectorQueries {
     */
   val knnIvfPq: Q = Q(
     "q_knn_ivfpq",
-    s"""WITH cent AS (
-       |  SELECT cid, c FROM read_parquet('${pqCentDir(dirTag(Q.renderDir))}/*.parquet')
-       |), cb AS (
-       |  SELECT sub, cid, c FROM read_parquet('${pqCbDir(dirTag(Q.renderDir))}/*.parquet')
-       |), dist AS (
-       |  SELECT e.vec_id AS id, ct.cid,
-       |    list_reduce(list_transform(range(1, len(e.embedding)+1),
-       |      i -> (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])
-       |         * (CAST(e.embedding[i] AS DOUBLE) - ct.c[i])),
-       |      (x, y) -> x + y) AS d
-       |  FROM embeddings e CROSS JOIN cent ct
-       |), cbucket AS (
-       |  SELECT id, cid AS bucket FROM dist
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) = 1
-       |), qprobe AS (
-       |  SELECT id, cid AS bucket FROM dist WHERE id < 10
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, cid) <= 4
-       |), subdist AS (
+    s"""WITH ${centroidCtes("bucket", also = pqCodebookCte)}, $qprobeCte, subdist AS (
        |  -- subspace width derives from the CODEBOOK fixture (len(cb.c)),
        |  -- not a hardcoded 8: if the trained shape ever changes, the
        |  -- oracle tracks it instead of silently mis-slicing (ADVICE r14)
@@ -401,15 +367,13 @@ object VectorQueries {
        |ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
     import graft.operators.Pq
     val emb = Tables.embeddings(s, dir)
-    val centroids = trainedCentroids(s, dir)
+    val centroids = centroidFixture(s, dir)
     val cb = trainedCodebooks(s, dir)
-    writeCentFixture(s, pqCentDir(dirTag(dir)), centroids)
-    writeFixtureOnce(pqCbDir(dirTag(dir))) {
+    writeFixtureOnce(fixtureDir("pq_codebooks", dir)) {
       import s.implicits._
       cb.zipWithIndex.flatMap { case (cents, j) =>
           cents.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) } }.toSeq
         .toDF("sub", "cid", "c")
-        .coalesce(1).write.mode("overwrite").parquet(pqCbDir(dirTag(dir)))
     }
     Pq.annTopKPqRefined(
       emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -417,12 +381,13 @@ object VectorQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  // lazy: referenced by knnIvf's oracle ABOVE its declaration point —
-  // object vals otherwise initialize strictly in order
-  private lazy val cosineSql =
-    """list_reduce(list_transform(range(1, len(E1)+1), i -> CAST(E1[i] AS DOUBLE)*CAST(E2[i] AS DOUBLE)), (x,y) -> x+y)
-      | / (sqrt(list_reduce(list_transform(range(1, len(E1)+1), i -> CAST(E1[i] AS DOUBLE)*CAST(E1[i] AS DOUBLE)), (x,y) -> x+y))
-      |    * sqrt(list_reduce(list_transform(range(1, len(E2)+1), i -> CAST(E2[i] AS DOUBLE)*CAST(E2[i] AS DOUBLE)), (x,y) -> x+y)))"""
+  /** The sequential-fold cosine of two embedding expressions — the
+    * oracle twin of [[graft.functions.Vec.cosine]].
+    */
+  private def cosineSql(a: String, b: String): String =
+    s"""list_reduce(list_transform(range(1, len($a)+1), i -> CAST($a[i] AS DOUBLE)*CAST($b[i] AS DOUBLE)), (x,y) -> x+y)
+      | / (sqrt(list_reduce(list_transform(range(1, len($a)+1), i -> CAST($a[i] AS DOUBLE)*CAST($a[i] AS DOUBLE)), (x,y) -> x+y))
+      |    * sqrt(list_reduce(list_transform(range(1, len($b)+1), i -> CAST($b[i] AS DOUBLE)*CAST($b[i] AS DOUBLE)), (x,y) -> x+y)))"""
       .stripMargin.replace("\n", "")
 
   /** Embedding near-dup pairs: cosine ≥ 0.4 over all id-ordered pairs
@@ -431,25 +396,14 @@ object VectorQueries {
   val cosinePairs: Q = Q(
     "q_embed_cosine_pairs",
     s"""SELECT a.vec_id AS d1, b.vec_id AS d2,
-       |  ${cosineSql.replace("E1", "a.embedding").replace("E2", "b.embedding")} AS cosine
+       |  ${cosineSql("a.embedding", "b.embedding")} AS cosine
        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       |WHERE ${cosineSql.replace("E1", "a.embedding").replace("E2", "b.embedding")} >= 0.4
+       |WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.4
        |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
     Knn.cosinePairs(Tables.embeddings(s, dir), "vec_id", "embedding", 0.4)
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** SRP-bucketed near-dup pairs — the catalog's SCALE default for
-    * whole-corpus embedding dedup (`q_embed_cosine_pairs` stays the
-    * brute-force baseline; the DedupSpec proves subset-of-exact +
-    * recall). A FULL oracle gate since the planes moved to the
-    * portable ±1 family ([[Knn.portablePlanes]]): the oracle rebuilds
-    * every plane from the same PolyHash integer recurrence
-    * (`hb = polyhash(t, bit)`; per component `x = (hb·A + i) mod M`,
-    * sign = `x² mod M < M/2`), multiplication by ±1.0 is IEEE-exact,
-    * and both engines fold the products sequentially — so buckets,
-    * candidate pairs, and cosines replay bit-for-bit.
-    */
   /** The portable-plane sign-bucket pipeline as DuckDB CTEs (`p` =
     * planes, `dots` = per-(row, table, bit) margins, `bk` = per-(row,
     * table) sign buckets) — shared by the whole-corpus and incremental
@@ -479,6 +433,17 @@ object VectorQueries {
        |)""".stripMargin
   }
 
+  /** SRP-bucketed near-dup pairs — the catalog's SCALE default for
+    * whole-corpus embedding dedup (`q_embed_cosine_pairs` stays the
+    * brute-force baseline; the DedupSpec proves subset-of-exact +
+    * recall). A FULL oracle gate since the planes moved to the
+    * portable ±1 family ([[Knn.portablePlanes]]): the oracle rebuilds
+    * every plane from the same PolyHash integer recurrence
+    * (`hb = polyhash(t, bit)`; per component `x = (hb·A + i) mod M`,
+    * sign = `x² mod M < M/2`), multiplication by ±1.0 is IEEE-exact,
+    * and both engines fold the products sequentially — so buckets,
+    * candidate pairs, and cosines replay bit-for-bit.
+    */
   val srpPairs: Q = Q(
     "q_embed_srp_pairs",
     s"""WITH ${srpBucketCtes(srpBitsForRender)}, cand AS (
@@ -486,11 +451,11 @@ object VectorQueries {
        |  FROM bk a JOIN bk b2 ON a.t = b2.t AND a.bucket = b2.bucket AND a.id < b2.id
        |)
        |SELECT c.d1, c.d2,
-       |  ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} AS cosine
+       |  ${cosineSql("ea.embedding", "eb.embedding")} AS cosine
        |FROM cand c
        |JOIN embeddings ea ON ea.vec_id = c.d1
        |JOIN embeddings eb ON eb.vec_id = c.d2
-       |WHERE ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} >= 0.4
+       |WHERE ${cosineSql("ea.embedding", "eb.embedding")} >= 0.4
        |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
     Knn.cosinePairsBucketed(emb, "vec_id", "embedding", 0.4,
@@ -514,11 +479,11 @@ object VectorQueries {
        |  WHERE a.id % 5 = 0 AND b2.id % 5 <> 0
        |)
        |SELECT c.d_new, c.d_base,
-       |  ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} AS cosine
+       |  ${cosineSql("ea.embedding", "eb.embedding")} AS cosine
        |FROM cand c
        |JOIN embeddings ea ON ea.vec_id = c.d_new
        |JOIN embeddings eb ON eb.vec_id = c.d_base
-       |WHERE ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} >= 0.4
+       |WHERE ${cosineSql("ea.embedding", "eb.embedding")} >= 0.4
        |ORDER BY d_new, d_base""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
     // the oracle's CTEs band the WHOLE table with one bit count, so
@@ -540,7 +505,7 @@ object VectorQueries {
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
        |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
        |scored AS (SELECT query_id, neighbor_id,
-       |    ${cosineSql.replace("E1", "qv").replace("E2", "nv")} AS cosine
+       |    ${cosineSql("qv", "nv")} AS cosine
        |  FROM q JOIN c ON query_id <> neighbor_id)
        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine
        |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -580,7 +545,7 @@ object VectorQueries {
        |    AND q.id <> c.id
        |), scored AS (
        |  SELECT cand.query_id, cand.neighbor_id,
-       |    ${cosineSql.replace("E1", "ea.embedding").replace("E2", "eb.embedding")} AS cosine
+       |    ${cosineSql("ea.embedding", "eb.embedding")} AS cosine
        |  FROM cand
        |  JOIN embeddings ea ON ea.vec_id = cand.query_id
        |  JOIN embeddings eb ON eb.vec_id = cand.neighbor_id
@@ -627,7 +592,7 @@ object VectorQueries {
        |qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0),
        |vscore AS (
        |  SELECT e.vec_id AS id,
-       |    ${cosineSql.replace("E1", "e.embedding").replace("E2", "qv.q")} AS cosine
+       |    ${cosineSql("e.embedding", "qv.q")} AS cosine
        |  FROM embeddings e CROSS JOIN qv WHERE e.vec_id <> 0),
        |vrank AS (
        |  SELECT id, ROW_NUMBER() OVER (ORDER BY cosine DESC, id) AS vr
@@ -677,7 +642,6 @@ object VectorQueries {
     * per contaminated corpus id with hit count and max cosine. The
     * oracle recomputes the same broadcast-join-then-aggregate from the
     * brute-force pair set with the identical sequential cosine fold.
-    * (Declared after `cosineSql`: object vals initialize in order.)
     */
   val embedDecontaminate: Q = Q(
     "q_embed_decontaminate",
@@ -686,7 +650,7 @@ object VectorQueries {
        |c AS (SELECT vec_id, embedding AS cv
        |    FROM embeddings WHERE vec_id % 20 <> 0),
        |scored AS (SELECT c.vec_id,
-       |    ${cosineSql.replace("E1", "cv").replace("E2", "bv")} AS cosine
+       |    ${cosineSql("cv", "bv")} AS cosine
        |  FROM c JOIN b ON c.vec_id <> b.bench_id)
        |SELECT vec_id, COUNT(*) AS n_hits, MAX(cosine) AS max_cosine
        |FROM scored WHERE cosine >= 0.4

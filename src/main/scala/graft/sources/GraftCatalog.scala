@@ -553,9 +553,6 @@ private[sources] object GraftProcedures {
   private def spark: SparkSession = SparkSession.active
 
   /** One self-describing procedure: binds to its declared parameters
-    * and runs `body` over the (coerced) argument row.
-    */
-  /** One self-describing procedure: binds to its declared parameters
     * and runs `body` over the (coerced) argument row; `body` returns
     * result ROWS as value sequences matching `resultType`.
     */

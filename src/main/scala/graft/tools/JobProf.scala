@@ -46,8 +46,8 @@ object JobProf {
       }
       spark.sparkContext.addSparkListener(l)
       val (_, wall) = Exec.timed(spark)(query(spark, dir))
-      // listener bus is async; give it a beat to drain
-      Thread.sleep(500)
+      // listener bus is async: wait (bounded) until it has drained
+      org.apache.spark.GraftSparkBridge.flushListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
       import scala.jdk.CollectionConverters._
       val rows = done.asScala.toSeq.sortBy(_._2)

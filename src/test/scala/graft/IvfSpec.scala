@@ -192,4 +192,41 @@ class IvfSpec extends SparkSpec {
     assert(after <= before,
       s"${after - before} RDDs resident after release (frame: ${ann.columns.mkString(",")})")
   }
+
+  test("nprobe = every centroid: annTopKWith equals bruteForceTopK row for row") {
+    // probing all buckets makes every other row a candidate, so the IVF
+    // kernel must rank exactly what the brute-force baseline ranks —
+    // same ids, same ranks, bit-equal cosines
+    val queries = emb.filter(col("vec_id") < 10)
+    val cents = Ivf.trainCentroids(emb, "embedding", 16)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank").collect().toSeq.map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+    val brute = rows(graft.operators.Knn
+      .bruteForceTopK(emb, queries, "vec_id", "embedding", 5))
+    val ivf = rows(Ivf.annTopKWith(
+      emb, queries, "vec_id", "embedding", 5, cents, nprobe = cents.length))
+    assert(brute.size == 50)
+    assert(ivf == brute)
+  }
+
+  test("the vector queries leave no RDD resident") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Seq("q_knn_ann", "q_knn_ivf", "q_knn_ivfpq", "q_semdedup",
+        "q_cluster_sample", "q_embed_srp_pairs", "q_embed_incremental").foreach { q =>
+      // the frame stays reachable while the count is taken:
+      // getPersistentRDDs holds RDDs weakly, so an unreachable frame's
+      // leaked blocks could drop out of it and pass unseen
+      val df = CacheScope.scoped(spark) {
+        val d = SparkEntry.queries(q)(spark, sf)
+        assert(d.collect().nonEmpty, q)
+        d
+      }
+      assert(sc.getPersistentRDDs.size <= before,
+        s"$q left ${sc.getPersistentRDDs.size - before} RDDs resident " +
+          s"(frame: ${df.columns.mkString(",")})")
+    }
+  }
 }
