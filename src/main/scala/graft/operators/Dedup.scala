@@ -511,29 +511,22 @@ object Dedup {
   def simhashPairs(sigs: DataFrame, idCol: String, maxDist: Int): DataFrame =
     hammingPairs(sigs, idCol, "simhash", maxDist)
 
-  /** Near-dup pairs over ANY 64-bit signature column (SimHash, image
-    * dHash, …) with Hamming distance ≤ maxDist (≤ 6). Banding by
-    * pigeonhole over r-of-m block COMBINATIONS ([[hamGeometryFor]]:
-    * 3-of-6 for d ≤ 3, 4-of-8 for d = 4, 4-of-10 for d ≤ 6): distance
-    * ≤ m − r ⇒ some combination of r blocks is identical, so
-    * candidates join on (combination index, block-value tuple) —
-    * never all-pairs, and the key space is wide enough that
-    * candidates stay dup-driven at 10⁸-doc corpora.
-    *
-    * Block coverage is bits 0..61 — the 62-bit SimHash layout all
-    * three geometries share (ADVICE r13). RECALL for true 64-bit
-    * signatures (image dHash) is still exact: a flip in bits 62-63
-    * never breaks a block-combination equality (those bits are in no
-    * block), and the final `bit_count` filter measures all 64 bits —
-    * so uncovered flips only consume distance budget, never hide a
-    * pair. The cost is selectivity, not correctness: bits 62-63
-    * contribute nothing to the banding key, so two signatures equal
-    * on 0..61 but apart on 62-63 still become a candidate and are
-    * dropped by the exact filter. A signature family with real
-    * entropy in the top 2 bits that measures candidate inflation in
-    * the census should band with a custom 64-bit-covering
-    * [[HamGeometry]] instead.
+  /** An r-of-m combination-banding geometry: the signature splits into
+    * `widths.length` = m blocks; a candidate key is a combination of
+    * `r` block values. Pigeonhole recall: distance d touches ≤ d
+    * blocks, so with d ≤ m − r some r-combination survives intact —
+    * zero false negatives up to [[maxDist]]. Key width = the r widest
+    * blocks' sum; combination count = C(m, r) banding rows per doc —
+    * the usual LSH trade (wider radius ⇒ more rows and narrower keys,
+    * the census gates the saturation).
     */
+  private[graft] final case class HamGeometry(widths: Seq[Int], r: Int) {
+    val offsets: Seq[Int] = widths.scanLeft(0)(_ + _).init
+    val combos: Seq[Seq[Int]] =
+      widths.indices.combinations(r).map(_.toSeq).toSeq
+    def maxDist: Int = widths.length - r
+  }
+
   /** The Hamming-banding block geometry (Manku et al., "Detecting
     * Near-Duplicates for Web Crawling", WWW'07 §3): the 62-bit
     * signature splits into SIX blocks (widths 11,11,10,10,10,10), and
@@ -551,35 +544,10 @@ object Dedup {
     * out by ~2^15: the uniform floor at 10⁶ docs is ~5k pairs, so
     * candidates stay dup-driven at corpus sizes where single blocks
     * have long since gone quadratic — at the cost of 20 banding rows
-    * per doc instead of 4 (constant factor, the LSH trade).
+    * per doc instead of 4 (constant factor, the LSH trade). The
+    * q_simhash_pairs oracle renders its banding from this value.
     */
-  private[graft] val HamWidths: Seq[Int] = Seq(11, 11, 10, 10, 10, 10)
-  private[graft] val HamOffsets: Seq[Int] =
-    HamWidths.scanLeft(0)(_ + _).init
-  private[graft] val HamCombos: Seq[Seq[Int]] =
-    (0 until 6).combinations(3).map(_.toSeq).toSeq
-
-  /** An r-of-m combination-banding geometry: the signature splits into
-    * `widths.length` = m blocks; a candidate key is a combination of
-    * `r` block values. Pigeonhole recall: distance d touches ≤ d
-    * blocks, so with d ≤ m − r some r-combination survives intact —
-    * zero false negatives up to [[maxDist]]. Key width = the r widest
-    * blocks' sum; combination count = C(m, r) banding rows per doc —
-    * the usual LSH trade (wider radius ⇒ more rows and narrower keys,
-    * the census gates the saturation).
-    */
-  private[graft] final case class HamGeometry(widths: Seq[Int], r: Int) {
-    val offsets: Seq[Int] = widths.scanLeft(0)(_ + _).init
-    val combos: Seq[Seq[Int]] =
-      widths.indices.combinations(r).map(_.toSeq).toSeq
-    def maxDist: Int = widths.length - r
-  }
-
-  /** d ≤ 3: the established 3-of-6 geometry (Manku WWW'07) — MUST stay
-    * bit-identical to [[HamWidths]]/[[HamOffsets]]/[[HamCombos]], which
-    * the q_simhash_pairs/q_image_neardup oracles regenerate from.
-    */
-  private[graft] val HamGeo3 = HamGeometry(HamWidths, 3)
+  private[graft] val HamGeo3 = HamGeometry(Seq(11, 11, 10, 10, 10, 10), 3)
 
   /** d = 4: 4-of-8 (C(8,4) = 70 combinations, ~31-bit keys). */
   private[graft] val HamGeo4 = HamGeometry(Seq(8, 8, 8, 8, 8, 8, 7, 7), 4)
@@ -604,21 +572,53 @@ object Dedup {
     * is the combination index, `blkval` the combination's block values
     * as an equality-joinable array<long> (also the census surface:
     * `Census.of(blocks, Seq("blk", "blkval"))`).
+    *
+    * Each of the m block values is computed once per row into
+    * `__blocks`; the combination keys then index it through a literal
+    * index array. Spelling every combination out as its own array of
+    * shift-and-mask expressions (210 × 4 for [[HamGeo6]]) generates
+    * Java past the 64 KB method limit, and Spark then runs the stage
+    * without whole-stage codegen.
     */
   private[graft] def hammingBlocks(
       sigs: DataFrame, idCol: String, sigCol: String,
       geo: HamGeometry = HamGeo3): DataFrame = {
-    def block(i: Int): Column =
+    val blocks = geo.widths.indices.map(i =>
       shiftright(col(sigCol), geo.offsets(i))
-        .bitwiseAND(lit((1L << geo.widths(i)) - 1))
+        .bitwiseAND(lit((1L << geo.widths(i)) - 1)))
     sigs.select(
-      col(idCol).as("id"), col(sigCol).as("simhash"),
-      posexplode(array(geo.combos.map(c =>
-        array(c.map(block): _*)): _*)))
+        col(idCol).as("id"), col(sigCol).as("simhash"),
+        array(blocks: _*).as("__blocks"))
+      .select(col("id"), col("simhash"),
+        posexplode(transform(typedLit(geo.combos),
+          c => transform(c, i => col("__blocks").getItem(i)))))
       .withColumnRenamed("pos", "blk")
       .withColumnRenamed("col", "blkval")
   }
 
+  /** Near-dup pairs over ANY 64-bit signature column (SimHash, image
+    * dHash, …) with Hamming distance ≤ maxDist (≤ 6). Banding by
+    * pigeonhole over r-of-m block COMBINATIONS ([[hamGeometryFor]]:
+    * 3-of-6 for d ≤ 3, 4-of-8 for d = 4, 4-of-10 for d ≤ 6): distance
+    * ≤ m − r ⇒ some combination of r blocks is identical, so
+    * candidates join on (combination index, block-value tuple) —
+    * never all-pairs, and the key space is wide enough that
+    * candidates stay dup-driven at 10⁸-doc corpora.
+    *
+    * Block coverage is bits 0..61 — the 62-bit SimHash layout all
+    * three geometries share (ADVICE r13). RECALL for true 64-bit
+    * signatures (image dHash) is still exact: a flip in bits 62-63
+    * never breaks a block-combination equality (those bits are in no
+    * block), and the final `bit_count` filter measures all 64 bits —
+    * so uncovered flips only consume distance budget, never hide a
+    * pair. The cost is selectivity, not correctness: bits 62-63
+    * contribute nothing to the banding key, so two signatures equal
+    * on 0..61 but apart on 62-63 still become a candidate and are
+    * dropped by the exact filter. A signature family with real
+    * entropy in the top 2 bits that measures candidate inflation in
+    * the census should band with a custom 64-bit-covering
+    * [[HamGeometry]] instead.
+    */
   def hammingPairs(
       sigs: DataFrame, idCol: String, sigCol: String, maxDist: Int): DataFrame = {
     val geo = hamGeometryFor(maxDist)

@@ -75,7 +75,7 @@ object CdcQueries {
       Cdc.emptyTarget(feed, keys, data),
       Cdc.range(feed, "lsn", Long.MinValue, mid), keys, data)
     // deterministic per-dir root: create() reinitializes it each run
-    val root = s"target/tmp/cdc_tx_q_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val root = Fixtures.path("cdc_tx_q", dir)
     TxTable.create(
       snapshot.withColumn("bucket", bucketOf(snapshot)), root, Some("bucket"))
     Cdc.applyTx(s, root, Cdc.range(feed, "lsn", mid, maxLsn),
@@ -108,17 +108,15 @@ object CdcQueries {
     val snapshot = Cdc.apply(
       Cdc.emptyTarget(feed, keys, data),
       Cdc.range(feed, "lsn", Long.MinValue, mid), keys, data)
-    val root = s"target/tmp/cdc_mor_q_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val root = Fixtures.path("cdc_mor_q", dir)
     TxTable.create(snapshot, root, Some("bucket(16,user_id)"))
-    val before = TxTable.currentSnapshot(s, root).get
-      .entries.map(e => (e.relPath, e.size)).toSet
-    Cdc.applyTxMor(s, root, Cdc.range(feed, "lsn", mid, maxLsn), keys, data)
-    val after = TxTable.currentSnapshot(s, root).get
+    val (_, w) = Fixtures.writeShape(s, root)(
+      Cdc.applyTxMor(s, root, Cdc.range(feed, "lsn", mid, maxLsn), keys, data))
     // the point of the query: the apply wrote ∝ batch, not partitions
-    require(before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
+    require(w.untouched,
       "q_cdc_mor: merge-on-read apply must leave v0 data files " +
         "byte-identical")
-    require(after.dvs.nonEmpty,
+    require(w.after.dvs.nonEmpty,
       "q_cdc_mor: expected a committed position-delete file")
     TxTable.read(s, root)
       .select(col("user_id"), col("amount"), col("last_lsn"))
@@ -154,7 +152,7 @@ object CdcQueries {
     val snapshot = Cdc.apply(
       Cdc.emptyTarget(feed, keys, data),
       Cdc.range(feed, "lsn", Long.MinValue, mid), keys, data)
-    val root = s"target/tmp/cdc_restore_q_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val root = Fixtures.path("cdc_restore_q", dir)
     TxTable.create(
       snapshot.withColumn("bucket", bucketOf(snapshot)), root, Some("bucket"))
     val v1 = Cdc.applyTx(s, root, Cdc.range(feed, "lsn", mid, maxLsn),
@@ -212,7 +210,7 @@ object CdcQueries {
     val snapshot = Cdc.apply(
       Cdc.emptyTarget(feed, keys, data),
       Cdc.range(feed, "lsn", Long.MinValue, mid), keys, data)
-    val root = s"target/tmp/cdc_cf_q_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val root = Fixtures.path("cdc_cf_q", dir)
     TxTable.create(
       snapshot.withColumn("bucket", bucketOf(snapshot)), root, Some("bucket"))
     val toV = Cdc.applyTx(s, root, Cdc.range(feed, "lsn", mid, maxLsn),

@@ -52,7 +52,7 @@ object DagQueries {
       |) ORDER BY invocation, logical_date, task""".stripMargin) { (s, dir) =>
     import s.implicits._
     import graft.dag.Schedule
-    val base = s"target/tmp/q_dag_schedule_${System.nanoTime()}"
+    val base = Fixtures.fresh("q_dag_schedule")
     val healthy = new java.util.concurrent.atomic.AtomicBoolean(false)
     val tasks = Seq(
       Task("load", ctx => ctx.set("rows_load",

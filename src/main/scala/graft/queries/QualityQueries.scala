@@ -96,7 +96,7 @@ object QualityQueries {
       lit(true).as("is_current"),
       lit("2020-01-01").cast("date").as("start_date"),
       lit(null).cast("date").as("end_date"))
-    val root = s"target/tmp/scd2_stream_${System.nanoTime()}"
+    val root = Fixtures.fresh("scd2_stream")
     def snap(i: Int, df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
       df.coalesce(1).write.parquet(s"$root/b=$i")
       new java.io.File(s"$root/b=$i").listFiles()

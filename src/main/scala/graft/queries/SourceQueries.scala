@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Session, Tables}
 import graft.functions.ExactAgg
-import graft.sources.{CsvIngest, FixedWidth, GraftCatalog, Jdbc, JsonIngest, TypeMatrix}
+import graft.sources.{CsvIngest, FixedWidth, Jdbc, JsonIngest, TypeMatrix}
 
 /** Source/sink surface exercised end-to-end (SURVEY §2.1): the
   * migration pipeline's interchange round-trip — export to the
@@ -45,18 +45,12 @@ object SourceQueries {
       |WHERE NOT (o_custkey = 371 AND o_orderstatus = 'O')
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_mc_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gk", wh)
-    s.sql("DROP TABLE IF EXISTS gk.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_mc_src")
-    s.sql(
-      """CREATE TABLE gk.mart.orders
-        |PARTITIONED BY (bucket(8, o_custkey, o_orderstatus))
-        |AS SELECT * FROM graft_mc_src""".stripMargin)
-    val root = s"$wh/mart/orders"
+    val wh = Fixtures.land(s, "mc", dir)(("orders",
+      "bucket(8, o_custkey, o_orderstatus)", Tables.orders(s, dir)))
+    val root = wh.tableRoot("orders")
     val before = graft.sources.TxTable.currentSnapshot(s, root).get
     s.sql(
-      """DELETE FROM gk.mart.orders
+      """DELETE FROM wh_mc.mart.orders
         |WHERE o_custkey = 371 AND o_orderstatus = 'O'""".stripMargin)
     val afterDel = graft.sources.TxTable.currentSnapshot(s, root).get
     // the point: a full-key DELETE rewrites exactly one bucket group
@@ -68,15 +62,9 @@ object SourceQueries {
       s"q_bucket_mc: composite-key DELETE must prune the rewrite to " +
         s"one bucket group, replaced: $replacedParts")
     s.sql(
-      """UPDATE gk.mart.orders SET o_totalprice = o_totalprice + 1
+      """UPDATE wh_mc.mart.orders SET o_totalprice = o_totalprice + 1
         |WHERE o_custkey % 10 = 1""".stripMargin)
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gk.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** MERGE-ON-READ DELETE ([[graft.sources.MergeOnRead]]): orders
@@ -100,32 +88,17 @@ object SourceQueries {
       |WHERE o_custkey % 13 <> 0
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_mor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gv", wh)
-    s.sql("DROP TABLE IF EXISTS gv.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_mor_src")
-    s.sql(
-      """CREATE TABLE gv.mart.orders PARTITIONED BY (bucket(8, o_orderkey))
-        |AS SELECT * FROM graft_mor_src""".stripMargin)
-    val root = s"$wh/mart/orders"
-    val before = graft.sources.TxTable.currentSnapshot(s, root).get
-      .entries.map(e => (e.relPath, e.size)).toSet
-    s.sql(
-      "CALL gv.system.delete_where('mart.orders', 'o_custkey % 13 = 0')")
-    val after = graft.sources.TxTable.currentSnapshot(s, root).get
+    val wh = Fixtures.land(s, "mor", dir)(
+      ("orders", "bucket(8, o_orderkey)", Tables.orders(s, dir)))
+    val (_, w) = Fixtures.writeShape(s, wh.tableRoot("orders"))(s.sql(
+      "CALL wh_mor.system.delete_where('mart.orders', 'o_custkey % 13 = 0')"))
     // the point of the query: scattered-key DELETE, ZERO data rewrite
-    require(after.entries.map(e => (e.relPath, e.size)).toSet == before,
+    require(w.unchanged,
       "q_mor_delete: merge-on-read DELETE must leave every data file " +
         "byte-identical")
-    require(after.dvs.nonEmpty && after.dvs.map(_.rows).sum > 0,
+    require(w.after.dvs.nonEmpty && w.masked > 0,
       "q_mor_delete: expected a committed position-delete file")
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gv.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** MERGE-ON-READ UPDATE ([[graft.sources.MergeOnRead.updateWhere]]
@@ -149,39 +122,21 @@ object SourceQueries {
       |FROM orders
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_moru_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gu", wh)
-    s.sql("DROP TABLE IF EXISTS gu.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_moru_src")
-    s.sql(
-      """CREATE TABLE gu.mart.orders PARTITIONED BY (bucket(8, o_orderkey))
-        |AS SELECT * FROM graft_moru_src""".stripMargin)
-    val root = s"$wh/mart/orders"
-    val before = graft.sources.TxTable.currentSnapshot(s, root).get
-      .entries.map(e => (e.relPath, e.size)).toSet
-    val res = s.sql(
-      """CALL gu.system.update_where('mart.orders', 'o_custkey % 11 = 4',
-        |  'o_totalprice = o_totalprice * 2')""".stripMargin).head()
-    val after = graft.sources.TxTable.currentSnapshot(s, root).get
+    val wh = Fixtures.land(s, "moru", dir)(
+      ("orders", "bucket(8, o_orderkey)", Tables.orders(s, dir)))
+    val (res, w) = Fixtures.writeShape(s, wh.tableRoot("orders"))(s.sql(
+      """CALL wh_moru.system.update_where('mart.orders', 'o_custkey % 11 = 4',
+        |  'o_totalprice = o_totalprice * 2')""".stripMargin).head())
     // the point of the query: scattered-key UPDATE, write ∝ updated
     // rows — original files untouched, appends == masks == matches
-    require(before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
+    require(w.untouched,
       "q_mor_update: merge-on-read UPDATE must leave original data " +
         "files byte-identical")
-    val masked = after.dvs.map(_.rows).sum
-    val appended = after.entries
-      .filterNot(e => before.contains((e.relPath, e.size)))
-      .map(e => graft.sources.FileStats.decode(e.stats).rows).sum
+    val (masked, appended) = (w.masked, w.appended)
     require(masked > 0 && masked == res.getLong(1) && appended == masked,
       s"q_mor_update: expected appends == masks == matches, got " +
         s"masked=$masked appended=$appended matched=${res.getLong(1)}")
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gu.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** MERGE-ON-READ MERGE ([[graft.sources.MergeOnRead.mergeInto]] via
@@ -214,14 +169,9 @@ object SourceQueries {
       |) t
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_morm_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gm", wh)
-    s.sql("DROP TABLE IF EXISTS gm.mart.orders")
     val base = Tables.orders(s, dir)
-    base.createOrReplaceTempView("graft_morm_src")
-    s.sql(
-      """CREATE TABLE gm.mart.orders PARTITIONED BY (bucket(8, o_orderkey))
-        |AS SELECT * FROM graft_morm_src""".stripMargin)
+    val wh = Fixtures.land(s, "morm", dir)(
+      ("orders", "bucket(8, o_orderkey)", base))
     val upd = base.filter(col("o_custkey") % 7 === 2)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
       .withColumn("op", lit("U"))
@@ -233,25 +183,18 @@ object SourceQueries {
       .withColumn("op", lit("I"))
     upd.unionByName(del).unionByName(ins)
       .createOrReplaceTempView("graft_morm_changes")
-    val root = s"$wh/mart/orders"
-    val before = graft.sources.TxTable.currentSnapshot(s, root).get
-      .entries.map(e => (e.relPath, e.size)).toSet
-    val res = s.sql(
-      """CALL gm.system.merge_into('mart.orders', 'graft_morm_changes',
+    val (res, w) = Fixtures.writeShape(s, wh.tableRoot("orders"))(s.sql(
+      """CALL wh_morm.system.merge_into('mart.orders', 'graft_morm_changes',
         |  'o_orderkey', 'o_totalprice = src.o_totalprice',
-        |  'src.op = ''D''', true)""".stripMargin).head()
-    val after = graft.sources.TxTable.currentSnapshot(s, root).get
+        |  'src.op = ''D''', true)""".stripMargin).head())
     // the point of the query: scattered-key MERGE, write ∝ changed
     // rows — original files untouched, masks == upd + del,
     // appends == upd + ins, all in ONE commit
-    require(before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
+    require(w.untouched,
       "q_mor_merge: merge-on-read MERGE must leave original data " +
         "files byte-identical")
     val (nUpd, nDel, nIns) = (res.getLong(1), res.getLong(2), res.getLong(3))
-    val masked = after.dvs.map(_.rows).sum
-    val appended = after.entries
-      .filterNot(e => before.contains((e.relPath, e.size)))
-      .map(e => graft.sources.FileStats.decode(e.stats).rows).sum
+    val (masked, appended) = (w.masked, w.appended)
     require(nUpd > 0 && nDel > 0 && nIns > 0,
       s"q_mor_merge: expected all three clauses to fire, got " +
         s"upd=$nUpd del=$nDel ins=$nIns")
@@ -259,13 +202,7 @@ object SourceQueries {
       s"q_mor_merge: expected masks == upd + del and appends == " +
         s"upd + ins, got masked=$masked appended=$appended " +
         s"upd=$nUpd del=$nDel ins=$nIns")
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gm.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** Outbound CDC across a merge-on-read version
@@ -284,7 +221,7 @@ object SourceQueries {
       |FROM customer WHERE c_custkey % 10 = 3
       |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
     import graft.sources.{ChangeFeed, MergeOnRead, TxTable}
-    val root = s"target/tmp/mor_cf_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val root = Fixtures.path("mor_cf", dir)
     val base = Tables.customer(s, dir).select("c_custkey", "c_acctbal")
     TxTable.create(base, root, None)                        // v0
     MergeOnRead.deleteWhere(s, root, col("c_custkey") % 10 === 3) // v1
@@ -307,7 +244,7 @@ object SourceQueries {
       |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
       |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin) { (s, dir) =>
     import graft.sources.TxTable
-    val root = s"target/tmp/null_skip_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val root = Fixtures.path("null_skip", dir)
     // even keys: provably non-null column; odd keys: all-null — two
     // appends, so every file is uniformly one or the other
     val orders = Tables.orders(s, dir)
@@ -357,18 +294,13 @@ object SourceQueries {
       |WHERE o_orderkey <> 1
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_rel_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gr", wh)
-    s.sql("DROP TABLE IF EXISTS gr.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_rel_src")
-    s.sql(
-      """CREATE TABLE gr.mart.orders PARTITIONED BY (bucket(4, o_orderkey))
-        |AS SELECT * FROM graft_rel_src""".stripMargin)
-    val root = s"$wh/mart/orders"
+    val wh = Fixtures.land(s, "rel", dir)(
+      ("orders", "bucket(4, o_orderkey)", Tables.orders(s, dir)))
+    val root = wh.tableRoot("orders")
     import graft.sources.TxTable
     val vPre = TxTable.currentVersion(s, root).get
     val nRows = Tables.orders(s, dir).count()
-    s.sql("CALL gr.system.relayout('mart.orders', 'bucket(16, o_orderkey)')")
+    s.sql("CALL wh_rel.system.relayout('mart.orders', 'bucket(16, o_orderkey)')")
     val snap = TxTable.currentSnapshot(s, root).get
     require(snap.version == vPre + 1 &&
       snap.layout.contains("bucket(16,o_orderkey)"),
@@ -376,7 +308,7 @@ object SourceQueries {
         s"v${snap.version} layout=${snap.layout}")
     require(TxTable.readVersion(s, root, vPre).count() == nRows,
       "q_relayout: the pre-relayout version must stay readable in full")
-    s.sql("DELETE FROM gr.mart.orders WHERE o_orderkey = 1")
+    s.sql("DELETE FROM wh_rel.mart.orders WHERE o_orderkey = 1")
     val afterDel = TxTable.currentSnapshot(s, root).get
     val survived = afterDel.entries.map(_.relPath).toSet
     val replacedParts = snap.entries
@@ -386,15 +318,9 @@ object SourceQueries {
       s"q_relayout: a point DELETE after relayout must rewrite at most " +
         s"one of the 16 new groups, touched: $replacedParts")
     s.sql(
-      """UPDATE gr.mart.orders SET o_totalprice = o_totalprice + 5
+      """UPDATE wh_rel.mart.orders SET o_totalprice = o_totalprice + 5
         |WHERE o_custkey % 10 = 3""".stripMargin)
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gr.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** COLUMN DEFAULT VALUES end-to-end (`SUPPORT_COLUMN_DEFAULT_VALUE`
@@ -426,17 +352,16 @@ object SourceQueries {
       |) t
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_def_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gd2", wh)
-    s.sql("DROP TABLE IF EXISTS gd2.mart.orders")
+    val wh = Fixtures.warehouse(s, "def", dir)
+    s.sql("DROP TABLE IF EXISTS wh_def.mart.orders")
     Tables.orders(s, dir).createOrReplaceTempView("graft_def_src")
     s.sql(
-      """CREATE TABLE gd2.mart.orders (
+      """CREATE TABLE wh_def.mart.orders (
         |  o_orderkey BIGINT,
         |  o_orderstatus STRING DEFAULT 'X',
         |  adj DOUBLE DEFAULT 2.5)
         |PARTITIONED BY (bucket(8, o_orderkey))""".stripMargin)
-    val root = s"$wh/mart/orders"
+    val root = wh.tableRoot("orders")
     import graft.sources.TxTable
     val snap0 = TxTable.currentSnapshot(s, root).get
     require(!snap0.schemaDdl.contains("DEFAULT"),
@@ -445,25 +370,25 @@ object SourceQueries {
     require(snap0.schemaJson.exists(_.contains("CURRENT_DEFAULT")),
       "q_defaults: the JSON schema form must carry the defaults")
     s.sql(
-      """INSERT INTO gd2.mart.orders (o_orderkey)
+      """INSERT INTO wh_def.mart.orders (o_orderkey)
         |SELECT o_orderkey FROM graft_def_src WHERE o_custkey % 3 = 0"""
         .stripMargin)
     s.sql(
-      """INSERT INTO gd2.mart.orders
+      """INSERT INTO wh_def.mart.orders
         |SELECT o_orderkey, o_orderstatus, o_totalprice
         |FROM graft_def_src WHERE o_custkey % 3 = 1""".stripMargin)
     val vPre = TxTable.currentVersion(s, root).get
-    s.sql("ALTER TABLE gd2.mart.orders ALTER COLUMN adj SET DEFAULT 4.0")
+    s.sql("ALTER TABLE wh_def.mart.orders ALTER COLUMN adj SET DEFAULT 4.0")
     require(TxTable.currentVersion(s, root).contains(vPre + 1),
       "q_defaults: SET DEFAULT must be ONE metadata commit")
     s.sql(
-      """INSERT INTO gd2.mart.orders (o_orderkey)
+      """INSERT INTO wh_def.mart.orders (o_orderkey)
         |SELECT o_orderkey FROM graft_def_src WHERE o_custkey % 3 = 2"""
         .stripMargin)
     s.sql(
       """SELECT o_orderstatus, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(round(adj * 100) AS BIGINT)) AS BIGINT) AS adj_cents
-        |FROM gd2.mart.orders
+        |FROM wh_def.mart.orders
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin)
   }
@@ -502,14 +427,9 @@ object SourceQueries {
       |WHERE o_custkey % 7 <> 4
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_sqlmor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gq", wh)
-    s.sql("DROP TABLE IF EXISTS gq.mart.orders")
     val base = Tables.orders(s, dir)
-    base.createOrReplaceTempView("graft_sqlmor_src")
-    s.sql(
-      """CREATE TABLE gq.mart.orders PARTITIONED BY (bucket(8, o_orderkey))
-        |AS SELECT * FROM graft_sqlmor_src""".stripMargin)
+    val wh = Fixtures.land(s, "sqlmor", dir)(
+      ("orders", "bucket(8, o_orderkey)", base))
     val upd = base.filter(col("o_custkey") % 7 === 2)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
       .withColumn("op", lit("U"))
@@ -521,47 +441,35 @@ object SourceQueries {
       .withColumn("op", lit("I"))
     upd.unionByName(del).unionByName(ins)
       .createOrReplaceTempView("graft_sqlmor_changes")
-    val root = s"$wh/mart/orders"
-    import graft.sources.TxTable
-    val before = TxTable.currentSnapshot(s, root).get
-      .entries.map(e => (e.relPath, e.size)).toSet
     val (nUpd, nDel, nIns, nDel2) = (
       base.filter(col("o_custkey") % 7 === 2).count(),
       base.filter(col("o_custkey") % 7 === 3).count(),
       base.filter(col("o_custkey") % 7 === 5).count(),
       base.filter(col("o_custkey") % 7 === 4).count())
     val cols = base.columns
-    Session.withConf(s, graft.sources.DeltaDml.ModeKey -> "mor") {
-      s.sql(
-        s"""MERGE INTO gq.mart.orders t USING graft_sqlmor_changes s
-           |ON t.o_orderkey = s.o_orderkey
-           |WHEN MATCHED AND s.op = 'D' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET o_totalprice = s.o_totalprice
-           |WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")})
-           |  VALUES (${cols.map(c => s"s.$c").mkString(", ")})"""
-          .stripMargin)
-      s.sql("DELETE FROM gq.mart.orders WHERE o_custkey % 7 = 4")
+    val (_, w) = Fixtures.writeShape(s, wh.tableRoot("orders")) {
+      Session.withConf(s, graft.sources.DeltaDml.ModeKey -> "mor") {
+        s.sql(
+          s"""MERGE INTO wh_sqlmor.mart.orders t USING graft_sqlmor_changes s
+             |ON t.o_orderkey = s.o_orderkey
+             |WHEN MATCHED AND s.op = 'D' THEN DELETE
+             |WHEN MATCHED THEN UPDATE SET o_totalprice = s.o_totalprice
+             |WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")})
+             |  VALUES (${cols.map(c => s"s.$c").mkString(", ")})"""
+            .stripMargin)
+        s.sql("DELETE FROM wh_sqlmor.mart.orders WHERE o_custkey % 7 = 4")
+      }
     }
-    val after = TxTable.currentSnapshot(s, root).get
     // the point of the query: scattered SQL DML, write ∝ changed rows
-    require(before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
+    require(w.untouched,
       "q_sql_mor: merge-on-read SQL DML must leave original data " +
         "files byte-identical")
-    val masked = after.dvs.map(_.rows).sum
-    val appended = after.entries
-      .filterNot(e => before.contains((e.relPath, e.size)))
-      .map(e => graft.sources.FileStats.decode(e.stats).rows).sum
+    val (masked, appended) = (w.masked, w.appended)
     require(masked == nUpd + nDel + nDel2 && appended == nUpd + nIns,
       s"q_sql_mor: expected masks == upd + del + del2 and appends == " +
         s"upd + ins, got masked=$masked appended=$appended " +
         s"upd=$nUpd del=$nDel ins=$nIns del2=$nDel2")
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gq.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** SQL row-level operations end-to-end ([[graft.sources.GraftRowLevelOperation]]):
@@ -585,24 +493,19 @@ object SourceQueries {
       |WHERE o_orderpriority <> '1-URGENT' AND o_custkey % 10 <> 0
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_rl_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gr", wh)
-    s.sql("DROP TABLE IF EXISTS gr.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_ord_src")
+    Fixtures.land(s, "rl", dir)(
+      ("orders", "o_orderpriority", Tables.orders(s, dir)))
+    s.sql("DELETE FROM wh_rl.mart.orders WHERE o_orderpriority = '1-URGENT'")
+    s.sql("DELETE FROM wh_rl.mart.orders WHERE o_custkey % 10 = 0")
     s.sql(
-      """CREATE TABLE gr.mart.orders PARTITIONED BY (o_orderpriority)
-        |AS SELECT * FROM graft_ord_src""".stripMargin)
-    s.sql("DELETE FROM gr.mart.orders WHERE o_orderpriority = '1-URGENT'")
-    s.sql("DELETE FROM gr.mart.orders WHERE o_custkey % 10 = 0")
-    s.sql(
-      """UPDATE gr.mart.orders SET o_totalprice = 0.0
+      """UPDATE wh_rl.mart.orders SET o_totalprice = 0.0
         |WHERE o_orderstatus = 'F' AND o_orderpriority = '5-LOW'"""
         .stripMargin)
     s.sql(
       """SELECT o_orderpriority, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS price_cents
-        |FROM gr.mart.orders
+        |FROM wh_rl.mart.orders
         |GROUP BY o_orderpriority
         |ORDER BY o_orderpriority""".stripMargin)
   }
@@ -629,14 +532,10 @@ object SourceQueries {
       |         CAST(-1 AS INTEGER) AS n_regionkey
       |  FROM nation WHERE n_nationkey < 5
       |) ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_mg_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gm", wh)
-    s.sql("DROP TABLE IF EXISTS gm.mart.nation")
-    Tables.nation(s, dir).createOrReplaceTempView("graft_nat_src")
-    s.sql(
-      """CREATE TABLE gm.mart.nation
-        |AS SELECT n_nationkey, n_name, n_regionkey FROM graft_nat_src"""
-        .stripMargin)
+    val nation = Tables.nation(s, dir)
+    nation.createOrReplaceTempView("graft_nat_src")
+    Fixtures.land(s, "mg", dir)(("nation", "",
+      nation.select("n_nationkey", "n_name", "n_regionkey")))
     s.sql(
       """CREATE OR REPLACE TEMP VIEW graft_merge_src AS
         |SELECT n_nationkey AS k, lower(n_name) AS nm
@@ -648,7 +547,7 @@ object SourceQueries {
         |SELECT n_nationkey + 100, concat('new_', n_name)
         |FROM graft_nat_src WHERE n_nationkey < 5""".stripMargin)
     s.sql(
-      """MERGE INTO gm.mart.nation t USING graft_merge_src s
+      """MERGE INTO wh_mg.mart.nation t USING graft_merge_src s
         |ON t.n_nationkey = s.k
         |WHEN MATCHED AND s.k >= 20 THEN DELETE
         |WHEN MATCHED THEN UPDATE SET n_name = s.nm
@@ -656,7 +555,7 @@ object SourceQueries {
         |  INSERT (n_nationkey, n_name, n_regionkey) VALUES (s.k, s.nm, -1)"""
         .stripMargin)
     s.sql(
-      """SELECT n_nationkey, n_name, n_regionkey FROM gm.mart.nation
+      """SELECT n_nationkey, n_name, n_regionkey FROM wh_mg.mart.nation
         |ORDER BY n_nationkey""".stripMargin)
   }
 
@@ -680,25 +579,14 @@ object SourceQueries {
       |WHERE o_orderkey % 100 <> 7 AND o_orderkey <> 32
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_bd_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gb", wh)
-    s.sql("DROP TABLE IF EXISTS gb.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_bord_src")
+    val wh = Fixtures.land(s, "bd", dir)(
+      ("orders", "bucket(8, o_orderkey)", Tables.orders(s, dir)))
+    s.sql("DELETE FROM wh_bd.mart.orders WHERE o_orderkey % 100 = 7")
+    s.sql("DELETE FROM wh_bd.mart.orders WHERE o_orderkey = 32")
     s.sql(
-      """CREATE TABLE gb.mart.orders PARTITIONED BY (bucket(8, o_orderkey))
-        |AS SELECT * FROM graft_bord_src""".stripMargin)
-    s.sql("DELETE FROM gb.mart.orders WHERE o_orderkey % 100 = 7")
-    s.sql("DELETE FROM gb.mart.orders WHERE o_orderkey = 32")
-    s.sql(
-      """UPDATE gb.mart.orders SET o_totalprice = o_totalprice * 2
+      """UPDATE wh_bd.mart.orders SET o_totalprice = o_totalprice * 2
         |WHERE o_orderkey % 1000 = 1""".stripMargin)
-    s.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS price_cents
-        |FROM gb.mart.orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin)
+    Fixtures.statusSummary(s, wh.table("orders"))
   }
 
   /** Manifest-stats aggregate pushdown end-to-end
@@ -723,23 +611,19 @@ object SourceQueries {
       |FROM orders
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_sa_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "ga", wh)
-    s.sql("DROP TABLE IF EXISTS ga.mart.orders")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_ord_src")
     // INT64-micros timestamps: INT96 (the legacy default) has no
     // footer bounds, and this engine's layout wants stats everywhere
     Session.withConf(s,
-        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(s.sql(
-      """CREATE TABLE ga.mart.orders PARTITIONED BY (o_orderpriority)
-        |AS SELECT * FROM graft_ord_src""".stripMargin))
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
+      Fixtures.land(s, "sa", dir)(
+        ("orders", "o_orderpriority", Tables.orders(s, dir))))
     val out = s.sql(
       """SELECT o_orderpriority, COUNT(*) AS n_rows, COUNT(o_custkey) AS n_cust,
         |  MIN(o_orderkey) AS mn_key, MAX(o_orderkey) AS mx_key,
         |  MIN(o_totalprice) AS mn_price, MAX(o_totalprice) AS mx_price,
         |  MIN(o_orderdate) AS mn_date, MAX(o_orderdate) AS mx_date,
         |  MIN(o_orderstatus) AS mn_st, MAX(o_orderstatus) AS mx_st
-        |FROM ga.mart.orders
+        |FROM wh_sa.mart.orders
         |GROUP BY o_orderpriority
         |ORDER BY o_orderpriority""".stripMargin)
     // the point of the query: it must have planned METADATA-ONLY
@@ -778,17 +662,10 @@ object SourceQueries {
       |WHERE a.o_orderkey % 2 = 0 AND b.o_orderkey % 2 = 1
       |GROUP BY a.o_orderpriority
       |ORDER BY a.o_orderpriority""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_sj_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gs", wh)
-    s.sql("DROP TABLE IF EXISTS gs.mart.even")
-    s.sql("DROP TABLE IF EXISTS gs.mart.odd")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_spj_src")
-    s.sql(
-      """CREATE TABLE gs.mart.even PARTITIONED BY (o_orderpriority)
-        |AS SELECT * FROM graft_spj_src WHERE o_orderkey % 2 = 0""".stripMargin)
-    s.sql(
-      """CREATE TABLE gs.mart.odd PARTITIONED BY (o_orderpriority)
-        |AS SELECT * FROM graft_spj_src WHERE o_orderkey % 2 = 1""".stripMargin)
+    val orders = Tables.orders(s, dir)
+    Fixtures.land(s, "sj", dir)(
+      ("even", "o_orderpriority", orders.filter(col("o_orderkey") % 2 === 0)),
+      ("odd", "o_orderpriority", orders.filter(col("o_orderkey") % 2 === 1)))
     Session.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
@@ -800,7 +677,7 @@ object SourceQueries {
         """SELECT a.o_orderpriority, COUNT(*) AS n_pairs,
           |  CAST(SUM(CAST(round((a.o_totalprice + b.o_totalprice) * 100)
           |    AS BIGINT)) AS BIGINT) AS pair_cents
-          |FROM gs.mart.even a JOIN gs.mart.odd b
+          |FROM wh_sj.mart.even a JOIN wh_sj.mart.odd b
           |  ON a.o_orderpriority = b.o_orderpriority
           |  AND a.o_custkey = b.o_custkey
           |GROUP BY a.o_orderpriority
@@ -838,18 +715,9 @@ object SourceQueries {
       |FROM customer JOIN orders ON c_custkey = o_custkey
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_bk_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gb", wh)
-    s.sql("DROP TABLE IF EXISTS gb.mart.customer")
-    s.sql("DROP TABLE IF EXISTS gb.mart.orders")
-    Tables.customer(s, dir).createOrReplaceTempView("graft_bk_cust")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_bk_ord")
-    s.sql(
-      """CREATE TABLE gb.mart.customer PARTITIONED BY (bucket(8, c_custkey))
-        |AS SELECT * FROM graft_bk_cust""".stripMargin)
-    s.sql(
-      """CREATE TABLE gb.mart.orders PARTITIONED BY (bucket(8, o_custkey))
-        |AS SELECT * FROM graft_bk_ord""".stripMargin)
+    Fixtures.land(s, "bk", dir)(
+      ("customer", "bucket(8, c_custkey)", Tables.customer(s, dir)),
+      ("orders", "bucket(8, o_custkey)", Tables.orders(s, dir)))
     Session.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
@@ -860,7 +728,7 @@ object SourceQueries {
         """SELECT c_mktsegment, COUNT(*) AS n_orders,
           |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
           |    AS rev_cents
-          |FROM gb.mart.customer JOIN gb.mart.orders
+          |FROM wh_bk.mart.customer JOIN wh_bk.mart.orders
           |  ON c_custkey = o_custkey
           |GROUP BY c_mktsegment
           |ORDER BY c_mktsegment""".stripMargin)
@@ -905,24 +773,17 @@ object SourceQueries {
       |  FROM orders) f ON c_custkey = f.k
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_pc_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gp", wh)
-    s.sql("DROP TABLE IF EXISTS gp.mart.fact")
-    s.sql("DROP TABLE IF EXISTS gp.mart.dim")
     Tables.orders(s, dir).createOrReplaceTempView("graft_pc_ord")
-    Tables.customer(s, dir).createOrReplaceTempView("graft_pc_cust")
     def slice(i: Int) =
       s"""SELECT CASE WHEN o_custkey % 2 = 0 THEN CAST(7 AS BIGINT)
          |         ELSE o_custkey END AS k,
          |       o_totalprice AS v
          |FROM graft_pc_ord WHERE o_orderkey % 4 = $i""".stripMargin
-    s.sql(
-      s"""CREATE TABLE gp.mart.fact PARTITIONED BY (bucket(8, k))
-         |AS ${slice(0)}""".stripMargin)
-    (1 until 4).foreach(i => s.sql(s"INSERT INTO gp.mart.fact ${slice(i)}"))
-    s.sql(
-      """CREATE TABLE gp.mart.dim PARTITIONED BY (bucket(8, c_custkey))
-        |AS SELECT c_custkey, c_mktsegment FROM graft_pc_cust""".stripMargin)
+    val wh = Fixtures.land(s, "pc", dir)(
+      ("fact", "bucket(8, k)", s.sql(slice(0))),
+      ("dim", "bucket(8, c_custkey)",
+        Tables.customer(s, dir).select("c_custkey", "c_mktsegment")))
+    (1 until 4).foreach(i => s.sql(s"INSERT INTO wh_pc.mart.fact ${slice(i)}"))
     Session.withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.graft.preserveDataGrouping" -> "true",
@@ -934,7 +795,7 @@ object SourceQueries {
         """SELECT d.c_mktsegment, COUNT(*) AS n_orders,
           |  CAST(SUM(CAST(round(f.v * 100) AS BIGINT)) AS BIGINT)
           |    AS rev_cents
-          |FROM gp.mart.fact f JOIN gp.mart.dim d ON f.k = d.c_custkey
+          |FROM wh_pc.mart.fact f JOIN wh_pc.mart.dim d ON f.k = d.c_custkey
           |GROUP BY d.c_mktsegment
           |ORDER BY d.c_mktsegment""".stripMargin)
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -947,7 +808,7 @@ object SourceQueries {
         s"q_spj_partial expected a shuffle-free co-bucketed join:\n" +
           out.queryExecution.executedPlan)
       val groups = graft.sources.TxTable
-        .currentSnapshot(s, s"$wh/mart/fact").get
+        .currentSnapshot(s, wh.tableRoot("fact")).get
         .entries.map(_.partition).distinct.size
       val joinParts = joins.head.execute().getNumPartitions
       require(joinParts > groups,
@@ -963,7 +824,7 @@ object SourceQueries {
   /** The DSv2 catalog surface end-to-end in SQL TEXT
     * ([[graft.sources.GraftCatalog]]): lineitem lands in a graft table
     * via `CREATE TABLE … AS SELECT` against the registered catalog,
-    * then the aggregate runs against `gq.mart.lineitem` — planning
+    * then the aggregate runs against `wh_q.mart.lineitem` — planning
     * through the manifest-backed DSv2 parquet scan (predicate pushed,
     * files stats-pruned, vectorized read). The oracle runs the SAME
     * aggregate over the raw parquet in DuckDB, so equality proves the
@@ -977,15 +838,11 @@ object SourceQueries {
       |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
-    val wh = s"target/tmp/graft_wh_q_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    GraftCatalog.register(s, "gq", wh)
-    s.sql("DROP TABLE IF EXISTS gq.mart.lineitem")
-    Tables.lineitem(s, dir).createOrReplaceTempView("graft_li_src")
-    s.sql("CREATE TABLE gq.mart.lineitem AS SELECT * FROM graft_li_src")
+    Fixtures.land(s, "q", dir)(("lineitem", "", Tables.lineitem(s, dir)))
     s.sql(
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(round(l_quantity*100) AS BIGINT)) AS BIGINT) AS qty_cents
-        |FROM gq.mart.lineitem
+        |FROM wh_q.mart.lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin)
@@ -1008,7 +865,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    val out = s"target/tmp/xlsxrt_${new java.io.File(dir).getName}"
+    val out = Fixtures.path("xlsxrt", dir)
     val target = StructType(Seq(
       StructField("c_custkey", LongType),
       StructField("c_mktsegment", StringType),
@@ -1058,7 +915,7 @@ object SourceQueries {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_discount"),
         col("l_extendedprice"), col("l_returnflag"))
-    val root = s"target/tmp/fmtq_${new java.io.File(dir).getName}"
+    val root = Fixtures.path("fmtq", dir)
     li.repartitionByRange(8, col("l_orderkey"))
       .write.format("graft").mode("overwrite").save(root)
     s.sql(s"CREATE OR REPLACE TEMPORARY VIEW fmt_lineitem USING graft " +
@@ -1107,7 +964,7 @@ object SourceQueries {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    val root = s"target/tmp/skipq_${new java.io.File(dir).getName}"
+    val root = Fixtures.path("skipq", dir)
     TxTable.create(li.repartitionByRange(8, col("l_orderkey")), root)
     val cond = col("l_orderkey").between(1000L, 3000L) && col("l_quantity") > 25.0
     val snap = TxTable.currentSnapshot(s, root).get
@@ -1145,7 +1002,7 @@ object SourceQueries {
     import graft.sources.{TxTable, ZOrder}
     val o = Tables.orders(s, dir)
       .select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
-    val root = s"target/tmp/zorderq_${new java.io.File(dir).getName}"
+    val root = Fixtures.path("zorderq", dir)
     ZOrder.write(o, root, Seq(col("o_custkey"), col("o_orderdate")),
       numFiles = 16, bits = 6)
     val snap = TxTable.currentSnapshot(s, root).get
@@ -1181,8 +1038,7 @@ object SourceQueries {
       |GROUP BY lang
       |ORDER BY lang""".stripMargin) { (s, dir) =>
     val docs = Tables.documents(s, dir)
-    // absolute path: the driver may invoke Verify from any CWD
-    val out = s"target/tmp/jsonl_${new java.io.File(dir).getName}"
+    val out = Fixtures.path("jsonl", dir)
     JsonIngest.writeInterchange(docs, out)
     val (good, bad) = CsvIngest.splitCorrupt(
       JsonIngest.readStaging(s, out, docs.schema), runId = "jsonl_roundtrip")
@@ -1207,7 +1063,7 @@ object SourceQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    val out = s"target/tmp/xmlrt_${new java.io.File(dir).getName}"
+    val out = Fixtures.path("xmlrt", dir)
     Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       // 1-row-group parquet scans as ONE partition; spread so the
@@ -1244,7 +1100,7 @@ object SourceQueries {
     val widths = Seq(
       "c_custkey" -> 12, "c_name" -> 26, "c_acctbal" -> 14,
       "c_mktsegment" -> 12)
-    val out = s"target/tmp/fixedwidth_${new java.io.File(dir).getName}"
+    val out = Fixtures.path("fixedwidth", dir)
     FixedWidth.writeFixed(
       Tables.customer(s, dir)
         .select(widths.map { case (n, _) => col(n) }: _*),
@@ -1300,8 +1156,7 @@ object SourceQueries {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
     val cust = Tables.customer(s, dir)
-    // absolute path: the driver may invoke Verify from any CWD
-    val out = s"target/tmp/interchange_${new java.io.File(dir).getName}"
+    val out = Fixtures.path("interchange", dir)
     CsvIngest.writeInterchange(cust, out)
     val meta = TypeMatrix.introspect(cust.schema)
     val target = TypeMatrix.structType(meta)

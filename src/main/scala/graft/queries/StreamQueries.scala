@@ -36,12 +36,7 @@ object StreamQueries {
     val media = Multimodal.syntheticMedia(Tables.documents(s, dir))
       .where(col("media_id") % 7 === 0)
       .repartition(16)
-    // absolute path derived from the JVM's working dir (sbt runs in
-    // the project root), overridable via -Dgraft.tmp.dir — not a
-    // hard-coded checkout location
-    val tmpRoot = sys.props.getOrElse("graft.tmp.dir",
-      new java.io.File("target/tmp").getAbsolutePath)
-    val out = s"$tmpRoot/lob_${new java.io.File(dir).getName}"
+    val out = Fixtures.path("lob", dir)
     // wipe stale exports so the read-back glob sees exactly this run
     val p = new org.apache.hadoop.fs.Path(out)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -341,8 +336,8 @@ object StreamQueries {
       |FROM events
       |GROUP BY hour_ts, event_type
       |ORDER BY hour_ts, event_type""".stripMargin) { (s, dir) =>
-    val name = s"stream_hourly_${System.nanoTime()}"
-    Streams.drainComplete(s, Streams.hourlyAgg(Streams.eventsStream(s, dir)), name)
+    Streams.drainComplete(s, Streams.hourlyAgg(Streams.eventsStream(s, dir)),
+        Fixtures.freshName("stream_hourly"))
       .orderBy(col("hour_ts"), col("event_type"))
   }
 

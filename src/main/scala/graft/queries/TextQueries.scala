@@ -160,8 +160,6 @@ object TextQueries {
       isTarget = col("lang") === "en", k = 200)
   }
 
-  private val streamDsirSrcBuilt = scala.collection.mutable.Set.empty[String]
-
   /** CONTINUOUS DSIR scoring
     * ([[graft.streaming.Streams.dsirStream]]): the documents table
     * replayed as a 5-micro-batch stream (doc_id mod 5, one file per
@@ -220,39 +218,29 @@ object TextQueries {
       |FROM terms
       |GROUP BY doc_id, fold
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    // dot-PRESERVING sanitizer (ADVICE r17): dirs differing only by
-    // '.' vs '_' must not collide on the same fixture srcDir — the
-    // built-once guard is per raw dir, so a collision would rebuild
-    // the fixture underneath another run's stream
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcDir = s"target/tmp/stream_dsir_src_$tag"
+    val srcDir = Fixtures.path("stream_dsir_src", dir)
     // 5-file replay source (doc_id mod 5), built once per (JVM, dir);
     // explicit per-slice mod-times pin the file->batch order to the
     // slice order (the frozen-model composition depends on WHICH
     // documents precede a refresh, unlike q_stream_cc's
     // order-invariant labeling)
-    streamDsirSrcBuilt.synchronized {
-      if (!streamDsirSrcBuilt.contains(dir)) {
-        val docs = Tables.documents(s, dir).select(
-          col("doc_id"), col("text"), (col("lang") === "en").as("tgt"))
-        val fs = new org.apache.hadoop.fs.Path(srcDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        (0 until 5).foreach { r =>
-          docs.filter(pmod(col("doc_id"), lit(5L)) === r).coalesce(1)
-            .write.mode("overwrite").parquet(s"$srcDir/f=$r")
-          fs.listStatus(new org.apache.hadoop.fs.Path(s"$srcDir/f=$r"))
-            .filter(_.isFile)
-            .foreach(f =>
-              fs.setTimes(f.getPath, 1600000000000L + r * 60000L, -1))
-        }
-        streamDsirSrcBuilt += dir
+    Fixtures.once(srcDir) {
+      val docs = Tables.documents(s, dir).select(
+        col("doc_id"), col("text"), (col("lang") === "en").as("tgt"))
+      val fs = new org.apache.hadoop.fs.Path(srcDir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      (0 until 5).foreach { r =>
+        docs.filter(pmod(col("doc_id"), lit(5L)) === r).coalesce(1)
+          .write.mode("overwrite").parquet(s"$srcDir/f=$r")
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$srcDir/f=$r"))
+          .filter(_.isFile)
+          .foreach(f =>
+            fs.setTimes(f.getPath, 1600000000000L + r * 60000L, -1))
       }
     }
-    val run = System.nanoTime()
     graft.streaming.Streams.dsirStream(
         graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text", "tgt",
-        s"target/tmp/stream_dsir_state_$run",
-        s"target/tmp/stream_dsir_ckpt_$run",
+        Fixtures.fresh("stream_dsir_state"), Fixtures.fresh("stream_dsir_ckpt"),
         refreshEvery = 3)
       .orderBy(col("doc_id"))
   }
@@ -459,7 +447,7 @@ object TextQueries {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, dir) =>
     import graft.operators.Shard
-    val root = s"target/tmp/shardq_${new java.io.File(dir).getName}"
+    val root = Fixtures.path("shardq", dir)
     Shard.export(Tables.documents(s, dir), root, col("doc_id"), 8)
     s.read.parquet(root)
       .groupBy(col("__shard").cast("long").as("shard"))
@@ -1327,32 +1315,26 @@ object TextQueries {
     * and the rehearsal's x_incremental_cc_fold; returns
     * (labelsPath, edgesPath).
     */
-  private val ccFoldPrepped = scala.collection.mutable.Set.empty[String]
-
   def ccFoldPrep(s: org.apache.spark.sql.SparkSession, dir: String)
       : (String, String) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val lblPath = s"target/tmp/ccfold_${tag}_labels"
-    val edgePath = s"target/tmp/ccfold_${tag}_edges"
-    ccFoldPrepped.synchronized {
-      if (!ccFoldPrepped.contains(dir)) {
-        import graft.operators.Components
-        val docs = Tables.documents(s, dir)
-        val base = docs.filter(col("doc_id") % 5 =!= 0)
-        val incoming = docs.filter(col("doc_id") % 5 === 0)
-        Components.connected(
-            base.select(col("doc_id")), "doc_id",
-            Dedup.minhashLshPairs(base, "doc_id", "text", 3, 0.8, 8, 4),
-            "d1", "d2")
-          .write.mode("overwrite").parquet(lblPath)
-        Dedup.lshDeltaPairs(
-            Dedup.lshSide(base, "doc_id", "text", 3, 8, 4),
-            Dedup.lshSide(incoming, "doc_id", "text", 3, 8, 4), 0.8)
-          .select(col("d1"), col("d2"))
-          .write.mode("overwrite").parquet(edgePath)
-        graft.CacheScope.release()
-        ccFoldPrepped += dir
-      }
+    val root = Fixtures.path("ccfold", dir)
+    val (lblPath, edgePath) = (s"$root/labels", s"$root/edges")
+    Fixtures.once(root) {
+      import graft.operators.Components
+      val docs = Tables.documents(s, dir)
+      val base = docs.filter(col("doc_id") % 5 =!= 0)
+      val incoming = docs.filter(col("doc_id") % 5 === 0)
+      Components.connected(
+          base.select(col("doc_id")), "doc_id",
+          Dedup.minhashLshPairs(base, "doc_id", "text", 3, 0.8, 8, 4),
+          "d1", "d2")
+        .write.mode("overwrite").parquet(lblPath)
+      Dedup.lshDeltaPairs(
+          Dedup.lshSide(base, "doc_id", "text", 3, 8, 4),
+          Dedup.lshSide(incoming, "doc_id", "text", 3, 8, 4), 0.8)
+        .select(col("d1"), col("d2"))
+        .write.mode("overwrite").parquet(edgePath)
+      graft.CacheScope.release()
     }
     (lblPath, edgePath)
   }
@@ -1428,7 +1410,7 @@ object TextQueries {
     val out = graft.streaming.Streams.nearDupStream(
       src, "doc_id", "text", "ts", "10 minutes",
       n = 3, tau = 0.8, bands = 8, rowsPerBand = 4)
-    val name = s"stream_neardup_${System.nanoTime()}"
+    val name = Fixtures.freshName("stream_neardup")
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(name).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -1436,8 +1418,6 @@ object TextQueries {
       .dropDuplicates("doc_id", "dup_of")
       .orderBy(col("doc_id"), col("dup_of"))
   }
-
-  private val streamCcSrcBuilt = scala.collection.mutable.Set.empty[String]
 
   /** CONTINUOUS cluster maintenance
     * ([[graft.streaming.Streams.clusterStream]]): the documents table
@@ -1462,27 +1442,21 @@ object TextQueries {
   val streamCc: Q = Q(
     "q_stream_cc",
     ccFromScratchSql) { (s, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val srcDir = s"target/tmp/stream_cc_src_$tag"
+    val srcDir = Fixtures.path("stream_cc_src", dir)
     // 3-file replay source (doc_id mod 3), built once per (JVM, dir);
     // each file is one micro-batch under maxFilesPerTrigger=1
-    streamCcSrcBuilt.synchronized {
-      if (!streamCcSrcBuilt.contains(dir)) {
-        Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(3L)).cast("int").as("b"))
-          .repartition(col("b"))
-          .write.mode("overwrite").partitionBy("b").parquet(srcDir)
-        streamCcSrcBuilt += dir
-      }
+    Fixtures.once(srcDir) {
+      Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"),
+          pmod(col("doc_id"), lit(3L)).cast("int").as("b"))
+        .repartition(col("b"))
+        .write.mode("overwrite").partitionBy("b").parquet(srcDir)
     }
     // the feed's schema is the file schema (doc_id, text), without the
     // split column (see Streams.fileFeed)
-    val run = System.nanoTime()
     graft.streaming.Streams.clusterStream(
         graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text",
-        s"target/tmp/stream_cc_state_$run",
-        s"target/tmp/stream_cc_ckpt_$run",
+        Fixtures.fresh("stream_cc_state"), Fixtures.fresh("stream_cc_ckpt"),
         n = 3, tau = 0.8, bands = 8, rowsPerBand = 4)
       .select(col("doc_id"), col("component").as("cluster_id"),
         (col("doc_id") === col("component")).as("is_canonical"))
@@ -1490,16 +1464,17 @@ object TextQueries {
   }
 
   /** The 6-block/20-combination Hamming banding as DuckDB CASE arms,
-    * generated from the SAME constants the Spark side bands with
-    * ([[Dedup.HamCombos]]/HamOffsets/HamWidths) — the two derivations
-    * cannot drift.
+    * generated from the SAME geometry the Spark side bands with
+    * ([[Dedup.HamGeo3]]) — the two derivations cannot drift.
     */
-  private lazy val hamComboCase: String =
-    Dedup.HamCombos.zipWithIndex.map { case (c, i) =>
+  private lazy val hamComboCase: String = {
+    val geo = Dedup.HamGeo3
+    geo.combos.zipWithIndex.map { case (c, i) =>
       val parts = c.map(b =>
-        s"(sig >> ${Dedup.HamOffsets(b)}) & ${(1L << Dedup.HamWidths(b)) - 1}")
+        s"(sig >> ${geo.offsets(b)}) & ${(1L << geo.widths(b)) - 1}")
       s"WHEN $i THEN [${parts.mkString(", ")}]"
     }.mkString(" ")
+  }
 
   /** SimHash near-dup pairs (Hamming ≤ 3, combination-banded). FULL
     * oracle gate: the 62-bit signature (two portable PolyHash halves,

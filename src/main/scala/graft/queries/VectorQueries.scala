@@ -16,19 +16,6 @@ object VectorQueries {
     knnAnn, knnIvf, knnIvfPq, clusterSample, semDedup, hybridRrf,
     embedDecontaminate)
 
-  /** A trained-model fixture's location — ABSOLUTE so the
-    * DuckDB oracle (whose working directory is the driver's, not
-    * sbt's) reads the exact doubles the Spark query indexed with, and
-    * keyed DETERMINISTICALLY by the dataset dir: the oracle thunk
-    * renders the path for [[Q.renderDir]] (set by Verify/tests to the
-    * dir the replay is FOR), so interleaved runs against two dirs
-    * each read their own fixture — no last-run-wins slot to clobber
-    * (ADVICE r13).
-    */
-  private def fixtureDir(name: String, dir: String): String =
-    new java.io.File(s"target/tmp/${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
-      .getAbsolutePath
-
   /** SRP bits/table the queries RAN with, per dataset dir — recorded
     * at run time, read back by the oracle thunks for [[Q.renderDir]]
     * so the replay regenerates the exact plane family the adaptive
@@ -52,10 +39,6 @@ object VectorQueries {
     .empty[String, Array[Array[Double]]]
   private val pqCbByDir = scala.collection.concurrent.TrieMap
     .empty[String, Array[Array[Array[Double]]]]
-  private val fixtureWritten =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  private val fixtureLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
 
   private[graft] def trainedCentroids(
       s: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Double]] =
@@ -89,23 +72,13 @@ object VectorQueries {
       graft.operators.Pq.trainCodebooks(
         Tables.embeddings(s, dir), "embedding", m = 8, ksub = 64))
 
-  /** Write `rows` once per (JVM, path), marking the path done only
-    * AFTER the write succeeds (ADVICE r15: flag-before-write left a
-    * failed write permanently skipped, so later invocations replayed
-    * the oracle against a missing/stale fixture). Synchronized per
-    * path (ADVICE r16: the non-atomic contains/write/put let two
-    * concurrent suites both pass the check and overwrite-write the
-    * same fixture; a per-path monitor restores single-writer AND
-    * makes a second caller wait for — not race past — the write,
-    * while a failed write leaves the flag unset for retry).
+  /** Write a trained-model fixture once per (JVM, path). Its path is
+    * `Fixtures.path(name, dir)`, which the oracle thunks render for
+    * [[Q.renderDir]], so interleaved runs against two dirs each read
+    * their own fixture (ADVICE r13).
     */
   private def writeFixtureOnce(path: String)(rows: => DataFrame): Unit =
-    fixtureLocks.getOrElseUpdate(path, new Object).synchronized {
-      if (!fixtureWritten.contains(path)) {
-        rows.coalesce(1).write.mode("overwrite").parquet(path)
-        fixtureWritten.put(path, true)
-      }
-    }
+    Fixtures.once(path)(rows.coalesce(1).write.mode("overwrite").parquet(path))
 
   /** The dataset's trained centroids, written once per (JVM, dir) to
     * the ONE centroid fixture (`ivf_centroids_<tag>`) that every
@@ -114,7 +87,7 @@ object VectorQueries {
   private def centroidFixture(
       s: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Double]] = {
     val cents = trainedCentroids(s, dir)
-    writeFixtureOnce(fixtureDir("ivf_centroids", dir)) {
+    writeFixtureOnce(Fixtures.path("ivf_centroids", dir)) {
       import s.implicits._
       cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cid", "c")
     }
@@ -129,7 +102,7 @@ object VectorQueries {
     */
   private def centroidCtes(bucket: String, also: String = ""): String =
     s"""cent AS (
-       |  SELECT cid, c FROM read_parquet('${fixtureDir("ivf_centroids", Q.renderDir)}/*.parquet')
+       |  SELECT cid, c FROM read_parquet('${Fixtures.path("ivf_centroids", Q.renderDir)}/*.parquet')
        |)$also, dist AS (
        |  SELECT e.vec_id AS id, ct.cid,
        |    list_reduce(list_transform(range(1, len(e.embedding)+1),
@@ -302,7 +275,7 @@ object VectorQueries {
   /** The PQ codebook fixture as the `cb` CTE. */
   private def pqCodebookCte: String =
     s""", cb AS (
-       |  SELECT sub, cid, c FROM read_parquet('${fixtureDir("pq_codebooks", Q.renderDir)}/*.parquet')
+       |  SELECT sub, cid, c FROM read_parquet('${Fixtures.path("pq_codebooks", Q.renderDir)}/*.parquet')
        |)""".stripMargin
 
   /** IVF-PQ ANN top-5 with exact refinement ([[graft.operators.Pq]])
@@ -369,7 +342,7 @@ object VectorQueries {
     val emb = Tables.embeddings(s, dir)
     val centroids = centroidFixture(s, dir)
     val cb = trainedCodebooks(s, dir)
-    writeFixtureOnce(fixtureDir("pq_codebooks", dir)) {
+    writeFixtureOnce(Fixtures.path("pq_codebooks", dir)) {
       import s.implicits._
       cb.zipWithIndex.flatMap { case (cents, j) =>
           cents.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) } }.toSeq

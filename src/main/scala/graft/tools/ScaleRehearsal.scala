@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{CacheScope, SparkEntry}
 import graft.Session.withConf
 import graft.sources.DeltaDml.ModeKey
-import graft.sources.GraftCatalog
+import graft.queries.Fixtures
 
 /** sf1 scale rehearsal of the superlinear-risk query family (VERDICT
   * r5 item 4): converts the "plan looks linear" story into a
@@ -310,13 +310,9 @@ object ScaleRehearsal {
     // (5% new keys) — the copy-on-write group machinery q_sql_merge
     // proves correct, here cost-certified at 10× rows
     "x_sql_merge" -> { (s, dir) =>
-      val wh = s"target/tmp/graft_wh_xmg_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      GraftCatalog.register(s, "xm", wh)
-      s.sql("DROP TABLE IF EXISTS xm.mart.orders")
-      graft.Tables.orders(s, dir).createOrReplaceTempView("x_ord_src")
-      s.sql(
-        """CREATE TABLE xm.mart.orders PARTITIONED BY (o_orderpriority)
-          |AS SELECT * FROM x_ord_src""".stripMargin)
+      val orders = graft.Tables.orders(s, dir)
+      orders.createOrReplaceTempView("x_ord_src")
+      Fixtures.land(s, "xmg", dir)(("orders", "o_orderpriority", orders))
       s.sql(
         """CREATE OR REPLACE TEMP VIEW x_merge_src AS
           |SELECT o_orderkey AS k, o_totalprice * 1.1 AS np,
@@ -326,7 +322,7 @@ object ScaleRehearsal {
           |SELECT -o_orderkey AS k, o_totalprice AS np, false AS del
           |FROM x_ord_src WHERE o_orderkey % 20 = 3""".stripMargin)
       s.sql(
-        """MERGE INTO xm.mart.orders t USING x_merge_src s
+        """MERGE INTO wh_xmg.mart.orders t USING x_merge_src s
           |ON t.o_orderkey = s.k
           |WHEN MATCHED AND s.del THEN DELETE
           |WHEN MATCHED THEN UPDATE SET o_totalprice = s.np
@@ -335,7 +331,7 @@ object ScaleRehearsal {
           |  VALUES (s.k, 0, 'X', s.np, TIMESTAMP'2099-01-01 00:00:00',
           |    '9-NEW')"""
           .stripMargin)
-      s.sql("SELECT count(*) AS n FROM xm.mart.orders")
+      s.sql("SELECT count(*) AS n FROM wh_xmg.mart.orders")
     },
     // the SAME merge shape through the merge-on-read SQL path
     // (spark.graft.dml.mode=mor, WriteDelta): bucket(8) layout so the
@@ -343,13 +339,10 @@ object ScaleRehearsal {
     // byte-identical — the pair (x_sql_merge, x_sql_mor) is the
     // CoW-vs-MoR cost comparison at each tier
     "x_sql_mor" -> { (s, dir) =>
-      val wh = s"target/tmp/graft_wh_xmor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      GraftCatalog.register(s, "ym", wh)
-      s.sql("DROP TABLE IF EXISTS ym.mart.orders")
-      graft.Tables.orders(s, dir).createOrReplaceTempView("y_ord_src")
-      s.sql(
-        """CREATE TABLE ym.mart.orders PARTITIONED BY (bucket(8, o_orderkey))
-          |AS SELECT * FROM y_ord_src""".stripMargin)
+      val orders = graft.Tables.orders(s, dir)
+      orders.createOrReplaceTempView("y_ord_src")
+      val wh = Fixtures.land(s, "xmor", dir)(
+        ("orders", "bucket(8, o_orderkey)", orders))
       s.sql(
         """CREATE OR REPLACE TEMP VIEW y_merge_src AS
           |SELECT o_orderkey AS k, o_totalprice * 1.1 AS np,
@@ -358,25 +351,21 @@ object ScaleRehearsal {
           |UNION ALL
           |SELECT -o_orderkey AS k, o_totalprice AS np, false AS del
           |FROM y_ord_src WHERE o_orderkey % 20 = 3""".stripMargin)
-      val root = s"$wh/mart/orders"
-      val before = graft.sources.TxTable.currentSnapshot(s, root).get
-        .entries.map(e => (e.relPath, e.size)).toSet
-      withConf(s, ModeKey -> "mor")(s.sql(
-        """MERGE INTO ym.mart.orders t USING y_merge_src s
-          |ON t.o_orderkey = s.k
-          |WHEN MATCHED AND s.del THEN DELETE
-          |WHEN MATCHED THEN UPDATE SET o_totalprice = s.np
-          |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_custkey,
-          |  o_orderstatus, o_totalprice, o_orderdate, o_orderpriority)
-          |  VALUES (s.k, 0, 'X', s.np, TIMESTAMP'2099-01-01 00:00:00',
-          |    '9-NEW')"""
-          .stripMargin))
-      val after = graft.sources.TxTable.currentSnapshot(s, root).get
-      require(
-        before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
+      val (_, w) = Fixtures.writeShape(s, wh.tableRoot("orders"))(
+        withConf(s, ModeKey -> "mor")(s.sql(
+          """MERGE INTO wh_xmor.mart.orders t USING y_merge_src s
+            |ON t.o_orderkey = s.k
+            |WHEN MATCHED AND s.del THEN DELETE
+            |WHEN MATCHED THEN UPDATE SET o_totalprice = s.np
+            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_custkey,
+            |  o_orderstatus, o_totalprice, o_orderdate, o_orderpriority)
+            |  VALUES (s.k, 0, 'X', s.np, TIMESTAMP'2099-01-01 00:00:00',
+            |    '9-NEW')"""
+            .stripMargin)))
+      require(w.untouched,
         "x_sql_mor: merge-on-read MERGE must not rewrite data files")
-      require(after.dvs.nonEmpty, "x_sql_mor: expected position deletes")
-      s.sql("SELECT count(*) AS n FROM ym.mart.orders")
+      require(w.after.dvs.nonEmpty, "x_sql_mor: expected position deletes")
+      s.sql("SELECT count(*) AS n FROM wh_xmor.mart.orders")
     },
     // literal-map dictGet probed by the scaling fact side: the J6
     // in-projection lookup must cost O(rows), broadcast-shipped once
@@ -460,18 +449,15 @@ object ScaleRehearsal {
     // (per-fold/refresh seconds land in RunMetrics:
     // stream_dsir_fold_b* / stream_dsir_refresh_v*)
     "x_stream_dsir" -> { (s, dir) =>
-      val srcDir =
-        s"target/tmp/x_stream_dsir_src_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val srcDir = Fixtures.path("x_stream_dsir_src", dir)
       // pinned per-slice mod-times fix the file->batch order (ADVICE
       // r17: slices written in quick succession can share an mtime
       // tick, making the frozen-model composition across the timed
       // passes nondeterministic — the q_stream_dsir fixture device)
       feed(s, srcDir, 10, pinMtimes = true)(byDocMod(dsirDocs(s, dir), 10))
-      val run = System.nanoTime()
       graft.streaming.Streams.dsirStream(
         graft.streaming.Streams.fileFeed(s, srcDir), "doc_id", "text", "tgt",
-        s"target/tmp/x_stream_dsir_state_$run",
-        s"target/tmp/x_stream_dsir_ckpt_$run",
+        Fixtures.fresh("x_stream_dsir_state"), Fixtures.fresh("x_stream_dsir_ckpt"),
         refreshEvery = 5)
     },
     "x_skew_spj_full" -> (skewSpj(partial = false)(_, _)),
@@ -499,10 +485,8 @@ object ScaleRehearsal {
       val maxLsn = feed.agg(max(col("lsn"))).head.getLong(0)
       val snapshot = Cdc.apply(
         Cdc.emptyTarget(feed, keys, data), feed, keys, data)
-      val root = s"target/tmp/x_cdc_mor_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val root = Fixtures.path("x_cdc_mor", dir)
       TxTable.create(snapshot, root, Some("bucket(16,user_id)"))
-      val before = TxTable.currentSnapshot(s, root).get
-        .entries.map(e => (e.relPath, e.size)).toSet
       val batch = snapshot
         .filter(pmod(col("user_id"), lit(5L)) === 3)
         .select(col("user_id"), (col("amount") * 0.5).as("amount"),
@@ -513,12 +497,11 @@ object ScaleRehearsal {
           .select(col("user_id"), col("amount"),
             (col("last_lsn") + maxLsn).as("lsn"),
             lit(Cdc.Op.Delete).as("op")))
-      Cdc.applyTxMor(s, root, batch, keys, data)
-      val after = TxTable.currentSnapshot(s, root).get
-      require(
-        before.subsetOf(after.entries.map(e => (e.relPath, e.size)).toSet),
+      val (_, w) = Fixtures.writeShape(s, root)(
+        Cdc.applyTxMor(s, root, batch, keys, data))
+      require(w.untouched,
         "x_cdc_mor: merge-on-read apply must not rewrite data files")
-      require(after.dvs.map(_.rows).sum > 0,
+      require(w.masked > 0,
         "x_cdc_mor: expected position deletes")
       TxTable.read(s, root)
     },
@@ -530,11 +513,11 @@ object ScaleRehearsal {
     // parquet (file_key-filtered), so the read must track the tier
     // linearly with no driver bottleneck
     "x_mor_dv_heavy" -> { (s, dir) =>
-      val tag = ensureDvHeavy(s, dir)
+      ensureDvHeavy(s, dir)
       s.sql(
-        s"""SELECT COUNT(*) AS n,
-           |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-           |FROM zdv.mart.orders_$tag""".stripMargin)
+        """SELECT COUNT(*) AS n,
+          |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
+          |FROM wh_dvh.mart.orders""".stripMargin)
     },
     // round-13 (VERDICT r12 item 2's memory evidence): a mor DML's
     // delta SCAN over the heavy table — unlike the SELECT above (which
@@ -547,12 +530,12 @@ object ScaleRehearsal {
     // artifact's dv_bitmap section); the no-match DELETE commits
     // nothing, so passes are identical.
     "x_mor_dv_heavy_dml" -> { (s, dir) =>
-      val tag = ensureDvHeavy(s, dir)
+      ensureDvHeavy(s, dir)
       withConf(s, ModeKey -> "mor")(
-        s.sql(s"DELETE FROM zdv.mart.orders_$tag WHERE o_totalprice < 0"))
+        s.sql("DELETE FROM wh_dvh.mart.orders WHERE o_totalprice < 0"))
       s.sql(
-        s"""SELECT COUNT(*) AS n
-           |FROM zdv.mart.orders_$tag WHERE o_orderkey % 97 = 0""".stripMargin)
+        """SELECT COUNT(*) AS n
+          |FROM wh_dvh.mart.orders WHERE o_orderkey % 97 = 0""".stripMargin)
     },
     // round-12: TRICKLE-HISTORY read-back — 32 scattered mor DELETEs
     // (8 keys each) leave 32 small DV files behind; the timed pass is
@@ -573,9 +556,8 @@ object ScaleRehearsal {
     // (~corpus × nprobe / k), never re-training or re-assignment.
     "x_ivf_query_only" -> { (s, dir) =>
       import graft.operators.Ivf
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val idxPath = s"target/tmp/ivf_idx_$tag"
-      val cents = once(("x_ivf_query_only", dir)) {
+      val idxPath = Fixtures.path("ivf_idx", dir)
+      val cents = Fixtures.once(idxPath) {
         val emb = graft.Tables.embeddings(s, dir)
         val cents = Ivf.trainCentroids(
           emb, "embedding", Ivf.adaptiveNlist(emb.count()))
@@ -596,9 +578,8 @@ object ScaleRehearsal {
     // + top-5 for the fixed query slice, cand_ivfpq censused per run
     "x_pq_query_only" -> { (s, dir) =>
       import graft.operators.{Ivf, Pq}
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val idxPath = s"target/tmp/pq_idx_$tag"
-      val (cents, cb) = once(("x_pq_query_only", dir)) {
+      val idxPath = Fixtures.path("pq_idx", dir)
+      val (cents, cb) = Fixtures.once(idxPath) {
         val emb = graft.Tables.embeddings(s, dir)
         val cents = Ivf.trainCentroids(
           emb, "embedding", Ivf.adaptiveNlist(emb.count()))
@@ -636,15 +617,10 @@ object ScaleRehearsal {
     // grows — the tier ratio prices the scoped scan, not the DML.
     "x_mor_dv_wide" -> { (s, dir) =>
       import graft.sources.TxTable
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      GraftCatalog.register(s, "zdw", "target/tmp/graft_wh_dvw")
-      once(("x_mor_dv_wide", dir)) {
-        s.sql(s"DROP TABLE IF EXISTS zdw.mart.orders_$tag")
-        graft.Tables.orders(s, dir).createOrReplaceTempView("zdw_src")
-        s.sql(
-          s"""CREATE TABLE zdw.mart.orders_$tag
-             |PARTITIONED BY (bucket(256, o_orderkey))
-             |AS SELECT * FROM zdw_src""".stripMargin)
+      val wh = Fixtures.warehouse(s, "dvw", dir)
+      Fixtures.once(wh.root) {
+        Fixtures.land(s, "dvw", dir)(
+          ("orders", "bucket(256, o_orderkey)", graft.Tables.orders(s, dir)))
         // ONE writer task per statement covering ~175 of 256 buckets
         // (orderkeys are ~25% dense, so 1200 candidates match ~300) —
         // far past DvKeyCap, forcing the bloom path
@@ -654,14 +630,13 @@ object ScaleRehearsal {
           (0 until 4).foreach { r =>
             val keys = (0 until 1200).map(j => 1 + r * 131 + j * 499)
             s.sql(
-              s"""MERGE INTO zdw.mart.orders_$tag t
+              s"""MERGE INTO wh_dvw.mart.orders t
                  |USING (SELECT explode(array(${keys.mkString(",")})) AS k) src
                  |ON t.o_orderkey = src.k
                  |WHEN MATCHED THEN DELETE""".stripMargin)
           }
         }
-        val snap = TxTable.currentSnapshot(
-          s, s"target/tmp/graft_wh_dvw/mart/orders_$tag").get
+        val snap = TxTable.currentSnapshot(s, wh.tableRoot("orders")).get
         require(snap.dvs.nonEmpty && snap.dvs.forall(d =>
             d.bloom.isDefined && d.keys.isEmpty),
           s"x_mor_dv_wide: expected bloom-scoped wide DV entries, got " +
@@ -673,63 +648,51 @@ object ScaleRehearsal {
       def cell(k: String) = RunMetrics.snapshot.getOrElse(k, 0.0)
       val (p0, f0) = (cell("dv_files_probed"), cell("dv_scan_files"))
       withConf(s, ModeKey -> "mor")(
-        s.sql(s"DELETE FROM zdw.mart.orders_$tag WHERE o_totalprice < 0"))
+        s.sql("DELETE FROM wh_dvw.mart.orders WHERE o_totalprice < 0"))
       val (p1, f1) = (cell("dv_files_probed"), cell("dv_scan_files"))
-      val snap = TxTable.currentSnapshot(
-        s, s"target/tmp/graft_wh_dvw/mart/orders_$tag").get
+      val snap = TxTable.currentSnapshot(s, wh.tableRoot("orders")).get
       val ratio = (p1 - p0) / math.max(f1 - f0, 1.0)
       require(ratio < 0.8 * snap.dvs.size,
         s"x_mor_dv_wide: bloom scoping must beat unknown coverage " +
           s"(${snap.dvs.size} probes/file): got $ratio")
       s.sql(
-        s"""SELECT COUNT(*) AS n,
-           |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-           |FROM zdw.mart.orders_$tag""".stripMargin)
+        """SELECT COUNT(*) AS n,
+          |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
+          |FROM wh_dvw.mart.orders""".stripMargin)
     },
     "x_mor_dv_trickle_read" -> { (s, dir) =>
       import graft.sources.TxTable
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      GraftCatalog.register(s, "zdt", "target/tmp/graft_wh_dvt")
-      once(("x_mor_dv_trickle_read", dir)) {
-        s.sql(s"DROP TABLE IF EXISTS zdt.mart.orders_$tag")
-        graft.Tables.orders(s, dir).createOrReplaceTempView("zdt_src")
-        s.sql(
-          s"""CREATE TABLE zdt.mart.orders_$tag
-             |PARTITIONED BY (bucket(64, o_orderkey))
-             |AS SELECT * FROM zdt_src""".stripMargin)
+      val wh = Fixtures.warehouse(s, "dvt", dir)
+      Fixtures.once(wh.root) {
+        Fixtures.land(s, "dvt", dir)(
+          ("orders", "bucket(64, o_orderkey)", graft.Tables.orders(s, dir)))
         withConf(s, ModeKey -> "mor") {
           (0 until 32).foreach { i =>
             val keys = (0 until 8).map(j => 1 + i * 977 + j * 31261)
-            s.sql(s"DELETE FROM zdt.mart.orders_$tag " +
+            s.sql("DELETE FROM wh_dvt.mart.orders " +
               s"WHERE o_orderkey IN (${keys.mkString(",")})")
           }
         }
-        val snap = TxTable.currentSnapshot(
-          s, s"target/tmp/graft_wh_dvt/mart/orders_$tag").get
+        val snap = TxTable.currentSnapshot(s, wh.tableRoot("orders")).get
         require(snap.dvs.size >= 32,
           s"x_mor_dv_trickle_read: expected >=32 DV files, got ${snap.dvs.size}")
         require(snap.dvs.forall(_.keys.nonEmpty),
           "x_mor_dv_trickle_read: trickle DV entries must carry key lists")
       }
       s.sql(
-        s"""SELECT COUNT(*) AS n,
-           |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-           |FROM zdt.mart.orders_$tag""".stripMargin)
+        """SELECT COUNT(*) AS n,
+          |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
+          |FROM wh_dvt.mart.orders""".stripMargin)
     })
 
-  // Build-once memos, one per (entry, dir) in this JVM. The catalog
-  // instance (and so its warehouse path) is CACHED by Spark's
-  // CatalogManager on first use — a dir-keyed WAREHOUSE conf would
-  // silently keep writing into the first warehouse — so dirs coexist
-  // as dir-SUFFIXED table names in the one cached warehouse, and the
-  // build marker is process memory. The first touch of a (pass, dir)
+  // Build-once tables: each entry lands its tables once per (JVM,
+  // dir) in its own per-dir warehouse, `Fixtures.once` keyed by that
+  // warehouse, and registers the catalog on every call — GraftCatalog
+  // re-reads its warehouse from the live conf, so the one catalog name
+  // re-points to the dir being timed. The first touch of a (pass, dir)
   // cell pays the build (main's prep loop pays it untimed for the
   // prep-bearing entries); later passes don't, so the min-over-passes
   // numbers are build-free.
-  private val built = scala.collection.mutable.Map.empty[(String, String), Any]
-
-  private def once[T](key: (String, String))(build: => T): T =
-    built.synchronized(built.getOrElseUpdate(key, build).asInstanceOf[T])
 
   /** Build-once (per dir) skewed co-bucketed pair: fact = orders with
     * every even custkey collapsed onto key 7 (≈half the rows land in
@@ -741,25 +704,19 @@ object ScaleRehearsal {
     */
   private def skewSpj(partial: Boolean)(
       s: SparkSession, dir: String): DataFrame = {
-    GraftCatalog.register(s, "xk", "target/tmp/graft_wh_skew")
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    once(("x_skew_spj", dir)) {
-      s.sql(s"DROP TABLE IF EXISTS xk.mart.fact_$tag")
-      s.sql(s"DROP TABLE IF EXISTS xk.mart.dim_$tag")
+    val wh = Fixtures.warehouse(s, "skew", dir)
+    Fixtures.once(wh.root) {
       graft.Tables.orders(s, dir).createOrReplaceTempView("x_skew_src")
       def slice(i: Int) =
         s"""SELECT CASE WHEN o_custkey % 2 = 0 THEN CAST(7 AS BIGINT)
            |         ELSE o_custkey END AS k,
            |       o_totalprice AS v
            |FROM x_skew_src WHERE o_orderkey % 4 = $i""".stripMargin
-      s.sql(
-        s"""CREATE TABLE xk.mart.fact_$tag PARTITIONED BY (bucket(8, k))
-           |AS ${slice(0)}""".stripMargin)
-      (1 until 4).foreach(i => s.sql(s"INSERT INTO xk.mart.fact_$tag ${slice(i)}"))
-      graft.Tables.customer(s, dir).createOrReplaceTempView("x_skew_cust")
-      s.sql(
-        s"""CREATE TABLE xk.mart.dim_$tag PARTITIONED BY (bucket(8, c_custkey))
-           |AS SELECT c_custkey, c_mktsegment FROM x_skew_cust""".stripMargin)
+      Fixtures.land(s, "skew", dir)(
+        ("fact", "bucket(8, k)", s.sql(slice(0))),
+        ("dim", "bucket(8, c_custkey)",
+          graft.Tables.customer(s, dir).select("c_custkey", "c_mktsegment")))
+      (1 until 4).foreach(i => s.sql(s"INSERT INTO wh_skew.mart.fact ${slice(i)}"))
     }
     withConf(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
@@ -770,11 +727,11 @@ object ScaleRehearsal {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
       val out = s.sql(
-        s"""SELECT d.c_mktsegment, COUNT(*) AS n,
-           |  CAST(SUM(CAST(round(f.v * 100) AS BIGINT)) AS BIGINT) AS cents
-           |FROM xk.mart.fact_$tag f JOIN xk.mart.dim_$tag d
-           |  ON f.k = d.c_custkey
-           |GROUP BY d.c_mktsegment""".stripMargin)
+        """SELECT d.c_mktsegment, COUNT(*) AS n,
+          |  CAST(SUM(CAST(round(f.v * 100) AS BIGINT)) AS BIGINT) AS cents
+          |FROM wh_skew.mart.fact f JOIN wh_skew.mart.dim d
+          |  ON f.k = d.c_custkey
+          |GROUP BY d.c_mktsegment""".stripMargin)
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
       import org.apache.spark.sql.execution.joins.BaseJoinExec
       val joins = out.queryExecution.executedPlan.collect {
@@ -796,29 +753,22 @@ object ScaleRehearsal {
   /** Build-once (per JVM, dir) DV-heavy table: bucket(8) orders with
     * ~80% of rows position-deleted through the mor path. Shared by
     * x_mor_dv_heavy (SELECT read-back — the anti-join path) and
-    * x_mor_dv_heavy_dml (delta-scan read-back — the PosBitmap path).
-    * Returns the dir tag.
+    * x_mor_dv_heavy_dml (delta-scan read-back — the PosBitmap path)
+    * as `wh_dvh.mart.orders`.
     */
-  private def ensureDvHeavy(s: SparkSession, dir: String): String = {
+  private def ensureDvHeavy(s: SparkSession, dir: String): Unit = {
     import graft.sources.TxTable
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    GraftCatalog.register(s, "zdv", "target/tmp/graft_wh_dvh")
-    once(("x_mor_dv_heavy", dir)) {
-      s.sql(s"DROP TABLE IF EXISTS zdv.mart.orders_$tag")
-      graft.Tables.orders(s, dir).createOrReplaceTempView("zdv_src")
-      s.sql(
-        s"""CREATE TABLE zdv.mart.orders_$tag
-           |PARTITIONED BY (bucket(8, o_orderkey))
-           |AS SELECT * FROM zdv_src""".stripMargin)
+    val wh = Fixtures.warehouse(s, "dvh", dir)
+    Fixtures.once(wh.root) {
+      Fixtures.land(s, "dvh", dir)(
+        ("orders", "bucket(8, o_orderkey)", graft.Tables.orders(s, dir)))
       withConf(s, ModeKey -> "mor")(
-        s.sql(s"DELETE FROM zdv.mart.orders_$tag WHERE o_orderkey % 5 <> 0"))
-      val snap = TxTable.currentSnapshot(
-        s, s"target/tmp/graft_wh_dvh/mart/orders_$tag").get
+        s.sql("DELETE FROM wh_dvh.mart.orders WHERE o_orderkey % 5 <> 0"))
+      val snap = TxTable.currentSnapshot(s, wh.tableRoot("orders")).get
       require(snap.dvs.map(_.rows).sum * 5 >=
         graft.Tables.orders(s, dir).count() * 4 - 5,
         "x_mor_dv_heavy: expected ~80% of rows as position deletes")
     }
-    tag
   }
 
   private var trickleRun = 0
@@ -838,15 +788,11 @@ object ScaleRehearsal {
     */
   private def morTrickle(pruned: Boolean)(
       s: SparkSession, dir: String): DataFrame = {
-    GraftCatalog.register(s, "zt", "target/tmp/graft_wh_trk")
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val keys = once(("x_mor_trickle", dir)) {
-      s.sql(s"DROP TABLE IF EXISTS zt.mart.orders_$tag")
-      graft.Tables.orders(s, dir).createOrReplaceTempView("zt_src")
-      s.sql(
-        s"""CREATE TABLE zt.mart.orders_$tag
-           |PARTITIONED BY (bucket(256, o_orderkey))
-           |AS SELECT * FROM zt_src""".stripMargin)
+    val wh = Fixtures.warehouse(s, "trk", dir)
+    val keys = Fixtures.once(wh.root) {
+      val orders = graft.Tables.orders(s, dir)
+      orders.createOrReplaceTempView("zt_src")
+      Fixtures.land(s, "trk", dir)(("orders", "bucket(256, o_orderkey)", orders))
       // the batch keys, collected ONCE per dir — the per-run source
       // is a literal VALUES relation, so neither variant pays a
       // table-sized source scan that would mask the pruning gap
@@ -860,14 +806,14 @@ object ScaleRehearsal {
     keys.map(k => (k, 99.0)).toDF("k", "np")
       .createOrReplaceTempView("zt_trickle")
     trickleRun += 1
-    val target = s"orders_${tag}_run$trickleRun"
+    val target = s"orders_run$trickleRun"
     // the warehouse persists across processes but the run counter
     // does not — a previous invocation's clone may sit at this name
-    s.sql(s"DROP TABLE IF EXISTS zt.mart.$target")
-    s.sql(s"CALL zt.system.clone('mart.orders_$tag', 'mart.$target')")
+    s.sql(s"DROP TABLE IF EXISTS wh_trk.mart.$target")
+    s.sql(s"CALL wh_trk.system.clone('mart.orders', 'mart.$target')")
     withConf(s, ModeKey -> "mor",
         "spark.graft.dml.morRuntimeFiltering" -> pruned.toString)(s.sql(
-      s"""MERGE INTO zt.mart.$target t USING zt_trickle src
+      s"""MERGE INTO wh_trk.mart.$target t USING zt_trickle src
          |ON t.o_orderkey = src.k
          |WHEN MATCHED THEN UPDATE SET o_totalprice = src.np"""
         .stripMargin))
@@ -1215,14 +1161,13 @@ object ScaleRehearsal {
       println(f"pass $pass $tag $name%-20s ${dt}%8.2fs rows=$n")
     }
     // one streaming drain of `srcDir`, one file per micro-batch:
-    // `query` builds the stream from the source and a per-run tag for
-    // its state dirs; the clock covers the drain only
+    // `query` builds the stream from the source; the clock covers the
+    // drain only
     def timedDrain(srcDir: String)(
-        query: (DataFrame, Long) => DataFrame): (Long, Double) = {
+        query: DataFrame => DataFrame): (Long, Double) = {
       RunMetrics.flushAndReset(spark)
-      val run = System.nanoTime()
       val src = graft.streaming.Streams.fileFeed(spark, srcDir)
-      Exec.timed(spark)(query(src, run))
+      Exec.timed(spark)(query(src))
     }
     // serving-path read pricing (VERDICT r15 item 7): between
     // compactions every consumer of a table-mode labeling pays the
@@ -1305,11 +1250,10 @@ object ScaleRehearsal {
       var dirsMax = 0.0
       var secMin = Double.MaxValue
       for (pass <- 1 to 2) {
-        val (n, dt) = timedDrain(srcDir) { (src, run) =>
-          val state = s"target/tmp/x_${stateTag}_state_$run"
+        val (n, dt) = timedDrain(srcDir) { src =>
+          val state = Fixtures.fresh(s"x_${stateTag}_state")
           graft.streaming.Streams.clusterStream(
-            src, "doc_id", "text", state,
-            s"target/tmp/x_${stateTag}_ckpt_$run",
+            src, "doc_id", "text", state, Fixtures.fresh(s"x_${stateTag}_ckpt"),
             n = 3, tau = 0.8, bands = 8, rowsPerBand = 4,
             compactEvery = 5, labelsAsTable = asTable,
             afterBatch = b => if (asTable) timeLabelsRead(state, b))
@@ -1353,7 +1297,7 @@ object ScaleRehearsal {
     val drainSection =
       if (!subset.forall(_("x_stream_cc_drain40"))) ""
       else {
-        val srcDir = "target/tmp/x_stream_cc_drain40_src"
+        val srcDir = Fixtures.path("x_stream_cc_drain40_src", sf01)
         feed(spark, srcDir, 40, pinMtimes = false)(byDocMod(
           graft.Tables.documents(spark, sf01).select(col("doc_id"), col("text")), 40))
         val rowsAt = rowsThrough(spark, srcDir, 40)
@@ -1403,7 +1347,7 @@ object ScaleRehearsal {
     val crossSection =
       if (!subset.forall(_("x_stream_cc_crossover"))) ""
       else {
-        val srcDir = "target/tmp/x_stream_cc_cross24_src"
+        val srcDir = Fixtures.path("x_stream_cc_cross24_src", sf1)
         // trickles: sf0.1 slices with ids displaced past every sf1 id
         // (the feed contract: ids unique across batches); text reuses
         // the corpus' distribution so trickle folds do real cluster
@@ -1449,7 +1393,7 @@ object ScaleRehearsal {
     val dsirDrainSection =
       if (!subset.forall(_("x_stream_dsir_drain40"))) ""
       else {
-        val srcDir = "target/tmp/x_stream_dsir_drain40_src"
+        val srcDir = Fixtures.path("x_stream_dsir_drain40_src", sf01)
         // mod-time pinning: deterministic file->batch order (the
         // frozen-model composition depends on it — ADVICE r17)
         feed(spark, srcDir, 40, pinMtimes = true)(byDocMod(dsirDocs(spark, sf01), 40))
@@ -1460,11 +1404,11 @@ object ScaleRehearsal {
         val files = scala.collection.mutable.Map.empty[String, Double]
         var lastState = ""
         for (pass <- 1 to 2) {
-          val (n, dt) = timedDrain(srcDir) { (src, run) =>
-            lastState = s"target/tmp/x_dsir40_state_$run"
+          val (n, dt) = timedDrain(srcDir) { src =>
+            lastState = Fixtures.fresh("x_dsir40_state")
             graft.streaming.Streams.dsirStream(
               src, "doc_id", "text", "tgt",
-              lastState, s"target/tmp/x_dsir40_ckpt_$run",
+              lastState, Fixtures.fresh("x_dsir40_ckpt"),
               refreshEvery = 5)
           }
           val got = RunMetrics.snapshot
@@ -1512,7 +1456,7 @@ object ScaleRehearsal {
       if (subset.nonEmpty) ""
       else {
         import graft.sources.TxTable
-        val root = "target/tmp/x_manifest_wide_tbl"
+        val root = Fixtures.path("x_manifest_wide_tbl", sf01)
         if (TxTable.currentSnapshot(spark, root).isEmpty)
           TxTable.create(
             graft.Tables.orders(spark, sf01).repartition(2560), root, None)

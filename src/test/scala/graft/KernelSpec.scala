@@ -143,11 +143,14 @@ class KernelSpec extends SparkSpec {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, censusSf)
     val nDocs = docs.count()
-    val c = Census.of(
-      Dedup.hammingBlocks(
-        Dedup.simhash(docs, "doc_id", "text"), "doc_id", "simhash",
-        Dedup.HamGeo6),
-      Seq("blk", "blkval"))
+    // no codegen fallback: a banding stage whose generated Java passes
+    // the 64 KB method limit fails here instead of running interpreted
+    val c = Session.withConf(spark, "spark.sql.codegen.fallback" -> "false")(
+      Census.of(
+        Dedup.hammingBlocks(
+          Dedup.simhash(docs, "doc_id", "text"), "doc_id", "simhash",
+          Dedup.HamGeo6),
+        Seq("blk", "blkval")))
     // ~25-bit keys over 210 combinations: the uniform floor is still
     // ~0 at fixture scale, so candidates must stay a small multiple of
     // corpus size — the saturation gate for the wide-radius geometry
@@ -156,6 +159,28 @@ class KernelSpec extends SparkSpec {
       s"HamGeo6 census: ${c.candidatePairs} candidate pairs for " +
         s"$nDocs docs — 4-of-10 keys are colliding beyond the dup set")
     graft.CacheScope.release()
+  }
+
+  test("hammingBlocks rows equal plain-Scala blocks for every geometry") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val sigs: Seq[(Long, Option[Long])] =
+      (1L to 6L).map(i => (i, Some(rnd.nextLong()))) :+ ((7L, None))
+    val df = sigs.toDF("doc_id", "simhash")
+    for (geo <- Seq(Dedup.HamGeo3, Dedup.HamGeo4, Dedup.HamGeo6)) {
+      val got = Dedup.hammingBlocks(df, "doc_id", "simhash", geo)
+        .collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
+          r.getInt(2), r.getSeq[Any](3).map(Option(_).map(_.asInstanceOf[Long]))))
+        .toSeq.sortBy(r => (r._1, r._3))
+      val want = for {
+        (id, sig) <- sigs
+        (c, blk) <- geo.combos.zipWithIndex
+      } yield (id, sig, blk, c.map(b =>
+        sig.map(v => (v >> geo.offsets(b)) & ((1L << geo.widths(b)) - 1))))
+      assert(got == want, s"geometry ${geo.widths} r=${geo.r}")
+      assert(got.size == sigs.size * geo.combos.size)
+    }
   }
 
   test("census: IVF buckets balanced enough that probing stays sublinear") {
