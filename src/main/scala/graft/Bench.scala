@@ -5,10 +5,11 @@ import graft.tools.{Exec, RunMetrics}
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
-  * A first untimed pass at sf0.001 warms the JVM (whole-stage codegen
-  * classes are cached by generated source, which is identical across
-  * data dirs; JIT + Hadoop FS init happen once) so the timed pass
-  * measures the queries, not classloading.
+  * A first untimed pass at sf0.001 warms the JVM (JIT + Hadoop FS
+  * init happen once) so the timed pass measures the queries, not
+  * classloading. Spark's codegen cache (100 entries by default) holds
+  * far less than the catalog's working set, so each (query, pass)
+  * records its Janino compile count as `compiles_p<pass>` in `extras`.
   *
   * SELF-DIAGNOSING against VM contention: the full catalog is timed
   * over THREE interleaved passes and every query reports its per-pass
@@ -66,26 +67,27 @@ object Bench {
     RunMetrics.install(spark)
     val extras = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.Map[String, Double]]
-    def onePass(): Map[String, Double] =
+    def compiles: Long = // generated classes compiled in this JVM so far
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def onePass(pass: Int): Map[String, Double] =
       names.map { name =>
         // flush-then-reset: a failed prior query skipped its harvest;
         // its in-flight observations must land (and be discarded)
         // before this query's window opens (ADVICE r13)
         RunMetrics.flushAndReset(spark)
+        val c0 = compiles
         val dt =
           try Exec.timed(spark)(SparkEntry.queries(name)(spark, sfDir))._2
           catch { case _: Throwable =>
             failCounts(name) = failCounts.getOrElse(name, 0) + 1; -1.0 }
-        if (dt >= 0) {
-          // observation families deduped by full name: internal driver
-          // actions re-fire the same CollectMetrics instance (ADVICE r13)
-          val got = RunMetrics.harvestedDeduped(spark)
-          if (got.nonEmpty) Exec.minMerge(extras.getOrElseUpdate(name,
-            scala.collection.mutable.Map.empty[String, Double]), got)
-        }
+        val ex = extras.getOrElseUpdate(name, scala.collection.mutable.Map.empty)
+        ex(s"compiles_p$pass") = (compiles - c0).toDouble
+        // observation families deduped by full name: internal driver
+        // actions re-fire the same CollectMetrics instance (ADVICE r13)
+        if (dt >= 0) Exec.minMerge(ex, RunMetrics.harvestedDeduped(spark))
         name -> dt
       }.toMap
-    val passes = (1 to Passes).map(_ => onePass())
+    val passes = (1 to Passes).map(onePass)
     val spreads = names.map { n =>
       val ts = passes.map(_(n)).filter(_ >= 0)
       n -> (if (ts.isEmpty) None else Some(Exec.Spread.of(ts)))

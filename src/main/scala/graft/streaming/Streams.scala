@@ -376,64 +376,64 @@ object Streams {
     * the warehouse-load SCD ([[graft.operators.Scd.scd2]] / q_scd2;
     * the reference's SCD wizard + CDC-fed dimension load). The feed
     * carries dated staging snapshots (`dateCol`); each micro-batch is
-    * applied ONE DATE AT A TIME in ascending date order, each date's
-    * rows being that date's staging snapshot — so draining a feed
-    * equals applying the same snapshots in date order in batch, and a
-    * batch boundary can fall anywhere BETWEEN dates without changing
-    * the result (within-batch disorder is sorted away).
+    * folded in ONE set-based pass with its dates as data
+    * ([[graft.operators.Scd.scd2Dated]]), equal to applying its
+    * snapshots one date at a time in ascending order — so draining a
+    * feed equals applying the same snapshots in date order in batch,
+    * and a batch boundary can fall anywhere BETWEEN dates without
+    * changing the result (within-batch disorder is sorted away).
     *
     * Contract: dates must be non-decreasing ACROSS batches (a
     * snapshot feed — each file/batch holds one or more complete dated
-    * snapshots) — ENFORCED: a feed that delivers an older snapshot
-    * after a newer one fails loudly instead of silently folding in
+    * snapshots) — ENFORCED on the fold's own pass (an observed min/max
+    * date): a feed that delivers an older snapshot after a newer one
+    * fails loudly instead of silently folding in
     * overlapping/regressed version intervals. Re-delivery of the SAME
     * date is harmless and allowed: re-applying a snapshot to a
     * dimension that already absorbed it changes nothing (unchanged
     * rows pass through, so foreachBatch's at-least-once replay
     * composes). Each fold is pinned with `localCheckpoint(true)` (the
-    * [[graft.operators.Components]] fixpoint idiom): the plan of date
-    * N is a flat scan of date N−1's materialized blocks, NOT a chain
+    * [[graft.operators.Components]] fixpoint idiom): the plan of batch
+    * N is a flat scan of batch N−1's materialized blocks, NOT a chain
     * referencing every earlier fold — so a long backfill neither grows
     * the plan unboundedly nor replays the whole history on cache
-    * eviction. A production deployment would hold the dimension in the
+    * eviction. No action runs on the batch's cloned session, whose
+    * fresh class loader would recompile every generated class. A
+    * production deployment would hold the dimension in the
     * transactional table and MERGE, as the batch CDC paths do.
     */
   def scd2Stream(
       spark: SparkSession, staging: DataFrame, dimInit: DataFrame,
       bk: String, attrs: Seq[String], dateCol: String): DataFrame = {
-    import graft.operators.Scd
     // Bound the checkpointed partition count per fold: each scd2 pass
-    // UNIONs pass-through and changed legs, so without this the fold-N
+    // UNIONs the history and version legs, so without this the fold-N
     // dimension carries O(N · shuffle.partitions) partitions and a
     // long backfill degenerates into a quadratic task storm. coalesce
     // is NARROW (merges the union legs, no extra shuffle); the next
-    // fold's join reshuffles on the business key regardless.
+    // fold's window reshuffles on the business key regardless.
     val par = spark.sparkContext.defaultParallelism
     var dim = graft.CacheScope.localCheckpointTruncated(dimInit.coalesce(par))
     // ISO yyyy-MM-dd compares correctly as a string; empty = no fold yet
     var lastApplied = ""
     drain(staging) { (batch, _) =>
-      val dates = batch
-        .select(col(dateCol).cast("date").as("__d")).distinct()
-        .orderBy(col("__d")).collect().map(_.getDate(0).toString)
-      dates.foreach { d =>
-        require(d >= lastApplied,
-          s"scd2Stream: snapshot date $d arrived after $lastApplied — " +
+      val dates = org.apache.spark.sql.Observation()
+      // eager localCheckpoint: materializes AND truncates lineage
+      // (constraint-truncated — see localCheckpointTruncated: the
+      // captured constraint set would otherwise DOUBLE per fold)
+      val next = graft.CacheScope.localCheckpointTruncated(graft.operators.Scd
+        .scd2Dated(dim, batch, bk, attrs, col(dateCol), Some(dates)).coalesce(par))
+      val seen = scala.concurrent.Await.result(
+        dates.future, scala.concurrent.duration.Duration(2, "min"))
+      Option(seen.get(0)).foreach { lo => // null: an empty batch
+        require(lo.toString >= lastApplied,
+          s"scd2Stream: snapshot date $lo arrived after $lastApplied — " +
             "dates must be non-decreasing across batches (regressed " +
             "feed would corrupt the dimension's version intervals)")
-        val snap = batch
-          .filter(col(dateCol).cast("date") === lit(d).cast("date"))
-          .drop(dateCol)
-        // eager localCheckpoint: materializes AND truncates lineage
-        // (constraint-truncated — see localCheckpointTruncated: the
-        // captured constraint set would otherwise DOUBLE per fold)
-        val next = graft.CacheScope.localCheckpointTruncated(
-          Scd.scd2(dim, snap, bk, attrs, d).coalesce(par))
-        // the previous fold is unreachable now; free its blocks
-        graft.CacheScope.unpersistCheckpoint(dim)
-        dim = next
-        lastApplied = d
+        lastApplied = seen.get(1).toString
       }
+      // the previous fold is unreachable now; free its blocks
+      graft.CacheScope.unpersistCheckpoint(dim)
+      dim = next
     }
     dim
   }

@@ -322,4 +322,68 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("property: scd2Stream equals a sequential per-date model on random dated feeds") {
+    import java.sql.Date
+    type Ver = (Long, Option[String], Option[String], Boolean, String, Option[String])
+    val days = (0 until 6).map(i => Date.valueOf(f"2024-06-${1 + 3 * i}%02d"))
+    val vals = Seq(Some("x"), Some("y"), None) // nulls exercise <=>
+    def pick(): Option[String] = vals(rnd.nextInt(vals.size))
+    for (trial <- 1 to 6) {
+      // keys 1..6 are current (their start dates drawn from the same
+      // days, so a staged date can precede a current row's start), some
+      // with a closed version; keys 7..9 are absent from the dimension
+      val cur = (1L to 6L).map(k => (k, pick(), pick(), days(rnd.nextInt(days.size))))
+      val hist = cur.filter(_ => rnd.nextBoolean()).map { case (k, _, _, s) =>
+        (k, pick(), pick(), false, Date.valueOf("2020-01-01"), Option(s)) }
+      // 1–3 batches over ascending dates; a batch may re-deliver the
+      // previous batch's last snapshot, and its rows are shuffled
+      val dates = rnd.shuffle(days.toList).take(2 + rnd.nextInt(4)).sortBy(_.getTime)
+      val cuts = (1 until dates.size).filter(_ => rnd.nextInt(3) == 0).take(2)
+      val groups = (0 +: cuts :+ dates.size).sliding(2)
+        .map { case Seq(a, b) => dates.slice(a, b) }.toSeq
+      val snaps = dates.map(d => d -> rnd.shuffle((1L to 9L).toList)
+        .take(1 + rnd.nextInt(9)).map(k => (k, pick(), pick(), d))).toMap
+      val batches = groups.zipWithIndex.map { case (g, i) =>
+        val redeliver =
+          if (i > 0 && rnd.nextBoolean()) snaps(groups(i - 1).last) else Nil
+        rnd.shuffle(redeliver ++ g.flatMap(snaps))
+      }
+      // the model: plain Scala, one batch and one date at a time
+      val open = scala.collection.mutable.Map(
+        cur.map { case (k, a, b, s) => k -> ((a, b, s)) }: _*)
+      val closed = Seq.newBuilder[Ver]
+      hist.foreach { case (k, a, b, _, s, e) =>
+        closed += ((k, a, b, false, s.toString, e.map(_.toString))) }
+      for {
+        batch <- batches
+        (d, rows) <- batch.groupBy(_._4).toSeq.sortBy(_._1.getTime)
+        (k, a, b, _) <- rows
+      } open.get(k) match {
+        case Some((ca, cb, _)) if ca == a && cb == b => ()
+        case Some((ca, cb, s)) =>
+          closed += ((k, ca, cb, false, s.toString, Some(d.toString)))
+          open(k) = (a, b, d)
+        case None => open(k) = (a, b, d)
+      }
+      val expected = (closed.result() ++ open.map { case (k, (a, b, s)) =>
+        (k, a, b, true, s.toString, None) }).sortBy(_.toString)
+
+      val dim = (cur.map { case (k, a, b, s) => (k, a, b, true, s, None: Option[Date]) } ++ hist)
+        .toDF("bk", "a", "b", "is_current", "start_date", "end_date")
+      val root = s"target/tmp/scd2prop_${System.nanoTime()}"
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        rows.toDF("bk", "a", "b", "run_date").coalesce(1).write.parquet(s"$root/b=$i")
+        new java.io.File(s"$root/b=$i").listFiles()
+          .foreach(_.setLastModified(1700000000000L + i * 100000L))
+      }
+      val got = graft.streaming.Streams.scd2Stream(spark,
+          graft.streaming.Streams.fileFeed(spark, root), dim, "bk", Seq("a", "b"), "run_date")
+        .select(col("bk"), col("a"), col("b"), col("is_current"),
+          col("start_date").cast("string"), col("end_date").cast("string"))
+        .as[(Long, Option[String], Option[String], Boolean, String, Option[String])]
+        .collect().toSeq.sortBy(_.toString)
+      assert(got == expected, s"trial $trial: batches=$batches dim=$cur hist=$hist")
+    }
+  }
 }

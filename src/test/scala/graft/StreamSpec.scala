@@ -1148,6 +1148,47 @@ class StreamSpec extends SparkSpec {
     assert(found, s"expected the date-regression guard to fire: $e")
   }
 
+  test("scd2Stream: a null snapshot date or a repeated (bk, date) row fails loudly") {
+    val dim = Seq((1L, "n1", "A", true,
+        java.sql.Date.valueOf("2020-01-01"), null: java.sql.Date))
+      .toDF("bk", "name", "segment", "is_current", "start_date", "end_date")
+    val d = java.sql.Date.valueOf("2024-06-01")
+    def failure(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .flatMap(c => Option(c.getMessage)).mkString("\n")
+    def drainFails(rows: Seq[(Long, String, String, java.sql.Date)]): String = {
+      val root = s"target/tmp/scd2s_pre_${System.nanoTime()}"
+      val staged = rows.toDF("bk", "name", "segment", "run_date")
+      staged.coalesce(1).write.parquet(root)
+      val feed = spark.readStream.schema(staged.schema)
+        .option("recursiveFileLookup", "true").parquet(root)
+      failure(intercept[Exception](graft.streaming.Streams.scd2Stream(
+        spark, feed, dim, "bk", Seq("name", "segment"), "run_date")))
+    }
+    val nullDate = drainFails(Seq((1L, "n1", "B", d), (2L, "n2", "B", null)))
+    assert(nullDate.contains("null bk or snapshot date"), nullDate)
+    val repeated = drainFails(Seq((1L, "n1", "B", d), (1L, "n1", "C", d)))
+    assert(repeated.contains("two staged rows for bk=1 on 2024-06-01"), repeated)
+    // the one-date batch call shares the kernel and its check
+    val batch = failure(intercept[Exception](graft.operators.Scd.scd2(dim,
+      Seq((1L, "n1", "B"), (1L, "n1", "C")).toDF("bk", "name", "segment"),
+      "bk", Seq("name", "segment"), "2024-06-01").collect()))
+    assert(batch.contains("two staged rows for bk=1"), batch)
+  }
+
+  test("q_stream_scd2: a second call compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def call(): Unit =
+      graft.tools.Exec.timed(spark)(graft.SparkEntry.queries("q_stream_scd2")(spark, sf))
+    call()
+    val before = METRIC_COMPILATION_TIME.getCount
+    call()
+    val added = METRIC_COMPILATION_TIME.getCount - before
+    // a per-call literal or a per-call class loader reaching codegen
+    // shows up here as recompiles of the same stages
+    assert(added == 0, s"second call compiled $added generated classes")
+  }
+
   test("clusterStream: 3-batch fold with a mid-stream restart equals batch incremental and from-scratch") {
     import org.apache.spark.sql.streaming.StreamingQueryException
     import graft.operators.{Components, Dedup}
