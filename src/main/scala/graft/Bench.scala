@@ -9,7 +9,11 @@ import graft.tools.{Exec, RunMetrics}
   * init happen once) so the timed pass measures the queries, not
   * classloading. Spark's codegen cache (100 entries by default) holds
   * far less than the catalog's working set, so each (query, pass)
-  * records its Janino compile count as `compiles_p<pass>` in `extras`.
+  * records its Janino compile count and compile time as
+  * `compiles_p<pass>` and `compile_ms_p<pass>` in `extras`: a query
+  * whose classes fell out of the cache shows nonzero counts on every
+  * pass. A query that throws in a timed pass is named on stderr with
+  * its exception, as in the warm pass.
   *
   * SELF-DIAGNOSING against VM contention: the full catalog is timed
   * over THREE interleaved passes and every query reports its per-pass
@@ -67,21 +71,27 @@ object Bench {
     RunMetrics.install(spark)
     val extras = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.Map[String, Double]]
-    def compiles: Long = // generated classes compiled in this JVM so far
+    // generated classes compiled in this JVM so far, and the Janino
+    // time they took (ns)
+    def compiles: Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def compileNs: Long =
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
     def onePass(pass: Int): Map[String, Double] =
       names.map { name =>
         // flush-then-reset: a failed prior query skipped its harvest;
         // its in-flight observations must land (and be discarded)
         // before this query's window opens (ADVICE r13)
         RunMetrics.flushAndReset(spark)
-        val c0 = compiles
+        val (c0, ns0) = (compiles, compileNs)
         val dt =
           try Exec.timed(spark)(SparkEntry.queries(name)(spark, sfDir))._2
-          catch { case _: Throwable =>
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name pass $pass failed: $e")
             failCounts(name) = failCounts.getOrElse(name, 0) + 1; -1.0 }
         val ex = extras.getOrElseUpdate(name, scala.collection.mutable.Map.empty)
         ex(s"compiles_p$pass") = (compiles - c0).toDouble
+        ex(s"compile_ms_p$pass") = (compileNs - ns0) / 1e6
         // observation families deduped by full name: internal driver
         // actions re-fire the same CollectMetrics instance (ADVICE r13)
         if (dt >= 0) Exec.minMerge(ex, RunMetrics.harvestedDeduped(spark))

@@ -4,7 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession policy, for every main and the test suite, so
   * the oracle validates exactly the plans the bench times. Keep
-  * `perfbench/harness/Harness.scala`'s copy of these confs in step. */
+  * `perfbench/harness/Harness.scala`'s copy of these confs in step.
+  * The codegen-stability defaults (no stage id in generated class
+  * names, no session clone per `persist`) are not set here but in
+  * [[GraftExtensions.Defaults]]: the benchmark harness builds its own
+  * session from a fixed copy of these confs, and the extension is the
+  * one part of this policy that reaches it (and every new or cloned
+  * session). */
 object Session {
 
   /** Local task threads: `SPARK_GRAFT_CPUS`, default 4. */

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Run auditing (SURVEY P7/P8/A8; reference: …/Pro…/003.md:7-16 Row
@@ -28,4 +31,10 @@ object Audit {
       count(lit(1)).as("n_rows"))
     (instrumented, obs)
   }
+
+  /** The metrics `obs` collected on the action it was attached to,
+    * which has run. Bounded: a pass that never reports them (attached
+    * to a frame of another session than the action's) fails here. */
+  def awaitObserved(obs: Observation): Row =
+    Await.result(obs.future, Duration(2, "min"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.CacheScope.TrackedDataFrame
 
@@ -44,8 +44,15 @@ object Components {
       .unionByName(edges.select(col(dstCol).as("__a"), col(srcCol).as("__b")))
       .hint("rebalance")
       .persistTracked() // reused every round
+    val nodeCount = Observation()
     var labels = graft.CacheScope.localCheckpointTruncated(nodes
-      .select(col(idCol).as("__id"), col(idCol).as("__lbl")))
+      .select(col(idCol).as("__id"), col(idCol).as("__lbl"))
+      .observe(nodeCount, count(lit(1)).as("n")))
+    // the pointer jump is a self-join of the round's aggregate: left to
+    // AQE, its broadcast conversion races the two sides' shuffle stages
+    // and plans (and compiles) one of two stage variants per round, so
+    // the choice is made here, once per call, on the labels' row count
+    val broadcastJump = Audit.awaitObserved(nodeCount).getLong(0) <= MaxBroadcastRemap
     var converged = false
     var it = 0
     val lblType = labels.schema("__lbl").dataType
@@ -62,8 +69,7 @@ object Components {
       // (one exchange and one join fewer per round). __prev rides
       // along through the labels leg (exactly one row per id there,
       // max over a single non-null value is that value) so
-      // convergence stays a FILTER on the round's own checkpointed
-      // output.
+      // convergence is a count over the round's own checkpoint pass.
       val stepped = sym.join(labels, col("__b") === col("__id"))
         .select(col("__a").as("__id"), col("__lbl"),
           lit(null).cast(lblType).as("__prev"))
@@ -82,17 +88,22 @@ object Components {
       // the empty-graph edge case.
       val jumpMap = stepped
         .select(col("__id").as("__jid"), col("__lbl").as("__jlbl"))
+      val jumpSide = if (broadcastJump) broadcast(jumpMap) else jumpMap
       // constraint-truncated checkpoint: the per-round constraint
       // expressions would otherwise compound across rounds (see
-      // CacheScope.localCheckpointTruncated)
+      // CacheScope.localCheckpointTruncated). The convergence check
+      // rides on the same pass: `moved` counts the rows whose label
+      // dropped this round, observed on `sym`'s (the caller's) session.
+      val moved = Observation()
       val jumped = graft.CacheScope.localCheckpointTruncated(stepped
-        .join(jumpMap, col("__lbl") === col("__jid"), "left")
+        .join(jumpSide, col("__lbl") === col("__jid"), "left")
         .select(col("__id"), col("__prev"),
-          least(col("__lbl"), coalesce(col("__jlbl"), col("__lbl"))).as("__lbl")))
+          least(col("__lbl"), coalesce(col("__jlbl"), col("__lbl"))).as("__lbl"))
+        .observe(moved, count(when(col("__lbl") < col("__prev"), true)).as("moved")))
       // the eager checkpoint truncated the lineage, so the previous
       // round's blocks are unreachable: free them now, not at GC
       graft.CacheScope.unpersistCheckpoint(labels)
-      converged = jumped.filter(col("__lbl") < col("__prev")).isEmpty
+      converged = Audit.awaitObserved(moved).getLong(0) == 0L
       labels = jumped.select(col("__id"), col("__lbl"))
       it += 1
     }
@@ -106,7 +117,8 @@ object Components {
 
   /** Relabel maps above this row count fall back from a forced
     * broadcast to a shuffled join (same guard family as
-    * `Dict.MaxLiteralRows` / `Rules.MaxBroadcastGroups`). */
+    * `Dict.MaxLiteralRows` / `Rules.MaxBroadcastGroups`): the
+    * incremental remap and [[connected]]'s pointer-jump map. */
   val MaxBroadcastRemap = 1000000
 
   /** INCREMENTAL connected components — fold one ingest cycle's delta

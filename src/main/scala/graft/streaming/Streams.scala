@@ -422,8 +422,7 @@ object Streams {
       // captured constraint set would otherwise DOUBLE per fold)
       val next = graft.CacheScope.localCheckpointTruncated(graft.operators.Scd
         .scd2Dated(dim, batch, bk, attrs, col(dateCol), Some(dates)).coalesce(par))
-      val seen = scala.concurrent.Await.result(
-        dates.future, scala.concurrent.duration.Duration(2, "min"))
+      val seen = graft.operators.Audit.awaitObserved(dates)
       Option(seen.get(0)).foreach { lo => // null: an empty batch
         require(lo.toString >= lastApplied,
           s"scd2Stream: snapshot date $lo arrived after $lastApplied — " +

@@ -673,4 +673,20 @@ class DedupSpec extends SparkSpec {
     baseLabels.unpersist(); delta.unpersist()
     graft.CacheScope.release()
   }
+
+  Seq("q_minhash_dedup", "q_dedup_clusters").foreach { name =>
+    test(s"$name: a second call compiles no generated class") {
+      import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      def call(): Unit =
+        graft.tools.Exec.timed(spark)(graft.SparkEntry.queries(name)(spark, sf))
+      call()
+      val before = METRIC_COMPILATION_TIME.getCount
+      call()
+      val added = METRIC_COMPILATION_TIME.getCount - before
+      // a stage id in a class name, or a persist planned in a cloned
+      // session (its own executor class loader), shows up here as
+      // recompiles of the same stages
+      assert(added == 0, s"second call compiled $added generated classes")
+    }
+  }
 }
